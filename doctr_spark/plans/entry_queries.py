@@ -5,7 +5,8 @@ SQL oracle.
 Two oracle styles:
 - kernel queries: fixed fixture inputs -> the Spark side runs the kernel
   inside mapInPandas (distributed), the oracle is a literal VALUES table of
-  the published/spec-derived expected outputs.
+  the published/spec-derived expected outputs; ``fixture_kernel`` builds
+  both from one fixture table.
 - relational queries: both sides compute the same derivation over the
   driver's parquet tables (lineitem/orders/events/documents/embeddings).
 
@@ -55,6 +56,33 @@ def values_oracle(rows: list[tuple], columns: list[tuple[str, str]]) -> str:
     return f"SELECT {casts} FROM (VALUES {', '.join(rendered)}) AS t({collist})"
 
 
+_SPARK_TYPES = {"BIGINT": "long", "VARCHAR": "string", "DOUBLE": "double"}
+
+
+def fixture_kernel(kernel, args: list[tuple], columns: list[tuple[str, str]], expected: list[tuple]):
+    """A kernel query and its oracle from one fixture table. The
+    query ships each tuple of ``args`` as one JSON row, runs
+    ``kernel(*args)`` per row inside mapInPandas (distributed) and emits
+    the output rows it returns; the oracle is ``expected`` as a literal
+    VALUES table. ``columns`` [(name, duckdb_type)] types both sides.
+    Returns (query, oracle_sql)."""
+    names = [name for name, _ in columns]
+    schema = ", ".join(f"{name} {_SPARK_TYPES[typ]}" for name, typ in columns)
+
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        src = spark.createDataFrame([(json.dumps(a),) for a in args], "args string")
+
+        def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in it:
+                rows = [r for a in pdf["args"] for r in kernel(*json.loads(a))]
+                if rows:
+                    yield pd.DataFrame(rows, columns=names)
+
+        return src.mapInPandas(run, schema)
+
+    return query, values_oracle(expected, columns)
+
+
 # ================================================================ kernels ===
 
 # ---- merge_strings (expected values published in the reference test suite:
@@ -70,21 +98,17 @@ MERGE_FIXTURES = [
 ]
 
 
-def q_merge_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _merge_kernel(a: str, b: str) -> list[tuple]:
     from ..operators.recognition import merge_strings
 
-    src = spark.createDataFrame([(a, b) for a, b, _ in MERGE_FIXTURES], "a string, b string")
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pdf["merged"] = [merge_strings(a, b, 1.4) for a, b in zip(pdf["a"], pdf["b"])]
-            yield pdf
-
-    return src.mapInPandas(run, "a string, b string, merged string")
+    return [(a, b, merge_strings(a, b, 1.4))]
 
 
-MERGE_ORACLE = values_oracle(
-    MERGE_FIXTURES, [("a", "VARCHAR"), ("b", "VARCHAR"), ("merged", "VARCHAR")]
+q_merge_strings, MERGE_ORACLE = fixture_kernel(
+    _merge_kernel,
+    [(a, b) for a, b, _ in MERGE_FIXTURES],
+    [("a", "VARCHAR"), ("b", "VARCHAR"), ("merged", "VARCHAR")],
+    MERGE_FIXTURES,
 )
 
 # ---- CTC best-path decode (semantics: crnn ctc_best_path; fixture paths are
@@ -99,30 +123,22 @@ CTC_FIXTURES = [
 CTC_VOCAB = "HELO"
 
 
-def q_ctc_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _ctc_kernel(case_id: int, path: list[int]) -> list[tuple]:
     from ..operators.recognition import ctc_best_path
 
-    src = spark.createDataFrame(
-        [(cid, json.dumps(path)) for cid, path, _ in CTC_FIXTURES], "case_id long, path string"
-    )
     blank = len(CTC_VOCAB)
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            words = []
-            for path_json in pdf["path"]:
-                path = [blank if k < 0 else k for k in json.loads(path_json)]
-                logits = np.full((len(path), blank + 1), 0.0)
-                for t, k in enumerate(path):
-                    logits[t, k] = 8.0
-                words.append(ctc_best_path(logits, CTC_VOCAB)[0][0])
-            yield pd.DataFrame({"case_id": pdf["case_id"], "word": words})
-
-    return src.mapInPandas(run, "case_id long, word string")
+    path = [blank if k < 0 else k for k in path]
+    logits = np.full((len(path), blank + 1), 0.0)
+    for t, k in enumerate(path):
+        logits[t, k] = 8.0
+    return [(case_id, ctc_best_path(logits, CTC_VOCAB)[0][0])]
 
 
-CTC_ORACLE = values_oracle(
-    [(cid, w) for cid, _, w in CTC_FIXTURES], [("case_id", "BIGINT"), ("word", "VARCHAR")]
+q_ctc_decode, CTC_ORACLE = fixture_kernel(
+    _ctc_kernel,
+    [(cid, path) for cid, path, _ in CTC_FIXTURES],
+    [("case_id", "BIGINT"), ("word", "VARCHAR")],
+    [(cid, w) for cid, _, w in CTC_FIXTURES],
 )
 
 # ---- HTML main-content strip
@@ -140,24 +156,17 @@ HTML_FIXTURES = [
 ]
 
 
-def q_html_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _html_kernel(case_id: int, html: str) -> list[tuple]:
     from ..functions.html import extract_main_text
 
-    src = spark.createDataFrame(
-        [(cid, h) for cid, h, _ in HTML_FIXTURES], "case_id long, html string"
-    )
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {"case_id": pdf["case_id"], "main_text": [extract_main_text(h) for h in pdf["html"]]}
-            )
-
-    return src.mapInPandas(run, "case_id long, main_text string")
+    return [(case_id, extract_main_text(html))]
 
 
-HTML_ORACLE = values_oracle(
-    [(cid, exp) for cid, _, exp in HTML_FIXTURES], [("case_id", "BIGINT"), ("main_text", "VARCHAR")]
+q_html_strip, HTML_ORACLE = fixture_kernel(
+    _html_kernel,
+    [(cid, h) for cid, h, _ in HTML_FIXTURES],
+    [("case_id", "BIGINT"), ("main_text", "VARCHAR")],
+    [(cid, exp) for cid, _, exp in HTML_FIXTURES],
 )
 
 # ---- reading-order sort + line resolution (expected values are the
@@ -189,50 +198,31 @@ LINE_FIXTURES = [
 ]
 
 
-def q_reading_order(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _sort_kernel(case_id: int, boxes: list) -> list[tuple]:
     from ..operators.builder import sort_boxes
 
-    src = spark.createDataFrame(
-        [(cid, json.dumps(b)) for cid, b, _ in SORT_FIXTURES], "case_id long, boxes string"
-    )
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            orders = [
-                ",".join(map(str, sort_boxes(np.asarray(json.loads(b)))[0].tolist()))
-                for b in pdf["boxes"]
-            ]
-            yield pd.DataFrame({"case_id": pdf["case_id"], "order_csv": orders})
-
-    return src.mapInPandas(run, "case_id long, order_csv string")
+    return [(case_id, ",".join(map(str, sort_boxes(np.asarray(boxes))[0].tolist())))]
 
 
-SORT_ORACLE = values_oracle(
-    [(cid, ",".join(map(str, o))) for cid, _, o in SORT_FIXTURES],
+q_reading_order, SORT_ORACLE = fixture_kernel(
+    _sort_kernel,
+    [(cid, b) for cid, b, _ in SORT_FIXTURES],
     [("case_id", "BIGINT"), ("order_csv", "VARCHAR")],
+    [(cid, ",".join(map(str, o))) for cid, _, o in SORT_FIXTURES],
 )
 
 
-def q_resolve_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _lines_kernel(case_id: int, boxes: list) -> list[tuple]:
     from ..operators.builder import resolve_lines
 
-    src = spark.createDataFrame(
-        [(cid, json.dumps(b)) for cid, b, _ in LINE_FIXTURES], "case_id long, boxes string"
-    )
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            lines = [
-                json.dumps(resolve_lines(np.asarray(json.loads(b)))) for b in pdf["boxes"]
-            ]
-            yield pd.DataFrame({"case_id": pdf["case_id"], "lines_json": lines})
-
-    return src.mapInPandas(run, "case_id long, lines_json string")
+    return [(case_id, json.dumps(resolve_lines(np.asarray(boxes))))]
 
 
-LINES_ORACLE = values_oracle(
-    [(cid, json.dumps(ln)) for cid, _, ln in LINE_FIXTURES],
+q_resolve_lines, LINES_ORACLE = fixture_kernel(
+    _lines_kernel,
+    [(cid, b) for cid, b, _ in LINE_FIXTURES],
     [("case_id", "BIGINT"), ("lines_json", "VARCHAR")],
+    [(cid, json.dumps(ln)) for cid, _, ln in LINE_FIXTURES],
 )
 
 # ---- detection postprocess on synthetic proba maps; expected boxes derived
@@ -276,44 +266,21 @@ def _expected_detect_rows() -> list[tuple]:
     return rows
 
 
-def q_detect_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _detect_kernel(case_id: int, h: int, w: int, rects: list, fg: float) -> list[tuple]:
     from ..operators.detection import postprocess_proba_map
 
-    src = spark.createDataFrame(
-        [(cid, h, w, json.dumps(r), fg) for cid, h, w, r, fg in DETECT_FIXTURES],
-        "case_id long, h long, w long, rects string, fg double",
-    )
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for cid, h, w, rects_json, fg in zip(pdf["case_id"], pdf["h"], pdf["w"], pdf["rects"], pdf["fg"]):
-                proba = np.full((int(h), int(w)), 0.05)
-                for x0, y0, x1e, y1e in json.loads(rects_json):
-                    proba[y0:y1e, x0:x1e] = fg
-                boxes = postprocess_proba_map(proba)
-                for idx, b in enumerate(boxes):
-                    out.append(
-                        {
-                            "case_id": cid,
-                            "box_idx": idx,
-                            "xmin": round(b[0], 6),
-                            "ymin": round(b[1], 6),
-                            "xmax": round(b[2], 6),
-                            "ymax": round(b[3], 6),
-                            "score": round(b[4], 6),
-                        }
-                    )
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(
-        run,
-        "case_id long, box_idx long, xmin double, ymin double, xmax double, ymax double, score double",
-    )
+    proba = np.full((h, w), 0.05)
+    for x0, y0, x1e, y1e in rects:
+        proba[y0:y1e, x0:x1e] = fg
+    return [
+        (case_id, idx, *(round(v, 6) for v in b[:5]))
+        for idx, b in enumerate(postprocess_proba_map(proba))
+    ]
 
 
-DETECT_ORACLE = values_oracle(
-    _expected_detect_rows(),
+q_detect_boxes, DETECT_ORACLE = fixture_kernel(
+    _detect_kernel,
+    DETECT_FIXTURES,
     [
         ("case_id", "BIGINT"),
         ("box_idx", "BIGINT"),
@@ -323,6 +290,7 @@ DETECT_ORACLE = values_oracle(
         ("ymax", "DOUBLE"),
         ("score", "DOUBLE"),
     ],
+    _expected_detect_rows(),
 )
 
 # ---- render joins
@@ -333,29 +301,17 @@ RENDER_FIXTURES = [
 ]
 
 
-def q_render_joins(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _render_kernel(case_id: int, blocks: list) -> list[tuple]:
     from ..functions.render import render_page
 
-    src = spark.createDataFrame(
-        [(cid, json.dumps(blocks)) for cid, blocks, _ in RENDER_FIXTURES],
-        "case_id long, blocks string",
-    )
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "case_id": pdf["case_id"],
-                    "rendered": [render_page(json.loads(b)) for b in pdf["blocks"]],
-                }
-            )
-
-    return src.mapInPandas(run, "case_id long, rendered string")
+    return [(case_id, render_page(blocks))]
 
 
-RENDER_ORACLE = values_oracle(
-    [(cid, exp) for cid, _, exp in RENDER_FIXTURES],
+q_render_joins, RENDER_ORACLE = fixture_kernel(
+    _render_kernel,
+    [(cid, blocks) for cid, blocks, _ in RENDER_FIXTURES],
     [("case_id", "BIGINT"), ("rendered", "VARCHAR")],
+    [(cid, exp) for cid, _, exp in RENDER_FIXTURES],
 )
 
 
@@ -366,18 +322,27 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from ..functions.text import (  # noqa: E402
     ALPHA_REGEX,
+    BPE_TOKEN_COUNT_SQL,
     DIGIT_REGEX,
+    DOMAINS_CSV_SQL,
     FINGERPRINT_SQL,
     TOKEN_COUNT_SQL,
+    URL_COUNT_SQL,
+    ascii_fold_sql,
     char_class_ratio,
     char_class_ratio_sql,
     fingerprint,
     lang_id,
+    lang_id_conf_sql,
     lang_id_sql,
+    pii_count_sql,
     quality_score,
     quality_score_sql,
+    scrub_pii_sql,
     token_count,
 )
+from ..operators.lm import lm_bigram_scores_sql  # noqa: E402
+from ..operators.sampling import sample_predicate_sql, stratified_sample_sql  # noqa: E402
 
 
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -668,8 +633,6 @@ def q_string_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _string_match_oracle() -> str:
-    from ..functions.text import ascii_fold_sql
-
     rows = ",\n  ".join(f"({cid}, '{a}', '{b}')" for cid, a, b in STRING_MATCH_PAIRS)
     fa, fb = ascii_fold_sql("a"), ascii_fold_sql("b")
     return f"""
@@ -792,27 +755,17 @@ SPLIT_FIXTURES = [
 ]
 
 
-def q_split_crops(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _split_kernel(case_id: int, w: int, h: int) -> list[tuple]:
     from ..operators.recognition import split_wide_crop
 
-    src = spark.createDataFrame(
-        [(cid, w, h) for cid, w, h, _ in SPLIT_FIXTURES], "case_id long, w long, h long"
-    )
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for cid, w, h in zip(pdf["case_id"], pdf["w"], pdf["h"]):
-                ranges = split_wide_crop(int(w), int(h))
-                out.append({"case_id": cid, "ranges": json.dumps(ranges)})
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(run, "case_id long, ranges string")
+    return [(case_id, json.dumps(split_wide_crop(w, h)))]
 
 
-SPLIT_ORACLE = values_oracle(
-    [(cid, json.dumps([list(r) for r in rs] if rs is not None else None)) for cid, _, _, rs in SPLIT_FIXTURES],
+q_split_crops, SPLIT_ORACLE = fixture_kernel(
+    _split_kernel,
+    [(cid, w, h) for cid, w, h, _ in SPLIT_FIXTURES],
     [("case_id", "BIGINT"), ("ranges", "VARCHAR")],
+    [(cid, json.dumps([list(r) for r in rs] if rs is not None else None)) for cid, _, _, rs in SPLIT_FIXTURES],
 )
 
 # ---- KIE per-class build + render (KIEPage.render semantics)
@@ -827,86 +780,60 @@ KIE_FIXTURES = [
 ]
 
 
-def q_kie_render(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _kie_kernel(case_id: int, boxes: list, vals: list[str]) -> list[tuple]:
     from ..operators.kie import build_kie_page, render_kie_page
 
-    src = spark.createDataFrame(
-        [(cid, json.dumps(b), json.dumps(v)) for cid, b, v, _ in KIE_FIXTURES],
-        "case_id long, boxes string, vals string",
-    )
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rendered = [
-                render_kie_page(build_kie_page(np.asarray(json.loads(b)), json.loads(v)))
-                for b, v in zip(pdf["boxes"], pdf["vals"])
-            ]
-            yield pd.DataFrame({"case_id": pdf["case_id"], "rendered": rendered})
-
-    return src.mapInPandas(run, "case_id long, rendered string")
+    return [(case_id, render_kie_page(build_kie_page(np.asarray(boxes), vals)))]
 
 
-KIE_ORACLE = values_oracle(
-    [(cid, exp) for cid, _, _, exp in KIE_FIXTURES],
+q_kie_render, KIE_ORACLE = fixture_kernel(
+    _kie_kernel,
+    [(cid, b, v) for cid, b, v, _ in KIE_FIXTURES],
     [("case_id", "BIGINT"), ("rendered", "VARCHAR")],
+    [(cid, exp) for cid, _, _, exp in KIE_FIXTURES],
 )
 
 
-def q_orientation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Orientation classifier over rendered pages rotated k quarter turns:
-    the estimate must invert the applied rotation (k + est = 0 mod 4)."""
+# orientation classifier over rendered pages rotated k quarter turns: the
+# estimate must invert the applied rotation (k + est = 0 mod 4)
+def _orientation_kernel(k: int) -> list[tuple]:
     from ..operators.orientation import estimate_page_orientation
     from ..sources.font import render_page as _render
 
-    src = spark.createDataFrame([(k,) for k in range(4)], "k long")
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for k in pdf["k"]:
-                img, _ = _render("THE QUICK BROWN FOX 123!".split(), scale=3)
-                est = estimate_page_orientation(np.ascontiguousarray(np.rot90(img, int(k))), 3)
-                out.append({"k": k, "est": est, "inverts": int((est + int(k)) % 4 == 0)})
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(run, "k long, est long, inverts long")
+    img, _ = _render("THE QUICK BROWN FOX 123!".split(), scale=3)
+    est = estimate_page_orientation(np.ascontiguousarray(np.rot90(img, k)), 3)
+    return [(k, est, int((est + k) % 4 == 0))]
 
 
-ORIENTATION_ORACLE = values_oracle(
-    [(k, (4 - k) % 4, 1) for k in range(4)],
+q_orientation, ORIENTATION_ORACLE = fixture_kernel(
+    _orientation_kernel,
+    [(k,) for k in range(4)],
     [("k", "BIGINT"), ("est", "BIGINT"), ("inverts", "BIGINT")],
+    [(k, (4 - k) % 4, 1) for k in range(4)],
 )
 
 
-def q_hocr_export(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """hOCR export over fixed words (structure + bbox arithmetic check)."""
+# hOCR export over fixed words (structure + bbox arithmetic check)
+def _hocr_kernel(case_id: int) -> list[tuple]:
     from ..functions.export import export_hocr
     from ..operators.builder import build_page
 
-    src = spark.createDataFrame([(1,)], "case_id long")
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            boxes = np.array([[0.1, 0.1, 0.3, 0.2], [0.4, 0.1, 0.6, 0.2]])
-            page = build_page(boxes, ["AB", "CD"])
-            xml = export_hocr(page.words, (100, 200))
-            yield pd.DataFrame(
-                {
-                    "case_id": pdf["case_id"],
-                    "n_words": [xml.count('class="ocrx_word"')],
-                    "n_lines": [xml.count('class="ocr_line"')],
-                    "first_bbox": ["bbox 20 10 60 20" if "bbox 20 10 60 20" in xml else "missing"],
-                }
-            )
-
-    return src.mapInPandas(run, "case_id long, n_words long, n_lines long, first_bbox string")
+    page = build_page(np.array([[0.1, 0.1, 0.3, 0.2], [0.4, 0.1, 0.6, 0.2]]), ["AB", "CD"])
+    xml = export_hocr(page.words, (100, 200))
+    bbox = "bbox 20 10 60 20"
+    return [
+        (case_id, xml.count('class="ocrx_word"'), xml.count('class="ocr_line"'),
+         bbox if bbox in xml else "missing")
+    ]
 
 
-HOCR_ORACLE = values_oracle(
+q_hocr_export, HOCR_ORACLE = fixture_kernel(
+    _hocr_kernel,
+    [(1,)],
+    [("case_id", "BIGINT"), ("n_words", "BIGINT"), ("n_lines", "BIGINT"), ("first_bbox", "VARCHAR")],
     # two words with a 0.1 horizontal gap split into two sub-lines
     # (paragraph_break 0.035), hence 2 ocr_line spans
     [(1, 2, 2, "bbox 20 10 60 20")],
-    [("case_id", "BIGINT"), ("n_words", "BIGINT"), ("n_lines", "BIGINT"), ("first_bbox", "VARCHAR")],
 )
 
 
@@ -985,29 +912,18 @@ POLY_IOU_FIXTURES = [
 ]
 
 
-def q_polygon_iou(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _poly_iou_kernel(case_id: int, a: list, b: list) -> list[tuple]:
     from ..operators.geometry import polygon_iou
 
-    src = spark.createDataFrame(
-        [(cid, json.dumps(a), json.dumps(b)) for cid, a, b, _ in POLY_IOU_FIXTURES],
-        "case_id long, quad_a string, quad_b string",
-    )
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ious = [
-                round(float(polygon_iou(np.asarray([json.loads(a)], dtype=np.float64),
-                                        np.asarray([json.loads(b)], dtype=np.float64))[0, 0]), 6)
-                for a, b in zip(pdf["quad_a"], pdf["quad_b"])
-            ]
-            yield pd.DataFrame({"case_id": pdf["case_id"], "iou": ious})
-
-    return src.mapInPandas(run, "case_id long, iou double")
+    iou = polygon_iou(np.asarray([a], dtype=np.float64), np.asarray([b], dtype=np.float64))[0, 0]
+    return [(case_id, round(float(iou), 6))]
 
 
-POLY_IOU_ORACLE = values_oracle(
-    [(cid, exp) for cid, _, _, exp in POLY_IOU_FIXTURES],
+q_polygon_iou, POLY_IOU_ORACLE = fixture_kernel(
+    _poly_iou_kernel,
+    [(cid, a, b) for cid, a, b, _ in POLY_IOU_FIXTURES],
     [("case_id", "BIGINT"), ("iou", "DOUBLE")],
+    [(cid, exp) for cid, _, _, exp in POLY_IOU_FIXTURES],
 )
 
 
@@ -1158,25 +1074,17 @@ TRANSLATE_FIXTURES = [
 ]
 
 
-def q_translate(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _translate_kernel(case_id: int, raw: str, vocab: str) -> list[tuple]:
     from ..functions.vocabs import translate
 
-    src = spark.createDataFrame(
-        [(cid, s, v) for cid, s, v, _ in TRANSLATE_FIXTURES],
-        "case_id long, raw string, vocab string",
-    )
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = [translate(s, v) for s, v in zip(pdf["raw"], pdf["vocab"])]
-            yield pd.DataFrame({"case_id": pdf["case_id"], "projected": out})
-
-    return src.mapInPandas(run, "case_id long, projected string")
+    return [(case_id, translate(raw, vocab))]
 
 
-TRANSLATE_ORACLE = values_oracle(
-    [(cid, exp) for cid, _, _, exp in TRANSLATE_FIXTURES],
+q_translate, TRANSLATE_ORACLE = fixture_kernel(
+    _translate_kernel,
+    [(cid, s, v) for cid, s, v, _ in TRANSLATE_FIXTURES],
     [("case_id", "BIGINT"), ("projected", "VARCHAR")],
+    [(cid, exp) for cid, _, _, exp in TRANSLATE_FIXTURES],
 )
 
 
@@ -1190,61 +1098,45 @@ NMS_BOXES = [
 ]
 
 
-def q_nms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Greedy score-ordered NMS over the fixture boxes: surviving indices in
-    keep order."""
+# greedy score-ordered NMS over the fixture boxes: surviving indices in
+# keep order
+def _nms_kernel(case_id: int, boxes: list) -> list[tuple]:
     from ..operators.geometry import nms
 
-    src = spark.createDataFrame([(1, json.dumps(NMS_BOXES))], "case_id long, boxes string")
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for cid, bx in zip(pdf["case_id"], pdf["boxes"]):
-                keep = nms(np.asarray(json.loads(bx), dtype=np.float64), thresh=0.5)
-                rows.extend(
-                    {"case_id": cid, "keep_rank": r, "box_idx": k} for r, k in enumerate(keep)
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(run, "case_id long, keep_rank long, box_idx long")
+    keep = nms(np.asarray(boxes, dtype=np.float64), thresh=0.5)
+    return [(case_id, r, k) for r, k in enumerate(keep)]
 
 
-NMS_ORACLE = values_oracle(
-    [(1, 0, 2), (1, 1, 0), (1, 2, 4)],
+q_nms, NMS_ORACLE = fixture_kernel(
+    _nms_kernel,
+    [(1, NMS_BOXES)],
     [("case_id", "BIGINT"), ("keep_rank", "BIGINT"), ("box_idx", "BIGINT")],
+    [(1, 0, 2), (1, 1, 0), (1, 2, 4)],
 )
 
 IOU_A = [[0.1, 0.1, 0.4, 0.3], [0.5, 0.5, 0.8, 0.7]]
 IOU_B = [[0.12, 0.11, 0.42, 0.32], [0.52, 0.52, 0.82, 0.72], [0.9, 0.9, 1.0, 1.0]]
 
 
-def q_box_iou(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _box_iou_kernel(case_id: int, a: list, b: list) -> list[tuple]:
     from ..operators.geometry import box_iou_matrix
 
-    src = spark.createDataFrame(
-        [(1, json.dumps(IOU_A), json.dumps(IOU_B))], "case_id long, a string, b string"
-    )
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for cid, aj, bj in zip(pdf["case_id"], pdf["a"], pdf["b"]):
-                m = box_iou_matrix(np.asarray(json.loads(aj)), np.asarray(json.loads(bj)))
-                for i in range(m.shape[0]):
-                    for j in range(m.shape[1]):
-                        rows.append({"case_id": cid, "i": i, "j": j, "iou": round(float(m[i, j]), 6)})
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(run, "case_id long, i long, j long, iou double")
+    m = box_iou_matrix(np.asarray(a), np.asarray(b))
+    return [
+        (case_id, i, j, round(float(m[i, j]), 6))
+        for i in range(m.shape[0])
+        for j in range(m.shape[1])
+    ]
 
 
-BOX_IOU_ORACLE = values_oracle(
+q_box_iou, BOX_IOU_ORACLE = fixture_kernel(
+    _box_iou_kernel,
+    [(1, IOU_A, IOU_B)],
+    [("case_id", "BIGINT"), ("i", "BIGINT"), ("j", "BIGINT"), ("iou", "DOUBLE")],
     [
         (1, 0, 0, 0.762178), (1, 0, 1, 0.0), (1, 0, 2, 0.0),
         (1, 1, 0, 0.0), (1, 1, 1, 0.724138), (1, 1, 2, 0.0),
     ],
-    [("case_id", "BIGINT"), ("i", "BIGINT"), ("j", "BIGINT"), ("iou", "DOUBLE")],
 )
 
 
@@ -1262,16 +1154,10 @@ def q_subword_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _subword_oracle() -> str:
-    from ..functions.text import BPE_TOKEN_COUNT_SQL, TOKEN_COUNT_SQL
-
-    return (
-        "SELECT doc_id, CAST(" + TOKEN_COUNT_SQL.format(c="text") + " AS BIGINT) AS ws_tokens, "
-        "CAST(" + BPE_TOKEN_COUNT_SQL.format(c="text") + " AS BIGINT) AS bpe_tokens FROM documents"
-    )
-
-
-SUBWORD_ORACLE = _subword_oracle()
+SUBWORD_ORACLE = (
+    "SELECT doc_id, CAST(" + TOKEN_COUNT_SQL.format(c="text") + " AS BIGINT) AS ws_tokens, "
+    "CAST(" + BPE_TOKEN_COUNT_SQL.format(c="text") + " AS BIGINT) AS bpe_tokens FROM documents"
+)
 
 
 # ---- page-angle estimation (utils/geometry.py:350-365: median arctan of
@@ -1284,27 +1170,17 @@ ANGLE_FIXTURES = [
 ]
 
 
-def q_page_angle(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _page_angle_kernel(case_id: int, polys: list) -> list[tuple]:
     from ..operators.geometry import estimate_page_angle
 
-    src = spark.createDataFrame(
-        [(cid, json.dumps(p)) for cid, p, _ in ANGLE_FIXTURES], "case_id long, polys string"
-    )
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            angles = [
-                round(estimate_page_angle(np.asarray(json.loads(p), dtype=np.float64)), 6)
-                for p in pdf["polys"]
-            ]
-            yield pd.DataFrame({"case_id": pdf["case_id"], "angle_deg": angles})
-
-    return src.mapInPandas(run, "case_id long, angle_deg double")
+    return [(case_id, round(estimate_page_angle(np.asarray(polys, dtype=np.float64)), 6))]
 
 
-PAGE_ANGLE_ORACLE = values_oracle(
-    [(cid, exp) for cid, _, exp in ANGLE_FIXTURES],
+q_page_angle, PAGE_ANGLE_ORACLE = fixture_kernel(
+    _page_angle_kernel,
+    [(cid, p) for cid, p, _ in ANGLE_FIXTURES],
     [("case_id", "BIGINT"), ("angle_deg", "DOUBLE")],
+    [(cid, exp) for cid, _, exp in ANGLE_FIXTURES],
 )
 
 
@@ -1348,7 +1224,7 @@ FROM src
 
 def q_ocr_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end per-payload-kind equality report over a generated mixed
-    corpus (rows-only: the corpus carries its own ground truth)."""
+    corpus (the corpus carries its own ground truth)."""
     from ..functions.metrics import extraction_quality_report
     from ..plans.pipeline import extract_turns
     from ..sources.corpus import make_transcripts
@@ -1356,6 +1232,15 @@ def q_ocr_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     gen = make_transcripts(spark, 16, partitions=4)
     out = extract_turns(gen.select("conv_id", "turn_idx", "role", "text", "tool", "ts"))
     return extraction_quality_report(out, gen.select("conv_id", "turn_idx", "expected_text"))
+
+
+# per-kind turn counts pinned by the deterministic generator
+# (make_transcripts(16), kind drawn from the keyed hash); the invariant
+# under test is exact_match_rate = 1.0 for every payload kind
+OCR_QUALITY_ORACLE = values_oracle(
+    [("html", 49, 1.0), ("ocr", 31, 1.0), ("plain", 83, 1.0)],
+    [("payload_kind", "VARCHAR"), ("n_turns", "BIGINT"), ("exact_match_rate", "DOUBLE")],
+)
 
 
 def q_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1367,13 +1252,9 @@ def q_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return deterministic_sample(docs, "doc_id", 0.25).select("doc_id", "source", "lang")
 
 
-def _sample_oracle() -> str:
-    from ..operators.sampling import sample_predicate_sql
-
-    return f"SELECT doc_id, source, lang FROM documents WHERE {sample_predicate_sql('doc_id', 0.25)}"
-
-
-SAMPLE_ORACLE = _sample_oracle()
+SAMPLE_ORACLE = (
+    f"SELECT doc_id, source, lang FROM documents WHERE {sample_predicate_sql('doc_id', 0.25)}"
+)
 
 
 def q_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1392,17 +1273,11 @@ def q_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _corpus_stats_oracle() -> str:
-    from ..functions.text import TOKEN_COUNT_SQL
-
-    return (
-        "SELECT source, lang, count(*) AS n_docs, CAST(sum(length(text)) AS BIGINT) AS total_chars, "
-        "CAST(sum(" + TOKEN_COUNT_SQL.format(c="text") + ") AS BIGINT) AS total_tokens "
-        "FROM documents GROUP BY source, lang"
-    )
-
-
-CORPUS_STATS_ORACLE = _corpus_stats_oracle()
+CORPUS_STATS_ORACLE = (
+    "SELECT source, lang, count(*) AS n_docs, CAST(sum(length(text)) AS BIGINT) AS total_chars, "
+    "CAST(sum(" + TOKEN_COUNT_SQL.format(c="text") + ") AS BIGINT) AS total_tokens "
+    "FROM documents GROUP BY source, lang"
+)
 
 
 def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1424,12 +1299,8 @@ def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _quality_filter_oracle() -> str:
-    from ..functions.text import quality_score_sql
-
-    q = quality_score_sql("text")
-    return f"""
-WITH scored AS (SELECT doc_id, source, {q} AS q FROM documents),
+QUALITY_FILTER_ORACLE = f"""
+WITH scored AS (SELECT doc_id, source, {quality_score_sql("text")} AS q FROM documents),
 ranked AS (
   SELECT doc_id, source, q,
          percent_rank() OVER (PARTITION BY source ORDER BY q, doc_id) AS pr
@@ -1437,9 +1308,6 @@ ranked AS (
 )
 SELECT doc_id, source, q, round(pr, 6) AS pr FROM ranked WHERE pr >= 0.5
 """
-
-
-QUALITY_FILTER_ORACLE = _quality_filter_oracle()
 
 
 def q_conversation_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1487,41 +1355,26 @@ DETECTION_METRIC_FIXTURES = [
 ]
 
 
-def q_detection_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-page DetectionMetric accumulators (num_matches / tot_iou /
-    n_gts / n_preds) over hand-computed fixtures."""
+# per-page DetectionMetric accumulators (num_matches / tot_iou / n_gts /
+# n_preds) over hand-computed fixtures
+def _detection_metric_kernel(page_id: int, gt: list, pred: list) -> list[tuple]:
     from ..functions.metrics import detection_matches
 
-    src = spark.createDataFrame(
-        [(pid, json.dumps(gt), json.dumps(pred)) for pid, gt, pred, _ in DETECTION_METRIC_FIXTURES],
-        "page_id long, gt string, pred string",
+    m, tiou, ng, np_ = detection_matches(
+        np.asarray([b for b, _ in gt], dtype=np.float64).reshape(-1, 4),
+        np.asarray([c for _, c in gt], dtype=np.int64),
+        np.asarray([b for b, _ in pred], dtype=np.float64).reshape(-1, 4),
+        np.asarray([c for _, c in pred], dtype=np.int64),
     )
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for pid, gt_s, pred_s in zip(pdf["page_id"], pdf["gt"], pdf["pred"]):
-                gt = json.loads(gt_s)
-                pred = json.loads(pred_s)
-                m, tiou, ng, np_ = detection_matches(
-                    np.asarray([b for b, _ in gt], dtype=np.float64).reshape(-1, 4),
-                    np.asarray([c for _, c in gt], dtype=np.int64),
-                    np.asarray([b for b, _ in pred], dtype=np.float64).reshape(-1, 4),
-                    np.asarray([c for _, c in pred], dtype=np.int64),
-                )
-                rows.append(
-                    {"page_id": pid, "num_matches": m, "tot_iou": round(tiou, 6),
-                     "n_gts": ng, "n_preds": np_}
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(run, "page_id long, num_matches long, tot_iou double, n_gts long, n_preds long")
+    return [(page_id, m, round(tiou, 6), ng, np_)]
 
 
-DETECTION_METRIC_ORACLE = values_oracle(
-    [(pid, e[0], e[1], e[2], e[3]) for pid, _, _, e in DETECTION_METRIC_FIXTURES],
+q_detection_metric, DETECTION_METRIC_ORACLE = fixture_kernel(
+    _detection_metric_kernel,
+    [(pid, gt, pred) for pid, gt, pred, _ in DETECTION_METRIC_FIXTURES],
     [("page_id", "BIGINT"), ("num_matches", "BIGINT"), ("tot_iou", "DOUBLE"),
      ("n_gts", "BIGINT"), ("n_preds", "BIGINT")],
+    [(pid, *e) for pid, _, _, e in DETECTION_METRIC_FIXTURES],
 )
 
 
@@ -1555,17 +1408,17 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pii_oracle() -> str:
-    from ..functions.text import pii_count_sql, scrub_pii_sql
+# the fixture rows as a DuckDB CTE, shared by the pii_scrub and url_stats
+# oracles
+_PII_SRC = "WITH src(case_id, text) AS (VALUES\n  {}\n)".format(
+    ",\n  ".join("({}, '{}')".format(cid, t.replace("'", "''")) for cid, t in PII_FIXTURES)
+)
 
-    rows = ",\n  ".join(
-        "({}, '{}')".format(cid, t.replace("'", "''")) for cid, t in PII_FIXTURES
-    )
+
+def _pii_oracle() -> str:
     c_email, c_ssn, c_ip, c_phone = pii_count_sql("text")
     return f"""
-WITH src(case_id, text) AS (VALUES
-  {rows}
-)
+{_PII_SRC}
 SELECT CAST(case_id AS BIGINT) AS case_id,
        {scrub_pii_sql("text")} AS scrubbed,
        CAST({c_email} AS BIGINT) AS n_email,
@@ -1592,24 +1445,13 @@ def q_url_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _url_oracle() -> str:
-    from ..functions.text import DOMAINS_CSV_SQL, URL_COUNT_SQL
-
-    rows = ",\n  ".join(
-        "({}, '{}')".format(cid, t.replace("'", "''")) for cid, t in PII_FIXTURES
-    )
-    return f"""
-WITH src(case_id, text) AS (VALUES
-  {rows}
-)
+URL_STATS_ORACLE = f"""
+{_PII_SRC}
 SELECT CAST(case_id AS BIGINT) AS case_id,
        CAST({URL_COUNT_SQL.format(c="text")} AS BIGINT) AS n_urls,
        {DOMAINS_CSV_SQL.format(c="text")} AS domains_csv
 FROM src
 """
-
-
-URL_STATS_ORACLE = _url_oracle()
 
 
 # ---- repetition filters + stratified sampling (training-data curation)
@@ -1675,14 +1517,9 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stratified_oracle() -> str:
-    from ..operators.sampling import stratified_sample_sql
-
-    pred = stratified_sample_sql("doc_id", "lang", STRATA_RATES, default_rate=0.25)
-    return f"SELECT doc_id, lang, source FROM documents WHERE {pred}"
-
-
-STRATIFIED_ORACLE = _stratified_oracle()
+STRATIFIED_ORACLE = "SELECT doc_id, lang, source FROM documents WHERE " + stratified_sample_sql(
+    "doc_id", "lang", STRATA_RATES, default_rate=0.25
+)
 
 
 # ---- LocalizationConfusion + OCRMetric driver queries (hand-computed
@@ -1706,44 +1543,24 @@ LOC_METRIC_FIXTURES = [
 ]
 
 
-def q_ocr_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-page LocalizationConfusion + OCRMetric accumulators (Hungarian
-    IoU assignment; loc matches at IoU>=0.5; end-to-end = loc + exact
-    text), over hand-computed fixtures."""
+# per-page LocalizationConfusion + OCRMetric accumulators (Hungarian IoU
+# assignment; loc matches at IoU>=0.5; end-to-end = loc + exact text)
+def _ocr_metric_kernel(page_id: int, gt: list, pred: list) -> list[tuple]:
     from ..functions.metrics import localization_confusion, ocr_matches
 
-    src = spark.createDataFrame(
-        [(pid, json.dumps(gt), json.dumps(pred)) for pid, gt, pred, _ in LOC_METRIC_FIXTURES],
-        "page_id long, gt string, pred string",
-    )
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for pid, gt_s, pred_s in zip(pdf["page_id"], pdf["gt"], pdf["pred"]):
-                gt = json.loads(gt_s)
-                pred = json.loads(pred_s)
-                gt_boxes = np.asarray([b for b, _ in gt], dtype=np.float64).reshape(-1, 4)
-                pred_boxes = np.asarray([b for b, _ in pred], dtype=np.float64).reshape(-1, 4)
-                n_loc, iou_sum = localization_confusion(gt_boxes, pred_boxes)
-                _, n_text = ocr_matches(
-                    gt_boxes, [t for _, t in gt], pred_boxes, [t for _, t in pred]
-                )
-                rows.append(
-                    {"page_id": pid, "n_loc_matches": n_loc,
-                     "iou_sum": round(float(iou_sum), 6), "n_text_matches": n_text}
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        run, "page_id long, n_loc_matches long, iou_sum double, n_text_matches long"
-    )
+    gt_boxes = np.asarray([b for b, _ in gt], dtype=np.float64).reshape(-1, 4)
+    pred_boxes = np.asarray([b for b, _ in pred], dtype=np.float64).reshape(-1, 4)
+    n_loc, iou_sum = localization_confusion(gt_boxes, pred_boxes)
+    _, n_text = ocr_matches(gt_boxes, [t for _, t in gt], pred_boxes, [t for _, t in pred])
+    return [(page_id, n_loc, round(float(iou_sum), 6), n_text)]
 
 
-OCR_METRIC_ORACLE = values_oracle(
-    [(pid, e[0], e[1], e[2]) for pid, _, _, e in LOC_METRIC_FIXTURES],
+q_ocr_metric, OCR_METRIC_ORACLE = fixture_kernel(
+    _ocr_metric_kernel,
+    [(pid, gt, pred) for pid, gt, pred, _ in LOC_METRIC_FIXTURES],
     [("page_id", "BIGINT"), ("n_loc_matches", "BIGINT"), ("iou_sum", "DOUBLE"),
      ("n_text_matches", "BIGINT")],
+    [(pid, *e) for pid, _, _, e in LOC_METRIC_FIXTURES],
 )
 
 
@@ -1757,17 +1574,10 @@ def q_lang_id_conf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", lang.alias("lang_pred"), conf.alias("lang_conf"))
 
 
-def _lang_conf_oracle() -> str:
-    from ..functions.text import lang_id_conf_sql
-
-    lang, conf = lang_id_conf_sql("text")
-    return f"""
-SELECT doc_id, {lang} AS lang_pred, CAST({conf} AS DOUBLE) AS lang_conf
+LANG_CONF_ORACLE = """
+SELECT doc_id, {} AS lang_pred, CAST({} AS DOUBLE) AS lang_conf
 FROM documents
-"""
-
-
-LANG_CONF_ORACLE = _lang_conf_oracle()
+""".format(*lang_id_conf_sql("text"))
 
 
 def q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1781,13 +1591,7 @@ def q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lm_bigram_scores(train, docs, "doc_id", "text").withColumnRenamed("id", "doc_id")
 
 
-def _lm_oracle() -> str:
-    from ..operators.lm import lm_bigram_scores_sql
-
-    return lm_bigram_scores_sql("doc_id < 400")
-
-
-LM_PERPLEXITY_ORACLE = _lm_oracle()
+LM_PERPLEXITY_ORACLE = lm_bigram_scores_sql("doc_id < 400")
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1951,26 +1755,18 @@ KIE_ENTITY_FIXTURES = [
 ]
 
 
-def q_kie_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Typed KIE token classification (email/url/date + number/word/symbol)."""
+# typed KIE token classification (email/url/date + number/word/symbol)
+def _kie_entity_kernel(case_id: int, token: str) -> list[tuple]:
     from ..operators.kie import classify_token
 
-    src = spark.createDataFrame(
-        [(cid, v) for cid, v, _ in KIE_ENTITY_FIXTURES], "case_id long, token string"
-    )
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {"case_id": pdf["case_id"], "cls": [classify_token(v) for v in pdf["token"]]}
-            )
-
-    return src.mapInPandas(run, "case_id long, cls string")
+    return [(case_id, classify_token(token))]
 
 
-KIE_ENTITIES_ORACLE = values_oracle(
-    [(cid, cls) for cid, _, cls in KIE_ENTITY_FIXTURES],
+q_kie_entities, KIE_ENTITIES_ORACLE = fixture_kernel(
+    _kie_entity_kernel,
+    [(cid, v) for cid, v, _ in KIE_ENTITY_FIXTURES],
     [("case_id", "BIGINT"), ("cls", "VARCHAR")],
+    [(cid, cls) for cid, _, cls in KIE_ENTITY_FIXTURES],
 )
 
 
@@ -2054,10 +1850,51 @@ AUDIO_RMS_ORACLE = values_oracle(
 )
 
 
+# page heights (px; every page is 640 wide, scale 3) of each turn of the
+# first 12 conversations of the OCR-only generator corpus
+# (make_transcripts(n, ocr_ratio=1.0, html_ratio=0.0)), pinned by the
+# deterministic generator; the bundle/frame oracles below and the OCR
+# exactness oracles of __spark_entry__.py all derive from this one table
+OCR_PAGE_HEIGHTS = [
+    [(165, 165), (165,), (69, 69), (117,), (117, 69), (117,), (117,), (69,), (69,), (69,),
+     (165, 117), (165, 165)],
+    [(69,), (69, 117), (69,)],
+    [(117,), (165,), (69,), (117, 117), (117,), (165, 165), (117,), (117,), (117,),
+     (165, 117), (117, 69), (117, 117), (165,)],
+    [(165, 69), (117,), (165, 117), (117, 165), (165,), (165,), (69, 165), (117,), (117,),
+     (117,), (117,), (165,), (117, 165)],
+    [(69,), (117, 165), (117, 117), (117, 117), (69, 165), (165,), (69, 117), (165, 165),
+     (165,)],
+    [(69, 117), (117,), (117,), (165,), (165,), (165,), (117,), (117,), (165,), (165,), (69,),
+     (165,)],
+    [(165,), (69,), (165,), (69, 69), (117,), (69,), (117,), (165,), (117, 69), (69,),
+     (117, 165), (165,), (117, 165), (165, 69)],
+    [(165, 117), (117, 117), (117, 165), (69, 117), (117,), (117, 165), (69,), (165, 165),
+     (165, 117), (117,), (117,)],
+    [(117, 117), (117, 117), (165, 117), (117,), (117, 165), (117, 117), (165, 117), (165,),
+     (165, 117), (165, 117), (165, 165), (165, 117), (117,)],
+    [(165,), (117, 117), (165,), (117,)],
+    [(165, 117), (165,), (117,), (117, 117), (165,), (117, 117), (165,), (69, 117), (117,),
+     (165,), (117, 117), (69, 117)],
+    [(117, 165), (165,), (117, 165), (69, 165)],
+]
+
+
+def _bundle_turns(n_convs: int) -> list[tuple[int, tuple[int, ...]]]:
+    """(turn_key = conv_idx*1000 + turn_idx, page heights) per turn."""
+    return [
+        (c * 1000 + t, heights)
+        for c, turns in enumerate(OCR_PAGE_HEIGHTS[:n_convs])
+        for t, heights in enumerate(turns)
+    ]
+
+
 def _bundles_from_corpus(spark: SparkSession, n_convs: int = 8):
     from ..sources.corpus import make_transcripts
 
     gen = make_transcripts(spark, n_convs, partitions=2, ocr_ratio=1.0, html_ratio=0.0)
+    # stable numeric key conv_idx*1000 + turn_idx (monotonically_increasing_id
+    # would be partition-dependent and unoraclable)
     return gen.select(
         (
             F.regexp_extract("conv_id", r"conv-(\d+)", 1).cast("long") * 1000
@@ -2065,6 +1902,32 @@ def _bundles_from_corpus(spark: SparkSession, n_convs: int = 8):
         ).alias("row_id"),
         F.unbase64(F.get_json_object("tool", "$.b64")).alias("payload"),
     )
+
+
+def q_bundle_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Binary page-bundle metadata extraction (multimodal opaque-bytes
+    path), keyed by (conv_id, turn_idx) and flattened to CSV strings so the
+    deterministic generator output pins a VALUES oracle."""
+    from ..operators.multimodal import page_bundle_metadata
+
+    meta = page_bundle_metadata(_bundles_from_corpus(spark, 10), "row_id", "payload")
+    return meta.select(
+        F.col("id").alias("turn_key"),
+        F.col("n_pages").cast("long").alias("n_pages"),
+        F.col("scale").cast("long").alias("scale"),
+        F.concat_ws(",", F.transform("heights", lambda h: h.cast("string"))).alias("heights_csv"),
+        F.concat_ws(",", F.transform("widths", lambda w: w.cast("string"))).alias("widths_csv"),
+    )
+
+
+BUNDLE_METADATA_ORACLE = values_oracle(
+    [
+        (key, len(hs), 3, ",".join(map(str, hs)), ",".join(["640"] * len(hs)))
+        for key, hs in _bundle_turns(10)
+    ],
+    [("turn_key", "BIGINT"), ("n_pages", "BIGINT"), ("scale", "BIGINT"),
+     ("heights_csv", "VARCHAR"), ("widths_csv", "VARCHAR")],
+)
 
 
 def q_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2086,19 +1949,6 @@ def q_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame sampling (video analog): keep every 2nd page of each bundle."""
-    from ..operators.multimodal import frame_sample
-
-    out = frame_sample(_bundles_from_corpus(spark, 8), "row_id", "payload", every_k=2)
-    return out.select(
-        F.col("id").alias("turn_key"),
-        F.col("page_idx").cast("long").alias("page_idx"),
-        F.col("height").cast("long").alias("height"),
-        F.col("width").cast("long").alias("width"),
-    )
-
-
 PIXEL_STATS_ORACLE = """
 -- generator-pinned per-height-class pixel stats (8 deterministic convs)
 SELECT CAST(height AS BIGINT) AS height, CAST(width AS BIGINT) AS width,
@@ -2112,100 +1962,29 @@ FROM (VALUES
 ) AS v(height, width, n_pages, avg_ink_ratio, avg_intensity)
 """
 
-FRAME_SAMPLE_ORACLE = """
--- generator-pinned every-2nd-page sample over 8 deterministic convs
-SELECT CAST(turn_key AS BIGINT) AS turn_key, CAST(page_idx AS BIGINT) AS page_idx,
-       CAST(height AS BIGINT) AS height, CAST(width AS BIGINT) AS width
-FROM (VALUES
-  (0, 0, 165, 640),
-  (1, 0, 165, 640),
-  (2, 0, 69, 640),
-  (3, 0, 117, 640),
-  (4, 0, 117, 640),
-  (5, 0, 117, 640),
-  (6, 0, 117, 640),
-  (7, 0, 69, 640),
-  (8, 0, 69, 640),
-  (9, 0, 69, 640),
-  (10, 0, 165, 640),
-  (11, 0, 165, 640),
-  (1000, 0, 69, 640),
-  (1001, 0, 69, 640),
-  (1002, 0, 69, 640),
-  (2000, 0, 117, 640),
-  (2001, 0, 165, 640),
-  (2002, 0, 69, 640),
-  (2003, 0, 117, 640),
-  (2004, 0, 117, 640),
-  (2005, 0, 165, 640),
-  (2006, 0, 117, 640),
-  (2007, 0, 117, 640),
-  (2008, 0, 117, 640),
-  (2009, 0, 165, 640),
-  (2010, 0, 117, 640),
-  (2011, 0, 117, 640),
-  (2012, 0, 165, 640),
-  (3000, 0, 165, 640),
-  (3001, 0, 117, 640),
-  (3002, 0, 165, 640),
-  (3003, 0, 117, 640),
-  (3004, 0, 165, 640),
-  (3005, 0, 165, 640),
-  (3006, 0, 69, 640),
-  (3007, 0, 117, 640),
-  (3008, 0, 117, 640),
-  (3009, 0, 117, 640),
-  (3010, 0, 117, 640),
-  (3011, 0, 165, 640),
-  (3012, 0, 117, 640),
-  (4000, 0, 69, 640),
-  (4001, 0, 117, 640),
-  (4002, 0, 117, 640),
-  (4003, 0, 117, 640),
-  (4004, 0, 69, 640),
-  (4005, 0, 165, 640),
-  (4006, 0, 69, 640),
-  (4007, 0, 165, 640),
-  (4008, 0, 165, 640),
-  (5000, 0, 69, 640),
-  (5001, 0, 117, 640),
-  (5002, 0, 117, 640),
-  (5003, 0, 165, 640),
-  (5004, 0, 165, 640),
-  (5005, 0, 165, 640),
-  (5006, 0, 117, 640),
-  (5007, 0, 117, 640),
-  (5008, 0, 165, 640),
-  (5009, 0, 165, 640),
-  (5010, 0, 69, 640),
-  (5011, 0, 165, 640),
-  (6000, 0, 165, 640),
-  (6001, 0, 69, 640),
-  (6002, 0, 165, 640),
-  (6003, 0, 69, 640),
-  (6004, 0, 117, 640),
-  (6005, 0, 69, 640),
-  (6006, 0, 117, 640),
-  (6007, 0, 165, 640),
-  (6008, 0, 117, 640),
-  (6009, 0, 69, 640),
-  (6010, 0, 117, 640),
-  (6011, 0, 165, 640),
-  (6012, 0, 117, 640),
-  (6013, 0, 165, 640),
-  (7000, 0, 165, 640),
-  (7001, 0, 117, 640),
-  (7002, 0, 117, 640),
-  (7003, 0, 69, 640),
-  (7004, 0, 117, 640),
-  (7005, 0, 117, 640),
-  (7006, 0, 69, 640),
-  (7007, 0, 165, 640),
-  (7008, 0, 165, 640),
-  (7009, 0, 117, 640),
-  (7010, 0, 117, 640)
-) AS v(turn_key, page_idx, height, width)
-"""
+
+def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Frame sampling (video analog): keep every 2nd page of each bundle."""
+    from ..operators.multimodal import frame_sample
+
+    out = frame_sample(_bundles_from_corpus(spark, 8), "row_id", "payload", every_k=2)
+    return out.select(
+        F.col("id").alias("turn_key"),
+        F.col("page_idx").cast("long").alias("page_idx"),
+        F.col("height").cast("long").alias("height"),
+        F.col("width").cast("long").alias("width"),
+    )
+
+
+FRAME_SAMPLE_ORACLE = values_oracle(
+    [
+        (key, i, h, 640)
+        for key, hs in _bundle_turns(8)
+        for i, h in enumerate(hs)
+        if i % 2 == 0
+    ],
+    [("turn_key", "BIGINT"), ("page_idx", "BIGINT"), ("height", "BIGINT"), ("width", "BIGINT")],
+)
 
 
 def q_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -235,6 +235,14 @@ class NumpySession:
                 f"NumpySession does not implement ONNX ops {unsupported}; "
                 "install onnxruntime for full coverage"
             )
+        # run() stores only outputs[0] of each node; a second output (e.g.
+        # MaxPool's Indices) would be silently missing downstream
+        multi = [n for n in self.model["nodes"] if len(n["outputs"]) > 1]
+        if multi:
+            raise NotImplementedError(
+                f"NumpySession does not implement multi-output nodes: "
+                f"{multi[0]['op_type']} node with outputs {multi[0]['outputs']}"
+            )
         # kernel spectra keyed (weights id, fft shape). BOUNDED at
         # _FFT_CACHE_MAX: sessions live for the worker process
         # (resolve_model singleton), and on heterogeneous page sizes every

@@ -103,6 +103,18 @@ def extract_archive(archive_path: str, extract_root: str) -> str:
     return extract_root
 
 
+def _by_basename(parsed: dict) -> dict:
+    """Re-key a per-image map by basename, the key binaryFile surfaces.
+    Two annotated files with one basename in different subdirectories
+    would silently collapse into one entry, so that raises instead."""
+    rekeyed = {os.path.basename(k): v for k, v in parsed.items()}
+    if len(rekeyed) != len(parsed):
+        names = [os.path.basename(k) for k in parsed]
+        dup = sorted({n for n in names if names.count(n) > 1})
+        raise ValueError(f"annotated images share basenames {dup} across subdirectories")
+    return rekeyed
+
+
 # ------------------------------------------------------------ annotation parsers
 
 
@@ -406,9 +418,7 @@ def load_ic03(
     with open(xml_path) as fh:
         parsed = parse_ic03_words_xml(fh.read(), use_polygons)
     imgs = _images_df(spark, sub, list(parsed))
-    # XML image names may carry subdirs — binaryFile keeps only the
-    # basename; re-key the broadcast map the same way
-    parsed = {os.path.basename(k): v for k, v in parsed.items()}
+    parsed = _by_basename(parsed)
     return _attach_broadcast_columns(spark, imgs, parsed, ["geoms", "labels"], GEOM_SCHEMA)
 
 
@@ -425,7 +435,7 @@ def load_svt(
     with open(xml_path) as fh:
         parsed = parse_svt_xml(fh.read(), use_polygons)
     imgs = _images_df(spark, sub, list(parsed))
-    parsed = {os.path.basename(k): v for k, v in parsed.items()}
+    parsed = _by_basename(parsed)
     return _attach_broadcast_columns(spark, imgs, parsed, ["geoms", "labels"], GEOM_SCHEMA)
 
 
@@ -474,7 +484,7 @@ def load_iiit5k(
                 geoms.append([x, y, x + w, y + h])
         parsed[img_path] = (geoms, list(label))
     imgs = _images_df(spark, sub, list(parsed))
-    parsed = {os.path.basename(k): v for k, v in parsed.items()}
+    parsed = _by_basename(parsed)
     return _attach_broadcast_columns(spark, imgs, parsed, ["geoms", "labels"], GEOM_SCHEMA)
 
 
@@ -513,8 +523,13 @@ def load_synthtext(
             ]
         parsed[img_path] = (geoms, labels)
     imgs = _images_df(spark, sub, list(parsed))
-    parsed = {os.path.basename(k): v for k, v in parsed.items()}
+    parsed = _by_basename(parsed)
     return _attach_broadcast_columns(spark, imgs, parsed, ["geoms", "labels"], GEOM_SCHEMA)
+
+
+def _mjsynth_rel(path: str) -> str:
+    path = path.strip()
+    return path[2:] if path.startswith("./") else path
 
 
 def load_mjsynth(
@@ -528,7 +543,9 @@ def load_mjsynth(
     labels parsed from the filename's second underscore field, 90/10
     in-order train split (mjsynth.py:95-104). The reference hardcodes a
     blacklist of known-corrupt archive paths (mjsynth.py:54-74); pass
-    yours via ``blacklist`` — the corrupt-file list is data, not format."""
+    yours via ``blacklist`` — the corrupt-file list is data, not format.
+    Entries and label lines compare without their newline and ``./``
+    prefix, so ``"2/1/x.jpg"`` and ``"./2/1/x.jpg\n"`` both match."""
     if not os.path.exists(label_path) or not os.path.isdir(img_folder):
         missing = label_path if not os.path.exists(label_path) else img_folder
         raise FileNotFoundError(f"unable to locate {missing}")
@@ -536,16 +553,14 @@ def load_mjsynth(
         img_paths = fh.readlines()
     train_samples = int(len(img_paths) * 0.9)
     set_slice = slice(train_samples) if train else slice(train_samples, None)
+    blocked = {_mjsynth_rel(p) for p in blacklist}
     parsed: dict[str, str] = {}
     for path in img_paths[set_slice]:
-        if path in blacklist:
-            continue
-        rel = path[2:].strip() if path.startswith("./") else path.strip()
-        parsed[rel] = path.split("_")[1]
+        rel = _mjsynth_rel(path)
+        if rel not in blocked:
+            parsed[rel] = path.split("_")[1]
     imgs = _images_df(spark, img_folder, list(parsed))
-    # binaryFile surfaces basenames; MJSynth filenames carry a unique
-    # numeric suffix, so the basename re-key is collision-free
-    parsed = {os.path.basename(k): v for k, v in parsed.items()}
+    parsed = _by_basename(parsed)
     return _attach_broadcast_columns(spark, imgs, parsed, ["label"], "label string")
 
 
@@ -574,7 +589,7 @@ def load_iiithws(
         rel, label = ln.split()[0:2]
         parsed[rel] = label
     imgs = _images_df(spark, img_folder, list(parsed))
-    parsed = {os.path.basename(k): v for k, v in parsed.items()}
+    parsed = _by_basename(parsed)
     return _attach_broadcast_columns(spark, imgs, parsed, ["label"], "label string")
 
 
@@ -590,8 +605,7 @@ def load_wildreceipt(
     with open(label_path) as fh:
         for line in fh.read().strip().split("\n"):
             rec = json.loads(line)
-            parsed[os.path.basename(rec["file_name"])] = parse_wildreceipt_line(
-                rec, use_polygons
-            )
+            parsed[rec["file_name"]] = parse_wildreceipt_line(rec, use_polygons)
+    parsed = _by_basename(parsed)
     imgs = _images_df(spark, img_folder, list(parsed))
     return _attach_broadcast_columns(spark, imgs, parsed, ["geoms", "labels"], GEOM_SCHEMA)

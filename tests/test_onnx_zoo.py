@@ -75,6 +75,24 @@ def test_numpy_executor_rejects_unsupported_ops(tmp_path):
         NumpySession(str(p))
 
 
+def test_numpy_executor_rejects_multi_output_nodes_at_load(tmp_path):
+    """run() keeps only a node's first output, so a MaxPool that also
+    emits Indices must fail when the session loads, not inside run()."""
+    from doctr_spark.plans.onnx_exec import NumpySession
+
+    blob = encode_model(
+        "two_out",
+        [encode_node("MaxPool", ["x"], ["y", "idx"], kernel_shape=[2, 2], strides=[2, 2])],
+        {},
+        inputs={"x": [1, 1, 4, 4]},
+        outputs={"y": [1, 1, 2, 2], "idx": [1, 1, 2, 2]},
+    )
+    p = tmp_path / "two_out.onnx"
+    p.write_bytes(blob)
+    with pytest.raises(NotImplementedError, match=r"MaxPool.*'y', 'idx'"):
+        NumpySession(str(p))
+
+
 def test_onnx_detector_boxes_match_ink_family():
     det = onnx_detector(ONNX_DET_PATH, postproc=INK_MODEL_POSTPROC)[1]()
     for words in (["HELLO", "WORLD"], ["A+B=C", "R&D", "#1"], ["READY.", "GO!", "OK,"]):
