@@ -901,6 +901,46 @@ FROM (VALUES
 """
 
 
+def _page_turns(spark: SparkSession, n: int, prefix: str, page, extra_schema: str = "") -> DataFrame:
+    """``n`` one-turn conversations ``{prefix}-{i:04d}`` on 4 partitions, each
+    a user turn carrying one ``page_bundle`` page (scale 3). ``page(i)``
+    returns that page and a dict of extra columns declared by
+    ``extra_schema`` (a DDL suffix such as ``", expected_kie string"``)."""
+
+    def gen(batches):
+        import datetime as dt
+
+        import pandas as pd
+
+        from doctr_spark.sources.payloads import encode_page_bundle, tool_envelope
+
+        for pdf in batches:
+            rows = []
+            for raw in pdf["id"].tolist():
+                i = int(raw)
+                img, extra = page(i)
+                rows.append(
+                    {
+                        "conv_id": f"{prefix}-{i:04d}",
+                        "turn_idx": 0,
+                        "role": "user",
+                        "text": "[attachment: 1 page(s)]",
+                        "tool": tool_envelope("page_bundle", encode_page_bundle([img], 3)),
+                        "ts": dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc),
+                        **extra,
+                    }
+                )
+            out = pd.DataFrame(rows)
+            out["ts"] = pd.to_datetime(out["ts"], utc=True)
+            yield out
+
+    return spark.range(0, n, 1, 4).mapInPandas(
+        gen,
+        schema="conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+        + extra_schema,
+    )
+
+
 def _q_kie_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The KIE predictor as a PIPELINE entry point (reference
     models/kie_predictor/pytorch.py:69-182): extract_turns(kie=True) runs
@@ -912,54 +952,28 @@ def _q_kie_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the generator-known layout."""
     from doctr_spark.plans.pipeline import extract_turns
 
-    def gen(batches):
-        import datetime as dt
-
-        import pandas as pd
-
+    def page(i):
         from doctr_spark.sources.font import render_page
-        from doctr_spark.sources.payloads import encode_page_bundle, tool_envelope
 
-        for pdf in batches:
-            rows = []
-            for raw in pdf["id"].tolist():
-                i = int(raw)
-                words = [
-                    f"USER{i}", f"{i}7", f"2026-01-1{i}", f"A{i}@B{i}.IO",
-                    f"HTTPS://X{i}.CO", "+=", "HELLO",
-                ]
-                img, _ = render_page(words, scale=3)
-                expected = "\n\n".join(
-                    [
-                        f"date: 2026-01-1{i}",
-                        f"email: A{i}@B{i}.IO",
-                        f"number: {i}7",
-                        "symbol: +=",
-                        f"url: HTTPS://X{i}.CO",
-                        f"word: USER{i}",
-                        "word: HELLO",
-                    ]
-                )
-                rows.append(
-                    {
-                        "conv_id": f"kie-{i:04d}",
-                        "turn_idx": 0,
-                        "role": "user",
-                        "text": "[attachment: 1 page(s)]",
-                        "tool": tool_envelope("page_bundle", encode_page_bundle([img], 3)),
-                        "ts": dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc),
-                        "expected_kie": expected,
-                    }
-                )
-            out = pd.DataFrame(rows)
-            out["ts"] = pd.to_datetime(out["ts"], utc=True)
-            yield out
+        words = [
+            f"USER{i}", f"{i}7", f"2026-01-1{i}", f"A{i}@B{i}.IO",
+            f"HTTPS://X{i}.CO", "+=", "HELLO",
+        ]
+        img, _ = render_page(words, scale=3)
+        expected = "\n\n".join(
+            [
+                f"date: 2026-01-1{i}",
+                f"email: A{i}@B{i}.IO",
+                f"number: {i}7",
+                "symbol: +=",
+                f"url: HTTPS://X{i}.CO",
+                f"word: USER{i}",
+                "word: HELLO",
+            ]
+        )
+        return img, {"expected_kie": expected}
 
-    src = spark.range(0, 8, 1, 4).mapInPandas(
-        gen,
-        schema="conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp, expected_kie string",
-    )
+    src = _page_turns(spark, 8, "kie", page, ", expected_kie string")
     out = extract_turns(src, kie=True).join(
         src.select("conv_id", "expected_kie"), "conv_id"
     )
@@ -1182,53 +1196,31 @@ def _q_artefact_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     text-equality count proving artefacts never pollute the render."""
     from doctr_spark.plans.pipeline import extract_turns
 
-    def gen(batches):
-        import datetime as dt
-
+    def page(i):
         import numpy as np
-        import pandas as pd
 
         from doctr_spark.sources.font import render_page
-        from doctr_spark.sources.payloads import encode_page_bundle, tool_envelope
 
-        for pdf in batches:
-            rows = []
-            for raw in pdf["id"].tolist():
-                i = int(raw)
-                img, _ = render_page(["ALPHA", "BRAVO"], scale=3)
-                h, w = img.shape
-                size = 24 + 6 * (i // 4)  # vary region size per row
-                if i % 4 == 0:  # bar code: 3px stripes
-                    pat = np.zeros((size, 96), bool)
-                    for x in range(0, 96, 6):
-                        pat[:, x : x + 3] = True
-                elif i % 4 == 1:  # qr: 6px module checker
-                    yy, xx = np.indices((size, 72))
-                    pat = (yy // 6 + xx // 6) % 2 == 0
-                elif i % 4 == 2:  # halftone: 1px checker
-                    pat = np.indices((size, 72)).sum(0) % 2 == 0
-                else:  # solid block
-                    pat = np.ones((size, 72), bool)
-                page = np.full((h + 27 + pat.shape[0] + 12, w), 255, dtype=np.uint8)
-                page[:h] = img
-                page[h + 27 : h + 27 + pat.shape[0], 24 : 24 + pat.shape[1]][pat] = 0
-                rows.append(
-                    {
-                        "conv_id": f"art-{i:04d}",
-                        "turn_idx": 0,
-                        "role": "user",
-                        "text": "[attachment: 1 page(s)]",
-                        "tool": tool_envelope("page_bundle", encode_page_bundle([page], 3)),
-                        "ts": dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc),
-                    }
-                )
-            out = pd.DataFrame(rows)
-            out["ts"] = pd.to_datetime(out["ts"], utc=True)
-            yield out
+        img, _ = render_page(["ALPHA", "BRAVO"], scale=3)
+        h, w = img.shape
+        size = 24 + 6 * (i // 4)  # vary region size per row
+        if i % 4 == 0:  # bar code: 3px stripes
+            pat = np.zeros((size, 96), bool)
+            for x in range(0, 96, 6):
+                pat[:, x : x + 3] = True
+        elif i % 4 == 1:  # qr: 6px module checker
+            yy, xx = np.indices((size, 72))
+            pat = (yy // 6 + xx // 6) % 2 == 0
+        elif i % 4 == 2:  # halftone: 1px checker
+            pat = np.indices((size, 72)).sum(0) % 2 == 0
+        else:  # solid block
+            pat = np.ones((size, 72), bool)
+        out = np.full((h + 27 + pat.shape[0] + 12, w), 255, dtype=np.uint8)
+        out[:h] = img
+        out[h + 27 : h + 27 + pat.shape[0], 24 : 24 + pat.shape[1]][pat] = 0
+        return out, {}
 
-    src = spark.range(0, 12, 1, 4).mapInPandas(
-        gen, schema="conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    )
+    src = _page_turns(spark, 12, "art", page)
     out = extract_turns(src)
     n_text_exact = out.agg(
         F.sum((F.col("extracted_text") == "ALPHA BRAVO").cast("long")).alias("n_text_exact")

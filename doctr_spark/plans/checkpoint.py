@@ -2,22 +2,33 @@
 sidecar table (semantics the reference lacks entirely — SURVEY.md §4.3).
 
 Design: conversations hash into ``buckets`` deterministic buckets
-(pmod(xxhash64(conv_id))). Each bucket is extracted and written as its own
-partition directory; a manifest (sidecar) table records one row per
-completed bucket with extraction metrics (turns, boxes, chars, strip
-ratio). A restart anti-joins the manifest: only unfinished buckets run.
+(pmod(xxhash64(conv_id))), written as ``results/bucket=b`` partition
+directories; a manifest (sidecar) table records one row per completed
+bucket with extraction metrics (turns, boxes, chars, strip ratio). A
+restart collects the manifest's done buckets to the driver and runs only
+the others.
+
+One commit routine writes a chunk of buckets: one input scan, one
+partitioned write, one read-back aggregate over the committed files, one
+manifest append. The modes only chunk differently. Grouped mode commits
+all remaining buckets as one chunk: one input scan per run, but a failure
+loses the whole chunk. Per-bucket mode commits one bucket at a time: one
+input scan per bucket, and each bucket commits on its own.
 
 At 100 TB the same layout holds: buckets are the unit of retry/lineage
-(O(100-1000) of them), each bucket write is a normal distributed job, and
-the input scan for bucket b is pruned by predicate pushdown when the
-source table is bucketed/partitioned by the same key — on plain parquet
-it degrades to a full-scan filter per bucket, which is why bucket counts
-should stay coarse."""
+(O(100-1000) of them), each commit is a normal distributed job, and the
+input scan for a chunk is pruned by predicate pushdown when the source
+table is bucketed/partitioned by the same key — on plain parquet it
+degrades to a full-scan filter per chunk, which is why per-bucket mode
+wants coarse bucket counts."""
 
 from __future__ import annotations
 
 import os
+import shutil
+from datetime import datetime, timezone
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -27,6 +38,8 @@ MANIFEST_SCHEMA = (
     "bucket int, n_turns long, n_convs long, n_boxes long, n_chars long, "
     "avg_strip_ratio double, status string, completed_ts timestamp"
 )
+# the committed result columns the manifest metrics are read back from
+_METRIC_SCHEMA = "conv_id string, n_boxes int, n_chars int, strip_ratio double, bucket int"
 
 
 def with_bucket(df: DataFrame, buckets: int) -> DataFrame:
@@ -36,11 +49,76 @@ def with_bucket(df: DataFrame, buckets: int) -> DataFrame:
 def completed_buckets(spark: SparkSession, manifest_dir: str) -> set[int]:
     if not os.path.exists(manifest_dir):
         return set()
-    try:
-        rows = spark.read.parquet(manifest_dir).filter(F.col("status") == "done").select("bucket").collect()
-    except Exception:
-        return set()
+    rows = (
+        spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_dir)
+        .filter(F.col("status") == "done").select("bucket").collect()
+    )
     return {r["bucket"] for r in rows}
+
+
+def _commit(
+    spark: SparkSession, transcripts: DataFrame, out_dir: str, buckets: int, chunk: list[int]
+) -> None:
+    """Extract and commit the buckets in ``chunk``: results first, then one
+    manifest row per bucket, so a manifest row always names committed files."""
+    results_dir = os.path.join(out_dir, "results")
+    # a prior failed run may have left partition dirs for un-manifested
+    # buckets; dynamic overwrite only rewrites partitions present in the NEW
+    # data, so a retry that legitimately produces zero rows for such a
+    # bucket would leave the stale rows in results/ (and in the read-back
+    # metrics). Clear the chunk's dirs up front — manifested buckets are
+    # never in a chunk, so never touched.
+    for b in chunk:
+        shutil.rmtree(os.path.join(results_dir, f"bucket={b}"), ignore_errors=True)
+    part = with_bucket(transcripts, buckets).filter(F.col("bucket").isin(chunk)).drop("bucket")
+    res = with_bucket(extract_turns(part), buckets)
+    (
+        # co-locate each bucket before the partitioned write via an
+        # AQE REBALANCE on the bucket key: one shuffle of slim
+        # post-extraction text rows buys ~one file per bucket
+        # instead of tasks x buckets small files (the dynamic-
+        # overwrite commit moves files SERIALLY on the driver, so
+        # file count is a fixed serial cost that was strangling
+        # wide clusters: 32-core 7.1k -> 19.1k cold / 24.7k warm
+        # turns/s on a 605k-turn corpus). Unlike a plain
+        # repartition(buckets, bucket), REBALANCE also SPLITS an
+        # oversized bucket at the advisory partition size — a
+        # single 10^5-turn conversation concentrates one bucket,
+        # and a hard one-task-per-bucket rule would serialize its
+        # whole write behind one core (the skew-bench straggler);
+        # splitting costs a handful of extra files, still O(1) per
+        # bucket for the serial commit.
+        res.hint("rebalance", "bucket")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket")
+        .parquet(results_dir)
+    )
+    metrics = {
+        r["bucket"]: tuple(r)[1:]
+        for r in spark.read.schema(_METRIC_SCHEMA).parquet(results_dir)
+        .filter(F.col("bucket").isin(chunk))
+        .groupBy("bucket")
+        .agg(
+            F.count("*"),
+            F.countDistinct("conv_id"),
+            F.coalesce(F.sum("n_boxes"), F.lit(0)),
+            F.coalesce(F.sum("n_chars"), F.lit(0)),
+            F.coalesce(F.avg("strip_ratio"), F.lit(1.0)),
+        )
+        .collect()
+    }
+    # every chunk bucket gets a manifest row — an empty bucket (no rows, so
+    # no partition dir) is still "done" with zero metrics, otherwise it
+    # would rerun on every resume
+    ts = datetime.now(timezone.utc)
+    rows = [(b, *metrics.get(b, (0, 0, 0, 0, 1.0)), "done", ts) for b in chunk]
+    # rows in a pandas frame reach the JVM as Arrow; a plain list would add a
+    # Python-worker stage to every append (about 0.3 s on a 4-core box).
+    # One manifest file per commit.
+    spark.createDataFrame(pd.DataFrame(rows), MANIFEST_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(os.path.join(out_dir, "manifest"))
 
 
 def run_extraction_checkpointed(
@@ -54,132 +132,20 @@ def run_extraction_checkpointed(
     """Extract all turns, bucket by bucket, resuming past completed buckets.
 
     ``max_buckets_this_run`` lets tests simulate an interrupted run.
-    ``grouped=True`` runs ALL remaining buckets in one job (single input
-    scan + ``partitionBy(bucket)`` dynamic-overwrite write) instead of one
-    scan per bucket — the 100 TB shape: N remaining buckets cost one pass,
-    and a mid-job failure just leaves un-manifested partition dirs that the
-    next run dynamically overwrites. Per-bucket mode keeps the finest
-    retry/lineage granularity (each bucket commits independently).
+    ``grouped=True`` commits ALL remaining buckets as one chunk (single
+    input scan + ``partitionBy(bucket)`` dynamic-overwrite write) instead
+    of one chunk per bucket — the 100 TB shape: N remaining buckets cost
+    one pass, and a mid-job failure just leaves un-manifested partition
+    dirs that the next run clears and rewrites. Per-bucket mode keeps the
+    finest retry/lineage granularity (each bucket commits independently).
     Returns a summary dict.
     """
-    results_dir = os.path.join(out_dir, "results")
-    manifest_dir = os.path.join(out_dir, "manifest")
-    done = completed_buckets(spark, manifest_dir)
-    bucketed = with_bucket(transcripts, buckets)
-
-    if grouped:
-        todo = [b for b in range(buckets) if b not in done]
-        if max_buckets_this_run is not None:
-            todo = todo[:max_buckets_this_run]
-        if todo:
-            # a prior failed grouped run may have left partition dirs for
-            # un-manifested buckets; dynamic overwrite only rewrites
-            # partitions present in the NEW data, so a retry that
-            # legitimately produces zero rows for such a bucket would leave
-            # the stale rows in results/ (and in the read-back metrics).
-            # Clear todo-bucket dirs up front — manifested buckets are
-            # never touched.
-            import shutil
-
-            for b in todo:
-                stale = os.path.join(results_dir, f"bucket={b}")
-                if os.path.exists(stale):
-                    shutil.rmtree(stale, ignore_errors=True)
-            part = bucketed.filter(F.col("bucket").isin(todo)).drop("bucket")
-            res = with_bucket(extract_turns(part), buckets)
-            (
-                # co-locate each bucket before the partitioned write via an
-                # AQE REBALANCE on the bucket key: one shuffle of slim
-                # post-extraction text rows buys ~one file per bucket
-                # instead of tasks x buckets small files (the dynamic-
-                # overwrite commit moves files SERIALLY on the driver, so
-                # file count is a fixed serial cost that was strangling
-                # wide clusters: 32-core 7.1k -> 19.1k cold / 24.7k warm
-                # turns/s on a 605k-turn corpus). Unlike a plain
-                # repartition(buckets, bucket), REBALANCE also SPLITS an
-                # oversized bucket at the advisory partition size — a
-                # single 10^5-turn conversation concentrates one bucket,
-                # and a hard one-task-per-bucket rule would serialize its
-                # whole write behind one core (the skew-bench straggler);
-                # splitting costs a handful of extra files, still O(1) per
-                # bucket for the serial commit.
-                res.hint("rebalance", "bucket")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(results_dir)
-            )
-            try:
-                written = spark.read.parquet(results_dir).filter(F.col("bucket").isin(todo))
-                per_bucket = written.groupBy("bucket").agg(
-                    F.count("*").alias("n_turns"),
-                    F.countDistinct("conv_id").alias("n_convs"),
-                    F.coalesce(F.sum("n_boxes"), F.lit(0)).alias("n_boxes"),
-                    F.coalesce(F.sum("n_chars"), F.lit(0)).alias("n_chars"),
-                    F.coalesce(F.avg("strip_ratio"), F.lit(1.0)).alias("avg_strip_ratio"),
-                )
-            except Exception:  # fully-empty write: no parquet files to read
-                per_bucket = spark.createDataFrame(
-                    [], "bucket int, n_turns long, n_convs long, n_boxes long, n_chars long, avg_strip_ratio double"
-                )
-            # every todo bucket gets a manifest row — an empty bucket (no
-            # rows, so no partition dir) is still "done" with zero metrics,
-            # otherwise it would rerun on every resume
-            todo_df = spark.createDataFrame([(b,) for b in todo], "bucket int")
-            metrics = (
-                todo_df.join(per_bucket, "bucket", "left")
-                .na.fill({"n_turns": 0, "n_convs": 0, "n_boxes": 0, "n_chars": 0, "avg_strip_ratio": 1.0})
-                .withColumn("status", F.lit("done"))
-                .withColumn("completed_ts", F.current_timestamp())
-                .select(
-                    F.col("bucket").cast("int"),
-                    "n_turns", "n_convs", "n_boxes", "n_chars",
-                    "avg_strip_ratio", "status", "completed_ts",
-                )
-            )
-            metrics.write.mode("append").parquet(manifest_dir)
-        return {
-            "processed": todo,
-            "skipped": sorted(done),
-            "remaining": buckets - len(done) - len(todo),
-        }
-
-    processed = []
-    for b in range(buckets):
-        if b in done:
-            continue
-        if max_buckets_this_run is not None and len(processed) >= max_buckets_this_run:
-            break
-        part = bucketed.filter(F.col("bucket") == b).drop("bucket")
-        res = extract_turns(part)
-        res.write.mode("overwrite").parquet(os.path.join(results_dir, f"bucket={b}"))
-        written = spark.read.parquet(os.path.join(results_dir, f"bucket={b}"))
-        metrics = written.agg(
-            F.count("*").alias("n_turns"),
-            F.countDistinct("conv_id").alias("n_convs"),
-            F.sum("n_boxes").alias("n_boxes"),
-            F.sum("n_chars").alias("n_chars"),
-            F.avg("strip_ratio").alias("avg_strip_ratio"),
-        ).collect()[0]
-        manifest_row = spark.createDataFrame(
-            [
-                (
-                    b,
-                    metrics["n_turns"],
-                    metrics["n_convs"],
-                    metrics["n_boxes"] or 0,
-                    metrics["n_chars"] or 0,
-                    float(metrics["avg_strip_ratio"] or 1.0),
-                    "done",
-                )
-            ],
-            "bucket int, n_turns long, n_convs long, n_boxes long, n_chars long, avg_strip_ratio double, status string",
-        ).withColumn("completed_ts", F.current_timestamp())
-        manifest_row.write.mode("append").parquet(manifest_dir)
-        processed.append(b)
-
-    remaining = buckets - len(done) - len(processed)
-    return {"processed": processed, "skipped": sorted(done), "remaining": remaining}
+    done = completed_buckets(spark, os.path.join(out_dir, "manifest"))
+    todo = [b for b in range(buckets) if b not in done][:max_buckets_this_run]
+    for chunk in [todo] if grouped else [[b] for b in todo]:
+        if chunk:
+            _commit(spark, transcripts, out_dir, buckets, chunk)
+    return {"processed": todo, "skipped": sorted(done), "remaining": buckets - len(done) - len(todo)}
 
 
 def read_extraction_results(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -34,7 +34,7 @@ def main() -> None:
     ap.add_argument("--input", help="transcript parquet dir (conv_id, turn_idx, role, text, tool, ts)")
     ap.add_argument("--output", help="output dir (results/ + manifest/)")
     ap.add_argument("--buckets", type=int, default=64)
-    ap.add_argument("--per-bucket-scan", action="store_true", help="one input scan per bucket (finest retry granularity); default is grouped: one scan for all remaining buckets")
+    ap.add_argument("--per-bucket-scan", action="store_true", help="commit each bucket on its own: one input scan per bucket, and a failure loses at most that bucket; default is grouped: all remaining buckets in one commit, one input scan per run, and a failure re-runs all of them")
     ap.add_argument("--salt-partitions", type=int, default=0, help="pre-UDF salted respread partitions (0 = auto: 4x parallelism when the input is coarser than 3x parallelism; -1 = off, rely on input splits)")
     ap.add_argument("--demo", action="store_true", help="generate a small corpus and run end-to-end locally")
     args = ap.parse_args()

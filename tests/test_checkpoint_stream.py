@@ -589,3 +589,54 @@ def test_streaming_extraction_per_microbatch_exact(spark, tmp_path_factory):
         assert n_turns > 0 and n_exact == n_turns  # ratio 1.0 per batch
     assert seen == set(expected)  # union covers every turn exactly once
     gen.unpersist()
+
+
+def test_completed_buckets_reads_manifest_strictly(spark, tmp_path):
+    """An empty (or ``_temporary``-only) manifest dir means nothing is done;
+    an unreadable manifest file raises instead of silently re-running every
+    bucket and appending duplicate manifest rows."""
+    from py4j.protocol import Py4JJavaError
+
+    manifest = tmp_path / "manifest"
+    manifest.mkdir()
+    assert completed_buckets(spark, str(manifest)) == set()
+    (manifest / "_temporary" / "0").mkdir(parents=True)
+    assert completed_buckets(spark, str(manifest)) == set()
+
+    (manifest / "part-00000-garbage.snappy.parquet").write_bytes(b"not a parquet file" * 8)
+    with pytest.raises(Py4JJavaError, match="FAILED_READ_FILE"):
+        completed_buckets(spark, str(manifest))
+
+
+def test_checkpoint_modes_commit_identically(spark, corpus, tmp_path_factory):
+    """Grouped, per-bucket, and per-bucket interrupted after one bucket then
+    resumed all commit the same result rows and the same manifest rows
+    (except completed_ts), including a bucket that receives no rows."""
+    from doctr_spark.plans.checkpoint import with_bucket
+
+    inp = corpus.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    empty = 1
+    inp = with_bucket(inp, 4).filter(F.col("bucket") != empty).drop("bucket")
+
+    def committed(name, runs):
+        out = str(tmp_path_factory.mktemp(name))
+        for kw in runs:
+            run_extraction_checkpointed(spark, inp, out, buckets=4, **kw)
+        rows = read_extraction_results(spark, out).collect()
+        manifest = spark.read.parquet(f"{out}/manifest").drop("completed_ts").collect()
+        return (
+            sorted(rows, key=lambda r: (r["conv_id"], r["turn_idx"])),
+            sorted(manifest, key=lambda r: r["bucket"]),
+        )
+
+    grouped = committed("parity_grouped", [dict(grouped=True)])
+    per_bucket = committed("parity_per_bucket", [dict(grouped=False)])
+    resumed = committed(
+        "parity_resumed", [dict(grouped=False, max_buckets_this_run=1), dict(grouped=False)]
+    )
+    assert per_bucket == grouped
+    assert resumed == grouped
+    rows, manifest = grouped
+    assert len(rows) == inp.count()
+    assert [m["bucket"] for m in manifest] == [0, 1, 2, 3]
+    assert tuple(manifest[empty])[1:] == (0, 0, 0, 0, 1.0, "done")
