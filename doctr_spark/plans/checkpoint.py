@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .pipeline import extract_turns
+from .pipeline import EXTRACT_SCHEMA, extract_turns
 
 MANIFEST_SCHEMA = (
     "bucket int, n_turns long, n_convs long, n_boxes long, n_chars long, "
@@ -149,6 +149,11 @@ def run_extraction_checkpointed(
 
 
 def read_extraction_results(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.option("basePath", os.path.join(out_dir, "results")).parquet(
-        os.path.join(out_dir, "results")
+    # pinned schema: a run whose buckets were all empty wrote no files to
+    # infer one from
+    results_dir = os.path.join(out_dir, "results")
+    return (
+        spark.read.schema(EXTRACT_SCHEMA + ", bucket int")
+        .option("basePath", results_dir)
+        .parquet(results_dir)
     )

@@ -32,45 +32,14 @@ import os
 import shutil
 from typing import Any
 
-from .models import ModelLoader
-
-# arch registry: (task, arch) -> factory accepting weights_path. The
-# reference's AVAILABLE_ARCHS analog (hub.py:34-38), over this repo's
-# committed-weights families.
-_NPZ_ARCHS: dict[tuple[str, str], Any] = {}
+from .models import ModelLoader, committed_models
 
 
 def _register_archs() -> dict[tuple[str, str], Any]:
-    if _NPZ_ARCHS:
-        return _NPZ_ARCHS
-    from .tiny_conv import tiny_conv_detector, tiny_conv_recognizer
-    from .tiny_crnn import tiny_bilstm_recognizer
-    from .tiny_dbnet import tiny_dbnet_detector
-    from .tiny_reco_zoo import (
-        tiny_master_recognizer,
-        tiny_parseq_recognizer,
-        tiny_sar_recognizer,
-        tiny_viptr_recognizer,
-        tiny_vitstr_recognizer,
-    )
-    from .tiny_zoo import tiny_fast_detector, tiny_linknet_detector
-
-    _NPZ_ARCHS.update(
-        {
-            ("detection", "tiny_conv_det"): tiny_conv_detector,
-            ("detection", "tiny_dbnet_fpn"): tiny_dbnet_detector,
-            ("detection", "tiny_fast"): tiny_fast_detector,
-            ("detection", "tiny_linknet"): tiny_linknet_detector,
-            ("recognition", "tiny_conv_reco"): tiny_conv_recognizer,
-            ("recognition", "tiny_crnn_bilstm"): tiny_bilstm_recognizer,
-            ("recognition", "tiny_sar"): tiny_sar_recognizer,
-            ("recognition", "tiny_master"): tiny_master_recognizer,
-            ("recognition", "tiny_vitstr"): tiny_vitstr_recognizer,
-            ("recognition", "tiny_parseq"): tiny_parseq_recognizer,
-            ("recognition", "tiny_viptr"): tiny_viptr_recognizer,
-        }
-    )
-    return _NPZ_ARCHS
+    """Arch registry: (task, arch) -> factory accepting weights_path. The
+    reference's AVAILABLE_ARCHS analog (hub.py:34-38), over the families of
+    this repo's committed model files (``models.committed_models``)."""
+    return {a: f for _, archs in committed_models().values() for a, f in archs.items()}
 
 
 def available_archs() -> dict[str, list[str]]:

@@ -35,7 +35,9 @@ glyph-matcher recognizer). A real DBNet/CRNN drops in as::
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
+from functools import cache, partial
 
 import numpy as np
 
@@ -79,80 +81,68 @@ def _load_ink_detector() -> Callable:
     return detect
 
 
-def _load_glyph_recognizer() -> Callable:
-    """Deterministic recognizer: glyph features -> logits -> CTC best-path
-    (plays the CNN+BiLSTM feature stage of CRNN)."""
-    from ..functions.vocabs import FONT, encode_string
+def _ctc_decode(indices: list[int]) -> tuple[str, float]:
+    from ..functions.vocabs import FONT
     from ..operators.recognition import ctc_best_path, indices_to_logits
+
+    return ctc_best_path(indices_to_logits(indices), FONT)[0]
+
+
+def _eos_decode(conf_mode: str, indices: list[int]) -> tuple[str, float]:
+    from ..functions.vocabs import FONT
+    from ..operators.recognition import eos_decode, indices_to_eos_logits
+
+    return eos_decode(indices_to_eos_logits(indices), FONT, conf=conf_mode)[0]
+
+
+def _load_glyph_recognizer(
+    decode: Callable[[list[int]], tuple[str, float]] = _ctc_decode,
+) -> Callable:
+    """Deterministic recognizer: glyph features -> logits -> ``decode``
+    (plays the CNN+BiLSTM feature stage of CRNN). The default decode is CTC
+    best-path. The PARALLEL-decode (non-CTC) family passes ``_eos_decode``:
+    attention/ViT-style heads emit one logit row per character position
+    over ``vocab + [<eos>, <sos>]`` and decode by per-position argmax up to
+    <eos>, no blank channel, no repeat collapse. Its ``conf_mode`` picks the
+    reference confidence semantics: "mean" = ViTSTR
+    (recognition/vitstr/pytorch.py:155-180), "min" = SAR/MASTER
+    (recognition/sar/pytorch.py:309-333); the decode is the real reference
+    postprocessor re-derived in numpy (operators/recognition.py:
+    eos_decode)."""
+    from ..functions.vocabs import FONT, encode_string
     from ..sources.font import read_word_crop
 
-    # encode+CTC on a decoded string is a pure function of that string;
+    # the decode of a read string is a pure function of that string;
     # memoizing it per worker skips re-running the decode math for every
     # repeated word (bounded cache — corpora have Zipfian word frequency,
     # so the hit rate is high at any scale and the cache stays small)
-    ctc_memo: dict[str, tuple[str, float]] = {}
+    memo: dict[str, tuple[str, float]] = {}
 
-    def _ctc_for(raw: str) -> tuple[str, float]:
-        hit = ctc_memo.get(raw)
+    def _decode_for(raw: str) -> tuple[str, float]:
+        hit = memo.get(raw)
         if hit is None:
             try:
                 indices = encode_string(raw, FONT)
             except ValueError:
                 hit = (raw, 0.0)
             else:
-                hit = ctc_best_path(indices_to_logits(indices), FONT)[0]
-            if len(ctc_memo) < 65536:
-                ctc_memo[raw] = hit
+                hit = decode(indices)
+            if len(memo) < 65536:
+                memo[raw] = hit
         return hit
 
     def recognize(crops: list[np.ndarray], scale: int) -> list[tuple[str, float]]:
-        return [_ctc_for(read_word_crop(crop, scale)) for crop in crops]
+        return [_decode_for(read_word_crop(crop, scale)) for crop in crops]
 
     return recognize
 
 
-def _make_parallel_recognizer_loader(conf_mode: str) -> Callable[[], Callable]:
-    """Recognizer with the PARALLEL-decode (non-CTC) postprocessor family:
-    attention/ViT-style heads emit one logit row per character position
-    over ``vocab + [<eos>, <sos>]`` and decode by per-position argmax up
-    to <eos> — no blank channel, no repeat collapse. ``conf_mode`` picks
-    the reference confidence semantics: "mean" = ViTSTR
-    (recognition/vitstr/pytorch.py:155-180), "min" = SAR/MASTER
-    (recognition/sar/pytorch.py:309-333). The deterministic glyph head
-    plays the encoder exactly as the CTC default does; the decode path is
-    the real reference postprocessor re-derived in numpy
-    (operators/recognition.py: eos_decode)."""
-
-    def load() -> Callable:
-        from ..functions.vocabs import FONT, encode_string
-        from ..operators.recognition import eos_decode, indices_to_eos_logits
-        from ..sources.font import read_word_crop
-
-        memo: dict[str, tuple[str, float]] = {}
-
-        def _decode_for(raw: str) -> tuple[str, float]:
-            hit = memo.get(raw)
-            if hit is None:
-                try:
-                    indices = encode_string(raw, FONT)
-                except ValueError:
-                    hit = (raw, 0.0)
-                else:
-                    hit = eos_decode(indices_to_eos_logits(indices), FONT, conf=conf_mode)[0]
-                if len(memo) < 65536:
-                    memo[raw] = hit
-            return hit
-
-        def recognize(crops: list[np.ndarray], scale: int) -> list[tuple[str, float]]:
-            return [_decode_for(read_word_crop(crop, scale)) for crop in crops]
-
-        return recognize
-
-    return load
-
-
-VITSTR_RECOGNIZER: ModelLoader = ("glyph-vitstr-v1", _make_parallel_recognizer_loader("mean"))
-SAR_RECOGNIZER: ModelLoader = ("glyph-sar-v1", _make_parallel_recognizer_loader("min"))
+VITSTR_RECOGNIZER: ModelLoader = (
+    "glyph-vitstr-v1", partial(_load_glyph_recognizer, partial(_eos_decode, "mean"))
+)
+SAR_RECOGNIZER: ModelLoader = (
+    "glyph-sar-v1", partial(_load_glyph_recognizer, partial(_eos_decode, "min"))
+)
 
 
 def _load_glyph_orientation() -> Callable:
@@ -268,3 +258,128 @@ def onnx_recognizer(model_path: str, vocab: str | None = None, input_name: str =
         return recognize
 
     return key, load
+
+
+# ------------------------------------------------- committed tiny models
+
+
+def models_data(name: str) -> str:
+    """Path of a committed model file in ``doctr_spark/models_data/``."""
+    return os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "models_data", name)
+
+
+def load_npz(path: str) -> dict[str, np.ndarray]:
+    """Every tensor of an ``.npz`` weights file (no pickled objects)."""
+    with np.load(path, allow_pickle=False) as z:
+        return {k: z[k] for k in z.files}
+
+
+def sigmoid(x: np.ndarray) -> np.ndarray:
+    return 1.0 / (1.0 + np.exp(-x))
+
+
+def npz_loader(
+    key: str, default_path: str, weights_path: str | None, make: Callable[[dict, int], Callable]
+) -> ModelLoader:
+    """(key, loader) over one npz file: the loader reads the weights once
+    per worker and returns ``make(w, trained_scale)``. A custom weights
+    file gets a key of its own, so ``resolve_model`` never serves it the
+    model loaded from the default file."""
+    path = weights_path or default_path
+
+    def load():
+        w = load_npz(path)
+        return make(w, int(w["scale"]))
+
+    return (key if weights_path is None else f"{key}:{weights_path}"), load
+
+
+def _check_scale(key: str, trained_scale: int, scale: int) -> None:
+    if scale != trained_scale:
+        raise ValueError(f"{key} weights are sized for render scale {trained_scale}, got {scale}")
+
+
+def npz_detector(
+    key: str, default_path: str, weights_path: str | None, forward: Callable[[dict], Callable]
+) -> ModelLoader:
+    """Detector over committed npz weights. ``forward(w)`` builds the
+    family's ``gray page -> proba map`` from the weights at load; each call
+    checks the render scale the weights are sized for, converts the page to
+    grayscale, runs the forward and the SAME DB-style postprocess every
+    detector family uses (ink-family preset)."""
+
+    def make(w: dict[str, np.ndarray], trained_scale: int) -> Callable:
+        from ..operators.detection import INK_MODEL_POSTPROC, postprocess_proba_map
+
+        proba_map = forward(w)
+
+        def detect(page: np.ndarray, scale: int) -> np.ndarray:
+            _check_scale(key, trained_scale, scale)
+            gray = page if page.ndim == 2 else page.mean(axis=-1)
+            return postprocess_proba_map(proba_map(gray), **INK_MODEL_POSTPROC)
+
+        return detect
+
+    return npz_loader(key, default_path, weights_path, make)
+
+
+def npz_recognizer(
+    key: str, default_path: str, weights_path: str | None, forward: Callable[[dict], Callable]
+) -> ModelLoader:
+    """Recognizer over committed npz weights. ``forward(w)`` builds the
+    family's ``cells -> (text, conf)`` decode from the weights at load; each
+    call checks the render scale, trims every crop to its ink and subsamples
+    it to cell space (``tiny_conv.crop_cells``; a crop without ink reads as
+    ``("", 0.0)``) and decodes the cells."""
+
+    def make(w: dict[str, np.ndarray], trained_scale: int) -> Callable:
+        from .tiny_conv import crop_cells
+
+        decode = forward(w)
+
+        def recognize(crops: list[np.ndarray], scale: int) -> list[tuple[str, float]]:
+            _check_scale(key, trained_scale, scale)
+            out = []
+            for crop in crops:
+                cells = crop_cells(crop, scale)
+                out.append(("", 0.0) if cells is None else decode(cells))
+            return out
+
+        return recognize
+
+    return npz_loader(key, default_path, weights_path, make)
+
+
+@cache
+def committed_models() -> dict[str, tuple[Callable[[], object], dict[tuple[str, str], Callable]]]:
+    """Every file in ``doctr_spark/models_data/`` by path -> (builder, the
+    ``(task, arch) -> factory`` hub archs served from it). A builder returns
+    the file's content: the tensors of an ``.npz``, the bytes of an
+    ``.onnx``. The ``.onnx`` builders read the committed npz files, so the
+    npz files come first. ``scripts/make_tiny_weights.py`` writes the files
+    from this table, the hub registry is the union of its archs, and a test
+    holds each file equal to its builder. Built on first call, so importing
+    this module loads no model family."""
+    from . import onnx_export as ox
+    from . import tiny_conv as conv, tiny_crnn as crnn, tiny_dbnet as db
+    from . import tiny_orient, tiny_reco_zoo as reco, tiny_zoo as zoo
+
+    det, rec = "detection", "recognition"
+    return {
+        conv.WEIGHTS_PATH: (conv.make_tiny_weights, {
+            (det, "tiny_conv_det"): conv.tiny_conv_detector,
+            (rec, "tiny_conv_reco"): conv.tiny_conv_recognizer}),
+        zoo.ZOO_WEIGHTS_PATH: (zoo.make_tiny_zoo_weights, {
+            (det, "tiny_fast"): zoo.tiny_fast_detector,
+            (det, "tiny_linknet"): zoo.tiny_linknet_detector}),
+        db.DBNET_WEIGHTS_PATH: (db.make_tiny_dbnet_weights, {(det, "tiny_dbnet_fpn"): db.tiny_dbnet_detector}),
+        crnn.CRNN_WEIGHTS_PATH: (crnn.make_tiny_crnn_weights, {
+            (rec, "tiny_crnn_bilstm"): crnn.tiny_bilstm_recognizer}),
+        reco.RECO_ZOO_WEIGHTS_PATH: (reco.make_tiny_reco_zoo_weights, {
+            (rec, f"tiny_{n}"): f for n, f in reco.ALL_RECO_VARIANTS}),
+        tiny_orient.ORIENT_WEIGHTS_PATH: (tiny_orient.make_tiny_orient_weights, {}),
+        ox.ONNX_DET_PATH: (ox.build_detector_onnx, {}),
+        ox.ONNX_RECO_PATH: (ox.build_recognizer_onnx, {}),
+        ox.ONNX_FPN_PATH: (ox.build_fpn_detector_onnx, {}),
+        ox.ONNX_ORIENT_PATH: (ox.build_orient_classifier_onnx, {}),
+    }

@@ -23,22 +23,22 @@ sweep-proven in tests):
 
 Channel V is the all-zero blank filter (logit 0), matching the CRNN class
 layout ctc_best_path expects.
+
+The committed ``.onnx`` files are regenerated from these builders, with
+every other committed model file, by ``scripts/make_tiny_weights.py``.
 """
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 
+from .models import load_npz, models_data
 from .onnx_proto import encode_model, encode_node
 
-MODELS_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "models_data"
-)
-ONNX_DET_PATH = os.path.join(MODELS_DIR, "tiny_conv_det_v1.onnx")
-ONNX_RECO_PATH = os.path.join(MODELS_DIR, "tiny_conv_reco_v1.onnx")
-ONNX_FPN_PATH = os.path.join(MODELS_DIR, "tiny_fpn_det_v1.onnx")
+ONNX_DET_PATH = models_data("tiny_conv_det_v1.onnx")
+ONNX_RECO_PATH = models_data("tiny_conv_reco_v1.onnx")
+ONNX_FPN_PATH = models_data("tiny_fpn_det_v1.onnx")
+ONNX_ORIENT_PATH = models_data("tiny_mbv3_orient_v1.onnx")
 
 # the FPN graph's fixed input canvas (real DBNet checkpoints fix theirs
 # too — 1024x1024, BASELINE.md; the factory's target_hw preprocessing
@@ -58,9 +58,9 @@ _TEMP = 10.0  # logit temperature (folded into weights/bias)
 def build_detector_onnx() -> bytes:
     """Serialize the tiny_conv detection net (committed npz weights) as a
     Conv->Sigmoid->Conv->Sigmoid ONNX graph."""
-    from .tiny_conv import WEIGHTS_PATH, _load_weights
+    from .tiny_conv import WEIGHTS_PATH
 
-    w = _load_weights(WEIGHTS_PATH)
+    w = load_npz(WEIGHTS_PATH)
     k2 = w["det_k2"].astype(np.float32)
     gain = float(w["det_gain"])
     kh, kw = k2.shape
@@ -92,9 +92,9 @@ def build_recognizer_onnx() -> bytes:
     Sub->Conv->ReduceMax->Transpose ONNX graph."""
     from ..functions.vocabs import FONT
     from ..sources.font import glyph_bitmap
-    from .tiny_conv import _load_weights, WEIGHTS_PATH
+    from .tiny_conv import WEIGHTS_PATH
 
-    s = int(_load_weights(WEIGHTS_PATH)["scale"])
+    s = int(load_npz(WEIGHTS_PATH)["scale"])
     v = len(FONT)
     kh, kw = (7 + 2) * s, (5 + 2) * s
     filters = np.zeros((v + 1, 1, kh, kw), dtype=np.float32)
@@ -152,9 +152,9 @@ def build_fpn_detector_onnx(
     ``head_w`` / ``topdown`` exist for the ablation tests only — the
     committed file uses the defaults.
     """
-    from .tiny_conv import WEIGHTS_PATH, _load_weights
+    from .tiny_conv import WEIGHTS_PATH
 
-    w = _load_weights(WEIGHTS_PATH)
+    w = load_npz(WEIGHTS_PATH)
     # the committed fuse kernel resampled to the graph's 2x input scale
     # (standard practice when adapting a detection net to a different
     # input resolution); trimmed back to odd dims so 'same' pads center
@@ -240,9 +240,6 @@ def build_fpn_detector_onnx(
     )
 
 
-ONNX_ORIENT_PATH = os.path.join(MODELS_DIR, "tiny_mbv3_orient_v1.onnx")
-
-
 def build_orient_classifier_onnx() -> bytes:
     """Serialize the tiny orientation classifier (plans/tiny_orient.py,
     committed npz weights) as the graph torch.onnx emits for a
@@ -262,10 +259,9 @@ def build_orient_classifier_onnx() -> bytes:
     head across each rotation group. argmax(probs) is the uprighting
     quarter-turn count — numerically the same decision as the numpy
     forward (equivalence tested across pages and rotations)."""
-    from .tiny_conv import _load_weights
     from .tiny_orient import ORIENT_WEIGHTS_PATH
 
-    w = _load_weights(ORIENT_WEIGHTS_PATH)
+    w = load_npz(ORIENT_WEIGHTS_PATH)
     bank = w["bank_kernels"].astype(np.float32)  # (N, 7, 5) of +-1
     bias = w["bank_bias"].astype(np.float32)  # (N,)
     head_w = w["head_w"].astype(np.float32)  # (4, 4) gained permutation
@@ -301,15 +297,3 @@ def build_orient_classifier_onnx() -> bytes:
         inputs={"input": [1, 1, "H", "W"]}, outputs={"probs": [1, 4]},
     )
 
-
-def write_onnx_models() -> None:
-    for path, build in (
-        (ONNX_DET_PATH, build_detector_onnx),
-        (ONNX_RECO_PATH, build_recognizer_onnx),
-        (ONNX_FPN_PATH, build_fpn_detector_onnx),
-        (ONNX_ORIENT_PATH, build_orient_classifier_onnx),
-    ):
-        blob = build()
-        with open(path, "wb") as fh:
-            fh.write(blob)
-        print(f"wrote {path}: {len(blob)} bytes")

@@ -25,24 +25,19 @@ onnxruntime/torch required, the forwards are plain numpy:
   conv stack learns on a deterministic raster font.
 
 The weights live in ``doctr_spark/models_data/tiny_conv_v1.npz``
-(regenerable via ``scripts/make_tiny_weights.py``) and load ONCE per
-Python worker through ``resolve_model`` — the same per-executor-core
-lifecycle a torch/ONNX checkpoint gets (SURVEY.md §4.4).
+(regenerated with every other committed model file by
+``scripts/make_tiny_weights.py``) and load ONCE per Python worker through
+``resolve_model`` — the same per-executor-core lifecycle a torch/ONNX
+checkpoint gets (SURVEY.md §4.4).
 """
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 
-from .models import ModelLoader
+from .models import ModelLoader, models_data, npz_detector, npz_recognizer, sigmoid
 
-WEIGHTS_PATH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "models_data",
-    "tiny_conv_v1.npz",
-)
+WEIGHTS_PATH = models_data("tiny_conv_v1.npz")
 
 DET_KEY = "tiny-conv-det-v1"
 REC_KEY = "tiny-crnn-v1"
@@ -77,11 +72,6 @@ def make_tiny_weights() -> dict[str, np.ndarray]:
     }
 
 
-def _load_weights(path: str) -> dict[str, np.ndarray]:
-    with np.load(path, allow_pickle=False) as z:
-        return {k: z[k] for k in z.files}
-
-
 def conv2d_same(x: np.ndarray, kernel: np.ndarray) -> np.ndarray:
     """'same' 2D convolution (zero-padded, centered odd kernel) via FFT —
     the standard dense conv forward for page-sized inputs."""
@@ -95,8 +85,26 @@ def conv2d_same(x: np.ndarray, kernel: np.ndarray) -> np.ndarray:
     return full[kh // 2 : kh // 2 + H, kw // 2 : kw // 2 + W]
 
 
-def _sigmoid(x: np.ndarray) -> np.ndarray:
-    return 1.0 / (1.0 + np.exp(-x))
+def pool2(x: np.ndarray, f: int | tuple[int, int]) -> np.ndarray:
+    """(fr x fc) stride-(fr, fc) mean pool with zero padding to a multiple
+    of the factor. An int pools isotropically; a tuple pools rows and
+    columns at different strides (the anisotropic pooling text detectors
+    use so column precision survives into the deeper stages)."""
+    fr, fc = (f, f) if isinstance(f, int) else f
+    H, W = x.shape
+    Hp, Wp = -(-H // fr) * fr, -(-W // fc) * fc
+    return (
+        np.pad(x, ((0, Hp - H), (0, Wp - W)))
+        .reshape(Hp // fr, fr, Wp // fc, fc)
+        .mean(axis=(1, 3))
+    )
+
+
+def upsample(x: np.ndarray, f: int | tuple[int, int], H: int, W: int) -> np.ndarray:
+    """Nearest-neighbor upsample by (fr, fc), cropped to (H, W) — the FPN's
+    interpolate-to-common-resolution step."""
+    fr, fc = (f, f) if isinstance(f, int) else f
+    return np.repeat(np.repeat(x, fr, axis=0), fc, axis=1)[:H, :W]
 
 
 def crop_cells(crop: np.ndarray, scale: int) -> np.ndarray | None:
@@ -153,42 +161,29 @@ def glyph_evidence(cells: np.ndarray, filters: np.ndarray, bias: np.ndarray) -> 
 def tiny_conv_detector(weights_path: str | None = None) -> ModelLoader:
     """(key, loader) for the tiny conv detection net; drop-in for the
     ``detector=`` seam of ``extract_turns``."""
-    path = weights_path or WEIGHTS_PATH
 
-    def load():
-        from ..operators.detection import INK_MODEL_POSTPROC, postprocess_proba_map
-
-        w = _load_weights(path)
+    def forward(w: dict[str, np.ndarray]):
         w1, b1 = float(w["det_w1"]), float(w["det_b1"])
         k2 = w["det_k2"]
         gain, b2 = float(w["det_gain"]), float(w["det_b2"])
-        trained_scale = int(w["scale"])
 
-        def detect(page: np.ndarray, scale: int) -> np.ndarray:
-            if scale != trained_scale:
-                raise ValueError(
-                    f"{DET_KEY} weights are sized for render scale {trained_scale}, got {scale}"
-                )
-            gray = page if page.ndim == 2 else page.mean(axis=-1)
-            a1 = _sigmoid(w1 * gray.astype(np.float64) + b1)  # ink activation
-            proba = _sigmoid(gain * (conv2d_same(a1, k2) + b2))  # fused text map
-            return postprocess_proba_map(proba, **INK_MODEL_POSTPROC)
+        def proba_map(gray: np.ndarray) -> np.ndarray:
+            a1 = sigmoid(w1 * gray.astype(np.float64) + b1)  # ink activation
+            return sigmoid(gain * (conv2d_same(a1, k2) + b2))  # fused text map
 
-        return detect
+        return proba_map
 
-    return DET_KEY, load
+    return npz_detector(DET_KEY, WEIGHTS_PATH, weights_path, forward)
 
 
 def tiny_conv_recognizer(weights_path: str | None = None) -> ModelLoader:
     """(key, loader) for the matched-filter conv recognizer; drop-in for
     the ``recognizer=`` seam of ``extract_turns``."""
-    path = weights_path or WEIGHTS_PATH
 
-    def load():
+    def forward(w: dict[str, np.ndarray]):
         from ..functions.vocabs import FONT
         from ..operators.recognition import ctc_best_path
 
-        w = _load_weights(path)
         vocab = str(w["vocab"])
         if vocab != FONT:
             raise ValueError(f"{REC_KEY} weights vocab does not match FONT")
@@ -196,25 +191,13 @@ def tiny_conv_recognizer(weights_path: str | None = None) -> ModelLoader:
         bias = w["rec_b"].astype(np.float64)  # (V,)
         temp = float(w["rec_temp"])
 
-        def recognize(crops: list[np.ndarray], scale: int) -> list[tuple[str, float]]:
-            out = []
-            for crop in crops:
-                out.append(_recognize_crop(crop, scale))
-            return out
-
-        def _recognize_crop(crop: np.ndarray, scale: int) -> tuple[str, float]:
-            # stride-s subsample to cell space (the crop comes from the
-            # renderer's pixel grid; this is the model's fixed input
-            # resolution, the analog of a CRNN's resize-to-32px preproc)
-            cells = crop_cells(crop, scale)
-            if cells is None:
-                return ("", 0.0)
+        def decode(cells: np.ndarray) -> tuple[str, float]:
             evidence = glyph_evidence(cells, filters, bias)  # (T, V)
             logits = np.concatenate(
                 [temp * evidence, np.zeros((evidence.shape[0], 1))], axis=1
             )  # blank channel logit 0
             return ctc_best_path(logits, vocab)[0]
 
-        return recognize
+        return decode
 
-    return REC_KEY, load
+    return npz_recognizer(REC_KEY, WEIGHTS_PATH, weights_path, forward)

@@ -44,25 +44,19 @@ pattern, since the font's left-anchored glyphs only exhibit left-flank
 ambiguities on rendered text).
 
 Weights live in ``doctr_spark/models_data/tiny_crnn_v1.npz``
-(regenerable via ``scripts/make_tiny_weights.py``) and load ONCE per
-Python worker through ``resolve_model`` — the same per-executor-core
-lifecycle a torch/ONNX checkpoint gets (SURVEY.md §4.4).
+(regenerated with every other committed model file by
+``scripts/make_tiny_weights.py``) and load ONCE per Python worker through
+``resolve_model`` — the same per-executor-core lifecycle a torch/ONNX
+checkpoint gets (SURVEY.md §4.4).
 """
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 
-from .models import ModelLoader
-from .tiny_conv import crop_cells
+from .models import ModelLoader, models_data, npz_recognizer, sigmoid
 
-CRNN_WEIGHTS_PATH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "models_data",
-    "tiny_crnn_v1.npz",
-)
+CRNN_WEIGHTS_PATH = models_data("tiny_crnn_v1.npz")
 
 CRNN_KEY = "tiny-crnn-bilstm-v1"
 
@@ -133,11 +127,6 @@ def make_tiny_crnn_weights() -> dict[str, np.ndarray]:
     }
 
 
-def _load_crnn(path: str) -> dict[str, np.ndarray]:
-    with np.load(path, allow_pickle=False) as z:
-        return {k: z[k] for k in z.files}
-
-
 def crnn_conv_features(
     cells: np.ndarray, filters: np.ndarray, bias: np.ndarray
 ) -> np.ndarray:
@@ -177,18 +166,14 @@ def lstm_forward(
     out = np.empty((x.shape[0], h_dim))
     for t in range(x.shape[0]):
         z = wx @ x[t] + wh @ h + b
-        i = _sigmoid(z[0 * h_dim : 1 * h_dim])
-        f = _sigmoid(z[1 * h_dim : 2 * h_dim])
+        i = sigmoid(z[0 * h_dim : 1 * h_dim])
+        f = sigmoid(z[1 * h_dim : 2 * h_dim])
         g = np.tanh(z[2 * h_dim : 3 * h_dim])
-        o = _sigmoid(z[3 * h_dim : 4 * h_dim])
+        o = sigmoid(z[3 * h_dim : 4 * h_dim])
         c = f * c + i * g
         h = o * np.tanh(c)
         out[t] = h
     return out
-
-
-def _sigmoid(x: np.ndarray) -> np.ndarray:
-    return 1.0 / (1.0 + np.exp(-x))
 
 
 def crnn_bilstm_logits(
@@ -217,29 +202,11 @@ def crnn_bilstm_logits(
 def tiny_bilstm_recognizer(weights_path: str | None = None) -> ModelLoader:
     """(key, loader) for the conv->BiLSTM->CTC CRNN-style recognizer;
     drop-in for the ``recognizer=`` seam of ``extract_turns``."""
-    path = weights_path or CRNN_WEIGHTS_PATH
 
-    def load():
+    def forward(w: dict[str, np.ndarray]):
         from ..operators.recognition import ctc_best_path
 
-        w = _load_crnn(path)
         vocab = str(w["vocab"])
-        trained_scale = int(w["scale"])
+        return lambda cells: ctc_best_path(crnn_bilstm_logits(w, cells), vocab)[0]
 
-        def recognize(crops: list[np.ndarray], scale: int) -> list[tuple[str, float]]:
-            if scale != trained_scale:
-                raise ValueError(
-                    f"{CRNN_KEY} weights are sized for render scale {trained_scale}, got {scale}"
-                )
-            out = []
-            for crop in crops:
-                cells = crop_cells(crop, scale)
-                if cells is None:
-                    out.append(("", 0.0))
-                    continue
-                out.append(ctc_best_path(crnn_bilstm_logits(w, cells), vocab)[0])
-            return out
-
-        return recognize
-
-    return CRNN_KEY, load
+    return npz_recognizer(CRNN_KEY, CRNN_WEIGHTS_PATH, weights_path, forward)

@@ -67,8 +67,9 @@ assert per-turn text equality through extract_turns plus the three
 box-visible level ablations.
 
 Weights live in ``doctr_spark/models_data/tiny_dbnet_v1.npz``
-(regenerable via ``scripts/make_tiny_weights.py``); they load once per
-Python worker through ``resolve_model``.
+(regenerated with every other committed model file by
+``scripts/make_tiny_weights.py``); they load once per Python worker
+through ``resolve_model``.
 
 CONTRACT: the committed weights are sized for cell-ALIGNED pages at render
 scale 3 (the forward raises on any other scale). The word-gap safety
@@ -81,18 +82,14 @@ like a real fixed-resolution checkpoint expects its training alignment.
 
 from __future__ import annotations
 
-import os
+from functools import partial
 
 import numpy as np
 
-from .models import ModelLoader
-from .tiny_conv import _sigmoid, conv2d_same
+from .models import ModelLoader, models_data, npz_detector, sigmoid
+from .tiny_conv import conv2d_same, pool2, upsample
 
-DBNET_WEIGHTS_PATH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "models_data",
-    "tiny_dbnet_v1.npz",
-)
+DBNET_WEIGHTS_PATH = models_data("tiny_dbnet_v1.npz")
 
 DBNET_KEY = "tiny-dbnet-fpn-v1"
 
@@ -127,33 +124,6 @@ def make_tiny_dbnet_weights() -> dict[str, np.ndarray]:
     }
 
 
-def _load_dbnet(path: str) -> dict[str, np.ndarray]:
-    with np.load(path, allow_pickle=False) as z:
-        return {k: z[k] for k in z.files}
-
-
-def _pool2(x: np.ndarray, f: int | tuple[int, int]) -> np.ndarray:
-    """(fr x fc) stride-(fr, fc) mean pool with zero padding to a multiple
-    of the factor. An int pools isotropically; a tuple pools rows and
-    columns at different strides (the anisotropic pooling text detectors
-    use so column precision survives into the deeper stages)."""
-    fr, fc = (f, f) if isinstance(f, int) else f
-    H, W = x.shape
-    Hp, Wp = -(-H // fr) * fr, -(-W // fc) * fc
-    return (
-        np.pad(x, ((0, Hp - H), (0, Wp - W)))
-        .reshape(Hp // fr, fr, Wp // fc, fc)
-        .mean(axis=(1, 3))
-    )
-
-
-def _upsample(x: np.ndarray, f: int | tuple[int, int], H: int, W: int) -> np.ndarray:
-    """Nearest-neighbor upsample by (fr, fc), cropped to (H, W) — the FPN's
-    interpolate-to-common-resolution step."""
-    fr, fc = (f, f) if isinstance(f, int) else f
-    return np.repeat(np.repeat(x, fr, axis=0), fc, axis=1)[:H, :W]
-
-
 def dbnet_proba_map(
     w: dict[str, np.ndarray], page: np.ndarray, scale: int, drop_level: int | None = None
 ) -> np.ndarray:
@@ -174,15 +144,15 @@ def dbnet_proba_map(
     # so the band never widens a word's column footprint toward its
     # neighbor (the word-gap safety margin is 21 px; any horizontal
     # block quantization here would eat it).
-    a0 = _sigmoid(float(w["stem_w1"]) * gray.astype(np.float64) + float(w["stem_b1"]))
-    c1 = _pool2(a0, s)  # cell space (lossless on the rendered grid)
-    c2 = _pool2(c1, (2, 1))  # 2-cell row blocks, cell columns
-    c3 = _pool2(c2, (2, 4))  # 4-cell blocks (isotropic again: 4s px)
+    a0 = sigmoid(float(w["stem_w1"]) * gray.astype(np.float64) + float(w["stem_b1"]))
+    c1 = pool2(a0, s)  # cell space (lossless on the rendered grid)
+    c2 = pool2(c1, (2, 1))  # 2-cell row blocks, cell columns
+    c3 = pool2(c2, (2, 4))  # 4-cell blocks (isotropic again: 4s px)
 
     # coarse laterals first (FPN runs top-down: the deeper levels are
     # computed, upsampled, and merged INTO the finer lateral's input)
-    l3 = _sigmoid(g * (conv2d_same(c3, w["k_gate"]) - float(w["gate_t"])))
-    l2 = _sigmoid(g * (conv2d_same(c2, w["k_band"]) - float(w["band_t"])))
+    l3 = sigmoid(g * (conv2d_same(c3, w["k_gate"]) - float(w["gate_t"])))
+    l2 = sigmoid(g * (conv2d_same(c2, w["k_band"]) - float(w["band_t"])))
     if drop_level == 2:
         l2 = np.zeros_like(l2)
     if drop_level == 3:
@@ -191,41 +161,34 @@ def dbnet_proba_map(
     # top-down merge: the band-extended map feeds the bridge lateral, so
     # glyphs whose inks share NO cell row (',' next to '-') still bridge
     # at the rows the band opened up
-    m1 = np.maximum(c1, _upsample(l2, (2, 1), c1.shape[0], c1.shape[1]))
+    m1 = np.maximum(c1, upsample(l2, (2, 1), c1.shape[0], c1.shape[1]))
     l0 = a0
-    l1 = _sigmoid(g * (conv2d_same(m1, w["k_bridge"]) - float(w["bridge_t"])))
+    l1 = sigmoid(g * (conv2d_same(m1, w["k_bridge"]) - float(w["bridge_t"])))
     if drop_level == 0:
         l0 = np.zeros_like(l0)
     if drop_level == 1:
         l1 = np.zeros_like(l1)
 
     # upsample to the finest resolution and merge
-    l1u = _upsample(l1, s, H, W)
-    l2u = _upsample(l2, (2 * s, s), H, W)
-    l3u = _upsample(l3, (4 * s, 4 * s), H, W)
+    l1u = upsample(l1, s, H, W)
+    l2u = upsample(l2, (2 * s, s), H, W)
+    l3u = upsample(l3, (4 * s, 4 * s), H, W)
     mw = w["merge_w"]
-    union = _sigmoid(
+    union = sigmoid(
         float(w["merge_gain"])
         * (mw[0] * l0 + mw[1] * l1u + mw[2] * l2u - float(w["merge_t"]))
     )
     # prob head: the fine-level union gated by the coarse objectness
     # prior (inference-time DB binarizes only this map, base.py:41-152)
-    return _sigmoid(float(w["head_gain"]) * (union + l3u - 1.5))
+    return sigmoid(float(w["head_gain"]) * (union + l3u - 1.5))
 
 
 def tiny_dbnet_detector(weights_path: str | None = None) -> ModelLoader:
     """(key, loader) for the backbone->FPN->prob-head DBNet-style
     detector; drop-in for the ``detector=`` seam of ``extract_turns``."""
-    path = weights_path or DBNET_WEIGHTS_PATH
-
-    def load():
-        from ..operators.detection import INK_MODEL_POSTPROC, postprocess_proba_map
-
-        w = _load_dbnet(path)
-
-        def detect(page: np.ndarray, scale: int) -> np.ndarray:
-            return postprocess_proba_map(dbnet_proba_map(w, page, scale), **INK_MODEL_POSTPROC)
-
-        return detect
-
-    return DBNET_KEY, load
+    return npz_detector(
+        DBNET_KEY,
+        DBNET_WEIGHTS_PATH,
+        weights_path,
+        lambda w: partial(dbnet_proba_map, w, scale=int(w["scale"])),
+    )

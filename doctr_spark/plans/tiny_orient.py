@@ -38,24 +38,18 @@ offset after rotation is recovered from the ink bounding box, since every
 ink extent starts on a cell corner) — the same lossless pooling fast path
 tiny_zoo.py's detectors use.
 
-Weights regenerate via ``scripts/make_tiny_weights.py``; they load once
-per Python worker through ``resolve_model`` (plans/models.py lifecycle).
+Weights regenerate with every other committed model file via
+``scripts/make_tiny_weights.py``; they load once per Python worker through
+``resolve_model`` (plans/models.py lifecycle).
 """
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 
-from .models import ModelLoader
-from .tiny_conv import _load_weights
+from .models import ModelLoader, models_data, npz_loader
 
-ORIENT_WEIGHTS_PATH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "models_data",
-    "tiny_orient_v1.npz",
-)
+ORIENT_WEIGHTS_PATH = models_data("tiny_orient_v1.npz")
 
 ORIENT_KEY = "tiny-mbv3-orient-v1"
 
@@ -234,13 +228,9 @@ class TinyOrientClassifier:
 def tiny_orient_classifier(weights_path: str | None = None) -> ModelLoader:
     """Seam loader: drop-in for DEFAULT_ORIENTATION via
     ``extract_turns(..., detect_orientation=True, orienter=...)``."""
-    path = weights_path or ORIENT_WEIGHTS_PATH
-    key = ORIENT_KEY if weights_path is None else f"{ORIENT_KEY}:{weights_path}"
-
-    def load():
-        return TinyOrientClassifier(_load_weights(path))
-
-    return key, load
+    return npz_loader(
+        ORIENT_KEY, ORIENT_WEIGHTS_PATH, weights_path, lambda w, _scale: TinyOrientClassifier(w)
+    )
 
 
 def onnx_orient_classifier(model_path: str | None = None) -> ModelLoader:

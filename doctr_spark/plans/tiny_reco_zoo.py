@@ -68,9 +68,10 @@ model and decode structure* as real arithmetic over committed tensors:
   (operators/recognition.py: ctc_best_path(blank=0)).
 
 Weights live in ``doctr_spark/models_data/tiny_reco_zoo_v1.npz``
-(regenerable via ``scripts/make_tiny_weights.py``) and load ONCE per
-Python worker through ``resolve_model`` — the same per-executor-core
-lifecycle a torch/ONNX checkpoint gets (SURVEY.md §4.4). As with
+(regenerated with every other committed model file by
+``scripts/make_tiny_weights.py``) and load ONCE per Python worker through
+``resolve_model`` — the same per-executor-core lifecycle a torch/ONNX
+checkpoint gets (SURVEY.md §4.4). As with
 tiny-conv-v1, the committed tensors are the optimum a training run
 converges to on the deterministic raster font; every forward treats them
 as opaque learned tensors, and the ablation tests prove each family's
@@ -79,18 +80,13 @@ structural stage is load-bearing, not decorative.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 
-from .models import ModelLoader
-from .tiny_conv import crop_cells, glyph_evidence
+from ..operators.recognition import ctc_best_path, eos_decode, softmax
+from .models import ModelLoader, models_data, npz_recognizer
+from .tiny_conv import glyph_evidence
 
-RECO_ZOO_WEIGHTS_PATH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "models_data",
-    "tiny_reco_zoo_v1.npz",
-)
+RECO_ZOO_WEIGHTS_PATH = models_data("tiny_reco_zoo_v1.npz")
 
 SAR_KEY = "tiny-sar-v1"
 MASTER_KEY = "tiny-master-v1"
@@ -195,11 +191,6 @@ def make_tiny_reco_zoo_weights() -> dict[str, np.ndarray]:
     return w
 
 
-def _load_reco_zoo(path: str) -> dict[str, np.ndarray]:
-    with np.load(path, allow_pickle=False) as z:
-        return {k: z[k] for k in z.files}
-
-
 # ------------------------------------------------------------ shared pieces
 
 
@@ -230,11 +221,6 @@ def _build_memory(
     return m, n
 
 
-def _softmax(x: np.ndarray, axis: int = -1) -> np.ndarray:
-    e = np.exp(x - x.max(axis=axis, keepdims=True))
-    return e / e.sum(axis=axis, keepdims=True)
-
-
 def _to_full(rows_cd: np.ndarray, temp: float) -> np.ndarray:
     """(L, V+1) head features -> (L, V+2) logits in the reference's
     ``vocab + [<eos>, <sos>]`` class layout (<sos> never predicted)."""
@@ -258,7 +244,7 @@ def sar_logits(w: dict[str, np.ndarray], evidence: np.ndarray) -> np.ndarray:
     rows = []
     for _t in range(L):
         q = beta * (h @ w["sar_Wq"])  # (L,)
-        att = _softmax(q @ keys.T)
+        att = softmax(q @ keys.T)
         glimpse = att @ vals  # (Cd,)
         feat = np.concatenate([h, glimpse])
         rows.append(feat @ w["sar_Wo"])
@@ -289,7 +275,7 @@ def master_logits(
     out = np.empty((L, evidence.shape[1] + 2))
     for t in range(L):
         q = beta * w["master_Q"][t]
-        att = _softmax(q @ keys.T)
+        att = softmax(q @ keys.T)
         g_a = att @ (vals * w["master_mask_a"])
         g_b = np.zeros_like(g_a) if drop_head_b else att @ (vals * w["master_mask_b"])
         attn_out = np.concatenate([g_a, g_b]) @ w["master_Wo"]
@@ -323,7 +309,7 @@ def vitstr_logits(
     # past the readout window carry a zero query (uniform attention).
     keys = m @ w["Wk"]
     vals = m @ w["Wv"]
-    att = _softmax(q @ keys.T, axis=-1)
+    att = softmax(q @ keys.T, axis=-1)
     attn_out = att @ vals  # (rows, Cd)
     x2 = m.copy()
     x2[:, -cd:] += attn_out  # residual write into the dedicated out block
@@ -348,7 +334,7 @@ def parseq_logits(
     m, _ = _build_memory(evidence, L, w["sink_token"])
     keys = m @ w["Wk"]
     vals = m @ w["Wv"]
-    glimpse = _softmax(beta * w["parseq_Q"] @ keys.T, axis=-1) @ vals  # (L, Cd)
+    glimpse = softmax(beta * w["parseq_Q"] @ keys.T, axis=-1) @ vals  # (L, Cd)
     base = _to_full(glimpse, temp)
     # pass 1: AR, causal window-1 mask (uniform masked attention = the
     # softmax of the learned all-zero context scores under the mask)
@@ -390,7 +376,6 @@ def viptr_vocab(w: dict[str, np.ndarray]) -> str:
 
 
 def _make_zoo_recognizer(family: str, weights_path: str | None = None) -> ModelLoader:
-    path = weights_path or RECO_ZOO_WEIGHTS_PATH
     key = {
         "sar": SAR_KEY,
         "master": MASTER_KEY,
@@ -399,16 +384,13 @@ def _make_zoo_recognizer(family: str, weights_path: str | None = None) -> ModelL
         "viptr": VIPTR_KEY,
     }[family]
 
-    def load():
-        from ..operators.recognition import ctc_best_path, eos_decode
-
-        w = _load_reco_zoo(path)
+    def forward(w: dict[str, np.ndarray]):
         vocab = str(w["vocab"])
         filters = w["filters"].astype(np.float64)
         bias = w["stem_bias"].astype(np.float64)
-        trained_scale = int(w["scale"])
 
-        def _decode(evidence: np.ndarray) -> tuple[str, float]:
+        def decode(cells: np.ndarray) -> tuple[str, float]:
+            evidence = glyph_evidence(cells, filters, bias)
             if family == "sar":
                 return eos_decode(sar_logits(w, evidence), vocab, conf="min")[0]
             if family == "master":
@@ -419,23 +401,9 @@ def _make_zoo_recognizer(family: str, weights_path: str | None = None) -> ModelL
                 return eos_decode(parseq_logits(w, evidence), vocab, conf="mean")[0]
             return ctc_best_path(viptr_logits(w, evidence), viptr_vocab(w), blank=0)[0]
 
-        def recognize(crops: list[np.ndarray], scale: int) -> list[tuple[str, float]]:
-            if scale != trained_scale:
-                raise ValueError(
-                    f"{key} weights are sized for render scale {trained_scale}, got {scale}"
-                )
-            out = []
-            for crop in crops:
-                cells = crop_cells(crop, scale)
-                if cells is None:
-                    out.append(("", 0.0))
-                    continue
-                out.append(_decode(glyph_evidence(cells, filters, bias)))
-            return out
+        return decode
 
-        return recognize
-
-    return key, load
+    return npz_recognizer(key, RECO_ZOO_WEIGHTS_PATH, weights_path, forward)
 
 
 def tiny_sar_recognizer(weights_path: str | None = None) -> ModelLoader:

@@ -40,24 +40,19 @@ NON-DB architecture. Both use the ink-family postprocess preset
 the deterministic family does, not the shrunken DB/FAST/LinkNet training
 targets the family presets (detection.py:34-36) are calibrated for.
 
-Weights regenerate via ``scripts/make_tiny_weights.py`` (which writes both
-npz files); they load once per Python worker through ``resolve_model``.
+Weights regenerate with every other committed model file via
+``scripts/make_tiny_weights.py``; they load once per Python worker through
+``resolve_model``.
 """
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 
-from .models import ModelLoader
-from .tiny_conv import _sigmoid, conv2d_same
+from .models import ModelLoader, models_data, npz_detector, sigmoid
+from .tiny_conv import conv2d_same, pool2, upsample
 
-ZOO_WEIGHTS_PATH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "models_data",
-    "tiny_zoo_v1.npz",
-)
+ZOO_WEIGHTS_PATH = models_data("tiny_zoo_v1.npz")
 
 FAST_DET_KEY = "tiny-fast-det-v1"
 LINKNET_DET_KEY = "tiny-linknet-det-v1"
@@ -99,11 +94,6 @@ def make_tiny_zoo_weights() -> dict[str, np.ndarray]:
     return w
 
 
-def _load_zoo(path: str) -> dict[str, np.ndarray]:
-    with np.load(path, allow_pickle=False) as z:
-        return {k: z[k] for k in z.files}
-
-
 def _bn_dict(w: dict[str, np.ndarray], name: str) -> dict:
     return {f: np.asarray(w[f"{name}_{f}"], dtype=np.float64) for f in _BN_FIELDS}
 
@@ -128,70 +118,41 @@ def fast_fused_kernel(w: dict[str, np.ndarray]) -> tuple[np.ndarray, float]:
 def tiny_fast_detector(weights_path: str | None = None) -> ModelLoader:
     """(key, loader) for the reparameterized-FAST-style detector; drop-in
     for the ``detector=`` seam of ``extract_turns``."""
-    path = weights_path or ZOO_WEIGHTS_PATH
 
-    def load():
-        from ..operators.detection import INK_MODEL_POSTPROC, postprocess_proba_map
-
-        w = _load_zoo(path)
-        trained_scale = int(w["scale"])
+    def forward(w: dict[str, np.ndarray]):
         w1, b1 = float(w["stem_w1"]), float(w["stem_b1"])
         gain = float(w["fast_gain"])
         # deploy-time reparameterization: branches fold ONCE at load
         kernel, bias = fast_fused_kernel(w)
         k2d = kernel[0, 0]
 
-        def detect(page: np.ndarray, scale: int) -> np.ndarray:
-            if scale != trained_scale:
-                raise ValueError(
-                    f"{FAST_DET_KEY} weights are sized for render scale {trained_scale}, got {scale}"
-                )
-            gray = page if page.ndim == 2 else page.mean(axis=-1)
-            a1 = _sigmoid(w1 * gray.astype(np.float64) + b1)  # stem ink activation
-            proba = _sigmoid(gain * (conv2d_same(a1, k2d) + bias))  # ONE fused conv
-            return postprocess_proba_map(proba, **INK_MODEL_POSTPROC)
+        def proba_map(gray: np.ndarray) -> np.ndarray:
+            a1 = sigmoid(w1 * gray.astype(np.float64) + b1)  # stem ink activation
+            return sigmoid(gain * (conv2d_same(a1, k2d) + bias))  # ONE fused conv
 
-        return detect
+        return proba_map
 
-    return FAST_DET_KEY, load
+    return npz_detector(FAST_DET_KEY, ZOO_WEIGHTS_PATH, weights_path, forward)
 
 
 def tiny_linknet_detector(weights_path: str | None = None) -> ModelLoader:
     """(key, loader) for the encoder-decoder(+skip)-style detector; drop-in
     for the ``detector=`` seam of ``extract_turns``."""
-    path = weights_path or ZOO_WEIGHTS_PATH
 
-    def load():
-        from ..operators.detection import INK_MODEL_POSTPROC, postprocess_proba_map
-
-        w = _load_zoo(path)
+    def forward(w: dict[str, np.ndarray]):
         s = int(w["scale"])
         w1, b1 = float(w["stem_w1"]), float(w["stem_b1"])
         dec_k = w["link_dec_k"]
         dec_b, skip, gain = float(w["link_dec_b"]), float(w["link_skip"]), float(w["link_gain"])
 
-        def detect(page: np.ndarray, scale: int) -> np.ndarray:
-            if scale != s:
-                raise ValueError(
-                    f"{LINKNET_DET_KEY} weights are sized for render scale {s}, got {scale}"
-                )
-            gray = page if page.ndim == 2 else page.mean(axis=-1)
-            H, W = gray.shape
-            a1 = _sigmoid(w1 * gray.astype(np.float64) + b1)  # stem
-            # encoder: s x s stride-s mean pool (zero-pad to cell multiple)
-            Hp, Wp = -(-H // s) * s, -(-W // s) * s
-            pooled = (
-                np.pad(a1, ((0, Hp - H), (0, Wp - W)))
-                .reshape(Hp // s, s, Wp // s, s)
-                .mean(axis=(1, 3))
-            )
+        def proba_map(gray: np.ndarray) -> np.ndarray:
+            a1 = sigmoid(w1 * gray.astype(np.float64) + b1)  # stem
+            # encoder: s x s stride-s mean pool (zero-pad to cell multiple);
             # decoder: fusion conv on the 1/s^2-area feature map
-            y = conv2d_same(pooled, dec_k) + dec_b
+            y = conv2d_same(pool2(a1, s), dec_k) + dec_b
             # nearest upsample back to pixel space + additive stem skip
-            up = np.repeat(np.repeat(y, s, axis=0), s, axis=1)[:H, :W]
-            proba = _sigmoid(gain * (up + skip * a1))
-            return postprocess_proba_map(proba, **INK_MODEL_POSTPROC)
+            return sigmoid(gain * (upsample(y, s, *gray.shape) + skip * a1))
 
-        return detect
+        return proba_map
 
-    return LINKNET_DET_KEY, load
+    return npz_detector(LINKNET_DET_KEY, ZOO_WEIGHTS_PATH, weights_path, forward)

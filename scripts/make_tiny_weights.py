@@ -1,12 +1,11 @@
-"""Regenerate the committed model weights:
-- doctr_spark/models_data/tiny_conv_v1.npz (plans/tiny_conv.py)
-- doctr_spark/models_data/tiny_zoo_v1.npz (plans/tiny_zoo.py — FAST
-  multi-branch + LinkNet encoder-decoder detector variants)
-- doctr_spark/models_data/tiny_reco_zoo_v1.npz (plans/tiny_reco_zoo.py —
-  SAR/MASTER/ViTSTR/PARSeq/VIPTR recognizer family variants)
+"""Regenerate every committed model file in doctr_spark/models_data/ (the
+npz weights and the .onnx graphs) from its builder in
+``doctr_spark.plans.models.committed_models``.
 
-Usage: python scripts/make_tiny_weights.py [out_path]
-(an explicit out_path writes only the tiny-conv file there)
+Usage: python scripts/make_tiny_weights.py
+
+The output is deterministic: on a clean checkout,
+``git status --porcelain doctr_spark/models_data`` stays empty afterwards.
 """
 
 from __future__ import annotations
@@ -18,55 +17,18 @@ import numpy as np
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from doctr_spark.plans.tiny_conv import WEIGHTS_PATH, make_tiny_weights  # noqa: E402
+from doctr_spark.plans.models import committed_models  # noqa: E402
 
 
 def main() -> None:
-    out = sys.argv[1] if len(sys.argv) > 1 else WEIGHTS_PATH
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    weights = make_tiny_weights()
-    np.savez(out, **weights)
-    sizes = {k: getattr(v, "shape", ()) for k, v in weights.items()}
-    print(f"wrote {out}: {sizes}")
-    if len(sys.argv) <= 1:
-        from doctr_spark.plans.tiny_zoo import ZOO_WEIGHTS_PATH, make_tiny_zoo_weights
-
-        zoo = make_tiny_zoo_weights()
-        np.savez(ZOO_WEIGHTS_PATH, **zoo)
-        print(f"wrote {ZOO_WEIGHTS_PATH}: {sorted(zoo)}")
-
-        from doctr_spark.plans.tiny_reco_zoo import (
-            RECO_ZOO_WEIGHTS_PATH,
-            make_tiny_reco_zoo_weights,
-        )
-
-        reco = make_tiny_reco_zoo_weights()
-        np.savez(RECO_ZOO_WEIGHTS_PATH, **reco)
-        print(f"wrote {RECO_ZOO_WEIGHTS_PATH}: {sorted(reco)}")
-
-        from doctr_spark.plans.tiny_crnn import CRNN_WEIGHTS_PATH, make_tiny_crnn_weights
-
-        crnn = make_tiny_crnn_weights()
-        np.savez(CRNN_WEIGHTS_PATH, **crnn)
-        print(f"wrote {CRNN_WEIGHTS_PATH}: {sorted(crnn)}")
-
-        from doctr_spark.plans.tiny_dbnet import DBNET_WEIGHTS_PATH, make_tiny_dbnet_weights
-
-        dbnet = make_tiny_dbnet_weights()
-        np.savez(DBNET_WEIGHTS_PATH, **dbnet)
-        print(f"wrote {DBNET_WEIGHTS_PATH}: {sorted(dbnet)}")
-
-        from doctr_spark.plans.tiny_orient import (
-            ORIENT_WEIGHTS_PATH,
-            make_tiny_orient_weights,
-        )
-
-        orient = make_tiny_orient_weights()
-        np.savez(ORIENT_WEIGHTS_PATH, **orient)
-        print(
-            f"wrote {ORIENT_WEIGHTS_PATH}: bank="
-            f"{''.join(orient['bank_chars'].tolist())}"
-        )
+    for path, (build, _) in committed_models().items():
+        content = build()
+        if path.endswith(".npz"):
+            np.savez(path, **content)
+        else:
+            with open(path, "wb") as fh:
+                fh.write(content)
+        print(f"wrote {path}")
 
 
 if __name__ == "__main__":

@@ -640,3 +640,20 @@ def test_checkpoint_modes_commit_identically(spark, corpus, tmp_path_factory):
     assert len(rows) == inp.count()
     assert [m["bucket"] for m in manifest] == [0, 1, 2, 3]
     assert tuple(manifest[empty])[1:] == (0, 0, 0, 0, 1.0, "done")
+
+
+def test_read_extraction_results_of_an_all_empty_run(spark, corpus, tmp_path_factory):
+    """A grouped run in which every bucket is empty reads back as 0 rows
+    with the same columns as a non-empty run, instead of failing to infer a
+    schema from no files."""
+    inp = corpus.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    empty_out = str(tmp_path_factory.mktemp("ckpt_all_empty"))
+    run_extraction_checkpointed(spark, inp.limit(0), empty_out, buckets=4, grouped=True)
+    full_out = str(tmp_path_factory.mktemp("ckpt_not_empty"))
+    run_extraction_checkpointed(spark, inp, full_out, buckets=4, grouped=True)
+    empty = read_extraction_results(spark, empty_out)
+    full = read_extraction_results(spark, full_out)
+    assert empty.count() == 0
+    assert full.count() == inp.count()
+    assert empty.dtypes == full.dtypes
+    assert completed_buckets(spark, f"{empty_out}/manifest") == {0, 1, 2, 3}

@@ -17,6 +17,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from doctr_spark.plans.models import committed_models, load_npz, models_data
 from doctr_spark.sources.corpus import make_transcripts
 
 
@@ -79,6 +80,53 @@ def test_resolve_model_caches_by_key():
     assert a is b and len(calls) == 1
     c = resolve_model("k2", loader)
     assert c is not a and len(calls) == 2
+    clear_model_cache()
+
+
+# ------------------------------------------------- committed model files
+
+
+@pytest.mark.parametrize("path", sorted(committed_models()), ids=os.path.basename)
+def test_committed_model_file_matches_builder(path):
+    """Each committed file is exactly what scripts/make_tiny_weights.py
+    writes from its builder: an npz has the builder's keys and equal
+    arrays, an .onnx is byte-equal to the builder's serialization."""
+    build = committed_models()[path][0]
+    if path.endswith(".npz"):
+        fresh = build()
+        committed = load_npz(path)
+        assert set(committed) == set(fresh)
+        for k in fresh:
+            assert np.array_equal(committed[k], np.asarray(fresh[k])), k
+    else:
+        with open(path, "rb") as fh:
+            assert fh.read() == build()
+
+
+def test_committed_model_table_lists_models_data():
+    """The table declares every file in models_data/ and nothing else."""
+    assert {os.path.basename(p) for p in committed_models()} == set(os.listdir(models_data("")))
+
+
+def test_custom_weights_path_gets_its_own_model(tmp_path):
+    """A loader given a custom weights file resolves to a model of its own:
+    its cache key names the file, so resolve_model never serves it the
+    model loaded from the default file earlier in the same process."""
+    import shutil
+
+    from doctr_spark.plans.models import clear_model_cache, resolve_model
+    from doctr_spark.plans.tiny_orient import ORIENT_WEIGHTS_PATH, tiny_orient_classifier
+
+    factories = [(p, f) for p, (_, archs) in committed_models().items() for f in archs.values()]
+    factories.append((ORIENT_WEIGHTS_PATH, tiny_orient_classifier))
+    assert len(factories) == 12
+    clear_model_cache()
+    for path, factory in factories:
+        custom = str(tmp_path / os.path.basename(path))
+        shutil.copyfile(path, custom)
+        key, _ = factory()
+        assert factory(custom)[0] == f"{key}:{custom}"
+        assert resolve_model(*factory()) is not resolve_model(*factory(custom)), key
     clear_model_cache()
 
 

@@ -15,23 +15,9 @@ from pyspark.sql import functions as F
 from doctr_spark.functions.vocabs import FONT
 from doctr_spark.operators.detection import INK_MODEL_POSTPROC, ink_word_boxes
 from doctr_spark.plans.models import onnx_detector, onnx_recognizer
-from doctr_spark.plans.onnx_export import (
-    ONNX_DET_PATH,
-    ONNX_RECO_PATH,
-    build_detector_onnx,
-    build_recognizer_onnx,
-)
+from doctr_spark.plans.onnx_export import ONNX_DET_PATH, ONNX_RECO_PATH
 from doctr_spark.plans.onnx_proto import decode_model, encode_model, encode_node
 from doctr_spark.sources.font import DEFAULT_SCALE, render_page
-
-
-def test_committed_onnx_files_match_builder():
-    for path, build in (
-        (ONNX_DET_PATH, build_detector_onnx),
-        (ONNX_RECO_PATH, build_recognizer_onnx),
-    ):
-        with open(path, "rb") as fh:
-            assert fh.read() == build(), path
 
 
 def test_onnx_files_parse_as_model_protos():

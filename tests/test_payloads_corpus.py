@@ -67,19 +67,6 @@ def test_corpus_mix_and_skew():
     assert by_conv["conv-000010"] == 50
 
 
-def test_iceberg_gated_reader(spark, tmp_path):
-    from doctr_spark.sources.readers import iceberg_available, read_transcripts, write_results
-    from doctr_spark.sources.corpus import make_transcripts_pdf
-
-    assert iceberg_available(spark) is False  # no jars in this container
-    pdf = make_transcripts_pdf(3)
-    df = spark.createDataFrame(pdf[["conv_id", "turn_idx", "role", "text", "tool"]])
-    path = str(tmp_path / "t")
-    write_results(df, path, mode="overwrite")
-    back = read_transcripts(spark, path)
-    assert back.count() == len(pdf)
-
-
 def test_skewed_corpus_extraction(spark):
     # FIXTURES.md §9: one hot conversation + many small ones
     from doctr_spark.sources.corpus import make_transcripts

@@ -107,37 +107,6 @@ def test_asof_join_single_exchange(spark):
         assert j not in plan
 
 
-def test_bucketed_join_is_exchange_free(spark, tmp_path_factory):
-    """Two tables bucketed on the join key with equal bucket counts join
-    with ZERO exchanges (the write-once/join-many layout for 100 TB fact
-    joins); an unbucketed twin of the same join shows the shuffles."""
-    from pyspark.sql import functions as F
-
-    from doctr_spark.sources.bucketed import colocated_join, write_bucketed
-
-    a = spark.range(0, 1000).select(F.col("id").alias("conv_key"), (F.col("id") % 7).alias("va"))
-    b = spark.range(0, 1000).select(F.col("id").alias("conv_key"), (F.col("id") % 5).alias("vb"))
-    write_bucketed(a, "t_bucketed_a", "conv_key", buckets=8)
-    write_bucketed(b, "t_bucketed_b", "conv_key", buckets=8)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    # tiny test tables would auto-broadcast; at fact-join scale (both sides
-    # huge) broadcast is off the table — emulate that regime
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = colocated_join(spark, "t_bucketed_a", "t_bucketed_b", "conv_key")
-        plan = _formatted_plan(spark, j)
-        assert "Exchange" not in plan
-        assert "SortMergeJoin" in plan
-        assert j.count() == 1000
-        # control: the same join on raw (unbucketed) DataFrames shuffles
-        plain = _formatted_plan(spark, a.join(b, "conv_key"))
-        assert "Exchange hashpartitioning" in plain or ") Exchange" in plain
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS t_bucketed_a")
-        spark.sql("DROP TABLE IF EXISTS t_bucketed_b")
-
-
 @needs_data
 def test_kmeans_sampler_is_top_k_not_global_sort(spark):
     """kmeans_fit's init sample (orderBy hash + limit) must compile to

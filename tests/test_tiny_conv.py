@@ -16,12 +16,7 @@ from pyspark.sql import functions as F
 from doctr_spark.functions.vocabs import FONT
 from doctr_spark.operators.detection import ink_word_boxes
 from doctr_spark.operators.geometry import extract_crops
-from doctr_spark.plans.tiny_conv import (
-    WEIGHTS_PATH,
-    make_tiny_weights,
-    tiny_conv_detector,
-    tiny_conv_recognizer,
-)
+from doctr_spark.plans.tiny_conv import tiny_conv_detector, tiny_conv_recognizer
 from doctr_spark.sources.font import DEFAULT_SCALE, render_page
 
 
@@ -33,16 +28,6 @@ def det():
 @pytest.fixture(scope="module")
 def rec():
     return tiny_conv_recognizer()[1]()
-
-
-def test_committed_weights_match_builder():
-    """The committed npz is exactly what scripts/make_tiny_weights.py
-    produces — no drift between the data file and the builder."""
-    fresh = make_tiny_weights()
-    with np.load(WEIGHTS_PATH, allow_pickle=False) as z:
-        assert set(z.files) == set(fresh)
-        for k in fresh:
-            assert np.array_equal(np.asarray(z[k]), np.asarray(fresh[k])), k
 
 
 def test_detector_matches_ink_family(det):

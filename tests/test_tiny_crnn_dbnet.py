@@ -19,20 +19,9 @@ from pyspark.sql import functions as F
 from doctr_spark.functions.vocabs import FONT
 from doctr_spark.operators.detection import INK_MODEL_POSTPROC, postprocess_proba_map
 from doctr_spark.operators.recognition import ctc_best_path
-from doctr_spark.plans.tiny_crnn import (
-    CRNN_WEIGHTS_PATH,
-    _load_crnn,
-    crnn_bilstm_logits,
-    make_tiny_crnn_weights,
-    tiny_bilstm_recognizer,
-)
-from doctr_spark.plans.tiny_dbnet import (
-    DBNET_WEIGHTS_PATH,
-    _load_dbnet,
-    dbnet_proba_map,
-    make_tiny_dbnet_weights,
-    tiny_dbnet_detector,
-)
+from doctr_spark.plans.models import load_npz
+from doctr_spark.plans.tiny_crnn import CRNN_WEIGHTS_PATH, crnn_bilstm_logits, tiny_bilstm_recognizer
+from doctr_spark.plans.tiny_dbnet import DBNET_WEIGHTS_PATH, dbnet_proba_map, tiny_dbnet_detector
 from doctr_spark.sources.font import DEFAULT_SCALE, glyph_bitmap, render_page
 
 
@@ -44,24 +33,12 @@ def _word_crop(word: str) -> np.ndarray:
 
 @pytest.fixture(scope="module")
 def crnn_w() -> dict[str, np.ndarray]:
-    return _load_crnn(CRNN_WEIGHTS_PATH)
+    return load_npz(CRNN_WEIGHTS_PATH)
 
 
 @pytest.fixture(scope="module")
 def dbnet_w() -> dict[str, np.ndarray]:
-    return _load_dbnet(DBNET_WEIGHTS_PATH)
-
-
-def test_committed_weights_match_builder():
-    for path, make in (
-        (CRNN_WEIGHTS_PATH, make_tiny_crnn_weights),
-        (DBNET_WEIGHTS_PATH, make_tiny_dbnet_weights),
-    ):
-        fresh = make()
-        with np.load(path, allow_pickle=False) as z:
-            assert set(z.files) == set(fresh)
-            for k in fresh:
-                assert np.array_equal(np.asarray(z[k]), np.asarray(fresh[k])), k
+    return load_npz(DBNET_WEIGHTS_PATH)
 
 
 # --------------------------------------------------------------- tiny-CRNN

@@ -11,6 +11,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from doctr_spark.plans.models import load_npz
 from doctr_spark.plans.tiny_orient import (
     ORIENT_WEIGHTS_PATH,
     REFERENCE_CLASSES,
@@ -23,8 +24,7 @@ from doctr_spark.sources.font import render_page
 
 
 def _load():
-    with np.load(ORIENT_WEIGHTS_PATH, allow_pickle=False) as z:
-        return {k: z[k] for k in z.files}
+    return load_npz(ORIENT_WEIGHTS_PATH)
 
 
 PAGES = [

@@ -17,12 +17,11 @@ from pyspark.sql import functions as F
 
 from doctr_spark.functions.vocabs import FONT
 from doctr_spark.operators.recognition import ctc_best_path, eos_decode
+from doctr_spark.plans.models import load_npz
 from doctr_spark.plans.tiny_conv import crop_cells, glyph_evidence
 from doctr_spark.plans.tiny_reco_zoo import (
     ALL_RECO_VARIANTS,
     RECO_ZOO_WEIGHTS_PATH,
-    _load_reco_zoo,
-    make_tiny_reco_zoo_weights,
     master_logits,
     parseq_logits,
     sar_logits,
@@ -45,7 +44,7 @@ def _word_crop(word: str) -> np.ndarray:
 
 @pytest.fixture(scope="module")
 def zoo_w() -> dict[str, np.ndarray]:
-    return _load_reco_zoo(RECO_ZOO_WEIGHTS_PATH)
+    return load_npz(RECO_ZOO_WEIGHTS_PATH)
 
 
 def _evidence(zoo_w: dict[str, np.ndarray], word: str) -> np.ndarray:
@@ -54,14 +53,6 @@ def _evidence(zoo_w: dict[str, np.ndarray], word: str) -> np.ndarray:
         zoo_w["filters"].astype(np.float64),
         zoo_w["stem_bias"].astype(np.float64),
     )
-
-
-def test_committed_reco_zoo_weights_match_builder():
-    fresh = make_tiny_reco_zoo_weights()
-    with np.load(RECO_ZOO_WEIGHTS_PATH, allow_pickle=False) as z:
-        assert set(z.files) == set(fresh)
-        for k in fresh:
-            assert np.array_equal(np.asarray(z[k]), np.asarray(fresh[k])), k
 
 
 @pytest.mark.parametrize("name,factory", ALL_RECO_VARIANTS)

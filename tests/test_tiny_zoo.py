@@ -13,12 +13,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from doctr_spark.operators.detection import ink_word_boxes
+from doctr_spark.plans.models import load_npz
 from doctr_spark.plans.tiny_zoo import (
     ZOO_WEIGHTS_PATH,
     _bn_dict,
-    _load_zoo,
     fast_fused_kernel,
-    make_tiny_zoo_weights,
     tiny_fast_detector,
     tiny_linknet_detector,
 )
@@ -27,21 +26,13 @@ from doctr_spark.sources.font import DEFAULT_SCALE, render_page
 PAGES = (["HELLO", "WORLD"], ["A+B=C", "R&D", "#1"], ["READY.", "GO!", "WHY?", "KILO", "OK,"])
 
 
-def test_committed_zoo_weights_match_builder():
-    fresh = make_tiny_zoo_weights()
-    with np.load(ZOO_WEIGHTS_PATH, allow_pickle=False) as z:
-        assert set(z.files) == set(fresh)
-        for k in fresh:
-            assert np.array_equal(np.asarray(z[k]), np.asarray(fresh[k])), k
-
-
 def test_fast_reparam_equivalence_on_random_input():
     """The fused conv the deployed forward runs == the sum of the four
     training-time branches (each conv -> BN), on arbitrary input — the
     FAST reparameterization contract, executed with the committed weights."""
     from doctr_spark.operators.reparam import batchnorm, conv2d_same, identity_kernel
 
-    w = _load_zoo(ZOO_WEIGHTS_PATH)
+    w = load_npz(ZOO_WEIGHTS_PATH)
     x = np.random.default_rng(5).random((2, 1, 40, 30))
     branches = batchnorm(conv2d_same(x, w["fast_main_k"]), _bn_dict(w, "fast_main_bn"))
     branches = branches + batchnorm(
