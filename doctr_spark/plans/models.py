@@ -169,15 +169,21 @@ DEFAULT_ORIENTATION: ModelLoader = ("glyph-orient-default", _load_glyph_orientat
 def _onnx_session(model_path: str):
     """Open an ONNX model: onnxruntime when installed, else the bundled
     pure-numpy executor (plans/onnx_exec.NumpySession) — same file format,
-    same run() surface, so the loader contract executes in both worlds."""
-    try:
-        import onnxruntime as ort
+    same run() surface, so the loader contract executes in both worlds.
+    One session per file per worker: loaders that differ only in their
+    pre/post-processing share it (and its load-time Conv plans)."""
 
-        return ort.InferenceSession(model_path)
-    except ImportError:
-        from .onnx_exec import NumpySession
+    def load():
+        try:
+            import onnxruntime as ort
 
-        return NumpySession(model_path)
+            return ort.InferenceSession(model_path)
+        except ImportError:
+            from .onnx_exec import NumpySession
+
+            return NumpySession(model_path)
+
+    return resolve_model(f"onnx-session:{model_path}", load)
 
 
 def onnx_detector(
@@ -203,7 +209,7 @@ def onnx_detector(
     from ..operators.preprocess import remove_padding, resize_page
 
     pp = dict(DB_POSTPROC if postproc is None else postproc)
-    key = f"onnx-det:{model_path}"
+    key = f"onnx-det:{model_path}:{input_name}:{target_hw}:{sorted(pp.items())}"
 
     def load():
         sess = _onnx_session(model_path)
@@ -239,7 +245,7 @@ def onnx_recognizer(model_path: str, vocab: str | None = None, input_name: str =
     from ..operators.recognition import ctc_best_path
 
     voc = FONT if vocab is None else vocab
-    key = f"onnx-reco:{model_path}"
+    key = f"onnx-reco:{model_path}:{input_name}:{voc}"
 
     def load():
         sess = _onnx_session(model_path)

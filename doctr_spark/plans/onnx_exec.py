@@ -16,8 +16,8 @@ conv ladders -> Conv, inplace ReLUs -> Relu, BatchNorm2d eval stats ->
 BatchNormalization, downsample -> MaxPool, F.interpolate(size=...) ->
 Resize, ``+`` merges -> Add, torch.cat -> Concat):
 
-  Conv       — 2D, group=1, dilations=1; attrs: pads [hb, wb, he, we],
-               strides [sh, sw]; zero padding
+  Conv       — 2D, dilations=1; attrs: pads [hb, wb, he, we],
+               strides [sh, sw], group (grouped / depthwise); zero padding
   Relu       — elementwise max(0, x)
   MaxPool    — 2D; attrs: kernel_shape, strides (default = kernel),
                pads (default 0), ceil_mode=0; -inf padding
@@ -52,14 +52,29 @@ on older exporter versions):
   ReduceMax  — attrs: axes (ints, negatives allowed), keepdims (default 1)
   Transpose  — attr: perm (ints)
 
-Arithmetic runs in float64 internally (the deterministic tiny weights are
-saturating, so float32 vs float64 never flips a decode) and returns
-float32, matching the graph's declared tensor type.
+Each Conv is planned once, when the session loads, from its constant
+initializer weights (``_plan_conv``): the SVD of the stacked kernel rows
+gives a rank-r width basis, and a second SVD over the kernel height is
+kept where it cuts the multiply-adds (the recognizer's 62 filters of
+27x21 are rank 6 in width and 8 in height; every committed detector
+kernel is rank 1). A run is a width pass against the basis rows and, per
+output row, GEMMs over strided views of that row's input rows. A
+full-rank bank keeps the identity basis, which makes the same routine a
+plain direct conv. A Conv weight that is not an initializer is planned
+on every run and never kept.
+
+Arithmetic runs in float64 internally and returns float32, the graph's
+declared tensor type. The planned conv agrees with a plain float64
+sliding-window conv to within 1e-9 relative (property test in
+tests/test_properties.py; about 1e-14 on the committed banks).
 """
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
+from numpy.lib.stride_tricks import as_strided
 
 from .onnx_proto import decode_model
 
@@ -69,88 +84,112 @@ _SUPPORTED = {
     "GlobalAveragePool", "Flatten", "Gemm", "Softmax",
     "Mul", "Div", "Clip", "HardSigmoid", "HardSwish",
 }
-_FFT_CACHE_MAX = 8  # kernel spectra per session; FIFO eviction (see Conv)
 
 
-def _next_fast_len(n: int) -> int:
-    """Smallest 5-smooth number >= n (numpy's FFT is O(n^2)-ish on large
-    prime lengths; page/crop dims routinely land on primes)."""
-    while True:
-        m = n
-        for p in (2, 3, 5):
-            while m % p == 0:
-                m //= p
-        if m == 1:
-            return n
-        n += 1
+class _ConvPlan(NamedTuple):
+    """One group's kernel bank ``w`` (M, C, kh, kw), factored once from its
+    constant weights into a width basis (r × kw), an optional height basis
+    (s × kh) and the coefficients that mix them back into the M outputs:
+    ``w[m, c, p, q] = sum_k coef[m, (p, c, k)] * wbasis[k, q]`` without a
+    height basis, and ``sum_{l,k} coef[m, (l, c, k)] * hbasis[l, p] *
+    wbasis[k, q]`` with one. A basis of ``None`` stands for the identity."""
+
+    wbasis: np.ndarray | None  # (r, kw)
+    hbasis: np.ndarray | None  # (s, kh)
+    coef: np.ndarray  # (M, kh·C·r), or (M, s·C·r) with a height basis
+    c: int
+    kh: int
+    kw: int
+
+
+def _row_basis(rows: np.ndarray) -> tuple[np.ndarray | None, np.ndarray]:
+    """``rows`` (R × k) as ``coef @ basis``: the rank-r right singular
+    basis (r × k) and coef (R × r), or ``(None, rows)`` when r = k, where
+    factoring saves nothing."""
+    u, s, vt = np.linalg.svd(rows, full_matrices=False)
+    # numpy's matrix_rank tolerance; an all-zero bank has rank 0
+    r = int((s > s.max(initial=0.0) * max(rows.shape) * np.finfo(np.float64).eps).sum())
+    return (None, rows) if r == rows.shape[1] else (vt[:r], u[:, :r] * s[:r])
+
+
+def _plan_conv(w: np.ndarray, groups: int) -> list[_ConvPlan]:
+    """One plan per group slice of the Conv weight ``w`` (M, C/groups, kh, kw)."""
+    m, cg, kh, kw = w.shape
+    if m % groups:
+        raise ValueError(f"Conv group mismatch: M={m}, groups={groups}")
+    ms = m // groups
+    plans = []
+    for g in range(groups):
+        rows = np.asarray(w[g * ms : (g + 1) * ms], dtype=np.float64).reshape(-1, kw)
+        wbasis, coef = _row_basis(rows)  # rows (m, c, p) x kw
+        cr = cg * coef.shape[1]
+        coef = coef.reshape(ms, cg, kh, -1).transpose(0, 2, 1, 3).reshape(ms, kh * cr)
+        # factor the kernel height too when that cuts the multiply-adds per
+        # output pixel from M·kh·C·r to s·kh·C·r + M·s·C·r (rank 0 stays as is)
+        hbasis, hcoef = _row_basis(coef.reshape(ms, kh, cr).transpose(0, 2, 1).reshape(-1, kh))
+        if cr and hbasis is not None and len(hbasis) * (kh + ms) < ms * kh:
+            coef = hcoef.reshape(ms, cr, -1).transpose(0, 2, 1).reshape(ms, -1)
+        else:
+            hbasis = None
+        plans.append(_ConvPlan(wbasis, hbasis, np.ascontiguousarray(coef), cg, kh, kw))
+    return plans
+
+
+def _conv_group(xp: np.ndarray, plan: _ConvPlan, sh: int, sw: int) -> np.ndarray:
+    """Cross-correlate the padded float64 input (N, C, Hp, Wp) with one
+    planned bank: a width pass against the width basis, then per output
+    row the height basis and the coefficients as GEMMs over that row's
+    kh input rows. Every pass reads strided views of its input, so no
+    pass copies the input window by window."""
+    n, c, hp, wp = xp.shape
+    wbasis, hbasis, coef, _, kh, kw = plan
+    ho, wo = (hp - kh) // sh + 1, (wp - kw) // sw + 1
+    if ho < 1 or wo < 1:
+        raise ValueError(f"Conv kernel {kh}x{kw} exceeds padded input {hp}x{wp}")
+    if kh == kw == 1 and wbasis is None:  # pointwise: one channel mix
+        return np.tensordot(coef, xp[:, :, ::sh, ::sw], axes=(1, 1)).transpose(1, 0, 2, 3)
+    s0, s1, s2, s3 = xp.strides
+    if wbasis is None:
+        # z[n, h, c, q, j] = xp[n, c, h, j*sw + q]
+        z = np.ascontiguousarray(as_strided(xp, (n, hp, c, kw, wo), (s0, s2, s1, s3, sw * s3)))
+    else:
+        # every output column's (Hp, kw) window against the basis rows
+        win = as_strided(xp, (n, c, wo, hp, kw), (s0, s1, sw * s3, s2, s3))
+        z = np.ascontiguousarray((win @ wbasis.T).transpose(0, 3, 1, 4, 2))  # (N, Hp, C, r, Wo)
+    # z is contiguous: output row i reads its kh input rows from row i·sh
+    # on, each holding C·r rows of Wo (strides from the shape: numpy gives
+    # a length-1 axis any stride)
+    e, cr = z.itemsize, z.shape[2] * z.shape[3]
+    row = cr * wo * e
+    if hbasis is None:
+        rows = as_strided(z, (n, ho, kh * cr, wo), (hp * row, sh * row, wo * e, e))
+    else:
+        rows = as_strided(z, (n, ho, kh, cr * wo), (hp * row, sh * row, row, e))
+        rows = (hbasis @ rows).reshape(n, ho, -1, wo)  # (N, Ho, s·C·r, Wo)
+    return (coef @ rows).transpose(0, 2, 1, 3)  # (N, M, Ho, Wo)
 
 
 def _conv2d(
-    x: np.ndarray, w: np.ndarray, b: np.ndarray | None, attrs: dict, fft_cache: dict
+    x: np.ndarray, plans: list[_ConvPlan], b: np.ndarray | None, attrs: dict
 ) -> np.ndarray:
     pads = attrs.get("pads", [0, 0, 0, 0])
     sh, sw = attrs.get("strides", [1, 1])
-    groups = attrs.get("group", 1)
     if attrs.get("dilations", [1, 1]) != [1, 1]:
         raise NotImplementedError("NumpySession Conv supports dilation=1")
-    n, c, h, wd = x.shape
-    m, c2, kh, kw = w.shape
-    if groups > 1:
-        # grouped / depthwise conv (what a MobileNet-style export emits):
-        # split input channels and output kernels into `groups` slices,
-        # run each as an independent group=1 conv, concat on channel axis
-        if c % groups or m % groups or c2 != c // groups:
-            raise ValueError(
-                f"Conv group mismatch: C={c}, M={m}, kernel C'={c2}, groups={groups}"
-            )
-        g_attrs = dict(attrs, group=1)
-        cs, ms = c // groups, m // groups
-        parts = [
-            _conv2d(
-                x[:, g * cs : (g + 1) * cs],
-                w[g * ms : (g + 1) * ms],
-                b[g * ms : (g + 1) * ms] if b is not None else None,
-                # fresh cache per call: the kernel SLICES are temporaries,
-                # and the spectra cache keys on id() — a recycled id from
-                # a freed temp would alias a wrong spectrum
-                g_attrs, {},
-            )
-            for g in range(groups)
-        ]
-        return np.concatenate(parts, axis=1)
-    if c != c2:
-        raise ValueError(f"Conv channel mismatch: input {c}, kernel {c2}")
-    xp = np.pad(
-        x.astype(np.float64), ((0, 0), (0, 0), (pads[0], pads[2]), (pads[1], pads[3]))
-    )
-    wk = w.astype(np.float64)
-    if kh * kw * m > 256:
-        # FFT cross-correlation: one forward transform per (batch, channel),
-        # one inverse per output channel — O(M·HW·logHW) instead of the
-        # sliding-window O(M·HW·kh·kw). float64 FFT rounding (~1e-9
-        # relative) is far inside the tiny zoo's saturating-logit margins.
-        # Kernel spectra are cached per FFT shape (weights are per-session
-        # constants; crop batches repeat a handful of padded shapes).
-        hp, wp = xp.shape[2], xp.shape[3]
-        fh, fw = _next_fast_len(hp + kh - 1), _next_fast_len(wp + kw - 1)
-        ck = (id(w), fh, fw)
-        fk = fft_cache.get(ck)
-        if fk is None:
-            fk = np.fft.rfft2(wk[:, :, ::-1, ::-1], (fh, fw))  # (M, C, fh, fw')
-            while len(fft_cache) >= _FFT_CACHE_MAX:
-                fft_cache.pop(next(iter(fft_cache)))  # FIFO eviction
-            fft_cache[ck] = fk
-        fx = np.fft.rfft2(xp, (fh, fw))  # (N, C, fh, fw')
-        spec = np.einsum("ncyx,mcyx->nmyx", fx, fk)  # channel contraction
-        full = np.fft.irfft2(spec, (fh, fw))  # (N, M, fh, fw)
-        out = full[:, :, kh - 1 : hp, kw - 1 : wp]
-        out = out[:, :, ::sh, ::sw]
-    else:
-        win = np.lib.stride_tricks.sliding_window_view(xp, (kh, kw), axis=(2, 3))
-        win = win[:, :, ::sh, ::sw]  # (N, C, H', W', kh, kw)
-        out = np.einsum("nchwyx,mcyx->nmhw", win, wk)
-    if b is not None:
-        out = out + b.astype(np.float64)[None, :, None, None]
+    xp = np.asarray(x, dtype=np.float64)
+    if any(pads):
+        xp = np.pad(xp, ((0, 0), (0, 0), (pads[0], pads[2]), (pads[1], pads[3])))
+    cg = plans[0].c
+    if xp.shape[1] != cg * len(plans):
+        raise ValueError(
+            f"Conv channel mismatch: input {xp.shape[1]}, kernel {cg} x {len(plans)} groups"
+        )
+    # grouped / depthwise conv (what a MobileNet-style export emits): each
+    # group's input channels against its own planned slice of the bank
+    parts = [_conv_group(xp[:, g * cg : (g + 1) * cg], p, sh, sw) for g, p in enumerate(plans)]
+    out = parts[0] if len(parts) == 1 else np.concatenate(parts, axis=1)
+    if b is not None:  # in place: every path above returns a fresh array
+        out += np.asarray(b, dtype=np.float64)[None, :, None, None]
     return out
 
 
@@ -243,12 +282,14 @@ class NumpySession:
                 f"NumpySession does not implement multi-output nodes: "
                 f"{multi[0]['op_type']} node with outputs {multi[0]['outputs']}"
             )
-        # kernel spectra keyed (weights id, fft shape). BOUNDED at
-        # _FFT_CACHE_MAX: sessions live for the worker process
-        # (resolve_model singleton), and on heterogeneous page sizes every
-        # distinct padded shape would otherwise pin a multi-MB complex
-        # spectrum forever (recompute cost on eviction is one rfft2)
-        self._fft_cache: dict = {}
+        # each Conv whose weight is an initializer is planned once, here;
+        # a computed (or fed) weight is planned per run and never kept
+        inits = self.model["initializers"]
+        self._conv_plans = {
+            i: _plan_conv(inits[n["inputs"][1]], n["attrs"].get("group", 1))
+            for i, n in enumerate(self.model["nodes"])
+            if n["op_type"] == "Conv" and n["inputs"][1] in inits
+        }
 
     def get_inputs(self):  # minimal parity with InferenceSession
         class _Info:
@@ -261,15 +302,15 @@ class NumpySession:
         values: dict[str, np.ndarray] = dict(self.model["initializers"])
         for k, v in feed.items():
             values[k] = np.asarray(v)
-        for node in self.model["nodes"]:
+        for idx, node in enumerate(self.model["nodes"]):
             # optional inputs arrive as empty names (the Resize roi slot)
             ins = [values[i] if i else None for i in node["inputs"]]
             op = node["op_type"]
             if op == "Conv":
-                out = _conv2d(
-                    ins[0], ins[1], ins[2] if len(ins) > 2 else None,
-                    node["attrs"], self._fft_cache,
-                )
+                plans = self._conv_plans.get(idx) if node["inputs"][1] not in feed else None
+                if plans is None:
+                    plans = _plan_conv(ins[1], node["attrs"].get("group", 1))
+                out = _conv2d(ins[0], plans, ins[2] if len(ins) > 2 else None, node["attrs"])
             elif op == "Sigmoid":
                 out = 1.0 / (1.0 + np.exp(-ins[0].astype(np.float64)))
             elif op == "Sub":

@@ -19,7 +19,7 @@ from doctr_spark.plans.hub import (
 )
 from doctr_spark.plans.tiny_crnn import CRNN_WEIGHTS_PATH
 from doctr_spark.plans.tiny_dbnet import DBNET_WEIGHTS_PATH
-from doctr_spark.plans.onnx_export import ONNX_RECO_PATH
+from doctr_spark.plans.onnx_export import ONNX_DET_PATH, ONNX_RECO_PATH
 from doctr_spark.sources.font import DEFAULT_SCALE, render_page
 
 
@@ -69,6 +69,26 @@ def test_from_hub_onnx_format_repo(tmp_path):
     _, x0, y0, x1, y1 = placed[0]
     crop = img[max(0, y0 - 5) : y1 + 5, max(0, x0 - 5) : x1 + 5]
     assert rec([crop], DEFAULT_SCALE)[0][0] == "HELLO"
+
+
+def test_from_hub_onnx_key_follows_config(tmp_path):
+    """Re-saving an onnx repo with another vocab or postproc in its
+    config.json gives another model key, so a worker never serves the
+    model built from the old config."""
+    keys = []
+    for task, path, extra in (
+        ("recognition", ONNX_RECO_PATH, {"vocab": "AB"}),
+        ("detection", ONNX_DET_PATH, {"postproc": {"bin_thresh": 0.5}}),
+    ):
+        repo = save_model_for_hub(path, str(tmp_path / task), arch="onnx", task=task, fmt="onnx")
+        keys.append(from_hub(repo)[0])
+        cfg_path = os.path.join(repo, "config.json")
+        with open(cfg_path) as fh:
+            cfg = json.load(fh)
+        with open(cfg_path, "w") as fh:
+            json.dump(dict(cfg, **extra), fh)
+        keys.append(from_hub(repo)[0])
+    assert len(set(keys)) == 4
 
 
 def test_hub_validation_errors(tmp_path):

@@ -132,16 +132,87 @@ def test_extract_turns_onnx_models_equality(spark):
     assert n_exact == n_total
 
 
-def test_numpy_executor_fft_cache_is_bounded():
-    """Heterogeneous input shapes must not grow the kernel-spectrum cache
-    without bound (sessions live for the worker process lifetime)."""
-    from doctr_spark.plans.onnx_exec import _FFT_CACHE_MAX, NumpySession
+def test_numpy_executor_plans_each_conv_once():
+    """A session plans every Conv node once, at load; runs on 13 input
+    shapes neither add nor replace a plan (sessions live for the worker
+    process lifetime, so a per-shape cache would grow with the pages)."""
+    from doctr_spark.plans.onnx_exec import NumpySession
 
-    sess = NumpySession(ONNX_RECO_PATH)
-    for i in range(_FFT_CACHE_MAX + 5):
-        x = np.ones((1, 1, 30 + i, 40 + 2 * i), dtype=np.float32)
-        sess.run(None, {"input": x})
-    assert len(sess._fft_cache) <= _FFT_CACHE_MAX
+    for path in (ONNX_DET_PATH, ONNX_RECO_PATH):
+        sess = NumpySession(path)
+        n_conv = sum(n["op_type"] == "Conv" for n in sess.model["nodes"])
+        plans = dict(sess._conv_plans)
+        assert len(plans) == n_conv
+        for i in range(13):
+            x = np.ones((1, 1, 30 + i, 40 + 2 * i), dtype=np.float32)
+            sess.run(None, {"input": x})
+        assert sess._conv_plans.keys() == plans.keys()
+        assert all(sess._conv_plans[k] is v for k, v in plans.items())
+
+
+def test_computed_conv_weight_is_never_served_stale(tmp_path):
+    """A Conv weight computed at run time (here base * s) is planned per
+    run: each run sees its own weight, never a plan or spectrum left over
+    from an earlier run's tensor."""
+    from doctr_spark.plans.onnx_exec import NumpySession
+
+    blob = encode_model(
+        "computed_w",
+        [encode_node("Mul", ["base", "s"], ["w"]),
+         encode_node("Conv", ["x", "w"], ["y"], pads=[8, 8, 8, 8])],
+        {"base": np.ones((1, 1, 17, 17), np.float32)},
+        inputs={"x": [1, 1, 17, 17], "s": [1]},
+        outputs={"y": [1, 1, 17, 17]},
+    )
+    p = tmp_path / "computed_w.onnx"
+    p.write_bytes(blob)
+    sess = NumpySession(str(p))
+    x = np.zeros((1, 1, 17, 17), np.float32)
+    x[0, 0, 8, 8] = 1.0
+    centers = [
+        float(sess.run(None, {"x": x, "s": np.array([s], np.float32)})[0][0, 0, 8, 8])
+        for s in (1, 2, 3, 4)
+    ]
+    assert centers == [1.0, 2.0, 3.0, 4.0]
+
+
+def test_onnx_loaders_key_their_config_and_share_one_session(monkeypatch):
+    """Loaders over one .onnx file that differ in postproc, target_hw,
+    input_name or vocab resolve to models of their own, and share one
+    executor session per worker (each Conv is planned once per file)."""
+    import sys
+
+    from doctr_spark.plans import onnx_exec
+    from doctr_spark.plans.models import clear_model_cache, resolve_model
+
+    opened = []
+
+    class CountingSession(onnx_exec.NumpySession):
+        def __init__(self, model_path):
+            opened.append(model_path)
+            super().__init__(model_path)
+
+    monkeypatch.setitem(sys.modules, "onnxruntime", None)  # the numpy executor
+    monkeypatch.setattr(onnx_exec, "NumpySession", CountingSession)
+    clear_model_cache()
+    det_db = resolve_model(*onnx_detector(ONNX_DET_PATH))
+    det_ink = resolve_model(*onnx_detector(ONNX_DET_PATH, postproc=INK_MODEL_POSTPROC))
+    assert det_db is not det_ink
+    keys = {
+        onnx_detector(ONNX_DET_PATH)[0],
+        onnx_detector(ONNX_DET_PATH, postproc=INK_MODEL_POSTPROC)[0],
+        onnx_detector(ONNX_DET_PATH, target_hw=(720, 1280))[0],
+        onnx_detector(ONNX_DET_PATH, input_name="x")[0],
+        onnx_recognizer(ONNX_RECO_PATH)[0],
+        onnx_recognizer(ONNX_RECO_PATH, vocab="AB")[0],
+        onnx_recognizer(ONNX_RECO_PATH, input_name="x")[0],
+    }
+    assert len(keys) == 7
+    rec = resolve_model(*onnx_recognizer(ONNX_RECO_PATH))
+    rec_ab = resolve_model(*onnx_recognizer(ONNX_RECO_PATH, vocab="AB"))
+    assert rec is not rec_ab
+    assert opened == [ONNX_DET_PATH, ONNX_RECO_PATH]
+    clear_model_cache()
 
 
 def test_decode_model_rejects_garbage():
