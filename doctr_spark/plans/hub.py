@@ -9,6 +9,11 @@ A hub repo is a directory with:
   <weights>     — the committed-format checkpoint (npz tensors or a real
                   serialized .onnx ModelProto)
 
+An onnx repo's config.json may also carry the loader options of
+``onnx_detector`` / ``onnx_recognizer``: "input_name" (both tasks),
+"postproc" and "target_hw" (the fixed [H, W] input canvas of a graph
+such as the FPN) for detection, "vocab" for recognition.
+
 ``from_hub`` resolves the repo in order: a local directory path, the
 standard HF cache layout (``~/.cache/huggingface/hub/models--ORG--NAME/
 snapshots/<rev>/``), then — only when the huggingface_hub package is
@@ -120,12 +125,19 @@ def from_hub(repo_id: str, cache_dir: str | None = None) -> ModelLoader:
     if fmt == "onnx":
         from .models import onnx_detector, onnx_recognizer
 
+        input_name = cfg.get("input_name", "input")
         if task == "detection":
             from ..operators.detection import INK_MODEL_POSTPROC
 
-            key, loader = onnx_detector(weights, postproc=dict(cfg.get("postproc") or INK_MODEL_POSTPROC))
+            hw = cfg.get("target_hw")
+            key, loader = onnx_detector(
+                weights,
+                input_name=input_name,
+                postproc=dict(cfg.get("postproc") or INK_MODEL_POSTPROC),
+                target_hw=tuple(hw) if hw else None,
+            )
         else:
-            key, loader = onnx_recognizer(weights, vocab=cfg.get("vocab"))
+            key, loader = onnx_recognizer(weights, vocab=cfg.get("vocab"), input_name=input_name)
         return f"hub:{repo_id}:{key}", loader
     factory = _register_archs()[(task, arch)]
     key, loader = factory(weights_path=weights)

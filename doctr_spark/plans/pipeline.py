@@ -7,6 +7,13 @@ in-process (decode -> detect -> crop -> recognize(CTC) -> build -> render,
 or DOM-strip for HTML, or identity for plain text) -> window-ordered
 output.
 
+Per turn the stage runs one straight path (``_extract_batch``): parse the
+tool envelope and route by payload kind (``_route_turn``; the OCR chain is
+bound to its models and flags once per batch) inside ONE quarantine, so
+under ``error_policy='capture'`` any failure, a malformed envelope
+included, becomes a payload_kind='error' row; then ``_turn_row`` builds
+the output row from the route result.
+
 Fusing the det/reco/build stages into a single UDF is the deliberate
 scale choice: page images dwarf the text they produce, so they must never
 cross a shuffle boundary — only (conv_id, turn_idx, extracted_text, words,
@@ -23,6 +30,8 @@ turn_idx) hash for pathological file layouts (few huge row groups).
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
+from operator import itemgetter
 
 import numpy as np
 import pandas as pd
@@ -104,10 +113,9 @@ def extract_turn_ocr(
     model-agnostic seam matching reference detection/zoo.py:59-71 /
     recognition/zoo.py:41-52 custom-model injection.
     """
-    pages, scale = decode_page_bundle(bundle)
     return extract_pages_ocr(
-        pages, scale, detect_orientation, detection_hooks, detector, recognizer, orienter,
-        straighten_pages=straighten_pages, kie=kie,
+        *decode_page_bundle(bundle), detect_orientation, detection_hooks, detector,
+        recognizer, orienter, straighten_pages=straighten_pages, kie=kie,
     )
 
 
@@ -257,67 +265,37 @@ def _extract_batch(
     straighten_pages: bool = False,
     kie: bool = False,
 ) -> pd.DataFrame:
+    # bound per batch, not at import, so a wrapped extract_pages_ocr counts
+    ocr = partial(
+        extract_pages_ocr, detect_orientation=detect_orientation, detector=detector,
+        recognizer=recognizer, orienter=orienter, straighten_pages=straighten_pages, kie=kie,
+    )
     out_rows = []
     for conv_id, turn_idx, role, text, tool, ts in zip(
         pdf["conv_id"], pdf["turn_idx"], pdf["role"], pdf["text"], pdf["tool"], pdf["ts"]
     ):
-        payload = parse_tool_envelope(tool) if tool else None
-        words: list[dict] = []
-        artefacts: list[dict] = []
         error = None
-        predictions: dict[str, list[dict]] = {}
-        kie_text = ""
-        n_pages, n_boxes, n_artefacts, min_conf, strip_ratio = 0, 0, 0, 1.0, 1.0
         try:
-            kind, extracted = _route_turn(
-                payload, text, detect_orientation, detector, recognizer, orienter,
-                straighten_pages=straighten_pages, kie=kie,
-            )
+            payload = parse_tool_envelope(tool) if tool else None
+            kind, out = _route_turn(payload, text, ocr)
         except Exception as exc:  # noqa: BLE001 — per-turn quarantine
-            # a corrupt payload must not kill a 10^12-turn job: quarantine
-            # the row (kind='error', empty text, bounded message) so the
-            # sidecar metrics surface the failure rate and a re-run can
-            # filter to the quarantined keys. error_policy='raise' keeps
-            # strict tests/debug semantics.
+            # a malformed envelope or corrupt payload must not kill a
+            # 10^12-turn job: the row becomes kind='error' with a bounded
+            # message; error_policy='raise' keeps strict semantics
             if error_policy != "capture":
                 raise
-            kind, extracted = "error", ""
-            error = f"{type(exc).__name__}: {exc}"[:500]
-            words, artefacts = [], []
-            n_pages = n_boxes = n_artefacts = 0
-            min_conf, strip_ratio = 0.0, 1.0
-        else:
-            if kind == "ocr":
-                if kie:
-                    (
-                        extracted, n_pages, n_boxes, n_artefacts, min_conf,
-                        words, artefacts, predictions, kie_text,
-                    ) = extracted
-                else:
-                    extracted, n_pages, n_boxes, n_artefacts, min_conf, words, artefacts = extracted
-            elif kind == "html":
-                strip_ratio = (len(extracted) / len(text)) if len(text) else 1.0
-        out_rows.append(
-            _turn_row(
-                conv_id, turn_idx, role, ts, kind, extracted, n_pages, n_boxes,
-                n_artefacts, strip_ratio, min_conf, words, artefacts, error,
-                predictions=predictions if kie else None,
-                kie_text=kie_text if kie else None,
-            )
-        )
+            kind, out, error = "error", "", f"{type(exc).__name__}: {exc}"[:500]
+        out_rows.append(_turn_row(conv_id, turn_idx, role, ts, kind, out, text, error, kie))
     columns = _ROW_COLUMNS + ["predictions", "kie_text"] if kie else _ROW_COLUMNS
     return pd.DataFrame(out_rows, columns=columns)
 
 
-def _route_turn(payload, text, detect_orientation, detector, recognizer, orienter=None, straighten_pages=False, kie=False):
-    """Dispatch one turn by payload kind; returns (kind, result) where the
-    'ocr' result is the extract tuple and html/plain results are text."""
+def _route_turn(payload, text, ocr):
+    """Dispatch one turn by payload kind; returns (kind, out) where the
+    'ocr' out is the ``extract_pages_ocr`` tuple and html/plain outs are
+    text. ``ocr`` is the chain bound to the batch's models and flags."""
     if payload is not None and payload[0] == "page_bundle":
-        return "ocr", extract_turn_ocr(
-            payload[1], detect_orientation,
-            detector=detector, recognizer=recognizer, orienter=orienter,
-            straighten_pages=straighten_pages, kie=kie,
-        )
+        return "ocr", ocr(*decode_page_bundle(payload[1]))
     if payload is not None and payload[0] in ("pdf", "image"):
         # real-world payloads: rasterize/decode (env-gated libs), fold
         # to grayscale, then the same OCR chain
@@ -327,16 +305,7 @@ def _route_turn(payload, text, detect_orientation, detector, recognizer, oriente
         raw_pages = (
             read_pdf_pages(payload[1]) if payload[0] == "pdf" else [read_image(payload[1])]
         )
-        return "ocr", extract_pages_ocr(
-            [to_grayscale(p) for p in raw_pages],
-            DEFAULT_SCALE,
-            detect_orientation,
-            detector=detector,
-            recognizer=recognizer,
-            orienter=orienter,
-            straighten_pages=straighten_pages,
-            kie=kie,
-        )
+        return "ocr", ocr([to_grayscale(p) for p in raw_pages], DEFAULT_SCALE)
     if text and looks_like_html(text):
         return "html", extract_main_text(text)
     return "plain", text or ""
@@ -347,13 +316,22 @@ _ROW_COLUMNS = [
     "n_pages", "n_boxes", "n_artefacts", "n_chars", "strip_ratio", "min_conf",
     "words", "artefacts", "error",
 ]
+# the struct fields of the words / artefacts / predictions columns, in
+# schema order
+_BOX_FIELDS = ("confidence", "xmin", "ymin", "xmax", "ymax", "page_idx")
+_word_fields = itemgetter("value", *_BOX_FIELDS, "line_idx", "word_idx")
+_artefact_fields = itemgetter("type", *_BOX_FIELDS)
+_prediction_fields = itemgetter("value", *_BOX_FIELDS)
 
 
-def _turn_row(
-    conv_id, turn_idx, role, ts, kind, extracted, n_pages, n_boxes,
-    n_artefacts, strip_ratio, min_conf, words, artefacts, error,
-    predictions=None, kie_text=None,
-):
+def _turn_row(conv_id, turn_idx, role, ts, kind, out, text, error, kie):
+    """The output row of one turn: an 'ocr' out is the ``extract_pages_ocr``
+    tuple; any other out is the text (``min_conf`` 0.0 on an error row)."""
+    if kind == "ocr":
+        extracted, n_pages, n_boxes, n_artefacts, min_conf, words, artefacts, *kie_out = out
+    else:
+        extracted, n_pages, n_boxes, n_artefacts, words, artefacts = out, 0, 0, 0, (), ()
+        min_conf, kie_out = (0.0 if kind == "error" else 1.0), ({}, "")
     row = {
         "conv_id": conv_id,
         "turn_idx": turn_idx,
@@ -365,36 +343,18 @@ def _turn_row(
         "n_boxes": n_boxes,
         "n_artefacts": n_artefacts,
         "n_chars": len(extracted),
-        "strip_ratio": float(strip_ratio),
+        "strip_ratio": len(extracted) / len(text) if kind == "html" else 1.0,
         "min_conf": float(min_conf),
-        "words": [
-            (
-                w["value"], w["confidence"], w["xmin"], w["ymin"], w["xmax"],
-                w["ymax"], w.get("page_idx", 0), w["line_idx"], w["word_idx"],
-            )
-            for w in words
-        ],
-        "artefacts": [
-            (
-                a["type"], a["confidence"], a["xmin"], a["ymin"],
-                a["xmax"], a["ymax"], a["page_idx"],
-            )
-            for a in artefacts
-        ],
+        "words": [_word_fields(w) for w in words],
+        "artefacts": [_artefact_fields(a) for a in artefacts],
         "error": error,
     }
-    if predictions is not None or kie_text is not None:
+    if kie:
+        predictions, kie_text = kie_out
         row["predictions"] = {
-            cls: [
-                (
-                    p["value"], p["confidence"], p["xmin"], p["ymin"],
-                    p["xmax"], p["ymax"], p["page_idx"],
-                )
-                for p in preds
-            ]
-            for cls, preds in (predictions or {}).items()
+            cls: [_prediction_fields(p) for p in preds] for cls, preds in predictions.items()
         }
-        row["kie_text"] = kie_text or ""
+        row["kie_text"] = kie_text
     return row
 
 
@@ -421,10 +381,10 @@ def extract_turns(
     Python worker process — real NN weights load per executor core, not per
     task or batch (SURVEY.md §4.4 lifecycle) — and the resolved model
     serves every subsequent batch that worker handles.
-    ``error_policy``: 'capture' (default) quarantines per-turn decode/OCR
-    failures as payload_kind='error' rows with the message in the ``error``
-    column — one corrupt payload in 10^12 turns must not fail the job;
-    'raise' propagates (strict/debug).
+    ``error_policy``: 'capture' (default) quarantines per-turn envelope,
+    decode and OCR failures as payload_kind='error' rows with the message
+    in the ``error`` column — one corrupt payload in 10^12 turns must not
+    fail the job; 'raise' propagates (strict/debug).
     ``straighten_pages``: estimate each page's float skew angle from its
     merged line geometry and re-run detection on the de-skewed page
     (reference predictor straighten_pages path; see extract_pages_ocr).

@@ -8,12 +8,13 @@ onnxruntime/torch required, the forwards are plain numpy:
 
 - detector ``tiny-conv-det-v1``: a 2-layer convolutional net.
   Layer 1 is a 1x1 conv + sigmoid (ink activation); layer 2 convolves a
-  (8s+1, 6s+1) fusion kernel (FFT convolution — one real conv, not a
-  morphology shortcut) and squashes through a gained sigmoid into the
-  text-probability map. The map then goes through the SAME DB-style
-  postprocessor every detector family uses (binarize -> 3x3 open ->
-  components -> score -> unclip), mirroring how a real DBNet head would
-  plug in (reference differentiable_binarization/base.py:41-152).
+  (8s+1, 6s+1) fusion kernel (one real conv, not a morphology shortcut;
+  planned once at load, like every npz forward's conv: planned_conv_same)
+  and squashes through a gained sigmoid into the text-probability map.
+  The map then goes through the SAME DB-style postprocessor every
+  detector family uses (binarize -> 3x3 open -> components -> score ->
+  unclip), mirroring how a real DBNet head would plug in (reference
+  differentiable_binarization/base.py:41-152).
 - recognizer ``tiny-crnn-v1``: matched-filter CRNN — one conv filter per
   vocab glyph (weights +1 on template ink, -1 off), per-channel bias
   -(n_ink - 0.5) so a filter fires above the blank channel iff its
@@ -33,9 +34,12 @@ checkpoint gets (SURVEY.md §4.4).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 
 from .models import ModelLoader, models_data, npz_detector, npz_recognizer, sigmoid
+from .onnx_exec import _conv2d, _plan_conv
 
 WEIGHTS_PATH = models_data("tiny_conv_v1.npz")
 
@@ -72,17 +76,21 @@ def make_tiny_weights() -> dict[str, np.ndarray]:
     }
 
 
-def conv2d_same(x: np.ndarray, kernel: np.ndarray) -> np.ndarray:
-    """'same' 2D convolution (zero-padded, centered odd kernel) via FFT —
-    the standard dense conv forward for page-sized inputs."""
-    kh, kw = kernel.shape
-    H, W = x.shape
-    fh, fw = H + kh - 1, W + kw - 1
-    full = np.fft.irfft2(
-        np.fft.rfft2(x, (fh, fw)) * np.fft.rfft2(kernel.astype(np.float64), (fh, fw)),
-        (fh, fw),
-    )
-    return full[kh // 2 : kh // 2 + H, kw // 2 : kw // 2 + W]
+def planned_conv_same(kernel: np.ndarray) -> Callable[[np.ndarray], np.ndarray]:
+    """'same' 2D convolution by a fixed kernel (zero padded, centered at
+    (kh // 2, kw // 2)), planned once: the returned map -> map function runs
+    the ONNX executor's row-factored conv (``onnx_exec._plan_conv``) over
+    the flipped kernel, so an asymmetric kernel keeps true-convolution
+    semantics."""
+    k = np.asarray(kernel, dtype=np.float64)[::-1, ::-1]
+    kh, kw = k.shape
+    plans = _plan_conv(k[None, None], 1)
+    attrs = {"pads": [kh - 1 - kh // 2, kw - 1 - kw // 2, kh // 2, kw // 2]}
+
+    def conv(x: np.ndarray) -> np.ndarray:
+        return _conv2d(x[None, None], plans, None, attrs)[0, 0]
+
+    return conv
 
 
 def pool2(x: np.ndarray, f: int | tuple[int, int]) -> np.ndarray:
@@ -164,12 +172,12 @@ def tiny_conv_detector(weights_path: str | None = None) -> ModelLoader:
 
     def forward(w: dict[str, np.ndarray]):
         w1, b1 = float(w["det_w1"]), float(w["det_b1"])
-        k2 = w["det_k2"]
+        conv = planned_conv_same(w["det_k2"])
         gain, b2 = float(w["det_gain"]), float(w["det_b2"])
 
         def proba_map(gray: np.ndarray) -> np.ndarray:
             a1 = sigmoid(w1 * gray.astype(np.float64) + b1)  # ink activation
-            return sigmoid(gain * (conv2d_same(a1, k2) + b2))  # fused text map
+            return sigmoid(gain * (conv(a1) + b2))  # fused text map
 
         return proba_map
 

@@ -82,12 +82,13 @@ like a real fixed-resolution checkpoint expects its training alignment.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from functools import partial
 
 import numpy as np
 
 from .models import ModelLoader, models_data, npz_detector, sigmoid
-from .tiny_conv import conv2d_same, pool2, upsample
+from .tiny_conv import planned_conv_same, pool2, upsample
 
 DBNET_WEIGHTS_PATH = models_data("tiny_dbnet_v1.npz")
 
@@ -124,19 +125,30 @@ def make_tiny_dbnet_weights() -> dict[str, np.ndarray]:
     }
 
 
+def dbnet_laterals(w: dict[str, np.ndarray]) -> dict[str, Callable]:
+    """The three lateral convs, planned once from the weights."""
+    return {k: planned_conv_same(w[k]) for k in ("k_gate", "k_band", "k_bridge")}
+
+
 def dbnet_proba_map(
-    w: dict[str, np.ndarray], page: np.ndarray, scale: int, drop_level: int | None = None
+    w: dict[str, np.ndarray],
+    page: np.ndarray,
+    scale: int,
+    drop_level: int | None = None,
+    laterals: dict[str, Callable] | None = None,
 ) -> np.ndarray:
     """Backbone -> FPN laterals (top-down) -> upsample -> merge -> prob
     head. ``drop_level`` zeroes one pyramid level's lateral (the ablation
     hook; tests prove levels 1/2/3 are box-visible and level 0 carries
-    the sub-cell ink detail the pooled levels lose)."""
+    the sub-cell ink detail the pooled levels lose). ``laterals``: the
+    convs of ``dbnet_laterals(w)``, planned here when not given."""
     s = int(w["scale"])
     if scale != s:
         raise ValueError(f"{DBNET_KEY} weights are sized for render scale {s}, got {scale}")
     gray = page if page.ndim == 2 else page.mean(axis=-1)
     H, W = gray.shape
     g = float(w["lat_gain"])
+    conv = laterals or dbnet_laterals(w)
 
     # backbone: 4-stage feature hierarchy. Level 2 pools ROWS only (the
     # anisotropic stride text detectors use): vertical banding happens in
@@ -151,8 +163,8 @@ def dbnet_proba_map(
 
     # coarse laterals first (FPN runs top-down: the deeper levels are
     # computed, upsampled, and merged INTO the finer lateral's input)
-    l3 = sigmoid(g * (conv2d_same(c3, w["k_gate"]) - float(w["gate_t"])))
-    l2 = sigmoid(g * (conv2d_same(c2, w["k_band"]) - float(w["band_t"])))
+    l3 = sigmoid(g * (conv["k_gate"](c3) - float(w["gate_t"])))
+    l2 = sigmoid(g * (conv["k_band"](c2) - float(w["band_t"])))
     if drop_level == 2:
         l2 = np.zeros_like(l2)
     if drop_level == 3:
@@ -163,7 +175,7 @@ def dbnet_proba_map(
     # at the rows the band opened up
     m1 = np.maximum(c1, upsample(l2, (2, 1), c1.shape[0], c1.shape[1]))
     l0 = a0
-    l1 = sigmoid(g * (conv2d_same(m1, w["k_bridge"]) - float(w["bridge_t"])))
+    l1 = sigmoid(g * (conv["k_bridge"](m1) - float(w["bridge_t"])))
     if drop_level == 0:
         l0 = np.zeros_like(l0)
     if drop_level == 1:
@@ -190,5 +202,5 @@ def tiny_dbnet_detector(weights_path: str | None = None) -> ModelLoader:
         DBNET_KEY,
         DBNET_WEIGHTS_PATH,
         weights_path,
-        lambda w: partial(dbnet_proba_map, w, scale=int(w["scale"])),
+        lambda w: partial(dbnet_proba_map, w, scale=int(w["scale"]), laterals=dbnet_laterals(w)),
     )

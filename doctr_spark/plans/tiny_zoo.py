@@ -50,7 +50,7 @@ from __future__ import annotations
 import numpy as np
 
 from .models import ModelLoader, models_data, npz_detector, sigmoid
-from .tiny_conv import conv2d_same, pool2, upsample
+from .tiny_conv import planned_conv_same, pool2, upsample
 
 ZOO_WEIGHTS_PATH = models_data("tiny_zoo_v1.npz")
 
@@ -124,11 +124,11 @@ def tiny_fast_detector(weights_path: str | None = None) -> ModelLoader:
         gain = float(w["fast_gain"])
         # deploy-time reparameterization: branches fold ONCE at load
         kernel, bias = fast_fused_kernel(w)
-        k2d = kernel[0, 0]
+        conv = planned_conv_same(kernel[0, 0])
 
         def proba_map(gray: np.ndarray) -> np.ndarray:
             a1 = sigmoid(w1 * gray.astype(np.float64) + b1)  # stem ink activation
-            return sigmoid(gain * (conv2d_same(a1, k2d) + bias))  # ONE fused conv
+            return sigmoid(gain * (conv(a1) + bias))  # ONE fused conv
 
         return proba_map
 
@@ -142,14 +142,14 @@ def tiny_linknet_detector(weights_path: str | None = None) -> ModelLoader:
     def forward(w: dict[str, np.ndarray]):
         s = int(w["scale"])
         w1, b1 = float(w["stem_w1"]), float(w["stem_b1"])
-        dec_k = w["link_dec_k"]
+        dec_conv = planned_conv_same(w["link_dec_k"])
         dec_b, skip, gain = float(w["link_dec_b"]), float(w["link_skip"]), float(w["link_gain"])
 
         def proba_map(gray: np.ndarray) -> np.ndarray:
             a1 = sigmoid(w1 * gray.astype(np.float64) + b1)  # stem
             # encoder: s x s stride-s mean pool (zero-pad to cell multiple);
             # decoder: fusion conv on the 1/s^2-area feature map
-            y = conv2d_same(pool2(a1, s), dec_k) + dec_b
+            y = dec_conv(pool2(a1, s)) + dec_b
             # nearest upsample back to pixel space + additive stem skip
             return sigmoid(gain * (upsample(y, s, *gray.shape) + skip * a1))
 

@@ -39,7 +39,12 @@ def encode_page_bundle(pages: list[np.ndarray], scale: int) -> bytes:
 
 
 def decode_page_bundle(data: bytes) -> tuple[list[np.ndarray], int]:
-    """Bundle bytes -> (pages, scale)."""
+    """Bundle bytes -> (pages, scale).
+
+    Each page inflates to at most its declared h*w bytes, so a bundle whose
+    stream inflates past its header (a decompression bomb) is refused
+    without allocating the excess; a stream that ends short of h*w bytes,
+    or leaves input over, is refused too."""
     if data[:4] != MAGIC:
         raise ValueError("not a page bundle")
     version, n_pages, scale = struct.unpack(">BHB", data[4:8])
@@ -47,10 +52,15 @@ def decode_page_bundle(data: bytes) -> tuple[list[np.ndarray], int]:
         raise ValueError(f"unsupported bundle version {version}")
     off = 8
     pages = []
-    for _ in range(n_pages):
+    for i in range(n_pages):
         h, w, blob_len = struct.unpack(">HHI", data[off : off + 8])
         off += 8
-        raw = zlib.decompress(data[off : off + blob_len])
+        inflate = zlib.decompressobj()
+        # max_length=0 means no limit, so a 0-pixel page is capped at 1 byte;
+        # input cut off by the cap stays unread, so eof is False
+        raw = inflate.decompress(data[off : off + blob_len], max(h * w, 1))
+        if len(raw) != h * w or not inflate.eof or inflate.unused_data:
+            raise ValueError(f"page {i}: zlib stream does not inflate to exactly {h}x{w} bytes")
         off += blob_len
         pages.append(np.frombuffer(raw, dtype=np.uint8).reshape(h, w))
     return pages, scale

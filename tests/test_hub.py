@@ -91,6 +91,30 @@ def test_from_hub_onnx_key_follows_config(tmp_path):
     assert len(set(keys)) == 4
 
 
+
+def test_from_hub_onnx_detector_reads_target_hw(tmp_path):
+    """A fixed-input detection graph (the committed FPN .onnx, a 720x1280
+    canvas) is servable from the hub: ``target_hw`` in config.json reaches
+    the loader, so its boxes equal the directly built loader's."""
+    from doctr_spark.operators.detection import INK_MODEL_POSTPROC
+    from doctr_spark.plans.models import onnx_detector
+    from doctr_spark.plans.onnx_export import FPN_INPUT_HW, ONNX_FPN_PATH
+
+    repo = save_model_for_hub(
+        ONNX_FPN_PATH, str(tmp_path / "fpn"), arch="onnx", task="detection", fmt="onnx"
+    )
+    cfg_path = os.path.join(repo, "config.json")
+    with open(cfg_path) as fh:
+        cfg = json.load(fh)
+    with open(cfg_path, "w") as fh:
+        json.dump(dict(cfg, target_hw=list(FPN_INPUT_HW)), fh)
+    img, placed = render_page(["HELLO", "WORLD"], scale=DEFAULT_SCALE)
+    assert img.shape == (69, 640)
+    boxes = from_hub(repo)[1]()(img, DEFAULT_SCALE)
+    direct = onnx_detector(ONNX_FPN_PATH, postproc=INK_MODEL_POSTPROC, target_hw=FPN_INPUT_HW)[1]()
+    assert len(boxes) == len(placed)
+    assert np.array_equal(boxes, direct(img, DEFAULT_SCALE))
+
 def test_hub_validation_errors(tmp_path):
     with pytest.raises(ValueError, match="task must be one of"):
         save_model_for_hub(DBNET_WEIGHTS_PATH, str(tmp_path / "x"), arch="tiny_dbnet_fpn", task="segmentation")

@@ -27,6 +27,41 @@ def test_bundle_roundtrip():
     assert meta["dims"] == [(40, 60), (10, 20)]
 
 
+def _bundle(h: int, w: int, blob: bytes) -> bytes:
+    """A one-page bundle declaring an h x w page over the raw zlib ``blob``."""
+    import struct
+
+    from doctr_spark.sources.payloads import MAGIC, VERSION
+
+    return MAGIC + struct.pack(">BHB", VERSION, 1, 3) + struct.pack(">HHI", h, w, len(blob)) + blob
+
+
+def test_bundle_bomb_refused_without_inflating():
+    """A bundle that declares a 1x1 page over a stream inflating to 200 MB
+    is refused after inflating at most the declared bytes; streams that end
+    short of h*w or carry trailing input are refused as well."""
+    import tracemalloc
+    import zlib
+
+    comp = zlib.compressobj(9)
+    chunk = bytes(1 << 20)
+    bomb = b"".join(comp.compress(chunk) for _ in range(200)) + comp.flush()
+    assert len(bomb) < 256 << 10
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="1x1"):
+            decode_page_bundle(_bundle(1, 1, bomb))
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 16 << 20
+    page = zlib.compress(bytes(range(12)))
+    assert decode_page_bundle(_bundle(3, 4, page))[0][0].tobytes() == bytes(range(12))
+    for h, w, blob in [(4, 4, page), (3, 4, page + b"x"), (3, 4, page[:-2]), (0, 4, page)]:
+        with pytest.raises(ValueError, match="inflate"):
+            decode_page_bundle(_bundle(h, w, blob))
+
+
 def test_envelope_roundtrip():
     env = tool_envelope("page_bundle", b"\x00\x01binary")
     kind, payload = parse_tool_envelope(env)

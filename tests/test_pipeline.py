@@ -300,3 +300,40 @@ def test_kie_route_non_ocr_turns_empty_predictions(spark):
     assert r["extracted_text"] == "plain words here"
     assert dict(r["predictions"]) == {}
     assert r["kie_text"] == ""
+
+
+def test_malformed_envelopes_are_quarantined(spark):
+    """A tool value that parses as an envelope but whose ``b64`` does not
+    decode (bad base64 padding, a non-string value) becomes a
+    payload_kind='error' row with a bounded message: envelope parsing sits
+    inside the per-turn quarantine, so the task survives and the turns
+    around it extract exactly as they do alone. error_policy='raise' still
+    propagates."""
+    import json
+
+    good = make_transcripts(spark, 2, partitions=1, ocr_ratio=0.5, html_ratio=0.25).select(
+        "conv_id", "turn_idx", "role", "text", "tool", "ts"
+    )
+    bad = spark.createDataFrame(
+        [
+            ("conv-bad", i, "tool", "[attachment]", json.dumps({"kind": "page_bundle", "b64": b64}), None)
+            for i, b64 in enumerate(["abc", 5])
+        ],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+    alone = {(r["conv_id"], r["turn_idx"]): r.asDict(True) for r in extract_turns(good).collect()}
+    rows = extract_turns(good.unionByName(bad)).collect()
+    errs = sorted((r for r in rows if r["conv_id"] == "conv-bad"), key=lambda r: r["turn_idx"])
+    assert [(r["payload_kind"], r["error"].split(":")[0]) for r in errs] == [
+        ("error", "Error"),  # binascii.Error: Incorrect padding
+        ("error", "TypeError"),
+    ]
+    for r in errs:
+        assert 0 < len(r["error"]) <= 500
+        assert (r["extracted_text"], r["n_pages"], r["min_conf"], r["words"]) == ("", 0, 0.0, [])
+    rest = {(r["conv_id"], r["turn_idx"]): r.asDict(True) for r in rows if r not in errs}
+    assert rest == alone
+    assert {r["payload_kind"] for r in alone.values()} >= {"ocr", "plain"}
+
+    with pytest.raises(Exception, match="Incorrect padding"):
+        extract_turns(bad.limit(1), error_policy="raise").collect()

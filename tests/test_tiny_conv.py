@@ -104,3 +104,26 @@ def test_tiny_models_load_once_per_process(spark):
     assert a is b
     assert len(calls) == 1
     clear_model_cache()
+
+
+@pytest.mark.parametrize("shape", [(5, 3), (4, 7), (1, 6), (2, 2), (25, 19)])
+def test_planned_conv_same_is_a_true_convolution(shape):
+    """The npz forwards' planned 'same' conv convolves (flips the kernel):
+    a unit impulse reproduces the kernel itself around the impulse, and on
+    random input it equals the direct reference cross-correlation
+    (operators/reparam.conv2d_same) with the kernel flipped."""
+    from doctr_spark.operators.reparam import conv2d_same
+    from doctr_spark.plans.tiny_conv import planned_conv_same
+
+    rng = np.random.default_rng(sum(shape))
+    k = rng.normal(size=shape)
+    conv = planned_conv_same(k)
+    kh, kw = shape
+    impulse = np.zeros((40, 40))
+    impulse[20, 20] = 1.0
+    got = conv(impulse)[20 - kh // 2 : 20 - kh // 2 + kh, 20 - kw // 2 : 20 - kw // 2 + kw]
+    assert np.allclose(got, k, rtol=0, atol=1e-12)
+    x = rng.normal(size=(23, 31))
+    ref = conv2d_same(x[None, None], k[::-1, ::-1][None, None])[0, 0]
+    assert conv(x).shape == x.shape
+    assert np.allclose(conv(x), ref, rtol=0, atol=1e-9)
