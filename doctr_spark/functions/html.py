@@ -5,17 +5,19 @@ result (doctr/io/html.py:11-26); the direct DOM path here applies standard
 main-content heuristics (strip script/style/nav/header/footer/aside/
 template/noscript/iframe/form + comments) on top of docTR's render join
 semantics: block elements separate text with "\\n\\n", <br>/<li> with
-"\\n", inline flow joins with " " (functions/render.py invariants).
+"\\n", inline flow joins with " " — the joins are
+``functions/render.py:render_page`` itself.
 
-Pure stdlib (html.parser) so it vectorizes cleanly over Arrow batches in
+Parsing is stdlib (html.parser), so it runs cleanly over Arrow batches in
 the extraction UDF.
 """
 
 from __future__ import annotations
 
 import re
-from html import unescape
 from html.parser import HTMLParser
+
+from .render import render_page
 
 # containers whose entire subtree is boilerplate
 STRIP_TAGS = frozenset(
@@ -87,24 +89,12 @@ def extract_main_text(html: str) -> str:
     joins: words " ", lines "\\n", paragraphs "\\n\\n"."""
     parser = _MainContentParser()
     try:
-        parser.feed(unescape_entities_safe(html))
+        parser.feed(html)
         parser.close()
     except Exception:
         # malformed HTML: fall back to tag-stripped flat text
         return _WS.sub(" ", re.sub(r"<[^>]+>", " ", html)).strip()
-    paras_txt = []
-    for para in parser.paras:
-        lines = [" ".join(line) for line in para if line]
-        if lines:
-            paras_txt.append("\n".join(lines))
-    return "\n\n".join(paras_txt)
-
-
-def unescape_entities_safe(html: str) -> str:
-    # convert_charrefs already decodes entities in data; comments are
-    # dropped by HTMLParser (handle_comment unimplemented). Nothing extra
-    # needed, but keep the hook for CDATA normalization.
-    return html
+    return render_page([[line for line in para if line] for para in parser.paras if any(para)])
 
 
 def looks_like_html(text: str) -> bool:

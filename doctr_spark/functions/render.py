@@ -8,8 +8,9 @@ Invariants (reference: doctr/io/elements.py:96,174,237,283,617):
     page.render()  == "\\n\\n".join(blocks)
     doc.render()   == "\\n\\n\\n\\n".join(pages)
 
-The SQL-side twins (``line_render_expr`` etc.) let the DuckDB oracle verify
-the same joins with ordered ``string_agg``.
+``document_render_agg`` is the Spark twin of ``render_document`` (an
+order-stable join inside ``groupBy.agg``); the DuckDB oracles verify the
+same joins with ordered ``string_agg``.
 """
 
 from __future__ import annotations
@@ -39,25 +40,9 @@ def render_document(pages: list[str]) -> str:
     return PAGE_SEP.join(pages)
 
 
-def _ordered_join(value_col: str, order_col: str, sep: str) -> Column:
-    """Order-stable aggregation join: collect (order, value) structs, sort by
-    the struct (order first), then join values. Used inside groupBy.agg."""
-    pairs = F.array_sort(F.collect_list(F.struct(F.col(order_col).alias("o"), F.col(value_col).alias("v"))))
-    return F.array_join(F.transform(pairs, lambda s: s["v"]), sep)
-
-
-def line_render_agg(word_col: str = "word", order_col: str = "word_idx") -> Column:
-    """groupBy(line) agg column: words joined by ' ' in reading order."""
-    return _ordered_join(word_col, order_col, WORD_SEP)
-
-
-def block_render_agg(line_col: str = "line_text", order_col: str = "line_idx") -> Column:
-    return _ordered_join(line_col, order_col, LINE_SEP)
-
-
-def page_render_agg(block_col: str = "block_text", order_col: str = "block_idx") -> Column:
-    return _ordered_join(block_col, order_col, BLOCK_SEP)
-
-
 def document_render_agg(page_col: str = "page_text", order_col: str = "page_idx") -> Column:
-    return _ordered_join(page_col, order_col, PAGE_SEP)
+    """Order-stable aggregation join of pages by the page separator: collect
+    (order, value) structs, sort by the struct (order first), then join
+    values. Used inside groupBy.agg."""
+    pairs = F.array_sort(F.collect_list(F.struct(F.col(order_col).alias("o"), F.col(page_col).alias("v"))))
+    return F.array_join(F.transform(pairs, lambda s: s["v"]), PAGE_SEP)

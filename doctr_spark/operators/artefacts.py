@@ -26,6 +26,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from ..sources.font import ink_mask
+
 
 def _mean_run(ink: np.ndarray, axis: int) -> float:
     """Mean ink run length along an axis: total ink / number of runs."""
@@ -49,7 +51,7 @@ def classify_artefact(crop: np.ndarray) -> tuple[str, float]:
     perturb the features (runs are measured on ink only). Confidence is
     the winning rule's evidence ratio, rounded to 6 places
     (engine-portable like every other metric the pipeline emits)."""
-    ink = (crop < 128) if crop.ndim == 2 else (crop.mean(axis=-1) < 128)
+    ink = ink_mask(crop)
     h, w = ink.shape
     if h == 0 or w == 0 or not ink.any():
         return ("block", 0.0)

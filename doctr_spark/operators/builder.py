@@ -133,9 +133,7 @@ class BuiltPage:
     """Flat, Arrow-friendly page structure (words carry line/block ids)."""
 
     text: str
-    words: list[dict] = field(default_factory=list)  # value, conf, box, line_idx, block_idx
-    lines: list[dict] = field(default_factory=list)  # text, bbox(4), block_idx
-    n_words: int = 0
+    words: list[dict] = field(default_factory=list)  # value, conf, box, line_idx, word_idx, block_idx
 
 
 def build_page(
@@ -157,7 +155,7 @@ def build_page(
     if b.shape[0] != len(values):
         raise ValueError(f"boxes/values length mismatch: {b.shape[0]} vs {len(values)}")
     if b.shape[0] == 0:
-        return BuiltPage(text="", words=[], lines=[], n_words=0)
+        return BuiltPage(text="")
     if scores is None:
         scores = np.ones(b.shape[0], dtype=np.float64)
 
@@ -168,7 +166,6 @@ def build_page(
         block_groups = [line_groups]
 
     words_out: list[dict] = []
-    lines_out: list[dict] = []
     block_texts: list[list[list[str]]] = []
     line_idx = 0
     for block_idx, block in enumerate(block_groups):
@@ -176,18 +173,6 @@ def build_page(
         for group in block:
             texts = [values[i] for i in group]
             line_texts.append(texts)
-            bbox = resolve_enclosing_bbox(b[group])
-            lines_out.append(
-                {
-                    "line_idx": line_idx,
-                    "text": " ".join(texts),
-                    "xmin": float(bbox[0]),
-                    "ymin": float(bbox[1]),
-                    "xmax": float(bbox[2]),
-                    "ymax": float(bbox[3]),
-                    "block_idx": block_idx,
-                }
-            )
             for pos, i in enumerate(group):
                 words_out.append(
                     {
@@ -205,8 +190,7 @@ def build_page(
             line_idx += 1
         block_texts.append(line_texts)
 
-    page_text = render_page(block_texts)
-    return BuiltPage(text=page_text, words=words_out, lines=lines_out, n_words=len(words_out))
+    return BuiltPage(text=render_page(block_texts), words=words_out)
 
 
 def line_rbboxes(quads: np.ndarray) -> list[tuple[list[list[int]], np.ndarray]]:

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from ..sources.font import ink_mask
+
 BIN_THRESH = 0.3
 BOX_THRESH = 0.1
 # ink-fuse dilation radii in CELLS (word-gap bridge / line-band expansion).
@@ -276,12 +278,19 @@ def postprocess_proba_map(
 
 # ----------------------------------------------- deterministic "model"
 
+# the ink-fuse model's two proba levels (on fused ink / elsewhere)
+INK_LEVEL, BG_LEVEL = 0.98, 0.02
+# postprocessor config for the ink-fuse model family: the deterministic
+# model does not shrink text regions the way DB training targets do, so its
+# unclip ratio is small (just enough to add a safety margin to crops).
+INK_MODEL_POSTPROC = {"bin_thresh": BIN_THRESH, "box_thresh": BOX_THRESH, "unclip_ratio": 0.2}
+
 
 def ink_proba_map(
     img: np.ndarray,
     scale: int,
-    ink_level: float = 0.98,
-    bg_level: float = 0.02,
+    ink_level: float = INK_LEVEL,
+    bg_level: float = BG_LEVEL,
 ) -> np.ndarray:
     """Deterministic stand-in for the DBNet forward pass on raster-font
     pages: ink mask (dark pixels on a white page) dilated vertically by 4s
@@ -289,38 +298,28 @@ def ink_proba_map(
     blank glyph edge columns per side => worst inter-glyph ink gap 6s; word
     gap 7s; line leading 9s) this provably fuses every glyph pair of a word
     into one 8-connected blob while keeping words and lines separate."""
-    gray = img if img.ndim == 2 else img.mean(axis=-1)
-    ink = (gray < 128).astype(np.uint8)
+    ink = ink_mask(img).astype(np.uint8)
     fused = dilate_horizontal(
         dilate_vertical(ink, V_DILATE_CELLS * scale), H_DILATE_CELLS * scale
     )
     return np.where(fused > 0, ink_level, bg_level).astype(np.float64)
 
 
-# postprocessor config for the ink-fuse model family: the deterministic
-# model does not shrink text regions the way DB training targets do, so its
-# unclip ratio is small (just enough to add a safety margin to crops).
-INK_MODEL_POSTPROC = {"bin_thresh": BIN_THRESH, "box_thresh": BOX_THRESH, "unclip_ratio": 0.2}
-
-
 def ink_word_boxes(
     img: np.ndarray,
     scale: int,
     box_thresh: float = BOX_THRESH,
-    unclip_ratio: float = 0.2,
-    ink_level: float = 0.98,
-    bg_level: float = 0.02,
+    unclip_ratio: float = INK_MODEL_POSTPROC["unclip_ratio"],
+    ink_level: float = INK_LEVEL,
+    bg_level: float = BG_LEVEL,
 ) -> np.ndarray:
     """Fused fast path of ink_proba_map + postprocess_proba_map: identical
     boxes/scores, but all-integer masks (no float64 HxW map). Binarizing the
     two-level proba at bin_thresh reproduces the fused mask exactly, so the
     pipeline skips straight from masks to components."""
-    gray = img if img.ndim == 2 else img.mean(axis=-1)
-    ink = (gray < 128).astype(np.uint8)
+    ink = ink_mask(img).astype(np.uint8)
     if scale > 1:
-        cells = _ink_cells_if_aligned(
-            ink, scale, h_dilate=H_DILATE_CELLS, v_dilate=V_DILATE_CELLS
-        )
+        cells = _ink_cells_if_aligned(ink, scale)
         if cells is not None:
             # cell-space fast path: the renderer places ink on an s-aligned
             # cell grid, so s x s pooling is lossless and dilation by
@@ -365,7 +364,7 @@ def ink_word_boxes(
 
 
 def _ink_cells_if_aligned(
-    ink: np.ndarray, s: int, h_dilate: int = 3, v_dilate: int = 4
+    ink: np.ndarray, s: int, h_dilate: int = H_DILATE_CELLS, v_dilate: int = V_DILATE_CELLS
 ) -> np.ndarray | None:
     """Cell-space (H/s, W/s) 0/1 downsampling of an ink mask, or None when
     the mask is not exactly s-aligned (any partially-inked cell, or ink in

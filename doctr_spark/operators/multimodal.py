@@ -16,6 +16,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..sources.font import ink_mask
 from ..sources.payloads import bundle_meta, decode_page_bundle
 
 BUNDLE_META_SCHEMA = "id long, n_pages int, scale int, heights array<int>, widths array<int>, n_bytes long"
@@ -64,7 +65,7 @@ def page_pixel_stats(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
                             "page_idx": p_idx,
                             "height": img.shape[0],
                             "width": img.shape[1],
-                            "ink_ratio": float((img < 128).mean()),
+                            "ink_ratio": float(ink_mask(img).mean()),
                             "mean_intensity": float(img.mean()),
                         }
                     )

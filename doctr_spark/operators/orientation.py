@@ -21,7 +21,7 @@ from __future__ import annotations
 import numpy as np
 
 from ..functions.vocabs import UNKNOWN_CHAR
-from ..sources.font import read_word_crop
+from ..sources.font import ink_mask, read_word_crop
 from .detection import ink_word_boxes
 from .geometry import extract_crops
 
@@ -135,8 +135,7 @@ def estimate_skew_angle(
     from .detection import connected_components, dilate_horizontal, dilate_vertical
     from .geometry import min_area_rect
 
-    gray = img if img.ndim == 2 else img.mean(axis=-1)
-    ink = (gray < 128).astype(np.uint8)
+    ink = ink_mask(img).astype(np.uint8)
     kx = max(1, img.shape[1] // 100)
     ky = max(1, img.shape[0] // 100)
     mask = dilate_vertical(dilate_horizontal(ink, kx), ky)

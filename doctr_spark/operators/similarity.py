@@ -1,8 +1,8 @@
 """Similarity search over embedding columns (array<float>).
 
 - brute-force cosine top-k: broadcast the (small) query set against the
-  corpus; dot products with built-in zip_with/aggregate (JVM-side, no
-  Python), top-k via window. The baseline and the verify stage.
+  corpus; pairs scored by the Arrow-batched ``cosine_pandas_col``, top-k
+  via window. The baseline and the verify stage.
 - LSH-bucketed ANN: deterministic random-hyperplane signatures; candidates
   share a bucket in at least one table. The 100 TB path: buckets shard the
   corpus so each query probes a small fraction.
@@ -19,27 +19,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _cosine(a, b):
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
-    nb = F.sqrt(F.aggregate(F.transform(b, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
-    return dot / (na * nb)
-
-
-def cosine_similarity_col(a, b, decimals: int = 6):
-    """Cosine similarity between two array<numeric> columns via built-in
-    higher-order functions (JVM-side, SQL-expressible — the semantic twin of
-    the DuckDB oracle). Interpreted lambda evaluation costs ~50µs/row, so
-    the operators below score with :func:`cosine_pandas_col` instead."""
-    ad = F.transform(a, lambda x: x.cast("double"))
-    bd = F.transform(b, lambda x: x.cast("double"))
-    return F.round(_cosine(ad, bd), decimals)
-
-
 def cosine_pandas_col(a, b, decimals: int = 6):
     """Arrow-batched pairwise cosine: one vectorized numpy pass per record
-    batch (~1000x the HOF throughput; float64 math, identical round-6
-    results). The hot-path scorer for every similarity operator."""
+    batch (float64 math, rounded to ``decimals``). The scorer of every
+    similarity operator."""
 
     @F.pandas_udf("double")
     def cos(sa: pd.Series, sb: pd.Series) -> pd.Series:
@@ -120,23 +103,6 @@ def _resolve_planes(n_planes, corpus: DataFrame, target_bucket_rows: int, n_rows
         n_rows, p, n_rows / float(1 << p), target_bucket_rows,
     )
     return p
-
-
-def lsh_signature_col(vec_col, planes: np.ndarray):
-    """Bucket id = sign-bit signature against fixed hyperplanes, as an
-    Arrow-batched pandas UDF: one (batch x dim) @ (dim x planes) matmul per
-    batch — far cheaper than per-plane codegen expressions (a deliberate
-    use of the vectorized-UDF escape hatch for dense linear algebra)."""
-    planes_t = planes.T.copy()  # (dim, n_planes)
-    weights = (1 << np.arange(planes.shape[0])).astype(np.int64)
-
-    @F.pandas_udf("long")
-    def sig(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy())  # (batch, dim) float32
-        bits = mat.astype(np.float64) @ planes_t >= 0  # (batch, n_planes)
-        return pd.Series(bits @ weights)
-
-    return sig(vec_col)
 
 
 def lsh_multi_signature_col(vec_col, planes_stack: np.ndarray, multiprobe: int = 0):

@@ -14,6 +14,10 @@ under ``error_policy='capture'`` any failure, a malformed envelope
 included, becomes a payload_kind='error' row; then ``_turn_row`` builds
 the output row from the route result.
 
+What counts as ink is one rule, ``sources/font.py``'s ``ink_mask`` and
+``ink_bounds``: the artefact gate here, the detectors, the recognizers and
+the orientation classifiers all call it, so they agree on every page.
+
 Fusing the det/reco/build stages into a single UDF is the deliberate
 scale choice: page images dwarf the text they produce, so they must never
 cross a shuffle boundary — only (conv_id, turn_idx, extracted_text, words,
@@ -39,8 +43,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.html import extract_main_text, looks_like_html
+from ..functions.render import PAGE_SEP, document_render_agg
 from ..operators.builder import build_page
 from ..operators.geometry import extract_crops
+from ..sources.font import DEFAULT_SCALE, ink_bounds, ink_mask
 from ..sources.payloads import decode_page_bundle, parse_tool_envelope
 from .models import (
     DEFAULT_DETECTOR,
@@ -81,8 +87,6 @@ EXTRACT_KIE_SCHEMA = EXTRACT_SCHEMA + (
 # plugin, contrib/artefacts.py).
 ARTEFACT_FILL_THRESH = 0.475
 ARTEFACT_MIN_AREA_CELLS = 100
-
-PAGE_SEP = "\n\n\n\n"
 
 
 def extract_turn_ocr(
@@ -191,16 +195,11 @@ def extract_pages_ocr(
         for i, c in enumerate(crops):
             if c.size == 0:
                 continue
-            c_ink = c < 128
-            # trim extents via axis any()+argmax (no index-array allocation
-            # over the crop — this check runs once per detected region and
-            # showed up in the extraction profile via np.nonzero)
-            rows_any = c_ink.any(axis=1)
-            if rows_any.any():
-                cols_any = c_ink.any(axis=0)
-                th = len(rows_any) - int(rows_any.argmax()) - int(rows_any[::-1].argmax())
-                tw = len(cols_any) - int(cols_any.argmax()) - int(cols_any[::-1].argmax())
-                area = th * tw
+            c_ink = ink_mask(c)
+            bounds = ink_bounds(c_ink)
+            if bounds is not None:
+                y0, y1, x0, x1 = bounds
+                area = (y1 - y0) * (x1 - x0)
                 fill = float(c_ink.sum()) / area
                 big = area > ARTEFACT_MIN_AREA_CELLS * scale * scale
             else:
@@ -299,7 +298,6 @@ def _route_turn(payload, text, ocr):
     if payload is not None and payload[0] in ("pdf", "image"):
         # real-world payloads: rasterize/decode (env-gated libs), fold
         # to grayscale, then the same OCR chain
-        from ..sources.font import DEFAULT_SCALE
         from ..sources.payloads import read_image, read_pdf_pages, to_grayscale
 
         raw_pages = (
@@ -427,13 +425,10 @@ def ordered_turns(extracted: DataFrame) -> DataFrame:
 def conversation_documents(extracted: DataFrame) -> DataFrame:
     """Collapse a conversation's turns into one document string (turns joined
     in turn_idx order by the page separator) + rollup metrics."""
-    pairs = F.array_sort(
-        F.collect_list(F.struct(F.col("turn_idx").alias("o"), F.col("extracted_text").alias("v")))
-    )
     return (
         extracted.groupBy("conv_id")
         .agg(
-            F.array_join(F.transform(pairs, lambda s: s["v"]), PAGE_SEP).alias("document_text"),
+            document_render_agg("extracted_text", "turn_idx").alias("document_text"),
             F.count("*").alias("n_turns"),
             F.sum("n_boxes").alias("n_boxes"),
             F.sum("n_chars").alias("n_chars"),

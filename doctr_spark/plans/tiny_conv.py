@@ -38,6 +38,7 @@ from collections.abc import Callable
 
 import numpy as np
 
+from ..sources.font import ink_bounds, ink_mask
 from .models import ModelLoader, models_data, npz_detector, npz_recognizer, sigmoid
 from .onnx_exec import _conv2d, _plan_conv
 
@@ -121,13 +122,12 @@ def crop_cells(crop: np.ndarray, scale: int) -> np.ndarray | None:
     resize-to-32px preprocessing). None when the crop holds no ink."""
     if crop.size == 0:
         return None
-    ink = (crop < 128) if crop.ndim == 2 else (crop.mean(axis=-1) < 128)
-    ys, xs = np.nonzero(ink)
-    if ys.size == 0:
+    ink = ink_mask(crop)
+    bounds = ink_bounds(ink)
+    if bounds is None:
         return None
-    return np.ascontiguousarray(
-        ink[ys.min() : ys.max() + 1 : scale, xs.min() : xs.max() + 1 : scale]
-    ).astype(np.float64)
+    y0, y1, x0, x1 = bounds
+    return np.ascontiguousarray(ink[y0:y1:scale, x0:x1:scale]).astype(np.float64)
 
 
 def glyph_evidence(cells: np.ndarray, filters: np.ndarray, bias: np.ndarray) -> np.ndarray:

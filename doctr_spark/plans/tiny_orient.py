@@ -47,6 +47,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from ..sources.font import ink_bounds, ink_mask
 from .models import ModelLoader, models_data, npz_loader
 
 ORIENT_WEIGHTS_PATH = models_data("tiny_orient_v1.npz")
@@ -104,13 +105,12 @@ def page_cells(img: np.ndarray, scale: int) -> np.ndarray | None:
     keeps the grid uniform but can shift its phase (page width need not be
     a multiple of scale), so the offset is recovered per axis from the ink
     bounding box minimum. None when the page holds no ink."""
-    ink = (img < 128) if img.ndim == 2 else (img.mean(axis=-1) < 128)
-    ys, xs = np.nonzero(ink)
-    if ys.size == 0:
+    ink = ink_mask(img)
+    bounds = ink_bounds(ink)
+    if bounds is None:
         return None
-    oy = int(ys.min()) % scale
-    ox = int(xs.min()) % scale
-    return ink[oy::scale, ox::scale].astype(np.float64)
+    y0, _, x0, _ = bounds
+    return ink[y0 % scale :: scale, x0 % scale :: scale].astype(np.float64)
 
 
 def make_tiny_orient_weights(scale: int = 3) -> dict[str, np.ndarray]:

@@ -9,19 +9,27 @@ the synthetic transcript corpus, and the glyph tables double as the
 Layout contract (all in font pixels, x the rendering scale ``s``):
 - glyph box 5x7 cells, char gap 2s, word gap 7s, line pitch 16s (7s glyph +
   9s leading), page margin 8s, page width 640 by default.
-- The detection model family for these pages ("ink-fuse"): proba map =
-  0.98 on the ink mask dilated vertically by 4s and horizontally by s,
-  0.02 elsewhere; postprocessor config bin=0.3, box=0.1, unclip_ratio=0.2.
+- The detection model family for these pages ("ink-fuse",
+  operators/detection.py): proba map = INK_LEVEL (0.98) on the ink mask
+  dilated vertically by 4s and horizontally by 3s, BG_LEVEL (0.02)
+  elsewhere; postprocessor config INK_MODEL_POSTPROC (bin=0.3, box=0.1,
+  unclip_ratio=0.2).
   With this geometry every adjacent glyph pair of a word bridges into one
   connected component, words/lines never merge, and unclipped crop margins
   never reach neighboring ink (see tests/test_font_reco.py).
+
+The ink rule lives here and only here: ``ink_mask`` (a pixel is ink when
+its grayscale mean is below 128) and ``ink_bounds`` (the trim to the ink
+extent). The artefact gate, the detectors, the recognizers, the
+orientation classifiers and the page statistics all call these two, so
+they cannot disagree on what ink a page holds.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from ..functions.vocabs import FONT
+from ..functions.vocabs import FONT, UNKNOWN_CHAR
 
 # 7 rows x 5 cols, '#' = ink
 _G = {
@@ -97,12 +105,34 @@ def glyph_bitmap(ch: str) -> np.ndarray:
     return np.array([[1 if c == "#" else 0 for c in row] for row in rows], dtype=np.uint8)
 
 
+def ink_mask(img: np.ndarray) -> np.ndarray:
+    """Boolean ink mask of a page or crop: dark (below 128) on the white
+    page; an (H, W, C) image is folded to its channel mean first."""
+    return (img if img.ndim == 2 else img.mean(axis=-1)) < 128
+
+
+def ink_bounds(ink: np.ndarray) -> tuple[int, int, int, int] | None:
+    """``(y0, y1, x0, x1)`` of the ink extent of a 2-D mask, ends exclusive;
+    None when the mask holds no ink. Axis any() + argmax allocates no index
+    array over the mask (this runs once per crop in the recognizer's hot
+    loop)."""
+    rows = ink.any(axis=1)
+    if not rows.any():
+        return None
+    cols = ink.any(axis=0)
+    return (
+        int(rows.argmax()), len(rows) - int(rows[::-1].argmax()),
+        int(cols.argmax()), len(cols) - int(cols[::-1].argmax()),
+    )
+
+
 def _trim(bm: np.ndarray) -> np.ndarray:
     """Crop a bitmap to its ink bounding box (empty -> (0,0))."""
-    ys, xs = np.nonzero(bm)
-    if ys.size == 0:
+    bounds = ink_bounds(bm)
+    if bounds is None:
         return np.zeros((0, 0), dtype=np.uint8)
-    return bm[ys.min() : ys.max() + 1, xs.min() : xs.max() + 1]
+    y0, y1, x0, x1 = bounds
+    return bm[y0:y1, x0:x1]
 
 
 def build_glyph_lut() -> dict[bytes, str]:
@@ -199,7 +229,7 @@ def _lut() -> dict[bytes, str]:
     return _LUT
 
 
-def read_word_crop(crop: np.ndarray, scale: int, unknown: str = "■") -> str:
+def read_word_crop(crop: np.ndarray, scale: int, unknown: str = UNKNOWN_CHAR) -> str:
     """Decode one word crop: trim white margins, downsample the whole word
     to CELL space once (the trim anchors the cell grid — every rendered
     ink pixel sits on it), then segment at blank cell runs >= 2 (glyph
@@ -213,17 +243,11 @@ def read_word_crop(crop: np.ndarray, scale: int, unknown: str = "■") -> str:
     """
     if crop.size == 0:
         return ""
-    ink = (crop < 128) if crop.ndim == 2 else (crop.mean(axis=-1) < 128)
-    # trim via axis any()+argmax instead of nonzero(): no index-array
-    # allocation over the crop (this is the recognizer's hot loop)
-    rows_any = ink.any(axis=1)
-    if not rows_any.any():
+    ink = ink_mask(crop)
+    bounds = ink_bounds(ink)
+    if bounds is None:
         return ""
-    cols_any = ink.any(axis=0)
-    y0 = int(rows_any.argmax())
-    y1 = len(rows_any) - int(rows_any[::-1].argmax())
-    x0 = int(cols_any.argmax())
-    x1 = len(cols_any) - int(cols_any[::-1].argmax())
+    y0, y1, x0, x1 = bounds
     ink = ink[y0:y1, x0:x1]
     h, w = ink.shape
     if scale > 1 and (h % scale or w % scale):
@@ -248,11 +272,7 @@ def read_word_crop(crop: np.ndarray, scale: int, unknown: str = "■") -> str:
     lut = _lut()
     chars = []
     for s0, s1 in zip(starts.tolist(), ends.tolist()):
-        glyph = cells[:, s0:s1]
-        rows = glyph.any(axis=1)
-        y0 = int(rows.argmax())
-        y1 = len(rows) - int(rows[::-1].argmax())
-        chars.append(lut.get(_pattern_key(glyph[y0:y1]), unknown))
+        chars.append(lut.get(_pattern_key(_trim(cells[:, s0:s1])), unknown))
     word = "".join(chars)
     if len(_WORD_MEMO) < 65536:
         _WORD_MEMO[memo_key] = word

@@ -18,11 +18,16 @@ import base64
 import json
 import struct
 import zlib
+from collections.abc import Iterator
 
 import numpy as np
 
 MAGIC = b"DSPG"  # doctr-spark page bundle
 VERSION = 1
+# most pixels one bundle may declare, summed over its pages: 2^24 is ~160
+# rendered 640-wide pages; a header declaring more is refused before any
+# page inflates
+MAX_BUNDLE_PIXELS = 1 << 24
 
 
 def encode_page_bundle(pages: list[np.ndarray], scale: int) -> bytes:
@@ -38,45 +43,60 @@ def encode_page_bundle(pages: list[np.ndarray], scale: int) -> bytes:
     return b"".join(parts)
 
 
+def _bundle_header(data: bytes) -> tuple[int, int, int]:
+    """(version, n_pages, scale) of a bundle."""
+    if data[:4] != MAGIC:
+        raise ValueError("not a page bundle")
+    return struct.unpack(">BHB", data[4:8])
+
+
+def _page_headers(data: bytes, n_pages: int) -> Iterator[tuple[int, int, int, int]]:
+    """(h, w, offset, blob_len) of each page in turn, read from the page
+    headers alone: no pixel is inflated. A cut-off header raises
+    ``struct.error`` when it is reached."""
+    off = 8
+    for _ in range(n_pages):
+        h, w, blob_len = struct.unpack(">HHI", data[off : off + 8])
+        yield h, w, off + 8, blob_len
+        off += 8 + blob_len
+
+
 def decode_page_bundle(data: bytes) -> tuple[list[np.ndarray], int]:
     """Bundle bytes -> (pages, scale).
 
-    Each page inflates to at most its declared h*w bytes, so a bundle whose
-    stream inflates past its header (a decompression bomb) is refused
-    without allocating the excess; a stream that ends short of h*w bytes,
-    or leaves input over, is refused too."""
-    if data[:4] != MAGIC:
-        raise ValueError("not a page bundle")
-    version, n_pages, scale = struct.unpack(">BHB", data[4:8])
+    A bundle whose headers declare more than MAX_BUNDLE_PIXELS pixels in
+    total is refused before any page inflates. Each page then inflates to
+    at most its declared h*w bytes, so a stream that inflates past its
+    header (a decompression bomb) is refused without allocating the
+    excess; a stream that ends short of h*w bytes, or leaves input over,
+    is refused too."""
+    version, n_pages, scale = _bundle_header(data)
     if version != VERSION:
         raise ValueError(f"unsupported bundle version {version}")
-    off = 8
+    n_pixels = 0
+    try:
+        for h, w, _, _ in _page_headers(data, n_pages):
+            n_pixels += h * w
+    except struct.error:
+        pass  # a cut-off header is reported below, after the pages before it
+    if n_pixels > MAX_BUNDLE_PIXELS:
+        raise ValueError(f"bundle declares {n_pixels} pixels, over the {MAX_BUNDLE_PIXELS} cap")
     pages = []
-    for i in range(n_pages):
-        h, w, blob_len = struct.unpack(">HHI", data[off : off + 8])
-        off += 8
+    for i, (h, w, off, blob_len) in enumerate(_page_headers(data, n_pages)):
         inflate = zlib.decompressobj()
         # max_length=0 means no limit, so a 0-pixel page is capped at 1 byte;
         # input cut off by the cap stays unread, so eof is False
         raw = inflate.decompress(data[off : off + blob_len], max(h * w, 1))
         if len(raw) != h * w or not inflate.eof or inflate.unused_data:
             raise ValueError(f"page {i}: zlib stream does not inflate to exactly {h}x{w} bytes")
-        off += blob_len
         pages.append(np.frombuffer(raw, dtype=np.uint8).reshape(h, w))
     return pages, scale
 
 
 def bundle_meta(data: bytes) -> dict:
     """Cheap metadata peek without decompressing pixels."""
-    if data[:4] != MAGIC:
-        raise ValueError("not a page bundle")
-    version, n_pages, scale = struct.unpack(">BHB", data[4:8])
-    off = 8
-    dims = []
-    for _ in range(n_pages):
-        h, w, blob_len = struct.unpack(">HHI", data[off : off + 8])
-        dims.append((h, w))
-        off += 8 + blob_len
+    version, n_pages, scale = _bundle_header(data)
+    dims = [(h, w) for h, w, _, _ in _page_headers(data, n_pages)]
     return {"version": version, "n_pages": n_pages, "scale": scale, "dims": dims, "n_bytes": len(data)}
 
 

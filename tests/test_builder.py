@@ -135,7 +135,7 @@ def test_build_page_render():
     )
     page = build_page(boxes, ["hello", "world", "below"])
     assert page.text == "hello world\nbelow"
-    assert page.n_words == 3
+    assert len(page.words) == 3
     assert page.words[0]["value"] == "hello"
     assert page.words[0]["line_idx"] == 0
     assert page.words[2]["line_idx"] == 1
@@ -144,7 +144,7 @@ def test_build_page_render():
 def test_build_page_empty():
     page = build_page(np.zeros((0, 4)), [])
     assert page.text == ""
-    assert page.n_words == 0
+    assert len(page.words) == 0
 
 
 def test_resolve_blocks_groups_far_lines():

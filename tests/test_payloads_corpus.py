@@ -62,6 +62,38 @@ def test_bundle_bomb_refused_without_inflating():
             decode_page_bundle(_bundle(h, w, blob))
 
 
+def test_header_declared_bomb_refused_before_inflating():
+    """A 62 KB bundle that honestly declares one 8000x8000 page of zeros is
+    refused from its header alone; the cap counts the pixels of all pages,
+    and a bundle declaring exactly the cap reaches the per-page inflate."""
+    import struct
+    import tracemalloc
+    import zlib
+
+    from doctr_spark.sources.payloads import MAGIC, MAX_BUNDLE_PIXELS, VERSION
+
+    comp = zlib.compressobj(9)
+    row_block = bytes(8000 * 1000)
+    zeros = b"".join(comp.compress(row_block) for _ in range(8)) + comp.flush()
+    assert len(zeros) < 64 << 10
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="cap"):
+            decode_page_bundle(_bundle(8000, 8000, zeros))
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 16 << 20
+
+    page = zlib.compress(b"")
+    half = MAX_BUNDLE_PIXELS // 2 // 4096 + 1  # two pages of 4096 x half pass the cap together
+    two = MAGIC + struct.pack(">BHB", VERSION, 2, 3) + 2 * (struct.pack(">HHI", 4096, half, len(page)) + page)
+    with pytest.raises(ValueError, match="cap"):
+        decode_page_bundle(two)
+    with pytest.raises(ValueError, match="inflate"):
+        decode_page_bundle(_bundle(4096, MAX_BUNDLE_PIXELS // 4096, page))
+
+
 def test_envelope_roundtrip():
     env = tool_envelope("page_bundle", b"\x00\x01binary")
     kind, payload = parse_tool_envelope(env)

@@ -92,6 +92,52 @@ def test_html_strip_never_crashes_and_is_idempotent_on_plain(s):
         assert out == " ".join(s.split())
 
 
+# ------------------------------------------------------- the one ink rule
+
+
+def _mask(h, w, kind, seed):
+    rng = np.random.default_rng(seed)
+    if kind == "full":
+        return np.ones((h, w), bool)
+    m = np.zeros((h, w), bool)
+    if kind == "single" and h and w:
+        m[rng.integers(h), rng.integers(w)] = True
+    elif kind == "ragged":
+        m = rng.random((h, w)) < rng.random()
+    return m
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    h=st.integers(0, 12), w=st.integers(0, 12),
+    kind=st.sampled_from(["empty", "single", "full", "ragged"]), seed=st.integers(0, 2**32 - 1),
+)
+@example(h=0, w=0, kind="empty", seed=0)
+@example(h=1, w=1, kind="full", seed=0)
+@example(h=7, w=1, kind="single", seed=3)
+def test_ink_bounds_equals_nonzero_extent(h, w, kind, seed):
+    """ink_bounds is the nonzero min/max+1 extent of the mask, or None when
+    it holds no ink."""
+    m = _mask(h, w, kind, seed)
+    ys, xs = np.nonzero(m)
+    ref = None if ys.size == 0 else (ys.min(), ys.max() + 1, xs.min(), xs.max() + 1)
+    assert font.ink_bounds(m) == ref
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    h=st.integers(0, 9), w=st.integers(0, 9), c=st.sampled_from([0, 1, 3, 4]),
+    seed=st.integers(0, 2**32 - 1),
+)
+def test_ink_mask_is_gray_mean_below_128(h, w, c, seed):
+    """ink_mask folds a channel axis by its mean, then tests < 128; a 2-D
+    image (c = 0) is tested as is."""
+    img = np.random.default_rng(seed).integers(0, 256, (h, w, c) if c else (h, w), dtype=np.uint8)
+    ref = (img.mean(-1) if c else img) < 128
+    got = font.ink_mask(img)
+    assert got.dtype == bool and got.shape == ref.shape and (got == ref).all()
+
+
 # ------------------------------------------------------- ONNX proto codec
 
 
