@@ -72,12 +72,14 @@ def resolve_lines(boxes: np.ndarray, paragraph_break: float = PARAGRAPH_BREAK) -
     idxs, b = sort_boxes(boxes)
     y_med = np.median(b[:, 3] - b[:, 1])
 
+    y_centers = ((b[:, 1] + b[:, 3]) / 2).tolist()
+
     lines: list[list[int]] = []
     current: list[int] = [int(idxs[0])]
-    y_center_sum = float(b[idxs[0], [1, 3]].mean())
+    y_center_sum = y_centers[idxs[0]]
     for raw_idx in idxs[1:]:
         idx = int(raw_idx)
-        y_center = float(b[idx, [1, 3]].mean())
+        y_center = y_centers[idx]
         if abs(y_center - y_center_sum / len(current)) >= y_med / 2:
             lines.extend(resolve_sub_lines(b, current, paragraph_break))
             current = []

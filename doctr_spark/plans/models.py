@@ -75,10 +75,7 @@ def _load_ink_detector() -> Callable:
     unit-test models."""
     from ..operators.detection import ink_word_boxes
 
-    def detect(page: np.ndarray, scale: int) -> np.ndarray:
-        return ink_word_boxes(page, scale)
-
-    return detect
+    return ink_word_boxes
 
 
 def _ctc_decode(indices: list[int]) -> tuple[str, float]:
@@ -152,10 +149,7 @@ def _load_glyph_orientation() -> Callable:
     uprights the page)."""
     from ..operators.orientation import estimate_page_orientation
 
-    def orient(page: np.ndarray, scale: int) -> int:
-        return estimate_page_orientation(page, scale)
-
-    return orient
+    return estimate_page_orientation
 
 
 DEFAULT_DETECTOR: ModelLoader = ("ink-fuse-default", _load_ink_detector)
@@ -186,6 +180,16 @@ def _onnx_session(model_path: str):
     return resolve_model(f"onnx-session:{model_path}", load)
 
 
+def onnx_loader(kind: str, model_path: str, make: Callable[..., Callable], **options) -> ModelLoader:
+    """(key, loader) over one ``.onnx`` file: the loader opens the file's
+    shared session (``_onnx_session``) and returns ``make(sess, **options)``.
+    The key names ``kind``, the path and every option ``make`` receives, so
+    loaders over one file that differ in any option resolve to models of
+    their own while sharing the session."""
+    opts = (f"{k}={sorted(v.items()) if isinstance(v, dict) else v!r}" for k, v in sorted(options.items()))
+    return f"onnx-{kind}:{model_path}:{':'.join(opts)}", lambda: make(_onnx_session(model_path), **options)
+
+
 def onnx_detector(
     model_path: str,
     input_name: str = "input",
@@ -200,20 +204,14 @@ def onnx_detector(
     boxes) — the exact composition the reference's DetectionPredictor runs
     (preprocess + model + DetectionPostProcessor). Uses onnxruntime when
     installed; otherwise the same .onnx file executes through the bundled
-    pure-numpy ONNX executor (plans/onnx_exec.py — a 20-op real-exporter
-    set: conv/pool/norm/resize/merge ops plus the classifier head and
-    the MobileNet elementwise activations), so the serialized-checkpoint
-    load path runs either way.
+    pure-numpy ONNX executor (plans/onnx_exec.py, whose op table lists the
+    real-exporter ops it runs), so the serialized-checkpoint load path runs
+    either way.
     """
     from ..operators.detection import DB_POSTPROC, postprocess_proba_map
     from ..operators.preprocess import remove_padding, resize_page
 
-    pp = dict(DB_POSTPROC if postproc is None else postproc)
-    key = f"onnx-det:{model_path}:{input_name}:{target_hw}:{sorted(pp.items())}"
-
-    def load():
-        sess = _onnx_session(model_path)
-
+    def make(sess, input_name: str, postproc: dict, target_hw: tuple[int, int] | None) -> Callable:
         def detect(page: np.ndarray, scale: int) -> np.ndarray:
             img, tf = (
                 resize_page(page, target_hw, preserve_aspect_ratio=True, symmetric_pad=True)
@@ -222,7 +220,7 @@ def onnx_detector(
             )
             x = (img.astype(np.float32) / 255.0)[None, None, :, :]  # NCHW gray
             proba = np.asarray(sess.run(None, {input_name: x})[0]).reshape(img.shape)
-            boxes = postprocess_proba_map(proba, **pp)
+            boxes = postprocess_proba_map(proba, **postproc)
             if target_hw is not None and len(boxes):
                 boxes = np.concatenate(
                     [remove_padding(boxes[:, :4], tf), boxes[:, 4:5]], axis=1
@@ -231,7 +229,8 @@ def onnx_detector(
 
         return detect
 
-    return key, load
+    pp = dict(DB_POSTPROC if postproc is None else postproc)
+    return onnx_loader("det", model_path, make, input_name=input_name, postproc=pp, target_hw=target_hw)
 
 
 def onnx_recognizer(model_path: str, vocab: str | None = None, input_name: str = "input") -> ModelLoader:
@@ -244,12 +243,7 @@ def onnx_recognizer(model_path: str, vocab: str | None = None, input_name: str =
     from ..functions.vocabs import FONT
     from ..operators.recognition import ctc_best_path
 
-    voc = FONT if vocab is None else vocab
-    key = f"onnx-reco:{model_path}:{input_name}:{voc}"
-
-    def load():
-        sess = _onnx_session(model_path)
-
+    def make(sess, input_name: str, vocab: str) -> Callable:
         def recognize(crops: list[np.ndarray], scale: int) -> list[tuple[str, float]]:
             if not crops:
                 return []
@@ -259,11 +253,11 @@ def onnx_recognizer(model_path: str, vocab: str | None = None, input_name: str =
             for i, c in enumerate(crops):
                 batch[i, 0, : c.shape[0], : c.shape[1]] = c.astype(np.float32) / 255.0
             logits = np.asarray(sess.run(None, {input_name: batch})[0])  # (N, T, V+1)
-            return ctc_best_path(logits, voc)  # batch decode in one pass
+            return ctc_best_path(logits, vocab)  # batch decode in one pass
 
         return recognize
 
-    return key, load
+    return onnx_loader("reco", model_path, make, input_name=input_name, vocab=FONT if vocab is None else vocab)
 
 
 # ------------------------------------------------- committed tiny models

@@ -9,48 +9,35 @@ exercised either way. The run() signature mirrors
 onnxruntime.InferenceSession.run so the factories need no branching beyond
 session construction.
 
-Ops follow the public ONNX operator spec (opset 13 semantics) — the set
-covers what torch.onnx emits for a DBNet-style FPN
-(reference models/detection/differentiable_binarization/pytorch.py:48-93:
-conv ladders -> Conv, inplace ReLUs -> Relu, BatchNorm2d eval stats ->
-BatchNormalization, downsample -> MaxPool, F.interpolate(size=...) ->
-Resize, ``+`` merges -> Add, torch.cat -> Concat):
+Ops follow the public ONNX operator spec (opset 13 semantics). The op set
+is one table, ``_OPS`` (op_type -> fn(inputs, attrs)), in this order:
 
-  Conv       — 2D, dilations=1; attrs: pads [hb, wb, he, we],
-               strides [sh, sw], group (grouped / depthwise); zero padding
-  Relu       — elementwise max(0, x)
-  MaxPool    — 2D; attrs: kernel_shape, strides (default = kernel),
-               pads (default 0), ceil_mode=0; -inf padding
-  BatchNormalization — eval mode: scale/B/mean/var inputs, attr epsilon
-  Resize     — mode='nearest', coordinate_transformation_mode=
-               'asymmetric', nearest_mode='floor' (the torch nearest
-               export); target from the ``sizes`` int64 input or the
-               ``scales`` float input
-  Add        — elementwise with numpy broadcasting
-  Concat     — attr: axis
-  Sigmoid    — elementwise logistic
+- what torch.onnx emits for a DBNet-style FPN's conv ladders, inplace
+  ReLUs, BatchNorm2d eval stats, downsampling, F.interpolate(size=...),
+  ``+`` merges and torch.cat (reference
+  models/detection/differentiable_binarization/pytorch.py:48-93): Conv
+  (2D, dilations=1; attrs pads [hb, wb, he, we], strides [sh, sw], group
+  for grouped / depthwise; zero padding), Relu, MaxPool (2D; attrs
+  kernel_shape, strides default = kernel, pads default 0, ceil_mode=0;
+  -inf padding), BatchNormalization (eval mode: scale/B/mean/var inputs,
+  attr epsilon), Resize (mode='nearest', coordinate_transformation_mode=
+  'asymmetric', nearest_mode='floor', the torch nearest export; target
+  from the ``sizes`` int64 or the ``scales`` float input), Add, Concat
+  (attr axis), Sigmoid;
+- a classifier head like the reference's MobileNetV3 orientation nets
+  (AdaptiveAvgPool2d -> GlobalAveragePool, Linear -> Gemm transB=1):
+  GlobalAveragePool (spatial mean, keepdims), Flatten (attr axis, default
+  1), Gemm (attrs alpha, beta, transA, transB; Y = aA'B' + bC), Softmax
+  (attr axis, default -1);
+- the elementwise set of a literal MobileNetV3 block (hardsigmoid /
+  hardswish and their Clip/Mul/Div decomposition on older exporters):
+  Mul, Div, Clip (min/max inputs, opset 11+, or attrs), HardSigmoid
+  (attrs alpha default 0.2, beta default 0.5), HardSwish (x *
+  hardsigmoid(x; 1/6, 1/2), opset 14);
+- the committed recognizer's column read-out: Sub, ReduceMax (attrs axes,
+  negatives allowed, keepdims default 1), Transpose (attr perm).
 
-and for a classifier head (what torch.onnx emits for conv-classifier
-models like the reference's MobileNetV3 orientation nets —
-AdaptiveAvgPool2d -> GlobalAveragePool, Linear -> Gemm transB=1):
-
-  GlobalAveragePool — spatial mean, keepdims
-  Flatten    — attr: axis (default 1)
-  Gemm       — attrs: alpha, beta, transA, transB; Y = aA'B' + bC
-  Softmax    — attr: axis (default -1)
-
-plus the elementwise set a literal MobileNetV3 block exports
-(hardsigmoid/hardswish activations and their Clip/Mul/Div decomposition
-on older exporter versions):
-
-  Mul, Div   — elementwise with numpy broadcasting
-  Clip       — min/max inputs (opset 11+) or attrs
-  HardSigmoid — attrs alpha (default 0.2), beta (default 0.5)
-  HardSwish  — x * hardsigmoid(x; 1/6, 1/2), opset 14
-
-  Sub        — elementwise with numpy broadcasting
-  ReduceMax  — attrs: axes (ints, negatives allowed), keepdims (default 1)
-  Transpose  — attr: perm (ints)
+Add, Sub, Mul and Div broadcast as numpy does.
 
 Each Conv is planned once, when the session loads, from its constant
 initializer weights (``_plan_conv``): the SVD of the stacked kernel rows
@@ -71,19 +58,14 @@ tests/test_properties.py; about 1e-14 on the committed banks).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from types import SimpleNamespace
 from typing import NamedTuple
 
 import numpy as np
 from numpy.lib.stride_tricks import as_strided
 
 from .onnx_proto import decode_model
-
-_SUPPORTED = {
-    "Conv", "Sigmoid", "Sub", "ReduceMax", "Transpose",
-    "Add", "Relu", "MaxPool", "Concat", "Resize", "BatchNormalization",
-    "GlobalAveragePool", "Flatten", "Gemm", "Softmax",
-    "Mul", "Div", "Clip", "HardSigmoid", "HardSwish",
-}
 
 
 class _ConvPlan(NamedTuple):
@@ -169,16 +151,19 @@ def _conv_group(xp: np.ndarray, plan: _ConvPlan, sh: int, sw: int) -> np.ndarray
     return (coef @ rows).transpose(0, 2, 1, 3)  # (N, M, Ho, Wo)
 
 
+def _pad_hw(x: np.ndarray, attrs: dict, value: float = 0.0) -> np.ndarray:
+    """``x`` (N, C, H, W) padded by the node's ``pads`` [hb, wb, he, we]."""
+    p = attrs.get("pads", [0, 0, 0, 0])
+    return np.pad(x, ((0, 0), (0, 0), (p[0], p[2]), (p[1], p[3])), constant_values=value) if any(p) else x
+
+
 def _conv2d(
     x: np.ndarray, plans: list[_ConvPlan], b: np.ndarray | None, attrs: dict
 ) -> np.ndarray:
-    pads = attrs.get("pads", [0, 0, 0, 0])
     sh, sw = attrs.get("strides", [1, 1])
     if attrs.get("dilations", [1, 1]) != [1, 1]:
         raise NotImplementedError("NumpySession Conv supports dilation=1")
-    xp = np.asarray(x, dtype=np.float64)
-    if any(pads):
-        xp = np.pad(xp, ((0, 0), (0, 0), (pads[0], pads[2]), (pads[1], pads[3])))
+    xp = _pad_hw(np.asarray(x, dtype=np.float64), attrs)
     cg = plans[0].c
     if xp.shape[1] != cg * len(plans):
         raise ValueError(
@@ -193,23 +178,26 @@ def _conv2d(
     return out
 
 
-def _reduce_max(x: np.ndarray, attrs: dict) -> np.ndarray:
-    axes = tuple(attrs["axes"])
-    return x.max(axis=axes, keepdims=bool(attrs.get("keepdims", 1)))
+def _opt(ins: list, i: int):
+    return ins[i] if len(ins) > i else None
 
 
-def _maxpool2d(x: np.ndarray, attrs: dict) -> np.ndarray:
+def _f64(x: np.ndarray) -> np.ndarray:
+    return x.astype(np.float64)
+
+
+def _conv(ins: list, attrs: dict, plans: list[_ConvPlan] | None = None) -> np.ndarray:
+    """Conv over the load-time ``plans``, else over a plan of this run's weight."""
+    plans = plans or _plan_conv(ins[1], attrs.get("group", 1))
+    return _conv2d(ins[0], plans, _opt(ins, 2), attrs)
+
+
+def _maxpool2d(ins: list, attrs: dict) -> np.ndarray:
     kh, kw = attrs["kernel_shape"]
     sh, sw = attrs.get("strides", [kh, kw])
-    pads = attrs.get("pads", [0, 0, 0, 0])
     if attrs.get("ceil_mode", 0):
         raise NotImplementedError("NumpySession MaxPool supports ceil_mode=0")
-    xp = x.astype(np.float64)
-    if any(pads):
-        xp = np.pad(
-            xp, ((0, 0), (0, 0), (pads[0], pads[2]), (pads[1], pads[3])),
-            constant_values=-np.inf,
-        )
+    xp = _pad_hw(_f64(ins[0]), attrs, -np.inf)
     win = np.lib.stride_tricks.sliding_window_view(xp, (kh, kw), axis=(2, 3))
     return win[:, :, ::sh, ::sw].max(axis=(4, 5))
 
@@ -223,7 +211,7 @@ def _batchnorm(ins: list, attrs: dict) -> np.ndarray:
     ) + b.reshape(shape)
 
 
-def _resize_nearest(x: np.ndarray, ins: list, attrs: dict) -> np.ndarray:
+def _resize_nearest(ins: list, attrs: dict) -> np.ndarray:
     """Opset-13 Resize, the torch nearest-export profile: inputs are
     (X, roi?, scales?, sizes?) with unused slots as empty names;
     mode='nearest', coordinate_transformation_mode='asymmetric',
@@ -236,8 +224,7 @@ def _resize_nearest(x: np.ndarray, ins: list, attrs: dict) -> np.ndarray:
             f"NumpySession Resize supports nearest/asymmetric/floor, got "
             f"{mode}/{ctm}/{nm}"
         )
-    sizes = ins[3] if len(ins) > 3 and ins[3] is not None else None
-    scales = ins[2] if len(ins) > 2 and ins[2] is not None else None
+    x, scales, sizes = ins[0], _opt(ins, 2), _opt(ins, 3)
     in_shape = np.array(x.shape, dtype=np.float64)
     if sizes is not None:
         out_shape = np.asarray(sizes, dtype=np.int64)
@@ -258,17 +245,71 @@ def _resize_nearest(x: np.ndarray, ins: list, attrs: dict) -> np.ndarray:
     return out
 
 
+def _gemm(ins: list, attrs: dict) -> np.ndarray:
+    a = _f64(ins[0]).T if attrs.get("transA", 0) else _f64(ins[0])
+    b = _f64(ins[1]).T if attrs.get("transB", 0) else _f64(ins[1])
+    out = attrs.get("alpha", 1.0) * (a @ b)
+    c = _opt(ins, 2)
+    return out if c is None else out + attrs.get("beta", 1.0) * _f64(c)
+
+
+def _softmax(ins: list, attrs: dict) -> np.ndarray:
+    ax = attrs.get("axis", -1)
+    z = _f64(ins[0])
+    e = np.exp(z - z.max(axis=ax, keepdims=True))
+    return e / e.sum(axis=ax, keepdims=True)
+
+
+def _clip(ins: list, attrs: dict) -> np.ndarray:
+    lo, hi = _opt(ins, 1), _opt(ins, 2)
+    lo = attrs.get("min", -np.inf) if lo is None else lo
+    hi = attrs.get("max", np.inf) if hi is None else hi
+    return np.clip(_f64(ins[0]), np.asarray(lo, dtype=np.float64), np.asarray(hi, dtype=np.float64))
+
+
+# the op set, in the module docstring's order; a node of any other type
+# fails the session at load
+_OPS: dict[str, Callable[[list, dict], np.ndarray]] = {
+    "Conv": _conv,
+    "Relu": lambda ins, attrs: np.maximum(ins[0], 0.0),
+    "MaxPool": _maxpool2d,
+    "BatchNormalization": _batchnorm,
+    "Resize": _resize_nearest,
+    "Add": lambda ins, attrs: _f64(ins[0]) + _f64(ins[1]),
+    "Concat": lambda ins, attrs: np.concatenate([_f64(i) for i in ins], axis=attrs["axis"]),
+    "Sigmoid": lambda ins, attrs: 1.0 / (1.0 + np.exp(-_f64(ins[0]))),
+    "GlobalAveragePool": lambda ins, attrs: _f64(ins[0]).mean(
+        axis=tuple(range(2, ins[0].ndim)), keepdims=True
+    ),
+    "Flatten": lambda ins, attrs: np.asarray(ins[0]).reshape(
+        int(np.prod(ins[0].shape[: attrs.get("axis", 1)], initial=1)), -1
+    ),
+    "Gemm": _gemm,
+    "Softmax": _softmax,
+    "Mul": lambda ins, attrs: _f64(ins[0]) * _f64(ins[1]),
+    "Div": lambda ins, attrs: _f64(ins[0]) / _f64(ins[1]),
+    "Clip": _clip,
+    "HardSigmoid": lambda ins, attrs: np.clip(
+        attrs.get("alpha", 0.2) * _f64(ins[0]) + attrs.get("beta", 0.5), 0.0, 1.0
+    ),
+    "HardSwish": lambda ins, attrs: (z := _f64(ins[0])) * np.clip(z / 6.0 + 0.5, 0.0, 1.0),
+    "Sub": lambda ins, attrs: _f64(ins[0]) - _f64(ins[1]),
+    "ReduceMax": lambda ins, attrs: ins[0].max(
+        axis=tuple(attrs["axes"]), keepdims=bool(attrs.get("keepdims", 1))
+    ),
+    "Transpose": lambda ins, attrs: np.transpose(ins[0], attrs["perm"]),
+}
+
+
 class NumpySession:
-    """onnxruntime.InferenceSession-compatible executor for the supported
-    op subset; raises NotImplementedError on any other node type so a real
+    """onnxruntime.InferenceSession-compatible executor for the ops of
+    ``_OPS``; raises NotImplementedError on any other node type so a real
     exported model that needs more ops fails loudly, not wrongly."""
 
     def __init__(self, model_path: str):
         with open(model_path, "rb") as fh:
             self.model = decode_model(fh.read())
-        unsupported = sorted(
-            {n["op_type"] for n in self.model["nodes"]} - _SUPPORTED
-        )
+        unsupported = sorted({n["op_type"] for n in self.model["nodes"]} - _OPS.keys())
         if unsupported:
             raise NotImplementedError(
                 f"NumpySession does not implement ONNX ops {unsupported}; "
@@ -291,12 +332,8 @@ class NumpySession:
             if n["op_type"] == "Conv" and n["inputs"][1] in inits
         }
 
-    def get_inputs(self):  # minimal parity with InferenceSession
-        class _Info:
-            def __init__(self, name):
-                self.name = name
-
-        return [_Info(n) for n in self.model["inputs"]]
+    def get_inputs(self) -> list[SimpleNamespace]:  # minimal parity with InferenceSession
+        return [SimpleNamespace(name=n) for n in self.model["inputs"]]
 
     def run(self, output_names, feed: dict[str, np.ndarray]) -> list[np.ndarray]:
         values: dict[str, np.ndarray] = dict(self.model["initializers"])
@@ -305,75 +342,11 @@ class NumpySession:
         for idx, node in enumerate(self.model["nodes"]):
             # optional inputs arrive as empty names (the Resize roi slot)
             ins = [values[i] if i else None for i in node["inputs"]]
-            op = node["op_type"]
-            if op == "Conv":
-                plans = self._conv_plans.get(idx) if node["inputs"][1] not in feed else None
-                if plans is None:
-                    plans = _plan_conv(ins[1], node["attrs"].get("group", 1))
-                out = _conv2d(ins[0], plans, ins[2] if len(ins) > 2 else None, node["attrs"])
-            elif op == "Sigmoid":
-                out = 1.0 / (1.0 + np.exp(-ins[0].astype(np.float64)))
-            elif op == "Sub":
-                out = ins[0].astype(np.float64) - ins[1].astype(np.float64)
-            elif op == "Add":
-                out = ins[0].astype(np.float64) + ins[1].astype(np.float64)
-            elif op == "Relu":
-                out = np.maximum(ins[0], 0.0)
-            elif op == "Mul":
-                out = ins[0].astype(np.float64) * ins[1].astype(np.float64)
-            elif op == "Div":
-                out = ins[0].astype(np.float64) / ins[1].astype(np.float64)
-            elif op == "Clip":
-                lo = ins[1] if len(ins) > 1 and ins[1] is not None else node["attrs"].get("min", -np.inf)
-                hi = ins[2] if len(ins) > 2 and ins[2] is not None else node["attrs"].get("max", np.inf)
-                out = np.clip(ins[0].astype(np.float64), np.asarray(lo, dtype=np.float64), np.asarray(hi, dtype=np.float64))
-            elif op == "HardSigmoid":
-                a = node["attrs"].get("alpha", 0.2)
-                b = node["attrs"].get("beta", 0.5)
-                out = np.clip(a * ins[0].astype(np.float64) + b, 0.0, 1.0)
-            elif op == "HardSwish":
-                z = ins[0].astype(np.float64)
-                out = z * np.clip(z / 6.0 + 0.5, 0.0, 1.0)
-            elif op == "MaxPool":
-                out = _maxpool2d(ins[0], node["attrs"])
-            elif op == "BatchNormalization":
-                out = _batchnorm(ins, node["attrs"])
-            elif op == "Resize":
-                out = _resize_nearest(ins[0], ins, node["attrs"])
-            elif op == "Concat":
-                out = np.concatenate(
-                    [i.astype(np.float64) for i in ins], axis=node["attrs"]["axis"]
-                )
-            elif op == "GlobalAveragePool":
-                out = ins[0].astype(np.float64).mean(
-                    axis=tuple(range(2, ins[0].ndim)), keepdims=True
-                )
-            elif op == "Flatten":
-                ax = node["attrs"].get("axis", 1)
-                shape = ins[0].shape
-                out = np.asarray(ins[0]).reshape(
-                    int(np.prod(shape[:ax], initial=1)), -1
-                )
-            elif op == "Gemm":
-                a = node["attrs"]
-                A = ins[0].astype(np.float64)
-                B = ins[1].astype(np.float64)
-                if a.get("transA", 0):
-                    A = A.T
-                if a.get("transB", 0):
-                    B = B.T
-                out = a.get("alpha", 1.0) * (A @ B)
-                if len(ins) > 2 and ins[2] is not None:
-                    out = out + a.get("beta", 1.0) * ins[2].astype(np.float64)
-            elif op == "Softmax":
-                ax = node["attrs"].get("axis", -1)
-                z = ins[0].astype(np.float64)
-                e = np.exp(z - z.max(axis=ax, keepdims=True))
-                out = e / e.sum(axis=ax, keepdims=True)
-            elif op == "ReduceMax":
-                out = _reduce_max(ins[0], node["attrs"])
-            elif op == "Transpose":
-                out = np.transpose(ins[0], node["attrs"]["perm"])
+            plans = self._conv_plans.get(idx)
+            if plans is not None and node["inputs"][1] not in feed:
+                out = _conv(ins, node["attrs"], plans)
+            else:
+                out = _OPS[node["op_type"]](ins, node["attrs"])
             values[node["outputs"][0]] = out
         wanted = output_names or self.model["outputs"]
         return [values[n].astype(np.float32) for n in wanted]

@@ -374,6 +374,8 @@ def extract_turns(
     pathologically skewed; the shuffle moves payload bytes, so default off.
     ``detect_orientation``: enable the per-page orientation classifier
     (docTR's non-assume_straight_pages path; ~2-4x detection cost).
+    ``orienter``: a ``(cache_key, loader)`` pair for a custom classifier;
+    it requires ``detect_orientation=True`` (ValueError otherwise).
     ``detector`` / ``recognizer``: ``(cache_key, loader)`` pairs for custom
     models (plans/models.py contracts). The loader runs lazily ONCE per
     Python worker process — real NN weights load per executor core, not per
@@ -393,6 +395,8 @@ def extract_turns(
     render). Same fused single-stage plan: page bytes still never cross a
     shuffle; only the extra slim map column leaves the stage.
     """
+    if orienter is not None and not detect_orientation:
+        raise ValueError("orienter needs detect_orientation=True; without it no page is oriented")
     src = df.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
     if salt_partitions:
         src = src.repartition(salt_partitions, F.xxhash64("conv_id", "turn_idx"))

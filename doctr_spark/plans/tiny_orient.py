@@ -48,7 +48,7 @@ from __future__ import annotations
 import numpy as np
 
 from ..sources.font import ink_bounds, ink_mask
-from .models import ModelLoader, models_data, npz_loader
+from .models import ModelLoader, models_data, npz_loader, onnx_loader
 
 ORIENT_WEIGHTS_PATH = models_data("tiny_orient_v1.npz")
 
@@ -243,14 +243,7 @@ def onnx_orient_classifier(model_path: str | None = None) -> ModelLoader:
     included) is the fixed input resolution the graph consumes."""
     from .onnx_export import ONNX_ORIENT_PATH
 
-    path = model_path or ONNX_ORIENT_PATH
-    key = f"onnx-orient:{path}"
-
-    def load():
-        from .models import _onnx_session
-
-        sess = _onnx_session(path)
-
+    def make(sess):
         def orient(page: np.ndarray, scale: int) -> int:
             cells = page_cells(page, scale)
             if cells is None:
@@ -261,4 +254,4 @@ def onnx_orient_classifier(model_path: str | None = None) -> ModelLoader:
 
         return orient
 
-    return key, load
+    return onnx_loader("orient", model_path or ONNX_ORIENT_PATH, make)

@@ -176,14 +176,22 @@ def test_computed_conv_weight_is_never_served_stale(tmp_path):
     assert centers == [1.0, 2.0, 3.0, 4.0]
 
 
-def test_onnx_loaders_key_their_config_and_share_one_session(monkeypatch):
-    """Loaders over one .onnx file that differ in postproc, target_hw,
-    input_name or vocab resolve to models of their own, and share one
-    executor session per worker (each Conv is planned once per file)."""
+def test_onnx_loaders_key_their_config_and_share_one_session(monkeypatch, tmp_path):
+    """Every loader over the ``onnx_loader`` skeleton (the detector, the
+    recognizer, the orientation classifier and an ONNX detector served by
+    ``hub.from_hub``) keys every option: loaders over one .onnx file that
+    differ in postproc, target_hw, input_name, vocab or path resolve to
+    models of their own, and share one executor session per file per
+    worker (each Conv is planned once per file)."""
+    import os
+    import shutil
     import sys
 
     from doctr_spark.plans import onnx_exec
+    from doctr_spark.plans.hub import from_hub, save_model_for_hub
     from doctr_spark.plans.models import clear_model_cache, resolve_model
+    from doctr_spark.plans.onnx_export import ONNX_ORIENT_PATH
+    from doctr_spark.plans.tiny_orient import onnx_orient_classifier
 
     opened = []
 
@@ -195,6 +203,11 @@ def test_onnx_loaders_key_their_config_and_share_one_session(monkeypatch):
     monkeypatch.setitem(sys.modules, "onnxruntime", None)  # the numpy executor
     monkeypatch.setattr(onnx_exec, "NumpySession", CountingSession)
     clear_model_cache()
+    orient_copy = str(tmp_path / "orient_copy.onnx")
+    shutil.copyfile(ONNX_ORIENT_PATH, orient_copy)
+    hub_repo = save_model_for_hub(
+        ONNX_DET_PATH, str(tmp_path / "hub-det"), arch="onnx", task="detection", fmt="onnx"
+    )
     det_db = resolve_model(*onnx_detector(ONNX_DET_PATH))
     det_ink = resolve_model(*onnx_detector(ONNX_DET_PATH, postproc=INK_MODEL_POSTPROC))
     assert det_db is not det_ink
@@ -206,12 +219,22 @@ def test_onnx_loaders_key_their_config_and_share_one_session(monkeypatch):
         onnx_recognizer(ONNX_RECO_PATH)[0],
         onnx_recognizer(ONNX_RECO_PATH, vocab="AB")[0],
         onnx_recognizer(ONNX_RECO_PATH, input_name="x")[0],
+        onnx_orient_classifier()[0],
+        onnx_orient_classifier(orient_copy)[0],
+        from_hub(hub_repo)[0],
     }
-    assert len(keys) == 7
+    assert len(keys) == 10
+    assert onnx_orient_classifier(ONNX_ORIENT_PATH)[0] == onnx_orient_classifier()[0]
     rec = resolve_model(*onnx_recognizer(ONNX_RECO_PATH))
     rec_ab = resolve_model(*onnx_recognizer(ONNX_RECO_PATH, vocab="AB"))
     assert rec is not rec_ab
-    assert opened == [ONNX_DET_PATH, ONNX_RECO_PATH]
+    ori = resolve_model(*onnx_orient_classifier())
+    ori_copy = resolve_model(*onnx_orient_classifier(orient_copy))
+    assert ori is not ori_copy
+    resolve_model(*from_hub(hub_repo))
+    hub_weights = os.path.join(hub_repo, os.path.basename(ONNX_DET_PATH))
+    resolve_model(*onnx_detector(hub_weights))  # the hub file's session again
+    assert opened == [ONNX_DET_PATH, ONNX_RECO_PATH, ONNX_ORIENT_PATH, orient_copy, hub_weights]
     clear_model_cache()
 
 

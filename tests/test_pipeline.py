@@ -221,6 +221,16 @@ def test_orienter_loader_through_extract_turns(spark):
     gen.unpersist()
 
 
+def test_orienter_without_detect_orientation_is_rejected(corpus):
+    """An orienter only runs under detect_orientation=True, so passing one
+    without the flag fails loudly instead of being dropped."""
+    inp = corpus.drop("expected_text", "payload_kind")
+    orienter = ("test-orienter", lambda: lambda page, scale: 0)
+    with pytest.raises(ValueError, match="detect_orientation=True"):
+        extract_turns(inp, orienter=orienter)
+    extract_turns(inp, detect_orientation=True, orienter=orienter)  # the flag admits it
+
+
 def test_kie_route_predictions_and_render(spark):
     """extract_turns(kie=True) — the kie_predictor entry point (reference
     models/kie_predictor/pytorch.py:69-182): per-class prediction counts
