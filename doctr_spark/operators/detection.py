@@ -28,8 +28,9 @@ from ..sources.font import ink_mask
 BIN_THRESH = 0.3
 BOX_THRESH = 0.1
 # ink-fuse dilation radii in CELLS (word-gap bridge / line-band expansion).
-# Single source of truth: ink_word_boxes' fuse steps AND the cell-space
-# fast path's edge guards both derive from these — change them here only.
+# Single source of truth: ink_word_boxes' fuse steps, the cell-space fast
+# path's edge guards and the canvas separators all derive from these —
+# change them here only.
 H_DILATE_CELLS = 3
 V_DILATE_CELLS = 4
 UNCLIP_RATIO = 1.5
@@ -47,26 +48,35 @@ LINKNET_POSTPROC = {"bin_thresh": 0.1, "box_thresh": 0.1, "unclip_ratio": 1.0}
 
 
 def _window_count(m: np.ndarray, radius: int, axis: int) -> np.ndarray:
-    """Sliding-window sum of width 2*radius+1 along an axis (zero-padded),
-    via cumsum — two passes regardless of radius (memory-bandwidth-friendly;
-    these maps are the hot loop of the extraction UDF)."""
+    """Sliding-window sum of width 2*radius+1 along an axis (zero-padded).
+
+    One cumsum into a buffer that holds radius+1 zeros ahead of the sums
+    and the total repeated radius times behind them; each window sum is
+    then the difference of two slices of that buffer, whatever the radius.
+    int16 suffices: a window count is at most 2*radius+1, so a cumsum that
+    wraps past 32767 on a long axis still subtracts to the exact count, and
+    half-width sums halve the memory traffic of this hot loop."""
     n = m.shape[axis]
-    pad_widths = [(0, 0), (0, 0)]
-    pad_widths[axis] = (radius + 1, radius)
-    # int16 suffices (window counts are bounded by the axis length, pages
-    # are < 32k px) and halves the memory traffic of the hot loop
-    c = np.cumsum(np.pad(m, pad_widths, mode="constant"), axis=axis, dtype=np.int16)
-    hi = np.take(c, np.arange(2 * radius + 1, 2 * radius + 1 + n), axis=axis)
-    lo = np.take(c, np.arange(0, n), axis=axis)
-    return hi - lo
+
+    def span(start: int, stop: int | None) -> tuple:
+        index = [slice(None)] * m.ndim
+        index[axis] = slice(start, stop)
+        return tuple(index)
+
+    shape = list(m.shape)
+    shape[axis] = n + 2 * radius + 1
+    c = np.zeros(shape, dtype=np.int16)
+    np.cumsum(m, axis=axis, dtype=np.int16, out=c[span(radius + 1, radius + 1 + n)])
+    c[span(radius + 1 + n, None)] = c[span(radius + n, radius + 1 + n)]
+    return c[span(2 * radius + 1, None)] - c[span(0, n)]
 
 
 def _dilate_axis(m: np.ndarray, radius: int, axis: int) -> np.ndarray:
-    return (_window_count(m.astype(np.uint8), radius, axis) > 0).astype(np.uint8)
+    return (_window_count(m.astype(np.uint8, copy=False), radius, axis) > 0).view(np.uint8)
 
 
 def _erode_axis(m: np.ndarray, radius: int, axis: int) -> np.ndarray:
-    return (_window_count(m.astype(np.uint8), radius, axis) == 2 * radius + 1).astype(np.uint8)
+    return (_window_count(m.astype(np.uint8, copy=False), radius, axis) == 2 * radius + 1).view(np.uint8)
 
 
 def binary_open3(m: np.ndarray) -> np.ndarray:
@@ -96,6 +106,12 @@ def connected_components(bitmap: np.ndarray) -> list[tuple[int, int, int, int]]:
     Returns component bboxes as (xmin, ymin, xmax, ymax) *inclusive* pixel
     coords, in raster order of their topmost-leftmost run (deterministic).
     """
+    return list(zip(*(c.tolist() for c in _component_bboxes(bitmap))))
+
+
+def _component_bboxes(bitmap: np.ndarray) -> tuple[np.ndarray, ...]:
+    """``connected_components`` as four int64 arrays (xmin, ymin, xmax,
+    ymax), for callers that score and filter the boxes with array ops."""
     h, w = bitmap.shape
     b = bitmap.astype(bool)
     # all runs at once: pad each row with zeros, diff over the flat array —
@@ -110,7 +126,7 @@ def connected_components(bitmap: np.ndarray) -> list[tuple[int, int, int, int]]:
     stops = flat_stops % (w + 2) - 1
     n = len(rows)
     if n == 0:
-        return []
+        return (np.empty(0, dtype=np.int64),) * 4
     counts = np.bincount(rows, minlength=h)
     offsets = np.concatenate(([0], np.cumsum(counts)))
 
@@ -170,7 +186,7 @@ def connected_components(bitmap: np.ndarray) -> list[tuple[int, int, int, int]]:
     np.maximum.at(xmax, inv, stops - 1)
     np.minimum.at(ymin, inv, rows)
     np.maximum.at(ymax, inv, rows)
-    return list(zip(xmin.tolist(), ymin.tolist(), xmax.tolist(), ymax.tolist()))
+    return xmin, ymin, xmax, ymax
 
 
 # ------------------------------------------------------------ postprocess
@@ -210,40 +226,24 @@ def bitmap_to_boxes(
     min_size_box: int = MIN_SIZE_BOX,
     score_mask: np.ndarray | None = None,
     levels: tuple[float, float] | None = None,
-    cell_scale: int = 1,
-    out_dims: tuple[int, int] | None = None,
 ) -> np.ndarray:
     """Connected components of the (already opened) bitmap -> (N,5) relative
     [xmin,ymin,xmax,ymax,score] boxes, clipped to [0,1].
 
-    Fast path: when the proba map is two-level (bg where mask=0, fg where
-    mask=1), pass ``score_mask``+``levels`` instead of ``pred`` — the score
+    When the proba map is two-level (bg where mask=0, fg where mask=1),
+    pass ``score_mask``+``levels`` instead of ``pred``: the score
     bg + (fg-bg)*mean(mask[region]) is then exactly the proba mean without
-    ever materializing a float map (the hot loop of the extraction UDF).
-
-    ``cell_scale`` > 1: the bitmap is a cell-space downsampling of a pixel
-    mask (each cell = a ``cell_scale`` x ``cell_scale`` pixel block);
-    component bboxes convert to pixel coords before the size filter /
-    unclip / normalization, which use ``out_dims`` (the true pixel page
-    dims — may be up to cell_scale-1 px larger than bitmap*cell_scale).
-    Scores still come from the cell mask: for a cell-aligned mask the ink
-    fraction over any cell-aligned region is identical in both spaces."""
-    h, w = (out_dims if out_dims is not None else bitmap.shape[:2])
-    cs = cell_scale
+    a float map. One box at a time, this is the reference the ink model's
+    array-op scoring (``_canvas_boxes``) is tested against."""
+    h, w = bitmap.shape[:2]
     out: list[list[float]] = []
-    for cx0, cy0, cx1, cy1 in connected_components(bitmap):
-        if cs > 1:
-            x0, y0, x1, y1 = cx0 * cs, cy0 * cs, (cx1 + 1) * cs - 1, (cy1 + 1) * cs - 1
-        else:
-            x0, y0, x1, y1 = cx0, cy0, cx1, cy1
+    for x0, y0, x1, y1 in connected_components(bitmap):
         # extent filter mirrors the reference's contour-extent < min_size drop
         if (x1 - x0) < min_size_box or (y1 - y0) < min_size_box:
             continue
         if score_mask is not None and levels is not None:
             bg, fg = levels
-            score = bg + (fg - bg) * float(
-                score_mask[cy0 : cy1 + 1, cx0 : cx1 + 1].mean()
-            )
+            score = bg + (fg - bg) * float(score_mask[y0 : y1 + 1, x0 : x1 + 1].mean())
         else:
             score = box_score(pred, x0, y0, x1, y1)
         if score < box_thresh:
@@ -316,51 +316,121 @@ def ink_word_boxes(
     """Fused fast path of ink_proba_map + postprocess_proba_map: identical
     boxes/scores, but all-integer masks (no float64 HxW map). Binarizing the
     two-level proba at bin_thresh reproduces the fused mask exactly, so the
-    pipeline skips straight from masks to components."""
-    ink = ink_mask(img).astype(np.uint8)
-    if scale > 1:
-        cells = _ink_cells_if_aligned(ink, scale)
-        if cells is not None:
-            # cell-space fast path: the renderer places ink on an s-aligned
-            # cell grid, so s x s pooling is lossless and dilation by
-            # (4, 3) CELLS == dilation by (4s, 3s) px — every downstream
-            # pass (dilate cumsums, components, scoring) touches s^2 = 9x
-            # fewer pixels. This is the DRAM-bandwidth lever: the dilation
-            # cumsums are the extraction UDF's hot loop and the root-caused
-            # 8->32 core scaling limiter (BENCH.md round-3). Boxes are
-            # bit-identical to the full-resolution path (proved in
-            # tests/test_detection.py); non-aligned input (skewed scans,
-            # arbitrary rasters) returns None and takes the exact
-            # full-resolution path below.
-            fused_c = dilate_horizontal(
-                dilate_vertical(cells, V_DILATE_CELLS), H_DILATE_CELLS
-            )
-            return bitmap_to_boxes(
-                None,  # type: ignore[arg-type]
-                fused_c,
-                box_thresh=box_thresh,
-                unclip_ratio=unclip_ratio,
-                score_mask=fused_c,
-                levels=(bg_level, ink_level),
-                cell_scale=scale,
-                out_dims=ink.shape,
-            )
-    fused = dilate_horizontal(
-        dilate_vertical(ink, V_DILATE_CELLS * scale), H_DILATE_CELLS * scale
+    pipeline skips straight from masks to components. One page is a batch
+    of one: ``ink_word_boxes_batch`` is the only implementation."""
+    return ink_word_boxes_batch([img], scale, box_thresh, unclip_ratio, ink_level, bg_level)[0]
+
+
+def ink_word_boxes_batch(
+    pages: list[np.ndarray],
+    scale: int,
+    box_thresh: float = BOX_THRESH,
+    unclip_ratio: float = INK_MODEL_POSTPROC["unclip_ratio"],
+    ink_level: float = INK_LEVEL,
+    bg_level: float = BG_LEVEL,
+) -> list[np.ndarray]:
+    """``[ink_word_boxes(p, scale) for p in pages]``, bit for bit, with the
+    morphology, components and scoring run once per canvas of pages.
+
+    The renderer places ink on an s-aligned cell grid, so s x s pooling is
+    lossless for an aligned page and dilation by (4, 3) CELLS equals
+    dilation by (4s, 3s) px on s^2 = 9x fewer pixels. Aligned pages of one
+    cell width stack into one cell canvas. A page that is not aligned
+    (skewed scans, arbitrary rasters, pages under one cell, scale 1) is a
+    canvas of its own, which is the full-resolution path."""
+    masks, dims, canvases = [], [], {}
+    for i, img in enumerate(pages):
+        mask, cs = _page_mask(img, scale)
+        masks.append(mask)
+        dims.append(img.shape[:2])
+        canvases.setdefault(("cells", mask.shape[1]) if cs > 1 else ("page", i), []).append(i)
+    out: list[np.ndarray] = [np.empty(0)] * len(pages)
+    for (kind, _), idx in canvases.items():
+        cs = scale if kind == "cells" else 1
+        boxes = _canvas_boxes(
+            [masks[i] for i in idx], [dims[i] for i in idx], cs,
+            V_DILATE_CELLS * scale // cs, H_DILATE_CELLS * scale // cs,
+            box_thresh, unclip_ratio, (bg_level, ink_level),
+        )
+        for i, page_boxes in zip(idx, boxes):
+            out[i] = page_boxes
+    return out
+
+
+def _page_mask(img: np.ndarray, scale: int) -> tuple[np.ndarray, int]:
+    """(mask, cs): the page's ink cells and cs = scale when it is aligned
+    (scale > 1), else its pixel ink mask and cs = 1."""
+    ink = ink_mask(img)
+    cells = _ink_cells_if_aligned(ink, scale) if scale > 1 else None
+    return (ink, 1) if cells is None else (cells, scale)
+
+
+# the batch entry of the default detector (plans/models.py contract)
+ink_word_boxes.batch = ink_word_boxes_batch
+ink_word_boxes_batch.single = ink_word_boxes
+
+
+def _canvas_boxes(
+    masks: list[np.ndarray],
+    dims: list[tuple[int, int]],
+    cs: int,
+    v_radius: int,
+    h_radius: int,
+    box_thresh: float,
+    unclip_ratio: float,
+    levels: tuple[float, float],
+) -> list[np.ndarray]:
+    """Ink-fuse boxes of same-width masks, one (N, 5) array per mask.
+
+    Each mask is a page's ink at ``cs`` x ``cs`` px per element, ``dims``
+    the page's pixel (h, w). The masks stack into one canvas ``v_radius``
+    blank rows apart, so the vertical dilation of one page reaches no ink
+    of another; zeroing the separator rows after it clips each page's
+    dilation to the page, as dilating the page alone would. Then one
+    horizontal dilation and one labelling serve every page. The 3x3
+    opening of the generic postprocess is the identity here: the fused
+    mask is a union of rectangles of at least 3x3, and opening such a
+    union returns it. A component's score comes from an integer
+    summed-area table of the fused mask: its ink count over the box area
+    is the exact mean ``bitmap_to_boxes`` takes."""
+    heights = np.array([m.shape[0] for m in masks])
+    tops = np.concatenate(([0], np.cumsum(heights[:-1] + v_radius)))
+    canvas = np.zeros((int(tops[-1] + heights[-1]), masks[0].shape[1]), dtype=np.uint8)
+    on_page = np.zeros(len(canvas), dtype=bool)
+    for top, m in zip(tops.tolist(), masks):
+        canvas[top : top + len(m)] = m
+        on_page[top : top + len(m)] = True
+    fused = _dilate_axis(canvas, v_radius, 0)
+    del canvas
+    fused[~on_page] = 0
+    fused = _dilate_axis(fused, h_radius, 1)
+    x0, y0, x1, y1 = _component_bboxes(fused)
+
+    # cumsums in place: one that casts to the table's dtype allocates a copy
+    sat = np.zeros((fused.shape[0] + 1, fused.shape[1] + 1), dtype=np.int32 if fused.size < 2**31 else np.int64)
+    body = sat[1:, 1:]
+    np.copyto(body, fused)
+    np.cumsum(body, axis=0, out=body)
+    np.cumsum(body, axis=1, out=body)
+    filled = sat[y1 + 1, x1 + 1] - sat[y0, x1 + 1] - sat[y1 + 1, x0] + sat[y0, x0]
+    bg, fg = levels
+    score = bg + (fg - bg) * (filled / ((y1 - y0 + 1) * (x1 - x0 + 1)))
+
+    # inclusive pixel bbox on its own page, then the DB unclip
+    page = np.searchsorted(tops, y0, side="right") - 1
+    y0 = y0 - tops[page]
+    y1 = y1 - tops[page]
+    px0, py0, px1, py1 = x0 * cs, y0 * cs, (x1 + 1) * cs - 1, (y1 + 1) * cs - 1
+    bw, bh = px1 - px0 + 1, py1 - py0 + 1
+    d = (bw * bh) * unclip_ratio / (2.0 * (bw + bh))
+    ex0, ey0, ex1, ey1 = np.floor(px0 - d), np.floor(py0 - d), np.ceil(px1 + d), np.ceil(py1 + d)
+    keep = (
+        (px1 - px0 >= MIN_SIZE_BOX) & (py1 - py0 >= MIN_SIZE_BOX) & (score >= box_thresh)
+        & (ex1 - ex0 >= MIN_SIZE_BOX) & (ey1 - ey0 >= MIN_SIZE_BOX)
     )
-    # 3x3 opening is the identity here: the fused mask is a union of
-    # (6s+1)x(8s+1) rectangles (one per ink pixel), each >= 3x3, and
-    # opening(U of >=3x3 rects) = U (every rect is a union of contained
-    # 3x3 squares; opening is anti-extensive) — so the generic
-    # binarize->open->components contract is preserved without the passes.
-    return bitmap_to_boxes(
-        None,  # type: ignore[arg-type]
-        fused,
-        box_thresh=box_thresh,
-        unclip_ratio=unclip_ratio,
-        score_mask=fused,
-        levels=(bg_level, ink_level),
-    )
+    page_h, page_w = np.array(dims, dtype=np.int64).reshape(-1, 2)[page].T
+    boxes = np.stack([ex0 / page_w, ey0 / page_h, (ex1 + 1) / page_w, (ey1 + 1) / page_h, score], axis=1)
+    return np.split(np.clip(boxes[keep], 0.0, 1.0), np.searchsorted(page[keep], np.arange(1, len(masks))))
 
 
 def _ink_cells_if_aligned(

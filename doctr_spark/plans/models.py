@@ -15,6 +15,16 @@ Contracts (all numpy, no framework types cross the boundary):
 - detector:   ``(page: (H, W) uint8, scale: int) -> (N, 5) float64``
   relative ``[xmin, ymin, xmax, ymax, conf]`` boxes (the
   DetectionPredictor output shape, reference models/detection/zoo.py).
+  Optional batch entry: a ``batch`` attribute ``(pages: list[(H, W)
+  uint8], scale: int) -> list[(N, 5) float64]`` whose output must equal
+  ``[detector(page, scale) for page in pages]`` bit for bit. The fused
+  stage then detects a bounded chunk of an Arrow batch's pages in one
+  call; a detector without it is called once per page. The entry's
+  ``single`` attribute must be the detector itself, or the stage ignores
+  it: a wrapper made with ``functools.wraps`` copies ``batch``, and its own
+  logic would otherwise be skipped, so a wrapper must drop or replace
+  ``batch``. The default ink-fuse detector has one
+  (``operators/detection.py:ink_word_boxes_batch``).
 - recognizer: ``(crops: list[(h, w) uint8], scale: int) ->
   list[(text, conf)]`` — batch-first so a real CRNN can stack the crops
   into one forward pass (reference models/recognition/predictor runs

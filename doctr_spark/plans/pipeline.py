@@ -14,6 +14,20 @@ under ``error_policy='capture'`` any failure, a malformed envelope
 included, becomes a payload_kind='error' row; then ``_turn_row`` builds
 the output row from the route result.
 
+Page bundles are detected a chunk at a time (``_DetectChunk``). A
+page-bundle turn is only decoded in its turn; its pages queue until the
+next turn would push the queue past ``DETECT_CHUNK_PIXELS``, and at the
+end of the batch. Then, when the detector has a batch entry
+(``plans/models.py``; the default ink-fuse detector does) and neither
+orientation nor straightening changes pages first, one detection call
+labels every queued page; otherwise each page is detected on its own.
+The rest of the chain runs on each queued turn inside that turn's own
+quarantine, its row written into the turn's slot. Output rows, their
+order and their error messages are those of detecting page by page; if
+the chunk's call raises, each turn falls back to per-page detection. The
+cap bounds the decoded pages a worker holds, whatever the Arrow batch
+size. The PDF and image routes detect one page per call.
+
 What counts as ink is one rule, ``sources/font.py``'s ``ink_mask`` and
 ``ink_bounds``: the artefact gate here, the detectors, the recognizers and
 the orientation classifiers all call it, so they agree on every page.
@@ -134,6 +148,7 @@ def extract_pages_ocr(
     straighten_pages: bool = False,
     straighten_min_angle: float = 1.0,
     kie: bool = False,
+    page_boxes: list[np.ndarray] | None = None,
 ) -> tuple:
     """OCR chain over already-decoded grayscale pages (the shared core of
     the bundle / PDF / image payload routes). ``orienter`` follows the
@@ -158,7 +173,11 @@ def extract_pages_ocr(
     tree; the return tuple gains (predictions, kie_text) where
     ``predictions`` maps class -> [prediction dicts + page_idx] across
     pages and ``kie_text`` is the per-page KIE render joined by the page
-    separator (KIEDocument.render semantics, io/elements.py:459-463)."""
+    separator (KIEDocument.render semantics, io/elements.py:459-463).
+
+    ``page_boxes``: the detector's output for each page, when the caller
+    has already run it (the fused stage detects a chunk of pages in one
+    call); the detector is then not called."""
     if detector is None:
         detector = resolve_model(*DEFAULT_DETECTOR)
     if recognizer is None:
@@ -184,7 +203,7 @@ def extract_pages_ocr(
             angle = estimate_skew_angle(img, scale)
             if abs(angle) >= straighten_min_angle:
                 img = rotate_page_float(img, angle)
-        boxes = detector(img, scale)
+        boxes = detector(img, scale) if page_boxes is None else page_boxes[page_idx]
         for hook in detection_hooks or ():
             boxes = hook(boxes)
         crops = extract_crops(img, boxes[:, :4])
@@ -264,37 +283,118 @@ def _extract_batch(
     straighten_pages: bool = False,
     kie: bool = False,
 ) -> pd.DataFrame:
+    if detector is None:
+        detector = resolve_model(*DEFAULT_DETECTOR)
     # bound per batch, not at import, so a wrapped extract_pages_ocr counts
     ocr = partial(
         extract_pages_ocr, detect_orientation=detect_orientation, detector=detector,
         recognizer=recognizer, orienter=orienter, straighten_pages=straighten_pages, kie=kie,
     )
-    out_rows = []
+    # pages are detected a chunk at a time only when detection sees the
+    # decoded page itself: orienting or straightening changes it first
+    detect_batch = None if detect_orientation or straighten_pages else _batch_entry(detector)
+    rows: list = []
+    chunk = _DetectChunk(detect_batch, ocr, rows, error_policy, kie)
     for conv_id, turn_idx, role, text, tool, ts in zip(
         pdf["conv_id"], pdf["turn_idx"], pdf["role"], pdf["text"], pdf["tool"], pdf["ts"]
     ):
-        error = None
+        turn = (conv_id, turn_idx, role, ts, text)
         try:
-            payload = parse_tool_envelope(tool) if tool else None
-            kind, out = _route_turn(payload, text, ocr)
-        except Exception as exc:  # noqa: BLE001 — per-turn quarantine
-            # a malformed envelope or corrupt payload must not kill a
-            # 10^12-turn job: the row becomes kind='error' with a bounded
-            # message; error_policy='raise' keeps strict semantics
-            if error_policy != "capture":
-                raise
-            kind, out, error = "error", "", f"{type(exc).__name__}: {exc}"[:500]
-        out_rows.append(_turn_row(conv_id, turn_idx, role, ts, kind, out, text, error, kie))
+            kind, out, error = _quarantine(error_policy, _route_turn, tool, text, ocr)
+        except Exception:
+            chunk.flush()  # an earlier queued turn's failure is raised first
+            raise
+        if kind == "bundle":
+            chunk.add(len(rows), turn, *out)
+            rows.append(None)
+        else:
+            rows.append(_turn_row(*turn, kind, out, error, kie))
+    chunk.flush()
     columns = _ROW_COLUMNS + ["predictions", "kie_text"] if kie else _ROW_COLUMNS
-    return pd.DataFrame(out_rows, columns=columns)
+    return pd.DataFrame(rows, columns=columns)
 
 
-def _route_turn(payload, text, ocr):
-    """Dispatch one turn by payload kind; returns (kind, out) where the
-    'ocr' out is the ``extract_pages_ocr`` tuple and html/plain outs are
-    text. ``ocr`` is the chain bound to the batch's models and flags."""
+def _batch_entry(detector):
+    """The detector's batch entry (``plans/models.py`` contract), or None.
+    The entry names its detector in ``single``: a wrapper made with
+    ``functools.wraps`` copies ``batch`` but is not that detector, so its
+    own logic is never skipped."""
+    batch = getattr(detector, "batch", None)
+    return batch if getattr(batch, "single", None) is detector else None
+
+
+# pixel budget of one chunked detection call: the decoded pages the stage
+# holds between detections, so a worker's memory stays bounded whatever
+# the Arrow batch size
+DETECT_CHUNK_PIXELS = 1 << 21
+
+
+class _DetectChunk:
+    """Decoded page-bundle turns waiting for detection.
+
+    ``add`` queues a turn's pages, flushing the queue first when the turn
+    would push its pixel total past ``DETECT_CHUNK_PIXELS`` or has another
+    scale. ``flush`` detects every queued page in one ``detect_batch`` call
+    (when the detector has a batch entry), then runs the rest of the OCR
+    chain on each turn inside the turn's own quarantine and writes its row
+    into its slot. Without a batch entry, or when the chunk's call raises,
+    each turn detects its pages one by one, so a failure lands on the turn
+    that holds the bad page."""
+
+    def __init__(self, detect_batch, ocr, rows, error_policy, kie):
+        self.detect_batch, self.ocr, self.rows = detect_batch, ocr, rows
+        self.error_policy, self.kie = error_policy, kie
+        self.turns: list = []  # (slot, turn, pages, scale)
+        self.pixels = 0
+
+    def add(self, slot, turn, pages, scale):
+        pixels = sum(p.size for p in pages)
+        if self.turns and (self.pixels + pixels > DETECT_CHUNK_PIXELS or scale != self.turns[0][3]):
+            self.flush()
+        self.turns.append((slot, turn, pages, scale))
+        self.pixels += pixels
+
+    def flush(self):
+        turns, self.turns, self.pixels = self.turns, [], 0
+        boxes = None
+        if turns and self.detect_batch is not None:
+            try:
+                boxes = self.detect_batch([p for *_, pages, _ in turns for p in pages], turns[0][3])
+            except Exception:  # noqa: BLE001 — per-page detection below finds the turn
+                pass
+        start = 0
+        for slot, turn, pages, scale in turns:
+            page_boxes = None if boxes is None else boxes[start : start + len(pages)]
+            start += len(pages)
+            kind, out, error = _quarantine(self.error_policy, self._chain, pages, scale, page_boxes)
+            self.rows[slot] = _turn_row(*turn, kind, out, error, self.kie)
+
+    def _chain(self, pages, scale, page_boxes):
+        return "ocr", self.ocr(pages, scale, page_boxes=page_boxes)
+
+
+def _quarantine(error_policy, route, *args):
+    """``(kind, out, error)`` of one turn's ``route(*args)``. A failure, a
+    malformed envelope or corrupt payload included, must not kill a
+    10^12-turn job: under 'capture' it becomes kind='error' with a bounded
+    message; error_policy='raise' keeps strict semantics."""
+    try:
+        return (*route(*args), None)
+    except Exception as exc:  # noqa: BLE001 — per-turn quarantine
+        if error_policy != "capture":
+            raise
+        return "error", "", f"{type(exc).__name__}: {exc}"[:500]
+
+
+def _route_turn(tool, text, ocr):
+    """Parse one turn's envelope and dispatch by payload kind; returns
+    (kind, out) where the 'ocr' out is the ``extract_pages_ocr`` tuple and
+    html/plain outs are text. ``ocr`` is the chain bound to the batch's
+    models and flags. A page bundle is only decoded here: kind 'bundle',
+    out (pages, scale), for the stage's detection chunk."""
+    payload = parse_tool_envelope(tool) if tool else None
     if payload is not None and payload[0] == "page_bundle":
-        return "ocr", ocr(*decode_page_bundle(payload[1]))
+        return "bundle", decode_page_bundle(payload[1])
     if payload is not None and payload[0] in ("pdf", "image"):
         # real-world payloads: rasterize/decode (env-gated libs), fold
         # to grayscale, then the same OCR chain
@@ -322,7 +422,7 @@ _artefact_fields = itemgetter("type", *_BOX_FIELDS)
 _prediction_fields = itemgetter("value", *_BOX_FIELDS)
 
 
-def _turn_row(conv_id, turn_idx, role, ts, kind, out, text, error, kie):
+def _turn_row(conv_id, turn_idx, role, ts, text, kind, out, error, kie):
     """The output row of one turn: an 'ocr' out is the ``extract_pages_ocr``
     tuple; any other out is the text (``min_conf`` 0.0 on an error row)."""
     if kind == "ocr":

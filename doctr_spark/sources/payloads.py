@@ -131,7 +131,10 @@ def read_pdf_pages(
 
     Mirrors the reference's ``read_pdf`` (io/pdf.py:16-43): pypdfium2
     render at ``scale`` (1 = 72 dpi; the default 2 = 144 dpi),
-    ``rev_byteorder`` for RGB output, document closed after render. Gated:
+    ``rev_byteorder`` for RGB output, document closed after render. Like an
+    oversized page bundle, a document whose pages would render to more than
+    MAX_BUNDLE_PIXELS pixels in total (each page's size in points times
+    ``scale`` on both axes) is refused before any page renders. Gated:
     pypdfium2 is not in this container, so the call raises
     NotImplementedError there — tests exercise the wiring with a stub
     module and skip the real path when the import fails."""
@@ -144,12 +147,16 @@ def read_pdf_pages(
         ) from exc
     pdf = pdfium.PdfDocument(pdf_bytes, password=password)
     try:
+        pages = list(pdf)
+        n_pixels = sum((w * scale) * (h * scale) for w, h in (page.get_size() for page in pages))
+        if n_pixels > MAX_BUNDLE_PIXELS:
+            raise ValueError(f"document renders to {n_pixels:.0f} pixels, over the {MAX_BUNDLE_PIXELS} cap")
         # copy: to_numpy() can alias the PdfBitmap's buffer, which is freed
         # when the bitmap is GC'd / the document closes below — returned
         # arrays must own their pixels
         return [
             np.array(page.render(scale=scale, rev_byteorder=rgb_mode).to_numpy(), copy=True)
-            for page in pdf
+            for page in pages
         ]
     finally:
         pdf.close()

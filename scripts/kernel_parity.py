@@ -7,14 +7,24 @@ Usage:
 
 ``run`` imports ``doctr_spark`` from CHECKOUT and runs
 ``plans.pipeline._extract_batch`` in batches of 1,000 rows, with kie off
-and with kie on, over two inputs, so every model path is covered:
+and with kie on, over four inputs, so every model path and every route is
+covered:
 
 - ``mixed``: the first file of the first ``mixed`` input, default models;
 - ``ocr_onnx``: every file of the first ``ocr_onnx`` input, through the
   committed ``.onnx`` detector and recognizer (built as
-  ``perfbench/child.py:model_args`` builds them).
+  ``perfbench/child.py:model_args`` builds them);
+- ``every_route``: the first 60 rows of the ``mixed`` file with a bad row
+  of each kind after every tenth: a bundle of an unknown version, a
+  multi-page bundle cut inside page 0, ``pdf`` and ``image`` envelopes
+  over stub bytes, an envelope whose ``b64`` does not decode, and empty
+  and null text;
+- ``ocr_chunks``: every page-bundle row of the ``mixed`` file as one batch,
+  whose pages span many of the fused stage's detection chunks.
 
-It pickles the four frames, keyed ``(input, kie)``, to OUT. ``compare``
+The extra rows are built from the cached input with the standard library
+only, so both checkouts see the same bytes. It pickles the eight frames,
+keyed ``(input, kie)``, to OUT. ``compare``
 checks that two such files hold the same keys and, per key, frames that
 ``DataFrame.equals`` each other with the same column order and dtypes; it
 prints one line per key and exits 1 on any difference.
@@ -27,9 +37,12 @@ each workload makes them.
 from __future__ import annotations
 
 import argparse
+import base64
 import glob
+import json
 import os
 import pickle
+import struct
 import sys
 
 BATCH_ROWS = 1000
@@ -41,6 +54,45 @@ def _input_files(inputs: str, workload: str) -> list[str]:
     if not files:
         sys.exit(f"no cached {workload} input under {inputs}; run perfbench/run.py --workload {workload}")
     return files[:1] if workload == "mixed" else files
+
+
+def _envelope(kind: str, payload: bytes) -> str:
+    return json.dumps({"kind": kind, "b64": base64.b64encode(payload).decode("ascii")})
+
+
+def _bundle(tool) -> bytes | None:
+    """The bundle bytes of a page-bundle envelope, else None."""
+    if not tool or not tool.startswith("{"):
+        return None
+    env = json.loads(tool)
+    return base64.b64decode(env["b64"]) if env.get("kind") == "page_bundle" else None
+
+
+def _every_route(mixed):
+    """The first 60 ``mixed`` rows with a bad row of each kind after every
+    tenth (see the module docstring)."""
+    import pandas as pd
+
+    bundles = [b for b in map(_bundle, mixed["tool"]) if b is not None]
+    two_pages = next(b for b in bundles if struct.unpack(">BHB", b[4:8])[1] > 1)
+    tools = [
+        _envelope("page_bundle", b"DSPG" + struct.pack(">BHB", 99, 1, 3)),
+        _envelope("page_bundle", two_pages[: 8 + 8 + 20]),
+        _envelope("pdf", b"%PDF-stub"),
+        _envelope("image", b"\x89PNG-stub"),
+        json.dumps({"kind": "page_bundle", "b64": "abc"}),
+        None,
+    ]
+    texts = ["[attachment]"] * 5 + [""]
+    bad = [
+        {"conv_id": "conv-bad", "turn_idx": i, "role": "tool", "text": text, "tool": tool, "ts": mixed["ts"].iloc[0]}
+        for i, (tool, text) in enumerate(zip(tools, texts))
+    ]
+    bad.append(dict(bad[-1], turn_idx=len(bad), text=None))
+    rows = mixed.iloc[:60].to_dict("records")
+    for at in range(len(bad), 0, -1):
+        rows.insert(10 * at, bad[at - 1])
+    return pd.DataFrame(rows, columns=list(mixed.columns))
 
 
 def run(checkout: str, out: str, inputs: str) -> None:
@@ -56,9 +108,15 @@ def run(checkout: str, out: str, inputs: str) -> None:
         "detector": resolve_model(*onnx_detector(ONNX_DET_PATH, postproc=INK_MODEL_POSTPROC)),
         "recognizer": resolve_model(*onnx_recognizer(ONNX_RECO_PATH)),
     }
+    mixed = pd.read_parquet(_input_files(inputs, "mixed")[0])
+    batches = {
+        "mixed": (mixed, {}),
+        "ocr_onnx": (pd.concat([pd.read_parquet(f) for f in _input_files(inputs, "ocr_onnx")], ignore_index=True), onnx),
+        "every_route": (_every_route(mixed), {}),
+        "ocr_chunks": (mixed[[_bundle(t) is not None for t in mixed["tool"]]].reset_index(drop=True), {}),
+    }
     frames = {}
-    for name, models in (("mixed", {}), ("ocr_onnx", onnx)):
-        pdf = pd.concat([pd.read_parquet(f) for f in _input_files(inputs, name)], ignore_index=True)
+    for name, (pdf, models) in batches.items():
         for kie in (False, True):
             frames[name, kie] = pd.concat(
                 [

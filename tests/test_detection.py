@@ -3,6 +3,8 @@ reference's tests/common/test_models_detection.py)."""
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from doctr_spark.operators.detection import (
     binary_open3,
@@ -216,28 +218,30 @@ def test_fast_reparameterize_partial_branches():
     assert np.allclose(kernel, kf) and np.allclose(bias, bf)
 
 
+def _full_res_boxes(page, scale, box_thresh=0.1, unclip_ratio=0.2):
+    """The full-resolution ink-fuse path, one box at a time: pixel-space
+    dilation by (4s, 3s) and bitmap_to_boxes' per-component scoring."""
+    from doctr_spark.operators.detection import dilate_horizontal, dilate_vertical
+
+    ink = (page < 128).astype(np.uint8)
+    fused = dilate_horizontal(dilate_vertical(ink, 4 * scale), 3 * scale)
+    return bitmap_to_boxes(
+        None, fused, box_thresh=box_thresh, unclip_ratio=unclip_ratio, score_mask=fused, levels=(0.02, 0.98)
+    )
+
+
+def _same_bits(a, b):
+    return a.dtype == b.dtype and a.shape == b.shape and a.tobytes() == b.tobytes()
+
+
 def test_cell_fast_path_bit_equal_to_full_res():
     """ink_word_boxes' cell-space fast path (s-aligned pooling + cell-unit
     dilation + cell-space components) returns boxes BIT-IDENTICAL — scores
     included — to the full-resolution dilation path, on pages and all
     quarter-turn rotations; a 1px-shifted (non-aligned) page falls back to
     the full-resolution path and still matches it exactly."""
-    from doctr_spark.operators.detection import (
-        _ink_cells_if_aligned,
-        bitmap_to_boxes,
-        dilate_horizontal,
-        dilate_vertical,
-        ink_word_boxes,
-    )
+    from doctr_spark.operators.detection import _ink_cells_if_aligned, ink_word_boxes
     from doctr_spark.sources.font import DEFAULT_SCALE, render_page
-
-    def full_res(page):
-        ink = (page < 128).astype(np.uint8)
-        fused = dilate_horizontal(dilate_vertical(ink, 4 * DEFAULT_SCALE), 3 * DEFAULT_SCALE)
-        return bitmap_to_boxes(
-            None, fused, box_thresh=0.1, unclip_ratio=0.2,
-            score_mask=fused, levels=(0.02, 0.98),
-        )
 
     for words in (["HELLO", "WORLD"], ["A+B=C", "R&D", "#1"], ["WHY?", "GO!", "KILO"]):
         img, _ = render_page(words, scale=DEFAULT_SCALE)
@@ -247,10 +251,112 @@ def test_cell_fast_path_bit_equal_to_full_res():
             # rotations of a 640-wide page break alignment (640 % 3 != 0)
             # and exercise the fallback; either way boxes are identical
             pg = np.rot90(img, k)
-            assert np.array_equal(ink_word_boxes(pg, DEFAULT_SCALE), full_res(pg))
+            assert _same_bits(ink_word_boxes(pg, DEFAULT_SCALE), _full_res_boxes(pg, DEFAULT_SCALE))
     # 1px shift breaks cell alignment -> exact full-res fallback
     img, _ = render_page(["HELLO", "WORLD"], scale=DEFAULT_SCALE)
     shifted = np.full_like(img, 255)
     shifted[:, 1:] = img[:, :-1]
     assert _ink_cells_if_aligned((shifted < 128).astype(np.uint8), DEFAULT_SCALE) is None
-    assert np.array_equal(ink_word_boxes(shifted, DEFAULT_SCALE), full_res(shifted))
+    assert _same_bits(ink_word_boxes(shifted, DEFAULT_SCALE), _full_res_boxes(shifted, DEFAULT_SCALE))
+
+
+@st.composite
+def _page_batches(draw):
+    """(pages, scale): cell-aligned pages (some with blank edge strips
+    narrower than a cell), pages shifted off the cell grid, pixel noise,
+    blank pages and pages under one cell, over two main widths so that
+    pages share canvases and some do not."""
+    scale = draw(st.sampled_from([1, 2, 3]))
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    kinds = st.sampled_from(["aligned", "edges", "shifted", "noise", "blank", "tiny"])
+    pages = []
+    for kind in draw(st.lists(kinds, max_size=6)):
+        if kind == "tiny":
+            h, w = draw(st.integers(0, scale)), draw(st.integers(0, scale))
+            pages.append(np.where(rng.random((h, w)) < 0.5, 0, 255).astype(np.uint8))
+            continue
+        hc, wc = draw(st.integers(1, 12)), draw(st.sampled_from([9, 17, 9, 17, 4]))
+        cells = rng.random((hc, wc)) < draw(st.sampled_from([0.05, 0.25, 0.7]))
+        if kind == "blank":
+            cells[:] = False
+        if kind == "edges":  # ink on the first and last rows and columns
+            cells[[0, -1], :] = cells[:, [0, -1]] = True
+        ink = np.kron(cells, np.ones((scale, scale), dtype=bool))
+        if draw(st.booleans()):
+            ink = np.pad(ink, ((0, draw(st.integers(0, scale - 1))), (0, draw(st.integers(0, scale - 1)))))
+        if kind == "shifted":
+            ink = np.roll(ink, 1, axis=draw(st.integers(0, 1)))
+        if kind == "noise":
+            ink = rng.random(ink.shape) < 0.3
+        pages.append(np.where(ink, 0, 255).astype(np.uint8))
+    return pages, scale
+
+
+@settings(max_examples=300, deadline=None)
+@given(_page_batches(), st.sampled_from([0.1, 0.5, 0.8, 0.95]), st.sampled_from([0.2, 1.5]))
+def test_ink_word_boxes_batch_equals_per_page_and_full_res(batch, box_thresh, unclip_ratio):
+    """The batch entry of the default detector returns, page for page, the
+    bits of ink_word_boxes on that page and of the full-resolution path,
+    whatever mix of aligned and unaligned pages and widths shares a call."""
+    from doctr_spark.operators.detection import ink_word_boxes, ink_word_boxes_batch
+
+    pages, scale = batch
+    got = ink_word_boxes_batch(pages, scale, box_thresh, unclip_ratio)
+    assert len(got) == len(pages)
+    for page, boxes in zip(pages, got):
+        assert _same_bits(boxes, ink_word_boxes(page, scale, box_thresh, unclip_ratio))
+        assert _same_bits(boxes, _full_res_boxes(page, scale, box_thresh, unclip_ratio))
+
+
+def test_ink_word_boxes_batch_pages_meet_at_the_separator():
+    """Ink on the last row of one page and the first row of the next, with
+    the rows between blank on one side: each page's dilation stops at its
+    own edge, as when the page is detected alone."""
+    from doctr_spark.operators.detection import ink_word_boxes, ink_word_boxes_batch
+
+    top = np.zeros((16, 12), dtype=bool)
+    top[0, 2] = True  # ink far from the bottom edge
+    bottom = np.zeros((16, 12), dtype=bool)
+    bottom[0, 6] = bottom[-1, 9] = True
+    cells = [top, bottom, top[::-1], bottom]
+    pages = [np.where(np.kron(c, np.ones((3, 3), dtype=bool)), 0, 255).astype(np.uint8) for c in cells]
+    got = ink_word_boxes_batch(pages, 3)
+    assert all(_same_bits(b, ink_word_boxes(p, 3)) for p, b in zip(pages, got))
+    assert all(_same_bits(b, _full_res_boxes(p, 3)) for p, b in zip(pages, got))
+    assert [len(b) for b in got] == [1, 2, 1, 2]
+
+
+def test_ink_word_boxes_batch_on_rendered_pages():
+    """Rendered pages of several widths and every quarter turn in one call,
+    and the empty call."""
+    from doctr_spark.operators.detection import ink_word_boxes, ink_word_boxes_batch
+    from doctr_spark.sources.font import DEFAULT_SCALE, render_page
+
+    pages = []
+    for words, width in ((["HELLO", "WORLD"], 640), (["A+B=C", "R&D", "#1"], 320), (["WHY?", "GO!"], 640)):
+        img, _ = render_page(words, scale=DEFAULT_SCALE, width=width)
+        pages += [img, np.rot90(img)]
+    got = ink_word_boxes_batch(pages, DEFAULT_SCALE)
+    assert all(_same_bits(b, ink_word_boxes(p, DEFAULT_SCALE)) for p, b in zip(pages, got))
+    assert sum(len(b) for b in got) > 0
+    assert ink_word_boxes_batch([], DEFAULT_SCALE) == []
+    assert ink_word_boxes.batch is ink_word_boxes_batch and ink_word_boxes_batch.single is ink_word_boxes
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    h=st.integers(0, 40), w=st.integers(0, 40), radius=st.integers(0, 6),
+    axis=st.integers(0, 1), seed=st.integers(0, 2**32 - 1),
+)
+def test_window_count_equals_direct_window_sums(h, w, radius, axis, seed):
+    """_window_count is the zero-padded sliding-window sum of width
+    2*radius+1 along the axis, summed directly."""
+    from doctr_spark.operators.detection import _window_count
+
+    m = (np.random.default_rng(seed).random((h, w)) < 0.4).astype(np.uint8)
+    lines = np.moveaxis(m, axis, 0)  # the summed axis first
+    n = len(lines)
+    sums = [lines[max(i - radius, 0) : i + radius + 1].sum(axis=0) for i in range(n)]
+    ref = np.moveaxis(np.array(sums, dtype=np.int64).reshape(lines.shape), 0, axis)
+    got = _window_count(m, radius, axis)
+    assert got.dtype == np.int16 and np.array_equal(got, ref)

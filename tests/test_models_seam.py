@@ -133,9 +133,11 @@ def test_custom_weights_path_gets_its_own_model(tmp_path):
 # ------------------------------------------------------- decoder wiring
 
 
-def _fake_pypdfium2(pages_rgb):
+def _fake_pypdfium2(pages_rgb, sizes=None):
     """Stub pypdfium2 module: PdfDocument(bytes) iterates fake pages whose
-    render(scale, rev_byteorder).to_numpy() returns the given arrays."""
+    render(scale, rev_byteorder).to_numpy() returns the given arrays and
+    whose get_size() returns ``sizes`` (points; default the array's
+    (width, height))."""
     mod = types.ModuleType("pypdfium2")
     state = {"closed": False, "render_kwargs": []}
 
@@ -147,8 +149,12 @@ def _fake_pypdfium2(pages_rgb):
             return self._arr
 
     class _Page:
-        def __init__(self, arr):
+        def __init__(self, arr, size):
             self._arr = arr
+            self._size = size
+
+        def get_size(self):
+            return self._size
 
         def render(self, scale=1.0, rev_byteorder=False, **kw):
             state["render_kwargs"].append({"scale": scale, "rev_byteorder": rev_byteorder})
@@ -157,7 +163,9 @@ def _fake_pypdfium2(pages_rgb):
     class PdfDocument:
         def __init__(self, data, password=None):
             state["data"] = data
-            self._pages = [_Page(a) for a in pages_rgb]
+            self._pages = [
+                _Page(a, size) for a, size in zip(pages_rgb, sizes or [a.shape[1::-1] for a in pages_rgb])
+            ]
 
         def __iter__(self):
             return iter(self._pages)
@@ -184,6 +192,28 @@ def test_read_pdf_pages_wiring_via_stub(monkeypatch):
     assert fake._state["closed"] is True
     assert fake._state["data"] == b"%PDF-fake"
     assert all(kw == {"scale": 2.0, "rev_byteorder": True} for kw in fake._state["render_kwargs"])
+
+
+def test_read_pdf_pages_refuses_oversized_document_before_rendering(monkeypatch):
+    """A document whose pages would render past MAX_BUNDLE_PIXELS in total
+    (page size in points x scale on both axes) is refused before any page
+    renders, and the document is still closed; one just under renders."""
+    from doctr_spark.sources import payloads
+
+    rgb = [np.zeros((4, 4, 3), dtype=np.uint8)] * 2
+    # two pages of 4096 x 2048 points: exactly MAX_BUNDLE_PIXELS at scale 1
+    sizes = [(4096, 2048)] * 2
+    assert 2 * 4096 * 2048 == payloads.MAX_BUNDLE_PIXELS
+    fits = _fake_pypdfium2(rgb, sizes)
+    monkeypatch.setitem(sys.modules, "pypdfium2", fits)
+    assert len(payloads.read_pdf_pages(b"%PDF-fits", scale=1.0)) == 2
+    assert len(fits._state["render_kwargs"]) == 2
+
+    big = _fake_pypdfium2(rgb, sizes)
+    monkeypatch.setitem(sys.modules, "pypdfium2", big)
+    with pytest.raises(ValueError, match="over the 16777216 cap"):
+        payloads.read_pdf_pages(b"%PDF-big", scale=1.01)
+    assert big._state["render_kwargs"] == [] and big._state["closed"] is True
 
 
 def test_read_image_wiring_via_stub(monkeypatch):

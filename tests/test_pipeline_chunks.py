@@ -1,0 +1,212 @@
+"""The fused stage's chunked detection (``plans/pipeline.py:_DetectChunk``):
+page-bundle turns of an Arrow batch are detected a bounded chunk at a time
+through the default detector's batch entry, and every row, error message
+and failure mode stays that of the per-turn path. No Spark: these drive
+``_extract_batch`` directly."""
+
+import functools
+import json
+import struct
+import tracemalloc
+
+import numpy as np
+import pandas as pd
+import pytest
+
+from doctr_spark.operators.detection import ink_word_boxes, ink_word_boxes_batch
+from doctr_spark.plans import pipeline
+from doctr_spark.plans.pipeline import _extract_batch
+from doctr_spark.sources.corpus import TRANSCRIPT_SCHEMA, make_transcripts_pdf
+from doctr_spark.sources.font import DEFAULT_SCALE, render_page
+from doctr_spark.sources.payloads import MAGIC, encode_page_bundle, tool_envelope
+
+COLUMNS = [c.split()[0] for c in TRANSCRIPT_SCHEMA.split(", ")]
+TS = pd.Timestamp("2026-01-01")
+
+
+def per_page(img, scale):
+    """The default detector with its batch entry hidden: the per-turn path."""
+    return ink_word_boxes(img, scale)
+
+
+def _bad_rows():
+    """(row, error prefix) for each route a bad turn can take."""
+    two_pages = encode_page_bundle([render_page(["CUT", "HERE"])[0]] * 2, DEFAULT_SCALE)
+    rows = [
+        (tool_envelope("page_bundle", MAGIC + struct.pack(">BHB", 99, 1, DEFAULT_SCALE)),
+         "ValueError: unsupported bundle version 99"),
+        (tool_envelope("page_bundle", two_pages[:40]), "ValueError: page 0: zlib stream does not inflate"),
+        (tool_envelope("page_bundle", b"DSPGgarbage-not-a-bundle"), "ValueError: unsupported bundle version"),
+        (json.dumps({"kind": "page_bundle", "b64": "abc"}), "Error: Incorrect padding"),
+        (json.dumps({"kind": "page_bundle", "b64": 5}), "TypeError"),
+        # NotImplementedError without pypdfium2 / cv2, else the library's own error
+        (tool_envelope("pdf", b"%PDF-fake"), None),
+        (tool_envelope("image", b"\x89PNG-fake"), None),
+    ]
+    return [
+        ({"conv_id": "conv-bad", "turn_idx": i, "role": "tool", "text": "[attachment]", "tool": tool, "ts": TS}, prefix)
+        for i, (tool, prefix) in enumerate(rows)
+    ]
+
+
+def _every_route_batch():
+    """Good OCR turns (rotated pages, artefacts and pages of scale 2 among
+    them), HTML and plain turns, empty and null text, with a bad turn of every kind after
+    every third good row."""
+    good = make_transcripts_pdf(8, ocr_ratio=0.5, html_ratio=0.25, rot_ratio=0.3, artefact_ratio=0.2)
+    # pages of another scale end the chunk they would join
+    scale2 = make_transcripts_pdf(2, ocr_ratio=1.0, scale=2).assign(conv_id=lambda d: d["conv_id"] + "-s2")
+    good = pd.concat([good.iloc[:9], scale2, good.iloc[9:]])[COLUMNS].to_dict("records")
+    good += [
+        {"conv_id": "conv-empty", "turn_idx": 0, "role": "user", "text": "", "tool": None, "ts": TS},
+        {"conv_id": "conv-empty", "turn_idx": 1, "role": "user", "text": None, "tool": None, "ts": TS},
+    ]
+    bad = _bad_rows()
+    rows = []
+    for i, row in enumerate(good):
+        rows.append(row)
+        if i % 3 == 2 and bad:
+            rows.append(bad.pop(0)[0])
+    rows += [row for row, _ in bad]
+    return pd.DataFrame(rows, columns=COLUMNS)
+
+
+def _counting_detector(calls):
+    def detect(img, scale):
+        return ink_word_boxes(img, scale)
+
+    def batch(pages, scale):
+        calls.append(len(pages))
+        return ink_word_boxes_batch(pages, scale)
+
+    detect.batch, batch.single = batch, detect
+    return detect
+
+
+@pytest.mark.parametrize("cap", [pipeline.DETECT_CHUNK_PIXELS, 1, 300_000])
+@pytest.mark.parametrize("kie", [False, True])
+def test_chunked_rows_equal_the_per_turn_path(monkeypatch, cap, kie):
+    """Same rows, same order, same error messages as detecting page by
+    page, whether the batch is one chunk, one chunk per turn or several."""
+    monkeypatch.setattr(pipeline, "DETECT_CHUNK_PIXELS", cap)
+    batch = _every_route_batch()
+    calls = []
+    out = _extract_batch(batch, detector=_counting_detector(calls), kie=kie)
+    ref = _extract_batch(batch, detector=per_page, kie=kie)
+    assert out.equals(ref) and list(out.columns) == list(ref.columns)
+    assert out.equals(_extract_batch(batch, kie=kie))  # the default detector resolves to the batch path
+    ocr_turns = out[out["payload_kind"] == "ocr"]
+    # every page detected once, in several chunks; a 1-pixel cap gives each turn its own
+    assert sum(calls) == ocr_turns["n_pages"].sum() and len(calls) > 1
+    assert len(calls) == len(ocr_turns) if cap == 1 else len(calls) < len(ocr_turns)
+    assert set(out["payload_kind"]) == {"ocr", "html", "plain", "error"}
+    errors = out.loc[out["conv_id"] == "conv-bad", "error"].tolist()
+    assert len(errors) == len(_bad_rows()) and all(0 < len(e) <= 500 for e in errors)
+    for error, (_, prefix) in zip(errors, _bad_rows()):
+        assert prefix is None or error.startswith(prefix), (error, prefix)
+
+
+def test_wrapped_detector_does_not_inherit_the_batch_entry():
+    """A ``functools.wraps`` wrapper copies ``batch`` from the default
+    detector; the stage must still call the wrapper, page by page, so the
+    wrapper's own logic is never skipped."""
+    batch = _every_route_batch()
+
+    @functools.wraps(ink_word_boxes)
+    def first_box_only(img, scale):
+        return ink_word_boxes(img, scale)[:1]
+
+    assert first_box_only.batch is ink_word_boxes_batch
+    assert pipeline._batch_entry(first_box_only) is None
+    assert pipeline._batch_entry(ink_word_boxes) is ink_word_boxes_batch
+    out = _extract_batch(batch, detector=first_box_only)
+
+    def plain(img, scale):
+        return first_box_only(img, scale)
+
+    assert out.equals(_extract_batch(batch, detector=plain))
+    assert not out.equals(_extract_batch(batch))
+
+
+def test_raise_policy_propagates_in_turn_order():
+    """error_policy='raise' propagates a bad turn's error; a queued turn
+    whose chain fails before it raises first, as on the per-turn path."""
+    batch = _every_route_batch()
+    with pytest.raises(Exception):
+        _extract_batch(batch, error_policy="raise")
+    bad = pd.DataFrame([row for row, _ in _bad_rows()[:1]], columns=COLUMNS)
+    with pytest.raises(ValueError, match="unsupported bundle version"):
+        _extract_batch(bad, error_policy="raise")
+
+    def broken_recognizer(crops, scale):
+        raise RuntimeError("recognizer down")
+
+    ocr_first = pd.concat([batch[batch["text"].str.startswith("[attachment:", na=False)].iloc[:1], bad])
+    for detector in (None, per_page):
+        with pytest.raises(RuntimeError, match="recognizer down"):
+            _extract_batch(ocr_first, detector=detector, recognizer=broken_recognizer, error_policy="raise")
+
+
+def test_failed_chunk_detection_falls_back_per_page():
+    """When the chunk's detection call raises, each turn detects its own
+    pages inside its own quarantine: only the turn with the bad page
+    becomes an error row, and every other row is the per-turn path's."""
+    poison = (np.arange(7 * 640) % 251).astype(np.uint8).reshape(7, 640)
+    batch = _every_route_batch()
+    poisoned = {"conv_id": "conv-poison", "turn_idx": 0, "role": "tool", "text": "[attachment]",
+                "tool": tool_envelope("page_bundle", encode_page_bundle([poison], DEFAULT_SCALE)), "ts": TS}
+    batch = pd.concat([batch.iloc[:5], pd.DataFrame([poisoned]), batch.iloc[5:]], ignore_index=True)
+
+    def detect(img, scale):
+        if img.shape == poison.shape:
+            raise ValueError("bad page")
+        return ink_word_boxes(img, scale)
+
+    def batch_fails(pages, scale):
+        raise MemoryError("chunk too big")
+
+    detect.batch, batch_fails.single = batch_fails, detect
+    out = _extract_batch(batch, detector=detect)
+
+    def per_page_only(img, scale):
+        return detect(img, scale)
+
+    assert out.equals(_extract_batch(batch, detector=per_page_only))
+    row = out[out["conv_id"] == "conv-poison"].iloc[0]
+    assert (row["payload_kind"], row["error"]) == ("error", "ValueError: bad page")
+    rest = out[out["conv_id"] != "conv-poison"]
+    assert (rest["error"].notna() == (rest["conv_id"] == "conv-bad")).all()
+
+
+def _tall_ocr_batch(n_turns):
+    """OCR turns of one tall, mostly blank page each: many pixels, few
+    words, so the rows the batch returns stay small next to its pages."""
+    img, _ = render_page(["TALL", "PAGE"])
+    page = np.pad(img, ((0, 1200 - img.shape[0]), (0, 0)), constant_values=255)
+    tool = tool_envelope("page_bundle", encode_page_bundle([page], DEFAULT_SCALE))
+    rows = [{"conv_id": f"c{i}", "turn_idx": 0, "role": "tool", "text": "[attachment]", "tool": tool, "ts": TS}
+            for i in range(n_turns)]
+    return pd.DataFrame(rows, columns=COLUMNS), page.size
+
+
+def _peak_bytes(batch):
+    tracemalloc.start()
+    try:
+        out = _extract_batch(batch)
+        return tracemalloc.get_traced_memory()[1], out
+    finally:
+        tracemalloc.stop()
+
+
+def test_extract_batch_memory_is_bounded_by_the_chunk():
+    """The stage holds at most a chunk of decoded pages: the traced peak of
+    _extract_batch stays under the chunk cap plus one bundle plus slack for
+    the detection canvas, whether the batch holds 4 or 12 chunks of pages."""
+    _extract_batch(_tall_ocr_batch(2)[0])  # warm the models' memos
+    cap = pipeline.DETECT_CHUNK_PIXELS
+    for n_chunks in (4, 12):
+        n_turns = n_chunks * cap // _tall_ocr_batch(1)[1]
+        batch, bundle_pixels = _tall_ocr_batch(n_turns)
+        peak, out = _peak_bytes(batch)
+        assert (out["extracted_text"] == "TALL PAGE").all()
+        assert peak < cap + bundle_pixels + cap, (n_chunks, peak)
