@@ -328,6 +328,8 @@ def ink_word_boxes_batch(
     unclip_ratio: float = INK_MODEL_POSTPROC["unclip_ratio"],
     ink_level: float = INK_LEVEL,
     bg_level: float = BG_LEVEL,
+    *,
+    rasters: list[tuple[np.ndarray, int]] | None = None,
 ) -> list[np.ndarray]:
     """``[ink_word_boxes(p, scale) for p in pages]``, bit for bit, with the
     morphology, components and scoring run once per canvas of pages.
@@ -337,10 +339,15 @@ def ink_word_boxes_batch(
     dilation by (4s, 3s) px on s^2 = 9x fewer pixels. Aligned pages of one
     cell width stack into one cell canvas. A page that is not aligned
     (skewed scans, arbitrary rasters, pages under one cell, scale 1) is a
-    canvas of its own, which is the full-resolution path."""
+    canvas of its own, which is the full-resolution path.
+
+    ``rasters``: each page's ``_page_mask(page, scale)``, when the caller
+    has built them (the fused stage reuses them in its artefact gate and
+    recognizer); they are built here otherwise."""
     masks, dims, canvases = [], [], {}
-    for i, img in enumerate(pages):
-        mask, cs = _page_mask(img, scale)
+    if rasters is None:
+        rasters = [_page_mask(img, scale) for img in pages]
+    for i, (img, (mask, cs)) in enumerate(zip(pages, rasters)):
         masks.append(mask)
         dims.append(img.shape[:2])
         canvases.setdefault(("cells", mask.shape[1]) if cs > 1 else ("page", i), []).append(i)
@@ -358,8 +365,10 @@ def ink_word_boxes_batch(
 
 
 def _page_mask(img: np.ndarray, scale: int) -> tuple[np.ndarray, int]:
-    """(mask, cs): the page's ink cells and cs = scale when it is aligned
-    (scale > 1), else its pixel ink mask and cs = 1."""
+    """The page's ink raster (mask, cs): its 0/1 ink cells and cs = scale
+    when it is aligned (scale > 1), else its pixel ink mask and cs = 1.
+    Pixel (y, x) of an aligned page is ink exactly when cell
+    (y // cs, x // cs) is, and the edge strips under one cell are blank."""
     ink = ink_mask(img)
     cells = _ink_cells_if_aligned(ink, scale) if scale > 1 else None
     return (ink, 1) if cells is None else (cells, scale)

@@ -114,14 +114,11 @@ def convert_to_relative(abs_boxes: np.ndarray, height: int, width: int) -> np.nd
 
 
 def to_absolute(rel_boxes: np.ndarray, height: int, width: int) -> np.ndarray:
-    """Relative (N,4) boxes -> integer pixel boxes (round, clip)."""
-    b = np.asarray(rel_boxes, dtype=np.float64).copy()
-    b[:, [0, 2]] *= width
-    b[:, [1, 3]] *= height
-    b = b.round().astype(np.int64)
-    b[:, [0, 2]] = np.clip(b[:, [0, 2]], 0, width)
-    b[:, [1, 3]] = np.clip(b[:, [1, 3]], 0, height)
-    return b
+    """Relative (N,4) boxes -> integer pixel boxes (round half to even,
+    clip to the page)."""
+    size = (width, height, width, height)
+    b = np.rint(np.asarray(rel_boxes, dtype=np.float64) * size).astype(np.int64)
+    return np.clip(b, 0, size, out=b)
 
 
 def extract_crops(img: np.ndarray, rel_boxes: np.ndarray) -> list[np.ndarray]:
@@ -130,7 +127,7 @@ def extract_crops(img: np.ndarray, rel_boxes: np.ndarray) -> list[np.ndarray]:
     reference's zero-size drop in models/predictor/base.py:115-153)."""
     h, w = img.shape[:2]
     out = []
-    for xmin, ymin, xmax, ymax in to_absolute(np.asarray(rel_boxes).reshape(-1, 4), h, w):
+    for xmin, ymin, xmax, ymax in to_absolute(np.asarray(rel_boxes).reshape(-1, 4), h, w).tolist():
         out.append(img[ymin:ymax, xmin:xmax])
     return out
 

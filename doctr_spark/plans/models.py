@@ -29,6 +29,17 @@ Contracts (all numpy, no framework types cross the boundary):
   list[(text, conf)]`` — batch-first so a real CRNN can stack the crops
   into one forward pass (reference models/recognition/predictor runs
   batched inference; the deterministic default just loops).
+  Optional cells entry: a ``cells`` attribute ``(bitmaps: list[(h, w)
+  uint8], scale: int) -> list[(text, conf)]``, where each bitmap is a
+  crop's ink trimmed to its extent and taken one element per s x s cell
+  (0/1; empty when the crop holds no ink). Its output must equal
+  ``recognizer(crops, scale)`` bit for bit. On a page whose ink lies on
+  the cell grid and whose kept boxes cut no inked cell, the fused stage
+  reads each box's bitmap off the page's cell grid and calls ``cells``
+  instead of cutting and re-masking pixel crops; every other page gets
+  pixel crops. As for ``batch``, the entry's ``single`` attribute must be
+  the recognizer itself, or the stage ignores it, so a ``functools.wraps``
+  wrapper still gets crops. The default glyph recognizer has one.
 
 Defaults are the deterministic stand-ins (ink-fuse detector,
 glyph-matcher recognizer). A real DBNet/CRNN drops in as::
@@ -117,7 +128,7 @@ def _load_glyph_recognizer(
     postprocessor re-derived in numpy (operators/recognition.py:
     eos_decode)."""
     from ..functions.vocabs import FONT, encode_string
-    from ..sources.font import read_word_crop
+    from ..sources.font import read_word_cells, read_word_crop
 
     # the decode of a read string is a pure function of that string;
     # memoizing it per worker skips re-running the decode math for every
@@ -141,6 +152,12 @@ def _load_glyph_recognizer(
     def recognize(crops: list[np.ndarray], scale: int) -> list[tuple[str, float]]:
         return [_decode_for(read_word_crop(crop, scale)) for crop in crops]
 
+    def recognize_cells(bitmaps: list[np.ndarray], scale: int) -> list[tuple[str, float]]:
+        return [_decode_for(read_word_cells(cells)) for cells in bitmaps]
+
+    # the cells entry (module docstring): the fused stage hands it each
+    # word's trimmed cells from the page's cell grid
+    recognize.cells, recognize_cells.single = recognize_cells, recognize
     return recognize
 
 

@@ -28,6 +28,15 @@ the chunk's call raises, each turn falls back to per-page detection. The
 cap bounds the decoded pages a worker holds, whatever the Arrow batch
 size. The PDF and image routes detect one page per call.
 
+One ink raster per page: a page's ink mask, and its cell grid when its ink
+lies on the renderer's s x s cells (``detection._page_mask``), is built
+once. With the default detector the chunk builds it for the batch entry
+and hands it on; otherwise ``extract_pages_ocr`` builds it. The artefact
+gate (``_ink_gate``) reads each box's ink off it, and the default
+recognizer reads each kept word's trimmed cells off it through its
+``cells`` entry, so no crop is masked again. Custom recognizers, and
+pages or boxes the cell grid cannot describe, get pixel crops as before.
+
 What counts as ink is one rule, ``sources/font.py``'s ``ink_mask`` and
 ``ink_bounds``: the artefact gate here, the detectors, the recognizers and
 the orientation classifiers all call it, so they agree on every page.
@@ -59,8 +68,9 @@ from pyspark.sql import functions as F
 from ..functions.html import extract_main_text, looks_like_html
 from ..functions.render import PAGE_SEP, document_render_agg
 from ..operators.builder import build_page
-from ..operators.geometry import extract_crops
-from ..sources.font import DEFAULT_SCALE, ink_bounds, ink_mask
+from ..operators.detection import _page_mask, ink_word_boxes_batch
+from ..operators.geometry import extract_crops, to_absolute
+from ..sources.font import DEFAULT_SCALE, ink_bounds
 from ..sources.payloads import decode_page_bundle, parse_tool_envelope
 from .models import (
     DEFAULT_DETECTOR,
@@ -149,6 +159,7 @@ def extract_pages_ocr(
     straighten_min_angle: float = 1.0,
     kie: bool = False,
     page_boxes: list[np.ndarray] | None = None,
+    rasters: list[tuple[np.ndarray, int]] | None = None,
 ) -> tuple:
     """OCR chain over already-decoded grayscale pages (the shared core of
     the bundle / PDF / image payload routes). ``orienter`` follows the
@@ -177,13 +188,25 @@ def extract_pages_ocr(
 
     ``page_boxes``: the detector's output for each page, when the caller
     has already run it (the fused stage detects a chunk of pages in one
-    call); the detector is then not called."""
+    call); the detector is then not called.
+
+    One ink raster per page: ``rasters`` holds each page's
+    ``detection._page_mask`` (its ink cells when the page is aligned, else
+    its pixel ink mask), when the caller has built them for the default
+    detector's batch entry; otherwise each page's raster is built here,
+    after orientation and straightening. The artefact gate
+    (``_ink_gate``) reads every crop's ink off that raster, and a
+    recognizer with a ``cells`` entry (``plans/models.py``; the default
+    one has it) reads each kept word's trimmed cells off it too, on an
+    aligned page whose kept boxes cut no inked cell. Every other
+    recognizer and page gets the pixel crops of ``extract_crops``."""
     if detector is None:
         detector = resolve_model(*DEFAULT_DETECTOR)
     if recognizer is None:
         recognizer = resolve_model(*DEFAULT_RECOGNIZER)
     if orienter is None and detect_orientation:
         orienter = resolve_model(*DEFAULT_ORIENTATION)
+    read_cells = _model_entry(recognizer, "cells")
     page_texts: list[str] = []
     words_out: list[dict] = []
     artefacts_out: list[dict] = []
@@ -206,43 +229,36 @@ def extract_pages_ocr(
         boxes = detector(img, scale) if page_boxes is None else page_boxes[page_idx]
         for hook in detection_hooks or ():
             boxes = hook(boxes)
-        crops = extract_crops(img, boxes[:, :4])
-        # zero-size drop + artefact split (solid non-text regions skip
-        # recognition and, like the reference's Artefact nodes, do not
-        # contribute to the rendered text)
-        keep = []
-        for i, c in enumerate(crops):
-            if c.size == 0:
-                continue
-            c_ink = ink_mask(c)
-            bounds = ink_bounds(c_ink)
-            if bounds is not None:
-                y0, y1, x0, x1 = bounds
-                area = (y1 - y0) * (x1 - x0)
-                fill = float(c_ink.sum()) / area
-                big = area > ARTEFACT_MIN_AREA_CELLS * scale * scale
-            else:
-                fill, big = 0.0, False
-            if fill > ARTEFACT_FILL_THRESH and big:
-                from ..operators.artefacts import classify_artefact
+        raster = _page_mask(img, scale) if rasters is None else rasters[page_idx]
+        keep, gated, trims = _ink_gate(raster, to_absolute(boxes[:, :4], *img.shape[:2]), scale)
+        # pixel crops for what reads pixels: the artefact classifier, and a
+        # recognizer that cannot read this page's cells
+        read_pixels = read_cells is None or trims is None
+        crops = extract_crops(img, boxes[:, :4]) if gated or read_pixels else None
+        # artefact split (solid non-text regions skip recognition and, like
+        # the reference's Artefact nodes, do not contribute to the text)
+        for i in gated:
+            from ..operators.artefacts import classify_artefact
 
-                a_type, a_conf = classify_artefact(c)
-                n_artefacts += 1
-                artefacts_out.append(
-                    {
-                        "type": a_type,
-                        "confidence": a_conf,
-                        "xmin": float(boxes[i, 0]),
-                        "ymin": float(boxes[i, 1]),
-                        "xmax": float(boxes[i, 2]),
-                        "ymax": float(boxes[i, 3]),
-                        "page_idx": page_idx,
-                    }
-                )
-                continue
-            keep.append(i)
+            a_type, a_conf = classify_artefact(crops[i])
+            n_artefacts += 1
+            artefacts_out.append(
+                {
+                    "type": a_type,
+                    "confidence": a_conf,
+                    "xmin": float(boxes[i, 0]),
+                    "ymin": float(boxes[i, 1]),
+                    "xmax": float(boxes[i, 2]),
+                    "ymax": float(boxes[i, 3]),
+                    "page_idx": page_idx,
+                }
+            )
         boxes = boxes[keep]
-        preds = recognizer([crops[i] for i in keep], scale)
+        if read_pixels:
+            preds = recognizer([crops[i] for i in keep], scale)
+        else:
+            cells = raster[0]
+            preds = read_cells([cells[y0:y1, x0:x1] for y0, y1, x0, x1 in trims], scale)
         values = [p[0] for p in preds]
         confs = np.array([p[1] for p in preds]) if preds else np.zeros(0)
         built = build_page(boxes[:, :4], values, boxes[:, 4])
@@ -273,6 +289,74 @@ def extract_pages_ocr(
     return base
 
 
+def _ink_gate(raster, px, scale):
+    """The zero-size drop and the artefact gate of one page's boxes:
+    ``(keep, gated, trims)``. ``keep`` lists the boxes whose crops go on
+    to the recognizer and ``gated`` the artefacts: crops whose trimmed ink
+    fill exceeds ARTEFACT_FILL_THRESH over a trimmed area of more than
+    ARTEFACT_MIN_AREA_CELLS cells. ``trims`` holds each kept crop's
+    trimmed ink extent ``(y0, y1, x0, x1)`` in cells of an aligned
+    ``raster``, or is None when the page is not aligned or a kept crop
+    cuts an inked cell.
+
+    ``raster`` is the page's ``(mask, cs)`` (``detection._page_mask``) and
+    ``px`` the pixel boxes of the crops (x0, y0, x1, y1, ends exclusive,
+    as ``to_absolute`` gives them). On an aligned page a crop that cuts no
+    inked cell holds whole inked cells only: its ink count is its cell
+    count times cs^2 and its trimmed extent its cells' extent times cs, so
+    the gate reads the cells under the box and never the pixels. A crop
+    that cuts an inked cell, and every crop of a page that is not aligned,
+    takes the same rule on its slice of the pixel ink mask. The loop is
+    per box on purpose: a page holds about eight boxes, and a few numpy
+    calls on each box's cells cost less than array ops over the boxes
+    (each numpy call on a tiny array costs about a microsecond)."""
+    mask, cs = raster
+    keep, gated, trims = [], [], []
+    for i, (x0, y0, x1, y1) in enumerate(px.tolist()):
+        if x1 <= x0 or y1 <= y0:
+            continue  # the zero-size drop
+        trim = None
+        if cs > 1:
+            # the cells the crop covers in full; the crop cuts an inked cell
+            # when the cells it covers in part hold ink
+            top, left = -(-y0 // cs), -(-x0 // cs)
+            cells = mask[top : y1 // cs, left : x1 // cs]
+            count = np.count_nonzero(cells)
+            if np.count_nonzero(mask[y0 // cs : -(-y1 // cs), x0 // cs : -(-x1 // cs)]) == count:
+                trim, artefact = (top, top, left, left), False
+                if count:
+                    rows, cols = cells.any(axis=1).tolist(), cells.any(axis=0).tolist()
+                    ty0, ty1 = rows.index(True), len(rows) - rows[::-1].index(True)
+                    tx0, tx1 = cols.index(True), len(cols) - cols[::-1].index(True)
+                    trim = (top + ty0, top + ty1, left + tx0, left + tx1)
+                    area = (ty1 - ty0) * (tx1 - tx0) * cs * cs
+                    artefact = _is_artefact(count * cs * cs, area, scale)
+        if trim is None:
+            if cs > 1:  # the pixels of the cells under the crop
+                top, left = y0 // cs, x0 // cs
+                cells = mask[top : -(-y1 // cs), left : -(-x1 // cs)]
+                ink = cells.repeat(cs, 0).repeat(cs, 1)[y0 - top * cs : y1 - top * cs, x0 - left * cs : x1 - left * cs]
+            else:
+                ink = mask[y0:y1, x0:x1]
+            bounds = ink_bounds(ink)
+            if bounds is None:
+                artefact = False
+            else:
+                by0, by1, bx0, bx1 = bounds
+                artefact = _is_artefact(int(ink.sum()), (by1 - by0) * (bx1 - bx0), scale)
+        if artefact:
+            gated.append(i)
+        else:
+            keep.append(i)
+            trims.append(trim)
+    return keep, gated, (trims if cs > 1 and None not in trims else None)
+
+
+def _is_artefact(ink: int, area: int, scale: int) -> bool:
+    """The artefact rule on a crop's trimmed ink: ``ink`` pixels over the
+    trimmed ``area`` (pixels)."""
+    return ink / area > ARTEFACT_FILL_THRESH and area > ARTEFACT_MIN_AREA_CELLS * scale * scale
+
 def _extract_batch(
     pdf: pd.DataFrame,
     detect_orientation: bool = False,
@@ -292,7 +376,7 @@ def _extract_batch(
     )
     # pages are detected a chunk at a time only when detection sees the
     # decoded page itself: orienting or straightening changes it first
-    detect_batch = None if detect_orientation or straighten_pages else _batch_entry(detector)
+    detect_batch = None if detect_orientation or straighten_pages else _model_entry(detector, "batch")
     rows: list = []
     chunk = _DetectChunk(detect_batch, ocr, rows, error_policy, kie)
     for conv_id, turn_idx, role, text, tool, ts in zip(
@@ -314,13 +398,14 @@ def _extract_batch(
     return pd.DataFrame(rows, columns=columns)
 
 
-def _batch_entry(detector):
-    """The detector's batch entry (``plans/models.py`` contract), or None.
-    The entry names its detector in ``single``: a wrapper made with
-    ``functools.wraps`` copies ``batch`` but is not that detector, so its
-    own logic is never skipped."""
-    batch = getattr(detector, "batch", None)
-    return batch if getattr(batch, "single", None) is detector else None
+def _model_entry(model, name):
+    """The model's optional entry ``name`` (the detector's ``batch``, the
+    recognizer's ``cells``: ``plans/models.py`` contracts), or None. An
+    entry names its model in ``single``: a wrapper made with
+    ``functools.wraps`` copies the entry but is not that model, so the
+    wrapper's own logic is never skipped."""
+    entry = getattr(model, name, None)
+    return entry if getattr(entry, "single", None) is model else None
 
 
 # pixel budget of one chunked detection call: the decoded pages the stage
@@ -335,9 +420,10 @@ class _DetectChunk:
     ``add`` queues a turn's pages, flushing the queue first when the turn
     would push its pixel total past ``DETECT_CHUNK_PIXELS`` or has another
     scale. ``flush`` detects every queued page in one ``detect_batch`` call
-    (when the detector has a batch entry), then runs the rest of the OCR
-    chain on each turn inside the turn's own quarantine and writes its row
-    into its slot. Without a batch entry, or when the chunk's call raises,
+    (when the detector has a batch entry; the default one also takes the
+    pages' ink rasters, built here once and handed on to the chain), then
+    runs the rest of the OCR chain on each turn inside the turn's own
+    quarantine and writes its row into its slot. Without a batch entry, or when the chunk's call raises,
     each turn detects its pages one by one, so a failure lands on the turn
     that holds the bad page."""
 
@@ -356,21 +442,30 @@ class _DetectChunk:
 
     def flush(self):
         turns, self.turns, self.pixels = self.turns, [], 0
-        boxes = None
+        boxes = rasters = None
         if turns and self.detect_batch is not None:
+            pages, scale = [p for *_, pages, _ in turns for p in pages], turns[0][3]
             try:
-                boxes = self.detect_batch([p for *_, pages, _ in turns for p in pages], turns[0][3])
+                if self.detect_batch is ink_word_boxes_batch:
+                    # one ink raster per page, for detection and the chain
+                    rasters = [_page_mask(p, scale) for p in pages]
+                    boxes = ink_word_boxes_batch(pages, scale, rasters=rasters)
+                else:
+                    boxes = self.detect_batch(pages, scale)
             except Exception:  # noqa: BLE001 — per-page detection below finds the turn
-                pass
+                boxes = rasters = None
         start = 0
         for slot, turn, pages, scale in turns:
-            page_boxes = None if boxes is None else boxes[start : start + len(pages)]
+            own = slice(start, start + len(pages))
             start += len(pages)
-            kind, out, error = _quarantine(self.error_policy, self._chain, pages, scale, page_boxes)
+            kind, out, error = _quarantine(
+                self.error_policy, self._chain, pages, scale,
+                None if boxes is None else boxes[own], None if rasters is None else rasters[own],
+            )
             self.rows[slot] = _turn_row(*turn, kind, out, error, self.kie)
 
-    def _chain(self, pages, scale, page_boxes):
-        return "ocr", self.ocr(pages, scale, page_boxes=page_boxes)
+    def _chain(self, pages, scale, page_boxes, rasters):
+        return "ocr", self.ocr(pages, scale, page_boxes=page_boxes, rasters=rasters)
 
 
 def _quarantine(error_policy, route, *args):

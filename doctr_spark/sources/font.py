@@ -23,6 +23,11 @@ its grayscale mean is below 128) and ``ink_bounds`` (the trim to the ink
 extent). The artefact gate, the detectors, the recognizers, the
 orientation classifiers and the page statistics all call these two, so
 they cannot disagree on what ink a page holds.
+
+The fused extraction stage masks each page once (one raster per page,
+``plans/pipeline.py``) and reads words straight off the page's cell grid
+with ``read_word_cells``; ``read_word_crop`` masks and trims a pixel crop
+first, then reads its cells through the same memo.
 """
 
 from __future__ import annotations
@@ -232,11 +237,8 @@ def _lut() -> dict[bytes, str]:
 def read_word_crop(crop: np.ndarray, scale: int, unknown: str = UNKNOWN_CHAR) -> str:
     """Decode one word crop: trim white margins, downsample the whole word
     to CELL space once (the trim anchors the cell grid — every rendered
-    ink pixel sits on it), then segment at blank cell runs >= 2 (glyph
-    gaps are exactly CHAR_GAP_CELLS = 2; intra-glyph blanks are <= 1) and
-    match each vertically-trimmed glyph pattern. One scale^2-smaller
-    working set than per-glyph pixel-space matching; misaligned crops
-    (non-grid content) fall back to the pixel-space path.
+    ink pixel sits on it), then read the cells (``read_word_cells``).
+    Misaligned crops (non-grid content) fall back to the pixel-space path.
 
     The crop is sliced from the *original* page, so margins added by the
     detector's unclip expansion are plain white and trim away.
@@ -252,8 +254,18 @@ def read_word_crop(crop: np.ndarray, scale: int, unknown: str = UNKNOWN_CHAR) ->
     h, w = ink.shape
     if scale > 1 and (h % scale or w % scale):
         return _read_word_crop_px(ink, scale, unknown)
+    return read_word_cells(ink[::scale, ::scale].astype(np.uint8), unknown)
 
-    cells = np.ascontiguousarray(ink[::scale, ::scale]).astype(np.uint8)
+
+def read_word_cells(cells: np.ndarray, unknown: str = UNKNOWN_CHAR) -> str:
+    """Decode one word's ink-trimmed 0/1 cell bitmap: segment at blank cell
+    runs >= 2 (glyph gaps are exactly CHAR_GAP_CELLS = 2; intra-glyph
+    blanks are <= 1) and match each vertically-trimmed glyph pattern.
+    ``read_word_crop`` comes here after its trim and downsample; the fused
+    stage comes here straight from the page's cell grid, whose cells under
+    a word box are the same bitmap, so both read through one memo."""
+    if cells.size == 0:
+        return ""
     # word-level memo on the exact trimmed-cell bytes (a few hundred bytes
     # per word, collision-free): corpora repeat words Zipfian-ly, and the
     # per-glyph segment/trim/match loop below is the recognizer's hot loop

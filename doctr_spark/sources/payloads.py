@@ -171,7 +171,11 @@ def read_image(
 
     Mirrors the reference's ``read_img_as_numpy`` (io/image/base.py:16-53):
     cv2.imdecode in BGR, optional bilinear resize to ``output_size``
-    (H, W), optional BGR->RGB swap. Gated: cv2 is not in this container."""
+    (H, W), optional BGR->RGB swap. Like an oversized page bundle, an
+    image whose PNG or JPEG header declares more than MAX_BUNDLE_PIXELS
+    pixels is refused before it decodes, and so is an ``output_size``
+    over the cap; an image of another format is refused after decoding
+    when it holds more. Gated: cv2 is not in this container."""
     try:
         import cv2
     except ImportError as exc:
@@ -179,14 +183,58 @@ def read_image(
             "image decoding requires cv2, which is not installed; "
             "use deterministic page bundles (encode_page_bundle) instead"
         ) from exc
+    if isinstance(output_size, tuple) and output_size[0] * output_size[1] > MAX_BUNDLE_PIXELS:
+        raise ValueError(f"output size {output_size} is over the {MAX_BUNDLE_PIXELS} pixel cap")
+    _check_pixels(_declared_pixels(img_bytes), "image declares")
     img = cv2.imdecode(np.frombuffer(img_bytes, np.uint8), cv2.IMREAD_COLOR)
     if img is None:
         raise ValueError("unable to read file.")
+    _check_pixels(img.shape[0] * img.shape[1], "image decodes to")
     if isinstance(output_size, tuple):
         img = cv2.resize(img, output_size[::-1], interpolation=cv2.INTER_LINEAR)
     if rgb_output:
         img = cv2.cvtColor(img, cv2.COLOR_BGR2RGB)
     return img
+
+
+def _check_pixels(n_pixels: int | None, what: str) -> None:
+    if n_pixels is not None and n_pixels > MAX_BUNDLE_PIXELS:
+        raise ValueError(f"{what} {n_pixels} pixels, over the {MAX_BUNDLE_PIXELS} cap")
+
+
+_PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
+# JPEG markers without a length field: TEM, RST0-7, SOI
+_JPEG_STANDALONE = {0x01, *range(0xD0, 0xD9)}
+# start-of-frame markers (SOF0-SOF15 but DHT, JPG and DAC), whose segment
+# holds the frame's height and width
+_JPEG_SOF = set(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
+
+
+def _declared_pixels(data: bytes) -> int | None:
+    """Width x height that a PNG (IHDR) or JPEG (SOFn) header declares,
+    read without decoding; None for other formats or a cut-off header."""
+    if data[:8] == _PNG_SIGNATURE and data[12:16] == b"IHDR" and len(data) >= 24:
+        width, height = struct.unpack(">II", data[16:24])
+        return width * height
+    if data[:2] != b"\xff\xd8":
+        return None
+    off = 2
+    while off + 4 <= len(data) and data[off] == 0xFF:
+        marker = data[off + 1]
+        if marker == 0xFF:  # fill byte
+            off += 1
+        elif marker in _JPEG_STANDALONE:
+            off += 2
+        elif marker in _JPEG_SOF:
+            if off + 9 > len(data):
+                return None
+            height, width = struct.unpack(">HH", data[off + 5 : off + 9])
+            return width * height
+        elif marker in (0xD9, 0xDA):  # end of image or start of scan: no frame header
+            return None
+        else:
+            off += 2 + struct.unpack(">H", data[off + 2 : off + 4])[0]
+    return None
 
 
 def to_grayscale(img: np.ndarray) -> np.ndarray:

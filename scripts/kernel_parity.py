@@ -7,7 +7,7 @@ Usage:
 
 ``run`` imports ``doctr_spark`` from CHECKOUT and runs
 ``plans.pipeline._extract_batch`` in batches of 1,000 rows, with kie off
-and with kie on, over four inputs, so every model path and every route is
+and with kie on, over five inputs, so every model path and every route is
 covered:
 
 - ``mixed``: the first file of the first ``mixed`` input, default models;
@@ -20,10 +20,17 @@ covered:
   over stub bytes, an envelope whose ``b64`` does not decode, and empty
   and null text;
 - ``ocr_chunks``: every page-bundle row of the ``mixed`` file as one batch,
-  whose pages span many of the fused stage's detection chunks.
+  whose pages span many of the fused stage's detection chunks;
+- ``cut_cells``: the same rows through ``cut_cells_detector``, which trims
+  every other default box to one pixel inside its ink on each side, so
+  those crops cut inked cells and the artefact gate and the recognizer
+  take their pixel paths on an aligned page. (Shrinking a default box by
+  a pixel would not do it: its dilation and unclip margin keeps at least
+  three blank cells around the ink.)
 
 The extra rows are built from the cached input with the standard library
-only, so both checkouts see the same bytes. It pickles the eight frames,
+only, and the detector with numpy only, so both checkouts see the same
+bytes and boxes. It pickles the ten frames,
 keyed ``(input, kie)``, to OUT. ``compare``
 checks that two such files hold the same keys and, per key, frames that
 ``DataFrame.equals`` each other with the same column order and dtypes; it
@@ -95,6 +102,23 @@ def _every_route(mixed):
     return pd.DataFrame(rows, columns=list(mixed.columns))
 
 
+def cut_cells_detector(page, scale):
+    """The default detector's boxes, every other one trimmed to one pixel
+    inside its ink extent on each side (see the module docstring)."""
+    import numpy as np
+
+    from doctr_spark.operators.detection import ink_word_boxes
+
+    boxes = ink_word_boxes(page, scale).copy()
+    h, w = page.shape[:2]
+    for box in boxes[::2]:
+        x0, y0, x1, y1 = np.round(box[:4] * [w, h, w, h]).astype(np.int64).tolist()
+        ys, xs = np.nonzero(page[y0:y1, x0:x1] < 128)
+        if len(ys):
+            box[:4] = [(x0 + xs.min() + 1) / w, (y0 + ys.min() + 1) / h, (x0 + xs.max()) / w, (y0 + ys.max()) / h]
+    return boxes
+
+
 def run(checkout: str, out: str, inputs: str) -> None:
     sys.path.insert(0, os.path.abspath(checkout))
     import pandas as pd
@@ -109,11 +133,13 @@ def run(checkout: str, out: str, inputs: str) -> None:
         "recognizer": resolve_model(*onnx_recognizer(ONNX_RECO_PATH)),
     }
     mixed = pd.read_parquet(_input_files(inputs, "mixed")[0])
+    bundles = mixed[[_bundle(t) is not None for t in mixed["tool"]]].reset_index(drop=True)
     batches = {
         "mixed": (mixed, {}),
         "ocr_onnx": (pd.concat([pd.read_parquet(f) for f in _input_files(inputs, "ocr_onnx")], ignore_index=True), onnx),
         "every_route": (_every_route(mixed), {}),
-        "ocr_chunks": (mixed[[_bundle(t) is not None for t in mixed["tool"]]].reset_index(drop=True), {}),
+        "ocr_chunks": (bundles, {}),
+        "cut_cells": (bundles, {"detector": cut_cells_detector}),
     }
     frames = {}
     for name, (pdf, models) in batches.items():

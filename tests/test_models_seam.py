@@ -9,6 +9,7 @@ lifecycle)."""
 from __future__ import annotations
 
 import os
+import struct
 import sys
 import types
 
@@ -216,14 +217,9 @@ def test_read_pdf_pages_refuses_oversized_document_before_rendering(monkeypatch)
     assert big._state["render_kwargs"] == [] and big._state["closed"] is True
 
 
-def test_read_image_wiring_via_stub(monkeypatch):
-    from doctr_spark.sources import payloads
-
-    decoded_bgr = np.dstack(
-        [np.full((5, 7), v, dtype=np.uint8) for v in (10, 20, 30)]  # B,G,R planes
-    )
-    calls = {}
-
+def _fake_cv2(decoded_bgr, calls):
+    """Stub cv2 module: imdecode returns ``decoded_bgr``; every call is
+    recorded in ``calls``."""
     fake = types.ModuleType("cv2")
     fake.IMREAD_COLOR = 1
     fake.INTER_LINEAR = 1
@@ -242,6 +238,17 @@ def test_read_image_wiring_via_stub(monkeypatch):
         return img[..., ::-1]
 
     fake.imdecode, fake.resize, fake.cvtColor = imdecode, resize, cvtColor
+    return fake
+
+
+def test_read_image_wiring_via_stub(monkeypatch):
+    from doctr_spark.sources import payloads
+
+    decoded_bgr = np.dstack(
+        [np.full((5, 7), v, dtype=np.uint8) for v in (10, 20, 30)]  # B,G,R planes
+    )
+    calls = {}
+    fake = _fake_cv2(decoded_bgr, calls)
     monkeypatch.setitem(sys.modules, "cv2", fake)
 
     out = payloads.read_image(b"\x89PNG-fake", output_size=(4, 6))
@@ -249,6 +256,41 @@ def test_read_image_wiring_via_stub(monkeypatch):
     assert calls["resize"] == (6, 4)  # cv2 takes (W, H); output_size is (H, W)
     assert calls["cvt"] == fake.COLOR_BGR2RGB
     assert out[0, 0, 0] == 30  # RGB order after the swap
+
+
+def _png_header(width, height):
+    return b"\x89PNG\r\n\x1a\n" + struct.pack(">I4sIIBBBBB", 13, b"IHDR", width, height, 8, 2, 0, 0, 0)
+
+
+def _jpeg_header(width, height):
+    """SOI, an APP0 segment, then a baseline SOF0 frame header."""
+    app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + bytes(9)
+    return b"\xff\xd8" + app0 + b"\xff\xc0" + struct.pack(">HBHHB", 17, 8, height, width, 3) + bytes(9)
+
+
+def test_read_image_refuses_oversized_images_before_decoding(monkeypatch):
+    """A PNG or JPEG whose header declares more than MAX_BUNDLE_PIXELS
+    pixels, or an ``output_size`` over the cap, is refused without calling
+    imdecode; headers at the cap, and bytes of another format, decode.
+    An image of another format that decodes past the cap is refused."""
+    from doctr_spark.sources import payloads
+
+    cap = payloads.MAX_BUNDLE_PIXELS
+    assert 4096 * 4096 == cap
+    calls = {}
+    monkeypatch.setitem(sys.modules, "cv2", _fake_cv2(np.zeros((5, 7, 3), dtype=np.uint8), calls))
+    for bomb in (_png_header(4096, 4097), _jpeg_header(4097, 4096), _png_header(2**31, 2**31)):
+        with pytest.raises(ValueError, match="over the 16777216 cap"):
+            payloads.read_image(bomb)
+    with pytest.raises(ValueError, match="over the 16777216 pixel cap"):
+        payloads.read_image(_png_header(7, 5), output_size=(4097, 4096))
+    assert "imdecode" not in calls
+    for fits in (_png_header(4096, 4096), _jpeg_header(4096, 4096), b"BM-other-format"):
+        assert payloads.read_image(fits).shape == (5, 7, 3)
+        assert calls.pop("imdecode")[0] == fits
+    monkeypatch.setitem(sys.modules, "cv2", _fake_cv2(np.zeros((4097, 4096, 3), dtype=np.uint8), calls))
+    with pytest.raises(ValueError, match="image decodes to 16781312 pixels"):
+        payloads.read_image(b"BM-other-format")
 
 
 def test_decoders_raise_not_implemented_when_libs_absent():

@@ -15,6 +15,7 @@ import pytest
 
 from doctr_spark.operators.detection import ink_word_boxes, ink_word_boxes_batch
 from doctr_spark.plans import pipeline
+from doctr_spark.plans.models import DEFAULT_RECOGNIZER, resolve_model
 from doctr_spark.plans.pipeline import _extract_batch
 from doctr_spark.sources.corpus import TRANSCRIPT_SCHEMA, make_transcripts_pdf
 from doctr_spark.sources.font import DEFAULT_SCALE, render_page
@@ -117,14 +118,37 @@ def test_wrapped_detector_does_not_inherit_the_batch_entry():
         return ink_word_boxes(img, scale)[:1]
 
     assert first_box_only.batch is ink_word_boxes_batch
-    assert pipeline._batch_entry(first_box_only) is None
-    assert pipeline._batch_entry(ink_word_boxes) is ink_word_boxes_batch
+    assert pipeline._model_entry(first_box_only, "batch") is None
+    assert pipeline._model_entry(ink_word_boxes, "batch") is ink_word_boxes_batch
     out = _extract_batch(batch, detector=first_box_only)
 
     def plain(img, scale):
         return first_box_only(img, scale)
 
     assert out.equals(_extract_batch(batch, detector=plain))
+    assert not out.equals(_extract_batch(batch))
+
+
+def test_wrapped_recognizer_does_not_inherit_the_cells_entry():
+    """A ``functools.wraps`` wrapper copies ``cells`` from the default
+    recognizer; the stage must still call the wrapper on pixel crops, so
+    the wrapper's own logic is never skipped."""
+    batch = _every_route_batch()
+    recognizer = resolve_model(*DEFAULT_RECOGNIZER)
+
+    @functools.wraps(recognizer)
+    def lowercase(crops, scale):
+        return [(text.lower(), conf) for text, conf in recognizer(crops, scale)]
+
+    assert lowercase.cells is recognizer.cells
+    assert pipeline._model_entry(lowercase, "cells") is None
+    assert pipeline._model_entry(recognizer, "cells") is recognizer.cells
+    out = _extract_batch(batch, recognizer=lowercase)
+
+    def plain(crops, scale):
+        return lowercase(crops, scale)
+
+    assert out.equals(_extract_batch(batch, recognizer=plain))
     assert not out.equals(_extract_batch(batch))
 
 
