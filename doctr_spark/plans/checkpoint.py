@@ -60,7 +60,10 @@ def _commit(
     spark: SparkSession, transcripts: DataFrame, out_dir: str, buckets: int, chunk: list[int]
 ) -> None:
     """Extract and commit the buckets in ``chunk``: results first, then one
-    manifest row per bucket, so a manifest row always names committed files."""
+    manifest row per bucket, so a manifest row always names committed files.
+    Each step names its jobs (``setJobDescription``) for the UI and event
+    log; ``run_extraction_checkpointed`` gives the caller's name back."""
+    label = f"checkpoint {out_dir}: " + (f"bucket {chunk[0]}" if len(chunk) == 1 else f"{len(chunk)} buckets")
     results_dir = os.path.join(out_dir, "results")
     # a prior failed run may have left partition dirs for un-manifested
     # buckets; dynamic overwrite only rewrites partitions present in the NEW
@@ -72,6 +75,7 @@ def _commit(
         shutil.rmtree(os.path.join(results_dir, f"bucket={b}"), ignore_errors=True)
     part = with_bucket(transcripts, buckets).filter(F.col("bucket").isin(chunk)).drop("bucket")
     res = with_bucket(extract_turns(part), buckets)
+    spark.sparkContext.setJobDescription(f"{label}: write results")
     (
         # co-locate each bucket before the partitioned write via an
         # AQE REBALANCE on the bucket key: one shuffle of slim
@@ -94,6 +98,7 @@ def _commit(
         .partitionBy("bucket")
         .parquet(results_dir)
     )
+    spark.sparkContext.setJobDescription(f"{label}: aggregate manifest metrics")
     metrics = {
         r["bucket"]: tuple(r)[1:]
         for r in spark.read.schema(_METRIC_SCHEMA).parquet(results_dir)
@@ -116,6 +121,7 @@ def _commit(
     # rows in a pandas frame reach the JVM as Arrow; a plain list would add a
     # Python-worker stage to every append (about 0.3 s on a 4-core box).
     # One manifest file per commit.
+    spark.sparkContext.setJobDescription(f"{label}: append manifest")
     spark.createDataFrame(pd.DataFrame(rows), MANIFEST_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(os.path.join(out_dir, "manifest"))
@@ -138,13 +144,20 @@ def run_extraction_checkpointed(
     one pass, and a mid-job failure just leaves un-manifested partition
     dirs that the next run clears and rewrites. Per-bucket mode keeps the
     finest retry/lineage granularity (each bucket commits independently).
-    Returns a summary dict.
+    Returns a summary dict. Its Spark jobs are named after their step and
+    ``out_dir``; the caller's job description is restored afterwards.
     """
-    done = completed_buckets(spark, os.path.join(out_dir, "manifest"))
-    todo = [b for b in range(buckets) if b not in done][:max_buckets_this_run]
-    for chunk in [todo] if grouped else [[b] for b in todo]:
-        if chunk:
-            _commit(spark, transcripts, out_dir, buckets, chunk)
+    sc = spark.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
+    try:
+        sc.setJobDescription(f"checkpoint {out_dir}: read manifest")
+        done = completed_buckets(spark, os.path.join(out_dir, "manifest"))
+        todo = [b for b in range(buckets) if b not in done][:max_buckets_this_run]
+        for chunk in [todo] if grouped else [[b] for b in todo]:
+            if chunk:
+                _commit(spark, transcripts, out_dir, buckets, chunk)
+    finally:
+        sc.setJobDescription(caller)
     return {"processed": todo, "skipped": sorted(done), "remaining": buckets - len(done) - len(todo)}
 
 

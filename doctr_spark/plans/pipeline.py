@@ -37,6 +37,15 @@ recognizer reads each kept word's trimmed cells off it through its
 ``cells`` entry, so no crop is masked again. Custom recognizers, and
 pages or boxes the cell grid cannot describe, get pixel crops as before.
 
+Fixed cost per task: the stage function calls ``prepare_worker``
+(``plans/worker.py``) after its models resolve. Once per Python worker it
+makes ``zipimport`` re-read an archive on PySpark's per-task
+``importlib.invalidate_caches()`` only when the archive changed (on Python
+3.11 every task re-read ``pyspark.zip``, py4j and the spark-core jar:
+0.13-0.42 s per task in ``scripts/fixed_cost.py`` on 4 cores), and freezes
+the warm heap so the daemon's per-task ``gc.collect()`` skips it (35-81 ms
+there). Outputs are unchanged; only reused workers gain.
+
 What counts as ink is one rule, ``sources/font.py``'s ``ink_mask`` and
 ``ink_bounds``: the artefact gate here, the detectors, the recognizers and
 the orientation classifiers all call it, so they agree on every page.
@@ -79,6 +88,7 @@ from .models import (
     ModelLoader,
     resolve_model,
 )
+from .worker import prepare_worker
 
 EXTRACT_SCHEMA = (
     "conv_id string, turn_idx int, role string, ts timestamp, payload_kind string, "
@@ -603,6 +613,7 @@ def extract_turns(
         det = resolve_model(det_key, det_loader)
         rec = resolve_model(rec_key, rec_loader)
         ori = resolve_model(orient_key, orient_loader) if detect_orientation else None
+        prepare_worker()
         for pdf in batches:
             if len(pdf):
                 yield _extract_batch(

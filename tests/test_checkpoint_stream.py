@@ -657,3 +657,38 @@ def test_read_extraction_results_of_an_all_empty_run(spark, corpus, tmp_path_fac
     assert full.count() == inp.count()
     assert empty.dtypes == full.dtypes
     assert completed_buckets(spark, f"{empty_out}/manifest") == {0, 1, 2, 3}
+
+
+def test_checkpoint_names_its_jobs(spark, corpus, tmp_path_factory):
+    """Each checkpoint step names its Spark jobs (read through the JVM
+    status store, as the UI and event log see them), and the caller's job
+    description is back in place afterwards."""
+    inp = corpus.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    out = str(tmp_path_factory.mktemp("ckpt_named"))
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def jobs():
+        seq = store.jobsList(None)
+        described = {}
+        for i in range(seq.size()):
+            job = seq.apply(i)
+            described[job.jobId()] = job.description().get() if job.description().isDefined() else None
+        return described
+
+    before = set(jobs())
+    sc.setJobDescription("caller's job")
+    try:
+        run_extraction_checkpointed(spark, inp, out, buckets=2, grouped=True)
+        assert sc.getLocalProperty("spark.job.description") == "caller's job"
+        # a resume reads the manifest the first run wrote, and commits nothing
+        assert run_extraction_checkpointed(spark, inp, out, buckets=2, grouped=True)["processed"] == []
+        assert sc.getLocalProperty("spark.job.description") == "caller's job"
+    finally:
+        sc.setJobDescription(None)
+    names = [name for job, name in jobs().items() if job not in before]
+    label = f"checkpoint {out}: "
+    assert names and all(name.startswith(label) for name in names), names
+    steps = {name[len(label):] for name in names}
+    assert {"read manifest", "2 buckets: write results", "2 buckets: aggregate manifest metrics",
+            "2 buckets: append manifest"} <= steps, steps
