@@ -27,15 +27,30 @@ def quads_to_straight(quads: np.ndarray) -> np.ndarray:
 
 def convex_hull(points: np.ndarray) -> np.ndarray:
     """(N,2) points -> counter-clockwise convex hull (Andrew monotone
-    chain; no scipy/cv2 in this container)."""
-    pts = np.unique(np.asarray(points, dtype=np.float64).reshape(-1, 2), axis=0)
+    chain; no scipy/cv2 in this container).
+
+    Only the lowest and highest point of each column (each x) can be a
+    hull vertex, so the chain runs over those alone: a pixel blob of N
+    points costs twice its width, not N. The turn test runs on Python
+    floats, the same float64 arithmetic as ``np.cross`` at a fraction of
+    its per-call cost."""
+    pts = np.asarray(points, dtype=np.float64).reshape(-1, 2)
+    # the distinct points in (x, y) order, as np.unique(axis=0) gives them
+    # at a fraction of its sort cost; each column is a run of rising y
+    pts = pts[np.lexsort((pts[:, 1], pts[:, 0]))]
+    pts = pts[np.concatenate(([True], (pts[1:] != pts[:-1]).any(axis=1)))[: len(pts)]]
     if len(pts) <= 2:
         return pts
-    # lexicographic sort is given by np.unique
-    def half(iterable):
-        chain: list[np.ndarray] = []
-        for p in iterable:
-            while len(chain) >= 2 and np.cross(chain[-1] - chain[-2], p - chain[-2]) <= 0:
+    new_x = pts[1:, 0] != pts[:-1, 0]
+    pts = pts[np.concatenate(([True], new_x)) | np.concatenate((new_x, [True]))].tolist()
+
+    def half(points):
+        chain: list[list[float]] = []
+        for p in points:
+            while len(chain) >= 2:
+                (ox, oy), (ax, ay) = chain[-2], chain[-1]
+                if (ax - ox) * (p[1] - oy) - (ay - oy) * (p[0] - ox) > 0:
+                    break
                 chain.pop()
             chain.append(p)
         return chain

@@ -120,6 +120,14 @@ def from_hub(repo_id: str, cache_dir: str | None = None) -> ModelLoader:
     if not cfg.get("weights"):
         raise FileNotFoundError(f"hub repo {repo_id!r} config.json has no 'weights' entry")
     weights = os.path.join(repo_dir, cfg["weights"])
+    # the entry names a file inside the repo: no absolute path, and no
+    # directory part that resolves outside it. The file itself may be a
+    # symlink, as every snapshot file of the HF cache is one into blobs/
+    root = os.path.realpath(repo_dir)
+    if os.path.isabs(cfg["weights"]) or os.path.commonpath(
+        [root, os.path.realpath(os.path.dirname(weights))]
+    ) != root:
+        raise ValueError(f"hub repo {repo_id!r} weights entry {cfg['weights']!r} is outside the repo")
     if not os.path.isfile(weights):
         raise FileNotFoundError(f"hub repo {repo_id!r} weights missing: {weights}")
     if fmt == "onnx":

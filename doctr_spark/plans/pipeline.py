@@ -8,25 +8,23 @@ or DOM-strip for HTML, or identity for plain text) -> window-ordered
 output.
 
 Per turn the stage runs one straight path (``_extract_batch``): parse the
-tool envelope and route by payload kind (``_route_turn``; the OCR chain is
-bound to its models and flags once per batch) inside ONE quarantine, so
-under ``error_policy='capture'`` any failure, a malformed envelope
-included, becomes a payload_kind='error' row; then ``_turn_row`` builds
-the output row from the route result.
+tool envelope and route by payload kind (``_route_turn``) inside ONE
+quarantine, so under ``error_policy='capture'`` any failure, a malformed
+envelope included, becomes a payload_kind='error' row; then ``_turn_row``
+builds the output row from the route result.
 
-Page bundles are detected a chunk at a time (``_DetectChunk``). A
-page-bundle turn is only decoded in its turn; its pages queue until the
-next turn would push the queue past ``DETECT_CHUNK_PIXELS``, and at the
-end of the batch. Then, when the detector has a batch entry
-(``plans/models.py``; the default ink-fuse detector does) and neither
-orientation nor straightening changes pages first, one detection call
-labels every queued page; otherwise each page is detected on its own.
-The rest of the chain runs on each queued turn inside that turn's own
-quarantine, its row written into the turn's slot. Output rows, their
-order and their error messages are those of detecting page by page; if
-the chunk's call raises, each turn falls back to per-page detection. The
-cap bounds the decoded pages a worker holds, whatever the Arrow batch
-size. The PDF and image routes detect one page per call.
+Every OCR page takes one path. The route decodes a page bundle, PDF or
+image and turns its pages upright (``_upright``: orientation, then
+straightening, when asked for), so a failure there becomes the turn's
+error row. The upright pages queue in ``_DetectChunk`` until the next turn
+would push the queue past ``DETECT_CHUNK_PIXELS``, and at the end of the
+batch. Then one detection call labels every queued page when the detector
+has a batch entry (``plans/models.py``; the default one does), else each
+page is detected on its own. The rest of the chain runs on each queued
+turn inside its own quarantine. Rows, their order and their error messages
+are those of detecting page by page; if the chunk's call raises, each turn
+falls back to per-page detection. The cap bounds the decoded pages a
+worker holds, whatever the Arrow batch size.
 
 One ink raster per page: a page's ink mask, and its cell grid when its ink
 lies on the renderer's s x s cells (``detection._page_mask``), is built
@@ -79,6 +77,7 @@ from ..functions.render import PAGE_SEP, document_render_agg
 from ..operators.builder import build_page
 from ..operators.detection import _page_mask, ink_word_boxes_batch
 from ..operators.geometry import extract_crops, to_absolute
+from ..operators.orientation import estimate_skew_angle, rotate_page, rotate_page_float
 from ..sources.font import DEFAULT_SCALE, ink_bounds
 from ..sources.payloads import decode_page_bundle, parse_tool_envelope
 from .models import (
@@ -172,20 +171,10 @@ def extract_pages_ocr(
     rasters: list[tuple[np.ndarray, int]] | None = None,
 ) -> tuple:
     """OCR chain over already-decoded grayscale pages (the shared core of
-    the bundle / PDF / image payload routes). ``orienter`` follows the
-    OrientationPredictor contract ((page, scale) -> quarter turns); like
-    detector/recognizer it is a pluggable model instance.
-
-    ``straighten_pages`` mirrors the reference's non-straight path
-    (models/predictor/base.py:91-113, predictor/pytorch.py:97-103): the
-    fine skew angle is estimated from the page's merged text-line
-    geometry (the seg-map analog of the first detection pass), the page
-    is rotated by that float angle when it exceeds ``straighten_min_angle``
-    degrees, and detection runs on the straightened page — the second
-    pass. Geometry recovery is golden-tested; note that with the
-    deterministic glyph-matcher recognizer, resampled glyphs decode
-    exactly only when the cell grid survives (quarter turns); a real CRNN
-    through the model seam is the tolerant path for float skews.
+    the bundle / PDF / image payload routes). The pages are first turned
+    upright by ``_upright`` (``detect_orientation``, ``orienter``,
+    ``straighten_pages``, ``straighten_min_angle``); the fused stage does
+    that in each turn's route and calls this with the flags off.
 
     ``kie``: the KIE predictor route (reference models/kie_predictor/
     pytorch.py:69-182) — the SAME det/reco chain, but each page's words go
@@ -203,19 +192,18 @@ def extract_pages_ocr(
     One ink raster per page: ``rasters`` holds each page's
     ``detection._page_mask`` (its ink cells when the page is aligned, else
     its pixel ink mask), when the caller has built them for the default
-    detector's batch entry; otherwise each page's raster is built here,
-    after orientation and straightening. The artefact gate
-    (``_ink_gate``) reads every crop's ink off that raster, and a
-    recognizer with a ``cells`` entry (``plans/models.py``; the default
-    one has it) reads each kept word's trimmed cells off it too, on an
-    aligned page whose kept boxes cut no inked cell. Every other
-    recognizer and page gets the pixel crops of ``extract_crops``."""
+    detector's batch entry; otherwise each upright page's raster is built
+    here. The artefact gate (``_ink_gate``) reads every crop's ink off
+    that raster, and a recognizer with a ``cells`` entry
+    (``plans/models.py``; the default one has it) reads each kept word's
+    trimmed cells off it too, on an aligned page whose kept boxes cut no
+    inked cell. Every other recognizer and page gets the pixel crops of
+    ``extract_crops``."""
     if detector is None:
         detector = resolve_model(*DEFAULT_DETECTOR)
     if recognizer is None:
         recognizer = resolve_model(*DEFAULT_RECOGNIZER)
-    if orienter is None and detect_orientation:
-        orienter = resolve_model(*DEFAULT_ORIENTATION)
+    pages = _upright(pages, scale, detect_orientation, orienter, straighten_pages, straighten_min_angle)
     read_cells = _model_entry(recognizer, "cells")
     page_texts: list[str] = []
     words_out: list[dict] = []
@@ -226,16 +214,6 @@ def extract_pages_ocr(
     n_artefacts = 0
     min_conf = 1.0
     for page_idx, img in enumerate(pages):
-        if detect_orientation:
-            from ..operators.orientation import rotate_page
-
-            img = rotate_page(img, orienter(img, scale))
-        if straighten_pages:
-            from ..operators.orientation import estimate_skew_angle, rotate_page_float
-
-            angle = estimate_skew_angle(img, scale)
-            if abs(angle) >= straighten_min_angle:
-                img = rotate_page_float(img, angle)
         boxes = detector(img, scale) if page_boxes is None else page_boxes[page_idx]
         for hook in detection_hooks or ():
             boxes = hook(boxes)
@@ -297,6 +275,36 @@ def extract_pages_ocr(
     if kie:
         return base + (kie_preds, PAGE_SEP.join(kie_page_texts))
     return base
+
+
+def _upright(pages, scale, detect_orientation, orienter, straighten_pages, straighten_min_angle=1.0):
+    """The pages turned upright, each in turn. With ``detect_orientation``
+    a page takes the quarter turns of ``orienter`` (the OrientationPredictor
+    contract, (page, scale) -> quarter turns; the default one when None).
+
+    ``straighten_pages`` mirrors the reference's non-straight path
+    (models/predictor/base.py:91-113, predictor/pytorch.py:97-103): a page
+    whose skew angle, estimated from its merged text-line geometry (the
+    seg-map analog of the first detection pass), reaches
+    ``straighten_min_angle`` degrees is rotated by it, and detection runs
+    on the straightened page, the second pass. With the glyph-matcher
+    recognizer, resampled glyphs decode exactly only when the cell grid
+    survives (quarter turns); a real CRNN through the model seam is the
+    tolerant path for float skews."""
+    if not (detect_orientation or straighten_pages):
+        return pages
+    if orienter is None and detect_orientation:
+        orienter = resolve_model(*DEFAULT_ORIENTATION)
+    upright = []
+    for img in pages:
+        if detect_orientation:
+            img = rotate_page(img, orienter(img, scale))
+        if straighten_pages:
+            angle = estimate_skew_angle(img, scale)
+            if abs(angle) >= straighten_min_angle:
+                img = rotate_page_float(img, angle)
+        upright.append(img)
+    return upright
 
 
 def _ink_gate(raster, px, scale):
@@ -380,25 +388,20 @@ def _extract_batch(
     if detector is None:
         detector = resolve_model(*DEFAULT_DETECTOR)
     # bound per batch, not at import, so a wrapped extract_pages_ocr counts
-    ocr = partial(
-        extract_pages_ocr, detect_orientation=detect_orientation, detector=detector,
-        recognizer=recognizer, orienter=orienter, straighten_pages=straighten_pages, kie=kie,
-    )
-    # pages are detected a chunk at a time only when detection sees the
-    # decoded page itself: orienting or straightening changes it first
-    detect_batch = None if detect_orientation or straighten_pages else _model_entry(detector, "batch")
+    ocr = partial(extract_pages_ocr, detector=detector, recognizer=recognizer, kie=kie)
+    upright = partial(_upright, detect_orientation=detect_orientation, orienter=orienter, straighten_pages=straighten_pages)
     rows: list = []
-    chunk = _DetectChunk(detect_batch, ocr, rows, error_policy, kie)
+    chunk = _DetectChunk(_model_entry(detector, "batch"), ocr, rows, error_policy, kie)
     for conv_id, turn_idx, role, text, tool, ts in zip(
         pdf["conv_id"], pdf["turn_idx"], pdf["role"], pdf["text"], pdf["tool"], pdf["ts"]
     ):
         turn = (conv_id, turn_idx, role, ts, text)
         try:
-            kind, out, error = _quarantine(error_policy, _route_turn, tool, text, ocr)
+            kind, out, error = _quarantine(error_policy, _route_turn, tool, text, upright)
         except Exception:
             chunk.flush()  # an earlier queued turn's failure is raised first
             raise
-        if kind == "bundle":
+        if kind == "pages":
             chunk.add(len(rows), turn, *out)
             rows.append(None)
         else:
@@ -425,7 +428,7 @@ DETECT_CHUNK_PIXELS = 1 << 21
 
 
 class _DetectChunk:
-    """Decoded page-bundle turns waiting for detection.
+    """Upright OCR turns waiting for detection.
 
     ``add`` queues a turn's pages, flushing the queue first when the turn
     would push its pixel total past ``DETECT_CHUNK_PIXELS`` or has another
@@ -433,9 +436,9 @@ class _DetectChunk:
     (when the detector has a batch entry; the default one also takes the
     pages' ink rasters, built here once and handed on to the chain), then
     runs the rest of the OCR chain on each turn inside the turn's own
-    quarantine and writes its row into its slot. Without a batch entry, or when the chunk's call raises,
-    each turn detects its pages one by one, so a failure lands on the turn
-    that holds the bad page."""
+    quarantine and writes its row into its slot. Without a batch entry, or
+    when the chunk's call raises, each turn detects its pages one by one,
+    so a failure lands on the turn that holds the bad page."""
 
     def __init__(self, detect_batch, ocr, rows, error_policy, kie):
         self.detect_batch, self.ocr, self.rows = detect_batch, ocr, rows
@@ -491,24 +494,21 @@ def _quarantine(error_policy, route, *args):
         return "error", "", f"{type(exc).__name__}: {exc}"[:500]
 
 
-def _route_turn(tool, text, ocr):
+def _route_turn(tool, text, upright):
     """Parse one turn's envelope and dispatch by payload kind; returns
-    (kind, out) where the 'ocr' out is the ``extract_pages_ocr`` tuple and
-    html/plain outs are text. ``ocr`` is the chain bound to the batch's
-    models and flags. A page bundle is only decoded here: kind 'bundle',
-    out (pages, scale), for the stage's detection chunk."""
-    payload = parse_tool_envelope(tool) if tool else None
-    if payload is not None and payload[0] == "page_bundle":
-        return "bundle", decode_page_bundle(payload[1])
-    if payload is not None and payload[0] in ("pdf", "image"):
-        # real-world payloads: rasterize/decode (env-gated libs), fold
-        # to grayscale, then the same OCR chain
+    (kind, out). A page bundle is decoded, a PDF or image rasterized by its
+    env-gated library and folded to grayscale, and the pages turned upright
+    by ``upright`` (the batch's ``_upright``): kind 'pages', out (pages,
+    scale), for the stage's detection chunk. html/plain outs are text."""
+    kind, blob = (parse_tool_envelope(tool) if tool else None) or (None, None)
+    if kind == "page_bundle":
+        pages, scale = decode_page_bundle(blob)
+        return "pages", (upright(pages, scale), scale)
+    if kind in ("pdf", "image"):
         from ..sources.payloads import read_image, read_pdf_pages, to_grayscale
 
-        raw_pages = (
-            read_pdf_pages(payload[1]) if payload[0] == "pdf" else [read_image(payload[1])]
-        )
-        return "ocr", ocr([to_grayscale(p) for p in raw_pages], DEFAULT_SCALE)
+        raw_pages = read_pdf_pages(blob) if kind == "pdf" else [read_image(blob)]
+        return "pages", (upright([to_grayscale(p) for p in raw_pages], DEFAULT_SCALE), DEFAULT_SCALE)
     if text and looks_like_html(text):
         return "html", extract_main_text(text)
     return "plain", text or ""
@@ -592,7 +592,7 @@ def extract_turns(
     fail the job; 'raise' propagates (strict/debug).
     ``straighten_pages``: estimate each page's float skew angle from its
     merged line geometry and re-run detection on the de-skewed page
-    (reference predictor straighten_pages path; see extract_pages_ocr).
+    (reference predictor straighten_pages path; see ``_upright``).
     ``kie``: the kie_predictor entry point (reference models/
     kie_predictor/pytorch.py:69-182) — the output gains ``predictions``
     (map class -> reading-ordered Prediction structs, per-class detection

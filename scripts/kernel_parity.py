@@ -7,7 +7,7 @@ Usage:
 
 ``run`` imports ``doctr_spark`` from CHECKOUT and runs
 ``plans.pipeline._extract_batch`` in batches of 1,000 rows, with kie off
-and with kie on, over five inputs, so every model path and every route is
+and with kie on, over six inputs, so every model path and every route is
 covered:
 
 - ``mixed``: the first file of the first ``mixed`` input, default models;
@@ -27,10 +27,13 @@ covered:
   take their pixel paths on an aligned page. (Shrinking a default box by
   a pixel would not do it: its dilation and unclip margin keeps at least
   three blank cells around the ink.)
+- ``upright``: the first 40 page-bundle rows of the ``mixed`` file, every
+  other one re-encoded with its pages turned one, two or three quarter
+  turns, run with ``detect_orientation=True, straighten_pages=True``.
 
 The extra rows are built from the cached input with the standard library
-only, and the detector with numpy only, so both checkouts see the same
-bytes and boxes. It pickles the ten frames,
+and ``np.rot90`` only, and the detector with numpy only, so both
+checkouts see the same bytes and boxes. It pickles the twelve frames,
 keyed ``(input, kie)``, to OUT. ``compare``
 checks that two such files hold the same keys and, per key, frames that
 ``DataFrame.equals`` each other with the same column order and dtypes; it
@@ -51,6 +54,7 @@ import os
 import pickle
 import struct
 import sys
+import zlib
 
 BATCH_ROWS = 1000
 
@@ -102,6 +106,31 @@ def _every_route(mixed):
     return pd.DataFrame(rows, columns=list(mixed.columns))
 
 
+def _quarter_turned(tool: str, k: int) -> str:
+    """A page-bundle envelope re-encoded with each page turned ``k``
+    quarter turns (``np.rot90``), in the bundle layout: the 8-byte header,
+    then per page ``>HHI`` (h, w, blob length) and its zlib stream."""
+    import numpy as np
+
+    data = _bundle(tool)
+    parts, off = [data[:8]], 8
+    for _ in range(struct.unpack(">BHB", data[4:8])[1]):
+        h, w, n = struct.unpack(">HHI", data[off : off + 8])
+        page = np.frombuffer(zlib.decompress(data[off + 8 : off + 8 + n]), np.uint8).reshape(h, w)
+        turned = np.ascontiguousarray(np.rot90(page, k))
+        blob = zlib.compress(turned.tobytes(), 6)
+        parts += [struct.pack(">HHI", *turned.shape, len(blob)), blob]
+        off += 8 + n
+    return _envelope("page_bundle", b"".join(parts))
+
+
+def _upright(bundles):
+    """The first 40 page-bundle rows, every other one quarter-turned."""
+    rows = bundles.iloc[:40].copy()
+    rows["tool"] = [_quarter_turned(t, 1 + i // 2 % 3) if i % 2 else t for i, t in enumerate(rows["tool"])]
+    return rows
+
+
 def cut_cells_detector(page, scale):
     """The default detector's boxes, every other one trimmed to one pixel
     inside its ink extent on each side (see the module docstring)."""
@@ -140,13 +169,14 @@ def run(checkout: str, out: str, inputs: str) -> None:
         "every_route": (_every_route(mixed), {}),
         "ocr_chunks": (bundles, {}),
         "cut_cells": (bundles, {"detector": cut_cells_detector}),
+        "upright": (_upright(bundles), {"detect_orientation": True, "straighten_pages": True}),
     }
     frames = {}
-    for name, (pdf, models) in batches.items():
+    for name, (pdf, options) in batches.items():
         for kie in (False, True):
             frames[name, kie] = pd.concat(
                 [
-                    _extract_batch(pdf.iloc[i : i + BATCH_ROWS].reset_index(drop=True), kie=kie, **models)
+                    _extract_batch(pdf.iloc[i : i + BATCH_ROWS].reset_index(drop=True), kie=kie, **options)
                     for i in range(0, len(pdf), BATCH_ROWS)
                 ],
                 ignore_index=True,

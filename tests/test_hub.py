@@ -124,6 +124,31 @@ def test_hub_validation_errors(tmp_path):
         from_hub("nobody/없는-repo", cache_dir=str(tmp_path))
 
 
+def test_from_hub_refuses_weights_outside_the_repo(tmp_path):
+    """A config.json whose ``weights`` entry is an absolute path or climbs
+    out of the repo directory is refused before any file loads; a plain
+    file name loads, and so does a weights file that is a symlink into the
+    HF cache's blobs/ directory."""
+    repo = tmp_path / "models--acme--det" / "snapshots" / "abc123"
+    save_model_for_hub(DBNET_WEIGHTS_PATH, str(repo), arch="tiny_dbnet_fpn", task="detection")
+    cfg = json.loads((repo / "config.json").read_text())
+    outside = tmp_path / "outside.npz"
+    outside.write_bytes((repo / cfg["weights"]).read_bytes())
+    for entry in (str(outside), "../../../outside.npz", "sub/../../../../outside.npz"):
+        (repo / "config.json").write_text(json.dumps(dict(cfg, weights=entry)))
+        with pytest.raises(ValueError, match="outside the repo"):
+            from_hub(str(repo))
+    (repo / "config.json").write_text(json.dumps(cfg))
+    assert from_hub(str(repo))[0].startswith("hub:")
+    blob = tmp_path / "models--acme--det" / "blobs" / "sha256-weights"
+    blob.parent.mkdir()
+    os.replace(repo / cfg["weights"], blob)
+    os.symlink(os.path.join("..", "..", "blobs", blob.name), repo / cfg["weights"])
+    key, loader = from_hub("acme/det", cache_dir=str(tmp_path))
+    img, placed = render_page(["HELLO", "WORLD"], scale=DEFAULT_SCALE)
+    assert loader()(img, DEFAULT_SCALE).shape[0] == len(placed)
+
+
 def test_push_is_network_gated():
     if __import__("importlib").util.find_spec("huggingface_hub") is None:
         with pytest.raises(NotImplementedError, match="huggingface_hub"):

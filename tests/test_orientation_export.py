@@ -308,6 +308,47 @@ def test_kie_entity_classes():
     assert render_kie_page(kie) == "date: 2026-08-17\n\nemail: a@b.io\n\nword: PAY"
 
 
+def _full_monotone_chain(points):
+    """The reference hull: Andrew's monotone chain over every point, with
+    one ``np.cross`` per turn test."""
+    import numpy as np
+
+    pts = np.unique(np.asarray(points, dtype=np.float64).reshape(-1, 2), axis=0)
+    if len(pts) <= 2:
+        return pts
+
+    def half(iterable):
+        chain = []
+        for p in iterable:
+            while len(chain) >= 2 and np.cross(chain[-1] - chain[-2], p - chain[-2]) <= 0:
+                chain.pop()
+            chain.append(p)
+        return chain
+
+    return np.array(half(pts)[:-1] + half(pts[::-1])[:-1])
+
+
+def test_convex_hull_matches_the_full_monotone_chain():
+    """``convex_hull`` runs the chain over each column's extreme points
+    only; its hull arrays equal the full chain's on random integer clouds
+    (pixel blobs, thin lines, single columns and rows) and float clouds."""
+    import numpy as np
+
+    from doctr_spark.operators.geometry import convex_hull
+
+    rng = np.random.default_rng(7)
+    clouds = [np.zeros((0, 2)), np.array([[3, 4]]), np.array([[2, 2]] * 5), np.array([[1, 1], [1, 5], [1, 3]]), np.array([[0, 2], [4, 2], [2, 2]])]
+    for _ in range(300):
+        n, w, h = rng.integers(1, 400), rng.integers(1, 60), rng.integers(1, 60)
+        clouds.append(np.stack([rng.integers(0, w, n), rng.integers(0, h, n)], axis=1))
+    blob = rng.random((40, 90)) < 0.6
+    clouds.append(np.stack(np.nonzero(blob)[::-1], axis=1))
+    clouds += [rng.normal(size=(int(rng.integers(3, 200)), 2)) * 50 for _ in range(50)]
+    for cloud in clouds:
+        new, ref = convex_hull(cloud), _full_monotone_chain(cloud)
+        assert new.dtype == ref.dtype and new.shape == ref.shape and (new == ref).all(), cloud
+
+
 # --------------------------- arbitrary-angle skew (straighten_pages path)
 
 

@@ -13,11 +13,13 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from doctr_spark.functions.render import PAGE_SEP
 from doctr_spark.operators.detection import ink_word_boxes, ink_word_boxes_batch
 from doctr_spark.plans import pipeline
 from doctr_spark.plans.models import DEFAULT_RECOGNIZER, resolve_model
 from doctr_spark.plans.pipeline import _extract_batch
 from doctr_spark.sources.corpus import TRANSCRIPT_SCHEMA, make_transcripts_pdf
+from doctr_spark.sources import payloads
 from doctr_spark.sources.font import DEFAULT_SCALE, render_page
 from doctr_spark.sources.payloads import MAGIC, encode_page_bundle, tool_envelope
 
@@ -105,6 +107,54 @@ def test_chunked_rows_equal_the_per_turn_path(monkeypatch, cap, kie):
     assert len(errors) == len(_bad_rows()) and all(0 < len(e) <= 500 for e in errors)
     for error, (_, prefix) in zip(errors, _bad_rows()):
         assert prefix is None or error.startswith(prefix), (error, prefix)
+
+
+@pytest.mark.parametrize("upright", [{"detect_orientation": True}, {"straighten_pages": True}], ids=["orient", "straighten"])
+@pytest.mark.parametrize("kie", [False, True])
+def test_uprighted_pages_are_detected_in_the_chunk(upright, kie):
+    """Orientation and straightening turn each page upright in its turn,
+    and the upright pages still reach the detector's batch entry: the rows
+    are those of detecting page by page, quarter-turned pages included."""
+    batch = _every_route_batch()
+    calls = []
+    out = _extract_batch(batch, detector=_counting_detector(calls), kie=kie, **upright)
+    ref = _extract_batch(batch, detector=per_page, kie=kie, **upright)
+    assert out.equals(ref) and list(out.columns) == list(ref.columns)
+    assert not out.equals(_extract_batch(batch, kie=kie))  # the quarter-turned pages now read
+    ocr_turns = out[out["payload_kind"] == "ocr"]
+    assert sum(calls) == ocr_turns["n_pages"].sum() and 1 < len(calls) < len(ocr_turns)
+    errors = out.loc[out["conv_id"] == "conv-bad", "error"].tolist()
+    for error, (_, prefix) in zip(errors, _bad_rows()):
+        assert prefix is None or error.startswith(prefix), (error, prefix)
+
+
+def _rgb(words, k=0):
+    """A rendered page as the RGB raster a PDF or image decoder returns,
+    turned ``k`` quarter turns."""
+    return np.repeat(np.rot90(render_page(words)[0], k)[..., None], 3, axis=2)
+
+
+@pytest.mark.parametrize("upright", [{}, {"detect_orientation": True}], ids=["plain", "orient"])
+def test_pdf_and_image_pages_are_detected_in_the_chunk(monkeypatch, upright):
+    """PDF and image turns take the page bundles' path: their pages join
+    the detection chunk, and their rows are those of detecting page by
+    page. With orientation on, the image arrives quarter-turned."""
+    k = 1 if upright else 0
+    monkeypatch.setattr(payloads, "read_pdf_pages", lambda data, **_: [_rgb(["PDF", "PAGE"]), _rgb(["SECOND"])])
+    monkeypatch.setattr(payloads, "read_image", lambda data, **_: _rgb(["IMAGE", "TURN"], k))
+    rows = [
+        {"conv_id": "conv-pdf", "turn_idx": 0, "role": "tool", "text": "[attachment]", "tool": tool_envelope("pdf", b"%PDF"), "ts": TS},
+        {"conv_id": "conv-image", "turn_idx": 0, "role": "tool", "text": "[attachment]", "tool": tool_envelope("image", b"\x89PNG"), "ts": TS},
+    ]
+    good = _every_route_batch().iloc[:12].to_dict("records")
+    batch = pd.DataFrame(good[:6] + rows[:1] + good[6:] + rows[1:], columns=COLUMNS)
+    calls = []
+    out = _extract_batch(batch, detector=_counting_detector(calls), **upright)
+    assert out.equals(_extract_batch(batch, detector=per_page, **upright))
+    text = out.set_index("conv_id")["extracted_text"]
+    assert text["conv-pdf"] == PAGE_SEP.join(["PDF PAGE", "SECOND"]) and text["conv-image"] == "IMAGE TURN"
+    ocr_turns = out[out["payload_kind"] == "ocr"]
+    assert sum(calls) == ocr_turns["n_pages"].sum() and len(calls) < len(ocr_turns)
 
 
 def test_wrapped_detector_does_not_inherit_the_batch_entry():
