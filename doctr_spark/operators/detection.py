@@ -342,8 +342,10 @@ def ink_word_boxes_batch(
     canvas of its own, which is the full-resolution path.
 
     ``rasters``: each page's ``_page_mask(page, scale)``, when the caller
-    has built them (the fused stage reuses them in its artefact gate and
-    recognizer); they are built here otherwise."""
+    has built them; they are built here otherwise. This is the keyword the
+    batch-entry contract (``plans/models.py``) hands every entry: the fused
+    stage builds each page's raster once, passes it here, and reuses it in
+    its artefact gate and recognizer."""
     masks, dims, canvases = [], [], {}
     if rasters is None:
         rasters = [_page_mask(img, scale) for img in pages]
@@ -442,18 +444,16 @@ def _canvas_boxes(
     return np.split(np.clip(boxes[keep], 0.0, 1.0), np.searchsorted(page[keep], np.arange(1, len(masks))))
 
 
-def _ink_cells_if_aligned(
-    ink: np.ndarray, s: int, h_dilate: int = H_DILATE_CELLS, v_dilate: int = V_DILATE_CELLS
-) -> np.ndarray | None:
+def _ink_cells_if_aligned(ink: np.ndarray, s: int) -> np.ndarray | None:
     """Cell-space (H/s, W/s) 0/1 downsampling of an ink mask, or None when
     the mask is not exactly s-aligned (any partially-inked cell, or ink in
     the partial edge strips / near enough to them that pixel-space dilation
     would enter the strips the cell grid cannot represent).
 
-    ``h_dilate`` / ``v_dilate`` are the CELL dilation radii the caller will
-    apply afterwards (ink_word_boxes' fuse step); the edge guards below are
-    derived from them (radius + 1), so changing the fuse radii cannot
-    silently desynchronize the guard from the dilation reach."""
+    The edge guards below derive from the CELL dilation radii of
+    ink_word_boxes' fuse step, ``H_DILATE_CELLS`` / ``V_DILATE_CELLS``
+    (radius + 1), so changing the fuse radii cannot silently
+    desynchronize the guard from the dilation reach."""
     H, W = ink.shape
     hc, wc = H // s, W // s
     if hc == 0 or wc == 0:
@@ -478,8 +478,8 @@ def _ink_cells_if_aligned(
     cells = (cellsum > 0).astype(np.uint8)
     # conservative guard: ink within dilation reach of a partial edge strip
     # would dilate into pixels the cell grid cannot express -> full-res path
-    if W - wc * s and cells[:, max(wc - (h_dilate + 1), 0) :].any():
+    if W - wc * s and cells[:, max(wc - (H_DILATE_CELLS + 1), 0) :].any():
         return None
-    if H - hc * s and cells[max(hc - (v_dilate + 1), 0) :, :].any():
+    if H - hc * s and cells[max(hc - (V_DILATE_CELLS + 1), 0) :, :].any():
         return None
     return cells

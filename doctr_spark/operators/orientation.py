@@ -81,6 +81,10 @@ def estimate_page_orientation(img: np.ndarray, scale: int, max_words: int = 6) -
 # ------------------------------------------------ arbitrary-angle skew
 
 
+# rows of the output canvas per block of rotate_page_float's inverse map
+_ROTATE_BLOCK_ROWS = 64
+
+
 def rotate_page_float(img: np.ndarray, angle_deg: float, fill: int = 255) -> np.ndarray:
     """Rotate a grayscale page by an arbitrary float angle about its
     center (positive = counter-clockwise on screen), canvas expanded to
@@ -97,20 +101,20 @@ def rotate_page_float(img: np.ndarray, angle_deg: float, fill: int = 255) -> np.
     s = 0.0 if abs(s) < 1e-12 else (round(s) if abs(s - round(s)) < 1e-12 else s)
     H = int(np.ceil(abs(h * c) + abs(w * s)))
     W = int(np.ceil(abs(w * c) + abs(h * s)))
-    yy, xx = np.indices((H, W))
     cx, cy = (W - 1) / 2.0, (H - 1) / 2.0
     ox, oy = (w - 1) / 2.0, (h - 1) / 2.0
-    dx = xx - cx
-    dy = yy - cy
-    # inverse map (output px -> source px); y grows downward, so this pair
-    # makes positive angles turn the page content ccw on screen
-    xs = c * dx - s * dy + ox
-    ys = s * dx + c * dy + oy
-    xi = np.rint(xs).astype(np.int64)
-    yi = np.rint(ys).astype(np.int64)
-    valid = (xi >= 0) & (xi < w) & (yi >= 0) & (yi < h)
+    dx = np.arange(W) - cx
     out = np.full((H, W), fill, dtype=img.dtype)
-    out[valid] = img[yi[valid], xi[valid]]
+    # the inverse map a block of rows at a time, so the index and float
+    # arrays stay a few block-sized buffers, not eight page-sized ones
+    for r0 in range(0, H, _ROTATE_BLOCK_ROWS):
+        dy = (np.arange(r0, min(r0 + _ROTATE_BLOCK_ROWS, H)) - cy)[:, None]
+        # inverse map (output px -> source px); y grows downward, so this
+        # pair makes positive angles turn the page content ccw on screen
+        xi = np.rint(c * dx - s * dy + ox).astype(np.int64)
+        yi = np.rint(s * dx + c * dy + oy).astype(np.int64)
+        valid = (xi >= 0) & (xi < w) & (yi >= 0) & (yi < h)
+        out[r0 : r0 + len(dy)][valid] = img[yi[valid], xi[valid]]
     return out
 
 

@@ -16,15 +16,24 @@ Contracts (all numpy, no framework types cross the boundary):
   relative ``[xmin, ymin, xmax, ymax, conf]`` boxes (the
   DetectionPredictor output shape, reference models/detection/zoo.py).
   Optional batch entry: a ``batch`` attribute ``(pages: list[(H, W)
-  uint8], scale: int) -> list[(N, 5) float64]`` whose output must equal
-  ``[detector(page, scale) for page in pages]`` bit for bit. The fused
-  stage then detects a bounded chunk of an Arrow batch's pages in one
-  call; a detector without it is called once per page. The entry's
-  ``single`` attribute must be the detector itself, or the stage ignores
-  it: a wrapper made with ``functools.wraps`` copies ``batch``, and its own
-  logic would otherwise be skipped, so a wrapper must drop or replace
-  ``batch``. The default ink-fuse detector has one
-  (``operators/detection.py:ink_word_boxes_batch``).
+  uint8], scale: int, *, rasters: list[(mask, cs)]) -> list[(N, 5)
+  float64]`` whose output must equal ``[detector(page, scale) for page in
+  pages]`` bit for bit. The fused stage then detects a bounded chunk of an
+  Arrow batch's pages in one call; a detector without it is called once
+  per page. ``rasters`` holds each page's ink raster, built once by the
+  stage (``operators/detection.py:_page_mask``): its 0/1 ink cells and
+  cs = scale when the page's ink lies on the s x s cell grid, else its
+  pixel ink mask and cs = 1. The entry may read it or ignore it; the stage
+  reuses it in its artefact gate and recognizer either way. An entry
+  written to the older two-argument form raises ``TypeError`` on the
+  keyword, and the stage then detects those pages one by one, with the
+  same rows. The entry's ``single`` attribute must be the detector
+  itself, or the stage ignores it: a wrapper made with ``functools.wraps``
+  copies ``batch``, and its own logic would otherwise be skipped, so a
+  wrapper must drop or replace ``batch``. A wrapper that sets its own
+  ``batch`` (forwarding ``rasters``) with ``single`` naming the wrapper
+  gets the same rasters as the default detector. The default ink-fuse
+  detector has one (``operators/detection.py:ink_word_boxes_batch``).
 - recognizer: ``(crops: list[(h, w) uint8], scale: int) ->
   list[(text, conf)]`` — batch-first so a real CRNN can stack the crops
   into one forward pass (reference models/recognition/predictor runs

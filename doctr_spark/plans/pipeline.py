@@ -20,17 +20,21 @@ error row. The upright pages queue in ``_DetectChunk`` until the next turn
 would push the queue past ``DETECT_CHUNK_PIXELS``, and at the end of the
 batch. Then one detection call labels every queued page when the detector
 has a batch entry (``plans/models.py``; the default one does), else each
-page is detected on its own. The rest of the chain runs on each queued
-turn inside its own quarantine. Rows, their order and their error messages
-are those of detecting page by page; if the chunk's call raises, each turn
-falls back to per-page detection. The cap bounds the decoded pages a
-worker holds, whatever the Arrow batch size.
+page is detected on its own. Every batch entry takes the same call,
+``batch(pages, scale, rasters=rasters)``; the stage names no detector.
+The rest of the chain runs on each queued turn inside its own
+quarantine. Rows, their order and their error messages are those of
+detecting page by page; if the chunk's call raises, each turn falls back
+to per-page detection. The cap bounds the decoded pages a worker holds,
+whatever the Arrow batch size.
 
 One ink raster per page: a page's ink mask, and its cell grid when its ink
 lies on the renderer's s x s cells (``detection._page_mask``), is built
-once. With the default detector the chunk builds it for the batch entry
-and hands it on; otherwise ``extract_pages_ocr`` builds it. The artefact
-gate (``_ink_gate``) reads each box's ink off it, and the default
+once. When the detector has a batch entry the chunk builds it, hands it
+to the entry and on to the chain; a detector without one is called page
+by page inside ``extract_pages_ocr``, which builds it there. The artefact
+gate (``_ink_gate``) reads each box's ink off it with one cell rule for
+every raster (a pixel mask is a raster of 1 x 1 cells), and the default
 recognizer reads each kept word's trimmed cells off it through its
 ``cells`` entry, so no crop is masked again. Custom recognizers, and
 pages or boxes the cell grid cannot describe, get pixel crops as before.
@@ -75,7 +79,7 @@ from pyspark.sql import functions as F
 from ..functions.html import extract_main_text, looks_like_html
 from ..functions.render import PAGE_SEP, document_render_agg
 from ..operators.builder import build_page
-from ..operators.detection import _page_mask, ink_word_boxes_batch
+from ..operators.detection import _page_mask
 from ..operators.geometry import extract_crops, to_absolute
 from ..operators.orientation import estimate_skew_angle, rotate_page, rotate_page_float
 from ..sources.font import DEFAULT_SCALE, ink_bounds
@@ -191,10 +195,11 @@ def extract_pages_ocr(
 
     One ink raster per page: ``rasters`` holds each page's
     ``detection._page_mask`` (its ink cells when the page is aligned, else
-    its pixel ink mask), when the caller has built them for the default
-    detector's batch entry; otherwise each upright page's raster is built
-    here. The artefact gate (``_ink_gate``) reads every crop's ink off
-    that raster, and a recognizer with a ``cells`` entry
+    its pixel ink mask), when the caller has built them for a detector's
+    batch entry (the fused stage's chunk does); otherwise each upright
+    page's raster is built here, after the page is detected. The artefact
+    gate (``_ink_gate``) reads every crop's ink off that raster, and a
+    recognizer with a ``cells`` entry
     (``plans/models.py``; the default one has it) reads each kept word's
     trimmed cells off it too, on an aligned page whose kept boxes cut no
     inked cell. Every other recognizer and page gets the pixel crops of
@@ -319,43 +324,41 @@ def _ink_gate(raster, px, scale):
 
     ``raster`` is the page's ``(mask, cs)`` (``detection._page_mask``) and
     ``px`` the pixel boxes of the crops (x0, y0, x1, y1, ends exclusive,
-    as ``to_absolute`` gives them). On an aligned page a crop that cuts no
-    inked cell holds whole inked cells only: its ink count is its cell
-    count times cs^2 and its trimmed extent its cells' extent times cs, so
-    the gate reads the cells under the box and never the pixels. A crop
-    that cuts an inked cell, and every crop of a page that is not aligned,
-    takes the same rule on its slice of the pixel ink mask. The loop is
-    per box on purpose: a page holds about eight boxes, and a few numpy
-    calls on each box's cells cost less than array ops over the boxes
-    (each numpy call on a tiny array costs about a microsecond)."""
+    as ``to_absolute`` gives them). One cell rule serves every raster: a
+    crop that cuts no inked cell holds whole inked cells only, so its ink
+    count is its cell count times cs^2 and its trimmed extent its cells'
+    extent times cs, and the gate reads the cells under the box, never
+    the pixels. The pixel mask of a page that is not aligned is a raster
+    of 1 x 1 cells, which no crop can cut, so the rule there gives exactly
+    the numbers of counting the crop's pixels. Only a crop that cuts an
+    inked cell of an aligned page takes the rule on its pixels, expanded
+    from the cells under it. The loop is per box on purpose: a page holds
+    about eight boxes, and a few numpy calls on each box's cells cost
+    less than array ops over the boxes (each numpy call on a tiny array
+    costs about a microsecond)."""
     mask, cs = raster
     keep, gated, trims = [], [], []
     for i, (x0, y0, x1, y1) in enumerate(px.tolist()):
         if x1 <= x0 or y1 <= y0:
             continue  # the zero-size drop
-        trim = None
-        if cs > 1:
-            # the cells the crop covers in full; the crop cuts an inked cell
-            # when the cells it covers in part hold ink
-            top, left = -(-y0 // cs), -(-x0 // cs)
-            cells = mask[top : y1 // cs, left : x1 // cs]
-            count = np.count_nonzero(cells)
-            if np.count_nonzero(mask[y0 // cs : -(-y1 // cs), x0 // cs : -(-x1 // cs)]) == count:
-                trim, artefact = (top, top, left, left), False
-                if count:
-                    rows, cols = cells.any(axis=1).tolist(), cells.any(axis=0).tolist()
-                    ty0, ty1 = rows.index(True), len(rows) - rows[::-1].index(True)
-                    tx0, tx1 = cols.index(True), len(cols) - cols[::-1].index(True)
-                    trim = (top + ty0, top + ty1, left + tx0, left + tx1)
-                    area = (ty1 - ty0) * (tx1 - tx0) * cs * cs
-                    artefact = _is_artefact(count * cs * cs, area, scale)
-        if trim is None:
-            if cs > 1:  # the pixels of the cells under the crop
-                top, left = y0 // cs, x0 // cs
-                cells = mask[top : -(-y1 // cs), left : -(-x1 // cs)]
-                ink = cells.repeat(cs, 0).repeat(cs, 1)[y0 - top * cs : y1 - top * cs, x0 - left * cs : x1 - left * cs]
-            else:
-                ink = mask[y0:y1, x0:x1]
+        # the cells the crop covers in full; the crop cuts an inked cell
+        # when the cells it covers in part hold ink
+        trim, top, left = None, -(-y0 // cs), -(-x0 // cs)
+        cells = mask[top : y1 // cs, left : x1 // cs]
+        count = np.count_nonzero(cells)
+        if np.count_nonzero(mask[y0 // cs : -(-y1 // cs), x0 // cs : -(-x1 // cs)]) == count:
+            trim, artefact = (top, top, left, left), False
+            if count:
+                rows, cols = cells.any(axis=1).tolist(), cells.any(axis=0).tolist()
+                ty0, ty1 = rows.index(True), len(rows) - rows[::-1].index(True)
+                tx0, tx1 = cols.index(True), len(cols) - cols[::-1].index(True)
+                trim = (top + ty0, top + ty1, left + tx0, left + tx1)
+                area = (ty1 - ty0) * (tx1 - tx0) * cs * cs
+                artefact = _is_artefact(count * cs * cs, area, scale)
+        if trim is None:  # the pixels of the cells under the crop
+            top, left = y0 // cs, x0 // cs
+            cells = mask[top : -(-y1 // cs), left : -(-x1 // cs)]
+            ink = cells.repeat(cs, 0).repeat(cs, 1)[y0 - top * cs : y1 - top * cs, x0 - left * cs : x1 - left * cs]
             bounds = ink_bounds(ink)
             if bounds is None:
                 artefact = False
@@ -432,13 +435,15 @@ class _DetectChunk:
 
     ``add`` queues a turn's pages, flushing the queue first when the turn
     would push its pixel total past ``DETECT_CHUNK_PIXELS`` or has another
-    scale. ``flush`` detects every queued page in one ``detect_batch`` call
-    (when the detector has a batch entry; the default one also takes the
-    pages' ink rasters, built here once and handed on to the chain), then
-    runs the rest of the OCR chain on each turn inside the turn's own
-    quarantine and writes its row into its slot. Without a batch entry, or
-    when the chunk's call raises, each turn detects its pages one by one,
-    so a failure lands on the turn that holds the bad page."""
+    scale. When the detector has a batch entry, ``flush`` builds each
+    queued page's ink raster once and detects every queued page in one
+    ``detect_batch(pages, scale, rasters=rasters)`` call, whatever the
+    entry, then hands the rasters on to the chain. It runs the rest of the
+    OCR chain on each turn inside the turn's own quarantine and writes its
+    row into its slot. Without a batch entry, or when the chunk's call
+    raises (a two-argument entry raises ``TypeError`` on ``rasters``),
+    each turn detects its pages one by one, so a failure lands on the turn
+    that holds the bad page."""
 
     def __init__(self, detect_batch, ocr, rows, error_policy, kie):
         self.detect_batch, self.ocr, self.rows = detect_batch, ocr, rows
@@ -459,12 +464,9 @@ class _DetectChunk:
         if turns and self.detect_batch is not None:
             pages, scale = [p for *_, pages, _ in turns for p in pages], turns[0][3]
             try:
-                if self.detect_batch is ink_word_boxes_batch:
-                    # one ink raster per page, for detection and the chain
-                    rasters = [_page_mask(p, scale) for p in pages]
-                    boxes = ink_word_boxes_batch(pages, scale, rasters=rasters)
-                else:
-                    boxes = self.detect_batch(pages, scale)
+                # one ink raster per page, for detection and the chain
+                rasters = [_page_mask(p, scale) for p in pages]
+                boxes = self.detect_batch(pages, scale, rasters=rasters)
             except Exception:  # noqa: BLE001 — per-page detection below finds the turn
                 boxes = rasters = None
         start = 0
@@ -602,6 +604,8 @@ def extract_turns(
     """
     if orienter is not None and not detect_orientation:
         raise ValueError("orienter needs detect_orientation=True; without it no page is oriented")
+    if error_policy not in ("capture", "raise"):
+        raise ValueError(f"error_policy must be 'capture' or 'raise', not {error_policy!r}")
     src = df.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
     if salt_partitions:
         src = src.repartition(salt_partitions, F.xxhash64("conv_id", "turn_idx"))

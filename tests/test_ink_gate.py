@@ -99,8 +99,11 @@ def test_raster_gate_and_cells_equal_the_per_crop_path(case):
     rec = models.resolve_model(*models.DEFAULT_RECOGNIZER)
     raster = _page_mask(page, scale)
     crops = extract_crops(page, boxes[:, :4])
-    keep, gated, trims = _ink_gate(raster, to_absolute(boxes[:, :4], *page.shape), scale)
+    px = to_absolute(boxes[:, :4], *page.shape)
+    keep, gated, trims = _ink_gate(raster, px, scale)
     assert (keep, gated) == oracle_gate(crops, scale)
+    # a pixel mask is a raster of 1 x 1 cells: the same decisions, no trims
+    assert _ink_gate((ink_mask(page), 1), px, scale) == (keep, gated, None)
     mask, cs = raster
     if trims is not None:
         assert cs == scale

@@ -367,6 +367,66 @@ def test_estimate_skew_angle_goldens():
     assert estimate_skew_angle(img, 3) == 0.0
 
 
+def _rotate_page_float_whole_canvas(img, angle_deg, fill=255):
+    """The reference for rotate_page_float: the inverse map of the whole
+    output canvas at once (about 80 bytes per output pixel)."""
+    a = np.deg2rad(angle_deg)
+    h, w = img.shape[:2]
+    c, s = np.cos(a), np.sin(a)
+    c = 0.0 if abs(c) < 1e-12 else (round(c) if abs(c - round(c)) < 1e-12 else c)
+    s = 0.0 if abs(s) < 1e-12 else (round(s) if abs(s - round(s)) < 1e-12 else s)
+    H = int(np.ceil(abs(h * c) + abs(w * s)))
+    W = int(np.ceil(abs(w * c) + abs(h * s)))
+    yy, xx = np.indices((H, W))
+    cx, cy = (W - 1) / 2.0, (H - 1) / 2.0
+    ox, oy = (w - 1) / 2.0, (h - 1) / 2.0
+    dx = xx - cx
+    dy = yy - cy
+    xs = c * dx - s * dy + ox
+    ys = s * dx + c * dy + oy
+    xi = np.rint(xs).astype(np.int64)
+    yi = np.rint(ys).astype(np.int64)
+    valid = (xi >= 0) & (xi < w) & (yi >= 0) & (yi < h)
+    out = np.full((H, W), fill, dtype=img.dtype)
+    out[valid] = img[yi[valid], xi[valid]]
+    return out
+
+
+def test_rotate_page_float_equals_the_whole_canvas_map():
+    """The blocked inverse map gives the whole-canvas map's output bit for
+    bit, on random pages and angles, quarter turns and pages taller than a
+    block included."""
+    from doctr_spark.operators.orientation import rotate_page_float
+
+    rng = np.random.default_rng(17)
+    angles = [0.0, 90.0, -90.0, 180.0, 270.0, 0.5, -7.0, 45.0]
+    for i in range(60):
+        h, w = (int(v) for v in rng.integers(1, 200, size=2))
+        img = rng.integers(0, 256, size=(h, w), dtype=np.uint8)
+        angle = angles[i] if i < len(angles) else float(rng.uniform(-180, 180))
+        got = rotate_page_float(img, angle)
+        ref = _rotate_page_float_whole_canvas(img, angle)
+        assert got.shape == ref.shape and np.array_equal(got, ref), (h, w, angle)
+
+
+def test_rotate_page_float_memory_is_a_few_bytes_per_pixel():
+    """Straightening a large page holds the output canvas plus block-sized
+    buffers, not eight canvas-sized index and float arrays."""
+    import tracemalloc
+
+    from doctr_spark.operators.orientation import rotate_page_float
+
+    img = np.full((1024, 1024), 255, dtype=np.uint8)
+    img[::7, ::5] = 0
+    tracemalloc.start()
+    try:
+        out = rotate_page_float(img, 7.0)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 4 * out.size, (peak, out.size)
+
+
 def test_straighten_pages_recovers_geometry():
     """Float-skewed page through the straighten_pages second-pass path:
     detection recovers the exact word-box structure (count, line grouping,

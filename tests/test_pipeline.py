@@ -231,6 +231,17 @@ def test_orienter_without_detect_orientation_is_rejected(corpus):
     extract_turns(inp, detect_orientation=True, orienter=orienter)  # the flag admits it
 
 
+def test_unknown_error_policy_is_rejected(corpus):
+    """Only 'capture' and 'raise' are policies: a typo must fail when the
+    plan is built, not turn the first bad row into a failed job."""
+    inp = corpus.drop("expected_text", "payload_kind")
+    for policy in ("captur", "Capture", "", None):
+        with pytest.raises(ValueError, match="error_policy must be 'capture' or 'raise'"):
+            extract_turns(inp, error_policy=policy)
+    for policy in ("capture", "raise"):
+        extract_turns(inp, error_policy=policy)  # builds the plan, runs nothing
+
+
 def test_kie_route_predictions_and_render(spark):
     """extract_turns(kie=True) — the kie_predictor entry point (reference
     models/kie_predictor/pytorch.py:69-182): per-class prediction counts

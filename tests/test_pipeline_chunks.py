@@ -1,7 +1,8 @@
 """The fused stage's chunked detection (``plans/pipeline.py:_DetectChunk``):
 page-bundle turns of an Arrow batch are detected a bounded chunk at a time
-through the default detector's batch entry, and every row, error message
-and failure mode stays that of the per-turn path. No Spark: these drive
+through the detector's batch entry, which takes the stage's ink rasters,
+and every row, error message and failure mode stays that of the per-turn
+path, mutated bundles in the chunk included. No Spark: these drive
 ``_extract_batch`` directly."""
 
 import functools
@@ -14,7 +15,7 @@ import pandas as pd
 import pytest
 
 from doctr_spark.functions.render import PAGE_SEP
-from doctr_spark.operators.detection import ink_word_boxes, ink_word_boxes_batch
+from doctr_spark.operators.detection import _page_mask, ink_word_boxes, ink_word_boxes_batch
 from doctr_spark.plans import pipeline
 from doctr_spark.plans.models import DEFAULT_RECOGNIZER, resolve_model
 from doctr_spark.plans.pipeline import _extract_batch
@@ -74,13 +75,23 @@ def _every_route_batch():
     return pd.DataFrame(rows, columns=COLUMNS)
 
 
+def _assert_page_rasters(pages, scale, rasters):
+    """The stage hands a batch entry one raster per page, each the page's
+    ``_page_mask``."""
+    assert len(rasters) == len(pages)
+    for page, (mask, cs) in zip(pages, rasters):
+        ref_mask, ref_cs = _page_mask(page, scale)
+        assert cs == ref_cs and np.array_equal(mask, ref_mask)
+
+
 def _counting_detector(calls):
     def detect(img, scale):
         return ink_word_boxes(img, scale)
 
-    def batch(pages, scale):
+    def batch(pages, scale, *, rasters):
+        _assert_page_rasters(pages, scale, rasters)
         calls.append(len(pages))
-        return ink_word_boxes_batch(pages, scale)
+        return ink_word_boxes_batch(pages, scale, rasters=rasters)
 
     detect.batch, batch.single = batch, detect
     return detect
@@ -202,6 +213,51 @@ def test_wrapped_recognizer_does_not_inherit_the_cells_entry():
     assert not out.equals(_extract_batch(batch))
 
 
+def test_wrapper_with_its_own_batch_entry_gets_the_stage_rasters():
+    """A ``functools.wraps`` wrapper of the default detector that sets its
+    own ``batch`` (forwarding ``rasters``, with ``single`` naming the
+    wrapper) takes the default path: its rows are the default detector's,
+    and its batch entry receives the stage's raster of every OCR page."""
+    batch = _every_route_batch()
+    seen = []
+
+    @functools.wraps(ink_word_boxes)
+    def traced(img, scale):
+        return ink_word_boxes(img, scale)
+
+    def traced_batch(pages, scale, *, rasters):
+        _assert_page_rasters(pages, scale, rasters)
+        seen.extend(rasters)
+        return ink_word_boxes_batch(pages, scale, rasters=rasters)
+
+    traced.batch, traced_batch.single = traced_batch, traced
+    assert pipeline._model_entry(traced, "batch") is traced_batch
+    out = _extract_batch(batch, detector=traced)
+    assert out.equals(_extract_batch(batch))
+    ocr_turns = out[out["payload_kind"] == "ocr"]
+    assert len(seen) == ocr_turns["n_pages"].sum() > 0
+
+
+def test_two_argument_batch_entry_falls_back_per_page():
+    """A batch entry written to the older ``(pages, scale)`` form raises
+    ``TypeError`` on ``rasters``; the stage then detects page by page, so
+    the rows are those of a detector without a batch entry."""
+    batch = _every_route_batch()
+    calls = []
+
+    def detect(img, scale):
+        return ink_word_boxes(img, scale)
+
+    def old_batch(pages, scale):
+        calls.append(len(pages))
+        return ink_word_boxes_batch(pages, scale)
+
+    detect.batch, old_batch.single = old_batch, detect
+    for kie in (False, True):
+        assert _extract_batch(batch, detector=detect, kie=kie).equals(_extract_batch(batch, detector=per_page, kie=kie))
+    assert calls == []
+
+
 def test_raise_policy_propagates_in_turn_order():
     """error_policy='raise' propagates a bad turn's error; a queued turn
     whose chain fails before it raises first, as on the per-turn path."""
@@ -236,7 +292,7 @@ def test_failed_chunk_detection_falls_back_per_page():
             raise ValueError("bad page")
         return ink_word_boxes(img, scale)
 
-    def batch_fails(pages, scale):
+    def batch_fails(pages, scale, *, rasters):
         raise MemoryError("chunk too big")
 
     detect.batch, batch_fails.single = batch_fails, detect
@@ -284,3 +340,58 @@ def test_extract_batch_memory_is_bounded_by_the_chunk():
         peak, out = _peak_bytes(batch)
         assert (out["extracted_text"] == "TALL PAGE").all()
         assert peak < cap + bundle_pixels + cap, (n_chunks, peak)
+
+
+def _mutate(data, kind, rng):
+    """One seeded mutation of page-bundle bytes."""
+    data = bytearray(data)
+    if kind == "append":
+        return bytes(data) + rng.bytes(int(rng.integers(1, 65)))
+    if kind == "truncate":
+        return bytes(data[: int(rng.integers(0, len(data)))])
+    if kind == "bundle_header":
+        pos = int(rng.integers(0, 8))
+    else:
+        _, n_pages, _ = struct.unpack(">BHB", data[4:8])
+        headers = list(payloads._page_headers(bytes(data), n_pages))
+        _, _, off, blob_len = headers[int(rng.integers(0, len(headers)))]
+        pos = off - 8 + int(rng.integers(0, 8)) if kind == "page_header" else off + int(rng.integers(0, blob_len))
+    data[pos] ^= 1 << int(rng.integers(0, 8))
+    return bytes(data)
+
+
+def test_chunk_path_fuzz_never_fails_the_batch():
+    """Seeded fuzz of the chunk path: 2,000 mutated page bundles (bit flips
+    in the bundle header, the page headers and the zlib streams,
+    truncations, appended bytes), each followed by a good OCR turn so that
+    bad and good pages share detection chunks. The batch returns; every
+    good row is its row from the unmutated batch; every mutated row is an
+    'ocr' row or an 'error' row with a bounded message."""
+    rng = np.random.default_rng(20261020)
+    texts = [["GOOD", "ROW"], ["SECOND", "PAGE", "HERE"], ["THIRD", "ONE"], ["A", "B", "C", "D"]]
+    pages = [render_page(words)[0] for words in texts]
+    bundles = [encode_page_bundle(pages[:n], DEFAULT_SCALE) for n in (1, 2, 3)]
+    kinds = ["bundle_header", "page_header", "zlib", "truncate", "append"]
+    n_mutated = 2000
+    rows, clean = [], []
+    for i in range(n_mutated):
+        source = bundles[i % len(bundles)]
+        bad = _mutate(source, kinds[i % len(kinds)], rng)
+        for tool, clean_tool in ((bad, source), (bundles[(i + 1) % len(bundles)],) * 2):
+            row = {"conv_id": "fuzz", "turn_idx": len(rows), "role": "tool", "text": "[attachment]",
+                   "tool": tool_envelope("page_bundle", tool), "ts": TS}
+            rows.append(row)
+            clean.append({**row, "tool": tool_envelope("page_bundle", clean_tool)})
+    out = _extract_batch(pd.DataFrame(rows, columns=COLUMNS))
+    ref = _extract_batch(pd.DataFrame(clean, columns=COLUMNS))
+    assert len(out) == len(rows)
+    good, bad = out.iloc[1::2], out.iloc[0::2]
+    assert good.equals(ref.iloc[1::2])
+    assert (good["payload_kind"] == "ocr").all() and good["error"].isna().all()
+    assert set(bad["payload_kind"]) <= {"ocr", "error"}
+    errors = bad.loc[bad["payload_kind"] == "error", "error"]
+    assert errors.map(lambda e: isinstance(e, str) and 1 <= len(e) <= 500).all()
+    assert bad.loc[bad["payload_kind"] == "ocr", "error"].isna().all()
+    # some mutated bundles still decode (appended bytes, a lower page
+    # count, another scale) and reach detection next to the good pages
+    assert 0 < len(errors) < n_mutated
