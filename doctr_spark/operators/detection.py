@@ -47,36 +47,38 @@ LINKNET_POSTPROC = {"bin_thresh": 0.1, "box_thresh": 0.1, "unclip_ratio": 1.0}
 # ------------------------------------------------------------- morphology
 
 
-def _window_count(m: np.ndarray, radius: int, axis: int) -> np.ndarray:
-    """Sliding-window sum of width 2*radius+1 along an axis (zero-padded).
+def _window(m: np.ndarray, radius: int, axis: int, op) -> np.ndarray:
+    """``op`` (bitwise or/and) of a 0/1 mask over windows of 2*radius+1
+    cells along an axis, centred on each cell and zero-padded.
 
-    One cumsum into a buffer that holds radius+1 zeros ahead of the sums
-    and the total repeated radius times behind them; each window sum is
-    then the difference of two slices of that buffer, whatever the radius.
-    int16 suffices: a window count is at most 2*radius+1, so a cumsum that
-    wraps past 32767 on a long axis still subtracts to the exact count, and
-    half-width sums halve the memory traffic of this hot loop."""
+    The mask goes into a buffer with ``radius`` zero cells on each side
+    along the axis. Each pass ors (ands) the buffer in place with itself
+    shifted by k = 1, 2, 4, ... cells, which doubles the window each cell
+    covers, and the last shift is cut so the window ends at exactly
+    2*radius+1. No cumsum: log2(2*radius+1) passes of one byte-wise ufunc
+    each. A shift along the axis is a shift of the flat buffer by k times
+    the axis stride; where that reads across the end of a line it only
+    spoils cells beyond the first n of the line, which no kept cell reads."""
     n = m.shape[axis]
-
-    def span(start: int, stop: int | None) -> tuple:
-        index = [slice(None)] * m.ndim
-        index[axis] = slice(start, stop)
-        return tuple(index)
-
     shape = list(m.shape)
-    shape[axis] = n + 2 * radius + 1
-    c = np.zeros(shape, dtype=np.int16)
-    np.cumsum(m, axis=axis, dtype=np.int16, out=c[span(radius + 1, radius + 1 + n)])
-    c[span(radius + 1 + n, None)] = c[span(radius + n, radius + 1 + n)]
-    return c[span(2 * radius + 1, None)] - c[span(0, n)]
+    shape[axis] += 2 * radius
+    buf = np.zeros(shape, dtype=np.uint8)  # C order, so the flat view below is the buffer
+    buf[(slice(None),) * axis + (slice(radius, radius + n),)] = m
+    flat, width = buf.reshape(-1), 1
+    while width < 2 * radius + 1:
+        k = min(width, 2 * radius + 1 - width)
+        cut = flat.size - k * buf.strides[axis]  # the cells with a cell k further along the axis
+        op(flat[:cut], flat[flat.size - cut :], out=flat[:cut])
+        width += k
+    return buf[(slice(None),) * axis + (slice(0, n),)]
 
 
 def _dilate_axis(m: np.ndarray, radius: int, axis: int) -> np.ndarray:
-    return (_window_count(m.astype(np.uint8, copy=False), radius, axis) > 0).view(np.uint8)
+    return _window(m, radius, axis, np.bitwise_or)
 
 
 def _erode_axis(m: np.ndarray, radius: int, axis: int) -> np.ndarray:
-    return (_window_count(m.astype(np.uint8, copy=False), radius, axis) == 2 * radius + 1).view(np.uint8)
+    return _window(m, radius, axis, np.bitwise_and)
 
 
 def binary_open3(m: np.ndarray) -> np.ndarray:
@@ -106,29 +108,27 @@ def connected_components(bitmap: np.ndarray) -> list[tuple[int, int, int, int]]:
     Returns component bboxes as (xmin, ymin, xmax, ymax) *inclusive* pixel
     coords, in raster order of their topmost-leftmost run (deterministic).
     """
-    return list(zip(*(c.tolist() for c in _component_bboxes(bitmap))))
+    return list(zip(*(c.tolist() for c in _component_runs(bitmap)[0])))
 
 
-def _component_bboxes(bitmap: np.ndarray) -> tuple[np.ndarray, ...]:
+def _component_runs(bitmap: np.ndarray) -> tuple[tuple[np.ndarray, ...], tuple[np.ndarray, ...]]:
     """``connected_components`` as four int64 arrays (xmin, ymin, xmax,
-    ymax), for callers that score and filter the boxes with array ops."""
+    ymax), for callers that score and filter the boxes with array ops, and
+    the row runs they were labelled from: (starts, stops, offsets), sorted
+    by (row, start), each run covering columns [start, stop), the runs of
+    row y at ``offsets[y]:offsets[y + 1]``."""
     h, w = bitmap.shape
-    b = bitmap.astype(bool)
-    # all runs at once: pad each row with zeros, diff over the flat array —
-    # run starts/stops never cross row boundaries (vectorized, no row loop)
-    padded = np.zeros((h, w + 2), dtype=np.int8)
-    padded[:, 1:-1] = b
-    d = np.diff(padded.reshape(-1))
-    flat_starts = np.flatnonzero(d == 1) + 1
-    flat_stops = np.flatnonzero(d == -1) + 1
-    rows = flat_starts // (w + 2)
-    starts = flat_starts % (w + 2) - 1
-    stops = flat_stops % (w + 2) - 1
+    # all runs at once: pad each row with zeros; where a cell differs from
+    # its left neighbour a run starts or stops, alternately within each
+    # row (vectorized, no row loop)
+    padded = np.zeros((h, w + 2), dtype=bool)
+    padded[:, 1:-1] = bitmap
+    flips = np.flatnonzero(padded[:, 1:] != padded[:, :-1])
+    rows, starts, stops = flips[0::2] // (w + 1), flips[0::2] % (w + 1), flips[1::2] % (w + 1)
     n = len(rows)
+    offsets = np.concatenate(([0], np.cumsum(np.bincount(rows, minlength=h))))
     if n == 0:
-        return (np.empty(0, dtype=np.int64),) * 4
-    counts = np.bincount(rows, minlength=h)
-    offsets = np.concatenate(([0], np.cumsum(counts)))
+        return (np.empty(0, dtype=np.int64),) * 4, (starts, stops, offsets)
 
     # --- edges between overlapping runs of consecutive rows, vectorized
     # over the whole page at once. Runs are globally sorted by (row, start)
@@ -186,7 +186,7 @@ def _component_bboxes(bitmap: np.ndarray) -> tuple[np.ndarray, ...]:
     np.maximum.at(xmax, inv, stops - 1)
     np.minimum.at(ymin, inv, rows)
     np.maximum.at(ymax, inv, rows)
-    return xmin, ymin, xmax, ymax
+    return (xmin, ymin, xmax, ymax), (starts, stops, offsets)
 
 
 # ------------------------------------------------------------ postprocess
@@ -401,9 +401,17 @@ def _canvas_boxes(
     horizontal dilation and one labelling serve every page. The 3x3
     opening of the generic postprocess is the identity here: the fused
     mask is a union of rectangles of at least 3x3, and opening such a
-    union returns it. A component's score comes from an integer
-    summed-area table of the fused mask: its ink count over the box area
-    is the exact mean ``bitmap_to_boxes`` takes."""
+    union returns it.
+
+    A component's score is its box's fused-cell count over the box area,
+    the exact mean ``bitmap_to_boxes`` takes. The count comes from the row
+    runs the labelling built: the overlaps of [x0, x1] with every run of
+    rows y0..y1 (one index band, since runs are sorted by row), other
+    components' runs included, summed by one ragged ``arange`` and a
+    weighted ``bincount``, with no cumsum over the canvas. Many tall
+    components can make the bands longer than the canvas has cells; then
+    an integer summed-area table counts instead, so time and memory stay
+    O(canvas) either way."""
     heights = np.array([m.shape[0] for m in masks])
     tops = np.concatenate(([0], np.cumsum(heights[:-1] + v_radius)))
     canvas = np.zeros((int(tops[-1] + heights[-1]), masks[0].shape[1]), dtype=np.uint8)
@@ -415,22 +423,22 @@ def _canvas_boxes(
     del canvas
     fused[~on_page] = 0
     fused = _dilate_axis(fused, h_radius, 1)
-    x0, y0, x1, y1 = _component_bboxes(fused)
-
-    # cumsums in place: one that casts to the table's dtype allocates a copy
-    sat = np.zeros((fused.shape[0] + 1, fused.shape[1] + 1), dtype=np.int32 if fused.size < 2**31 else np.int64)
-    body = sat[1:, 1:]
-    np.copyto(body, fused)
-    np.cumsum(body, axis=0, out=body)
-    np.cumsum(body, axis=1, out=body)
-    filled = sat[y1 + 1, x1 + 1] - sat[y0, x1 + 1] - sat[y1 + 1, x0] + sat[y0, x0]
+    (x0, y0, x1, y1), (starts, stops, offsets) = _component_runs(fused)
+    band, lengths = offsets[y0], offsets[y1 + 1] - offsets[y0]
+    if lengths.sum() <= fused.size:
+        box = np.repeat(np.arange(len(x0)), lengths)
+        run = np.arange(lengths.sum()) + np.repeat(band - np.cumsum(lengths) + lengths, lengths)
+        overlap = np.minimum(stops[run], x1[box] + 1) - np.maximum(starts[run], x0[box])
+        filled = np.bincount(box, weights=np.maximum(overlap, 0), minlength=len(x0))
+    else:
+        sat = np.pad(fused.cumsum(0, dtype=np.int64).cumsum(1), ((1, 0), (1, 0)))
+        filled = sat[y1 + 1, x1 + 1] - sat[y0, x1 + 1] - sat[y1 + 1, x0] + sat[y0, x0]
     bg, fg = levels
     score = bg + (fg - bg) * (filled / ((y1 - y0 + 1) * (x1 - x0 + 1)))
 
     # inclusive pixel bbox on its own page, then the DB unclip
     page = np.searchsorted(tops, y0, side="right") - 1
-    y0 = y0 - tops[page]
-    y1 = y1 - tops[page]
+    y0, y1 = y0 - tops[page], y1 - tops[page]
     px0, py0, px1, py1 = x0 * cs, y0 * cs, (x1 + 1) * cs - 1, (y1 + 1) * cs - 1
     bw, bh = px1 - px0 + 1, py1 - py0 + 1
     d = (bw * bh) * unclip_ratio / (2.0 * (bw + bh))

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .builder import reading_order_keys
+from .builder import reading_order
 
 
 import re
@@ -59,7 +59,7 @@ def build_kie_page(
     out: dict[str, list[dict]] = {}
     for cls, idcs in classes.items():
         sub = b[idcs]
-        order = np.argsort(reading_order_keys(sub), kind="quicksort")
+        order = reading_order(sub.tolist())
         out[cls] = [
             {
                 "value": values[idcs[int(j)]],

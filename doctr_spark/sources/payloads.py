@@ -47,15 +47,19 @@ def _bundle_header(data: bytes) -> tuple[int, int, int]:
     """(version, n_pages, scale) of a bundle."""
     if data[:4] != MAGIC:
         raise ValueError("not a page bundle")
+    if len(data) < 8:
+        raise ValueError(f"bundle header cut off after {len(data)} of 8 bytes")
     return struct.unpack(">BHB", data[4:8])
 
 
 def _page_headers(data: bytes, n_pages: int) -> Iterator[tuple[int, int, int, int]]:
     """(h, w, offset, blob_len) of each page in turn, read from the page
     headers alone: no pixel is inflated. A cut-off header raises
-    ``struct.error`` when it is reached."""
+    ``ValueError`` naming its page when it is reached."""
     off = 8
-    for _ in range(n_pages):
+    for i in range(n_pages):
+        if off + 8 > len(data):
+            raise ValueError(f"page {i} header cut off after {max(len(data) - off, 0)} of 8 bytes")
         h, w, blob_len = struct.unpack(">HHI", data[off : off + 8])
         yield h, w, off + 8, blob_len
         off += 8 + blob_len
@@ -69,15 +73,19 @@ def decode_page_bundle(data: bytes) -> tuple[list[np.ndarray], int]:
     at most its declared h*w bytes, so a stream that inflates past its
     header (a decompression bomb) is refused without allocating the
     excess; a stream that ends short of h*w bytes, or leaves input over,
-    is refused too."""
+    is refused too. A bundle that declares scale 0 is refused before any
+    page inflates, and a header cut off inside (the bundle's, or page i's)
+    raises ``ValueError`` naming it, after the pages before it."""
     version, n_pages, scale = _bundle_header(data)
     if version != VERSION:
         raise ValueError(f"unsupported bundle version {version}")
+    if scale == 0:
+        raise ValueError("bundle declares scale 0; a page's scale is at least 1")
     n_pixels = 0
     try:
         for h, w, _, _ in _page_headers(data, n_pages):
             n_pixels += h * w
-    except struct.error:
+    except ValueError:
         pass  # a cut-off header is reported below, after the pages before it
     if n_pixels > MAX_BUNDLE_PIXELS:
         raise ValueError(f"bundle declares {n_pixels} pixels, over the {MAX_BUNDLE_PIXELS} cap")

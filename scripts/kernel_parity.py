@@ -7,7 +7,7 @@ Usage:
 
 ``run`` imports ``doctr_spark`` from CHECKOUT and runs
 ``plans.pipeline._extract_batch`` in batches of 1,000 rows, with kie off
-and with kie on, over six inputs, so every model path and every route is
+and with kie on, over seven inputs, so every model path and every route is
 covered:
 
 - ``mixed``: the first file of the first ``mixed`` input, default models;
@@ -29,11 +29,15 @@ covered:
   three blank cells around the ink.)
 - ``upright``: the first 40 page-bundle rows of the ``mixed`` file, every
   other one re-encoded with its pages turned one, two or three quarter
-  turns, run with ``detect_orientation=True, straighten_pages=True``.
+  turns, run with ``detect_orientation=True, straighten_pages=True``;
+- ``html``: the HTML rows of the ``mixed`` file, then one row per markup
+  construct in ``HTML_CONSTRUCTS`` (the kinds the HTML differential test
+  draws), each inside a paragraph, so that the regex fast path, the
+  ``HTMLParser`` fallback and each of its triggers run.
 
 The extra rows are built from the cached input with the standard library
 and ``np.rot90`` only, and the detector with numpy only, so both
-checkouts see the same bytes and boxes. It pickles the twelve frames,
+checkouts see the same bytes and boxes. It pickles the fourteen frames,
 keyed ``(input, kie)``, to OUT. ``compare``
 checks that two such files hold the same keys and, per key, frames that
 ``DataFrame.equals`` each other with the same column order and dtypes; it
@@ -57,6 +61,18 @@ import sys
 import zlib
 
 BATCH_ROWS = 1000
+# markup the HTML fast path models, then forms that send a document to the
+# HTMLParser fallback
+HTML_CONSTRUCTS = [
+    "plain words", "Fish &amp; chips &copy; &#65;&#x42; &amp &nbsp;x", "a > b", "<!-- note -->x", "<!-- a -- >x",
+    "<br/>x<br />y", "<BR>x</P >", "<span class=x/>x", '<span class="a>b" id=\'q\' disabled>x</span>',
+    '<span a = "b" x=&amp;>x</span>', "<script>var a='<p>';</script>x", "<style>p{}</style>x",
+    "<script src=x/>t</script>x", "<SCRIPT>a</script >x", "<script/>x", "<STYLE>a</Style\n>x",
+    "<nav>hidden</nav>x", "<li>one<li>two", "<div class=x/>b", "<td>a</td><th>b</th>",
+    "a < b", "a<1b", "<!DOCTYPE html>x", "<![CDATA[x]]>y", "<?pi x?>y", "</>x", "</ div>x", "</div x>y",
+    "<br / >x", "<script>unterminated", '<span b="c"d=e>x</span>', "<span a==b>x</span>", "<span a=>x</span>",
+    "<span \xa0b=1>x</span>", "<\u017fcript>x</\u017fcript>", "<!-- unterminated",
+]
 
 
 def _input_files(inputs: str, workload: str) -> list[str]:
@@ -148,6 +164,18 @@ def cut_cells_detector(page, scale):
     return boxes
 
 
+def _html(mixed):
+    """The HTML rows of the ``mixed`` file, then one row per construct."""
+    import pandas as pd
+
+    rows = mixed[[isinstance(t, str) and t.startswith("<") and not tool for t, tool in zip(mixed["text"], mixed["tool"])]]
+    extra = [
+        dict(rows.iloc[0], conv_id="conv-html", turn_idx=i, text=f"<div><p>{construct}</p></div>")
+        for i, construct in enumerate(HTML_CONSTRUCTS)
+    ]
+    return pd.concat([rows, pd.DataFrame(extra, columns=list(mixed.columns))], ignore_index=True)
+
+
 def run(checkout: str, out: str, inputs: str) -> None:
     sys.path.insert(0, os.path.abspath(checkout))
     import pandas as pd
@@ -170,6 +198,7 @@ def run(checkout: str, out: str, inputs: str) -> None:
         "ocr_chunks": (bundles, {}),
         "cut_cells": (bundles, {"detector": cut_cells_detector}),
         "upright": (_upright(bundles), {"detect_orientation": True, "straighten_pages": True}),
+        "html": (_html(mixed), {}),
     }
     frames = {}
     for name, (pdf, options) in batches.items():

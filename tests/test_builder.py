@@ -240,3 +240,138 @@ def test_pluggable_orientation_model():
 
     text, *_ = extract_pages_ocr([rot], 3, detect_orientation=True, orienter=fixed_orienter)
     assert calls and text == "\n".join(expected_page_lines(words, scale=3))
+
+
+# ---- the Python-float builder against the numpy builder it replaced
+
+from doctr_spark.operators.geometry import deskewed_straight_boxes, rotate_boxes  # noqa: E402
+
+
+def _ref_sort_boxes(boxes):
+    """The numpy builder's sort, with its quicksort made stable."""
+    b = np.asarray(boxes, dtype=np.float64)
+    if b.ndim == 3:
+        b = deskewed_straight_boxes(b, min_angle=5.0)
+    med_h = np.median(b[:, 3] - b[:, 1])
+    return np.argsort(b[:, 0] + 2.0 * b[:, 3] / med_h, kind="stable"), b
+
+
+def _ref_resolve_sub_lines(b, word_idcs, paragraph_break=0.035):
+    order = np.argsort(b[np.asarray(word_idcs, dtype=np.int64), 0], kind="stable")
+    idcs = [word_idcs[i] for i in order.tolist()]
+    if len(idcs) < 2:
+        return [idcs]
+    lines, current = [], [idcs[0]]
+    for i in idcs[1:]:
+        if b[i, 0] - b[current[-1], 2] >= paragraph_break:
+            lines.append(current)
+            current = []
+        current.append(i)
+    lines.append(current)
+    return lines
+
+
+def _ref_resolve_lines(boxes, paragraph_break=0.035):
+    idxs, b = _ref_sort_boxes(boxes)
+    y_med = np.median(b[:, 3] - b[:, 1])
+    y_centers = ((b[:, 1] + b[:, 3]) / 2).tolist()
+    lines, current = [], [int(idxs[0])]
+    y_center_sum = y_centers[idxs[0]]
+    for raw_idx in idxs[1:]:
+        idx = int(raw_idx)
+        if abs(y_centers[idx] - y_center_sum / len(current)) >= y_med / 2:
+            lines.extend(_ref_resolve_sub_lines(b, current, paragraph_break))
+            current, y_center_sum = [], 0.0
+        current.append(idx)
+        y_center_sum += y_centers[idx]
+    lines.extend(_ref_resolve_sub_lines(b, current, paragraph_break))
+    return lines
+
+
+def _ref_words(boxes, values, scores):
+    b = np.asarray(boxes, dtype=np.float64)
+    words = []
+    for line_idx, group in enumerate(_ref_resolve_lines(b)):
+        for pos, i in enumerate(group):
+            words.append({"value": values[i], "confidence": float(scores[i]), "xmin": float(b[i, 0]),
+                          "ymin": float(b[i, 1]), "xmax": float(b[i, 2]), "ymax": float(b[i, 3]),
+                          "line_idx": line_idx, "word_idx": pos, "block_idx": 0})
+    return words
+
+
+def _random_page(rng, n):
+    """n word boxes on a few text lines, with jitter, gaps around the
+    paragraph break and (sometimes) coordinates on a coarse grid, so keys,
+    heights and xmins tie."""
+    line = rng.integers(0, max(1, n // 3), n)
+    h = rng.uniform(0.02, 0.06)
+    y0 = line * h * 1.4 + rng.normal(0, h / 5, n) + 0.05
+    x0 = rng.uniform(0, 0.9, n)
+    boxes = np.stack([x0, y0, x0 + rng.uniform(0.01, 0.1, n), y0 + h * rng.uniform(0.7, 1.3, n)], axis=1)
+    return np.round(boxes, 2) if rng.random() < 0.3 else boxes
+
+
+def test_builder_equals_numpy_builder_on_random_straight_boxes():
+    rng = np.random.default_rng(18)
+    for _ in range(400):
+        n = int(rng.integers(1, 41))
+        boxes = _random_page(rng, n)
+        values, scores = [f"w{i}" for i in range(n)], rng.random(n).astype(np.float32)
+        order, straight = sort_boxes(boxes)
+        ref_order, _ = _ref_sort_boxes(boxes)
+        assert order.dtype == np.int64 and order.tolist() == ref_order.tolist()
+        assert np.array_equal(straight, boxes)
+        assert np.array_equal(reading_order_keys(boxes), boxes[:, 0] + 2.0 * boxes[:, 3] / np.median(boxes[:, 3] - boxes[:, 1]))
+        assert resolve_lines(boxes) == _ref_resolve_lines(boxes)
+        page = build_page(boxes, values, scores)
+        assert page.words == _ref_words(boxes, values, scores)
+        assert page.text == "\n".join(" ".join(values[i] for i in line) for line in _ref_resolve_lines(boxes))
+        assert build_page(boxes, values, resolve=False).text == " ".join(values[i] for i in ref_order)
+
+
+def test_builder_equals_numpy_builder_on_rotated_quads():
+    rng = np.random.default_rng(19)
+    for _ in range(200):
+        boxes = _random_page(rng, int(rng.integers(1, 41)))
+        quads = np.stack([boxes[:, [0, 1]], boxes[:, [2, 1]], boxes[:, [2, 3]], boxes[:, [0, 3]]], axis=1)
+        quads = rotate_boxes(quads, float(rng.uniform(-30, 30)), min_angle=0.0)
+        order, straight = sort_boxes(quads)
+        ref_order, ref_straight = _ref_sort_boxes(quads)
+        assert order.tolist() == ref_order.tolist() and np.array_equal(straight, ref_straight)
+        assert resolve_lines(quads) == _ref_resolve_lines(quads)
+
+
+@pytest.mark.parametrize("n", [4, 5, 8, 16, 17, 33, 40])
+def test_tied_reading_order_keys_keep_input_order(n):
+    """Boxes whose keys tie sort in input order (np.argsort kind="stable"),
+    whatever the CPU's quicksort would do; so do tied xmins in a line and
+    tied keys within a KIE class."""
+    from doctr_spark.operators.kie import build_kie_page
+
+    rng = np.random.default_rng(n)
+    rows = rng.integers(0, 3, n)  # three lines of identical boxes
+    boxes = np.stack([np.full(n, 0.1), rows * 0.1, np.full(n, 0.2), rows * 0.1 + 0.05], axis=1)
+    assert sort_boxes(boxes)[0].tolist() == np.argsort(rows, kind="stable").tolist()
+    assert resolve_lines(boxes) == [np.flatnonzero(rows == r).tolist() for r in range(3) if (rows == r).any()]
+    kie = build_kie_page(boxes, [str(i) for i in range(n)])
+    assert [p["value"] for p in kie["number"]] == [str(i) for i in np.argsort(rows, kind="stable")]
+
+
+def test_sort_fixture_with_a_tie_keeps_input_order():
+    from doctr_spark.plans.entry_queries import SORT_FIXTURES
+
+    for case_id, boxes, expected in SORT_FIXTURES:
+        assert sort_boxes(np.asarray(boxes))[0].tolist() == expected, case_id
+
+
+def test_degenerate_boxes_sort_as_numpy():
+    """A zero median height divides as numpy does (+-inf, NaN for 0/0) and
+    NaN keys sort last, so degenerate boxes order as before."""
+    flat = np.array([[0.3, 0.0, 0.4, 0.0], [0.1, 0.2, 0.2, 0.2], [0.2, -0.1, 0.3, -0.1], [0.0, 0.0, 0.1, 0.0]])
+    with np.errstate(divide="ignore", invalid="ignore"):
+        assert sort_boxes(flat)[0].tolist() == _ref_sort_boxes(flat)[0].tolist() == [2, 1, 0, 3]
+    nan = flat.copy()
+    nan[1, 3] = np.nan
+    with np.errstate(invalid="ignore"):
+        assert sort_boxes(nan)[0].tolist() == _ref_sort_boxes(nan)[0].tolist()
+    assert sort_boxes(np.zeros((0, 4)))[0].tolist() == []

@@ -343,20 +343,88 @@ def test_ink_word_boxes_batch_on_rendered_pages():
     assert ink_word_boxes.batch is ink_word_boxes_batch and ink_word_boxes_batch.single is ink_word_boxes
 
 
-@settings(max_examples=200, deadline=None)
-@given(
-    h=st.integers(0, 40), w=st.integers(0, 40), radius=st.integers(0, 6),
-    axis=st.integers(0, 1), seed=st.integers(0, 2**32 - 1),
-)
-def test_window_count_equals_direct_window_sums(h, w, radius, axis, seed):
-    """_window_count is the zero-padded sliding-window sum of width
-    2*radius+1 along the axis, summed directly."""
-    from doctr_spark.operators.detection import _window_count
+def _window_count(m: np.ndarray, radius: int, axis: int) -> np.ndarray:
+    """The cumsum morphology the shifted-window dilation replaced, kept as
+    its reference: the zero-padded sliding-window sum of width 2*radius+1
+    along an axis, from one int16 cumsum."""
+    n = m.shape[axis]
 
-    m = (np.random.default_rng(seed).random((h, w)) < 0.4).astype(np.uint8)
+    def span(start: int, stop: int | None) -> tuple:
+        index = [slice(None)] * m.ndim
+        index[axis] = slice(start, stop)
+        return tuple(index)
+
+    shape = list(m.shape)
+    shape[axis] = n + 2 * radius + 1
+    c = np.zeros(shape, dtype=np.int16)
+    np.cumsum(m, axis=axis, dtype=np.int16, out=c[span(radius + 1, radius + 1 + n)])
+    c[span(radius + 1 + n, None)] = c[span(radius + n, radius + 1 + n)]
+    return c[span(2 * radius + 1, None)] - c[span(0, n)]
+
+
+@settings(max_examples=400, deadline=None)
+@given(
+    h=st.integers(0, 40), w=st.integers(0, 40), radius=st.integers(0, 12),
+    axis=st.integers(0, 1), density=st.sampled_from([0.05, 0.4, 0.9, 1.0]), seed=st.integers(0, 2**32 - 1),
+)
+def test_shifted_window_morphology_equals_window_count(h, w, radius, axis, density, seed):
+    """Dilation and erosion by shifted ors and ands equal the window-count
+    definition (count > 0, count == 2*radius+1) on random 0/1 masks, and
+    the reference itself is the window sum taken directly."""
+    from doctr_spark.operators.detection import _dilate_axis, _erode_axis
+
+    m = (np.random.default_rng(seed).random((h, w)) < density).astype(np.uint8)
+    m = [m, np.asfortranarray(m), np.rot90(np.rot90(m))][seed % 3]  # C, F and negative-stride layouts
     lines = np.moveaxis(m, axis, 0)  # the summed axis first
-    n = len(lines)
-    sums = [lines[max(i - radius, 0) : i + radius + 1].sum(axis=0) for i in range(n)]
-    ref = np.moveaxis(np.array(sums, dtype=np.int64).reshape(lines.shape), 0, axis)
-    got = _window_count(m, radius, axis)
-    assert got.dtype == np.int16 and np.array_equal(got, ref)
+    sums = [lines[max(i - radius, 0) : i + radius + 1].sum(axis=0) for i in range(len(lines))]
+    count = _window_count(m, radius, axis)
+    assert np.array_equal(count, np.moveaxis(np.array(sums, dtype=np.int64).reshape(lines.shape), 0, axis))
+    dilated, eroded = _dilate_axis(m, radius, axis), _erode_axis(m.astype(bool), radius, axis)
+    assert dilated.dtype == eroded.dtype == np.uint8
+    assert np.array_equal(dilated, count > 0) and np.array_equal(eroded, count == 2 * radius + 1)
+
+
+def test_binary_open3_equals_window_count_opening():
+    """The 3x3 opening of the npz and .onnx detectors' postprocess, against
+    the same opening built from window counts."""
+    rng = np.random.default_rng(7)
+    for shape, density in (((31, 47), 0.5), ((64, 9), 0.8), ((1, 5), 1.0), ((0, 4), 0.5)):
+        m = (rng.random(shape) < density).astype(np.uint8)
+        e = (_window_count((_window_count(m, 1, 0) == 3).astype(np.uint8), 1, 1) == 3).astype(np.uint8)
+        ref = (_window_count((_window_count(e, 1, 0) > 0).astype(np.uint8), 1, 1) > 0).astype(np.uint8)
+        assert np.array_equal(binary_open3(m), ref)
+
+
+def _bars_and_blobs(rng, h, n_bars, n_blobs):
+    """A cell mask of ``n_bars`` full-height bars four columns apart (each
+    its own component after a one-cell dilation) and random blobs right of
+    them, whose boxes take in other components' runs."""
+    m = np.zeros((h, 4 * n_bars + 16), dtype=np.uint8)
+    m[:, 0 : 4 * n_bars : 4] = 1
+    for _ in range(n_blobs):
+        y, x = rng.integers(0, h - 3), rng.integers(4 * n_bars + 1, m.shape[1] - 3)
+        m[y : y + rng.integers(1, 4), x : x + rng.integers(1, 4)] = 1
+    return m
+
+
+@pytest.mark.parametrize(("n_bars", "table"), [(0, False), (2, False), (12, True)])
+def test_canvas_scores_from_runs_and_from_the_table(n_bars, table):
+    """_canvas_boxes scores every component exactly as bitmap_to_boxes
+    does one box at a time, on the run branch and, when the boxes' row
+    bands hold more runs than the canvas has cells (many tall bars), on
+    the summed-area-table branch."""
+    from doctr_spark.operators.detection import _canvas_boxes, _component_runs, _dilate_axis
+
+    rng = np.random.default_rng(n_bars)
+    for _ in range(5):
+        pages = [_bars_and_blobs(rng, int(rng.integers(8, 30)), n_bars, 12) for _ in range(2)]
+        fused_pages = [_dilate_axis(_dilate_axis(p, 1, 0), 1, 1) for p in pages]
+        got = _canvas_boxes(pages, [p.shape for p in pages], 1, 1, 1, 0.0, 0.5, (0.02, 0.98))
+        for fused, boxes in zip(fused_pages, got):
+            ref = bitmap_to_boxes(None, fused, box_thresh=0.0, unclip_ratio=0.5, score_mask=fused, levels=(0.02, 0.98))
+            assert _same_bits(boxes, ref)
+        # which branch the canvas took: its bands' run count against its cells
+        canvas = np.zeros((sum(len(p) + 1 for p in pages) - 1, pages[0].shape[1]), dtype=np.uint8)
+        canvas[: len(fused_pages[0])], canvas[len(fused_pages[0]) + 1 :] = fused_pages
+        (x0, y0, x1, y1), (_, _, offsets) = _component_runs(canvas)
+        assert (int((offsets[y1 + 1] - offsets[y0]).sum()) > canvas.size) == table

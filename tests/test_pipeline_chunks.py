@@ -395,3 +395,41 @@ def test_chunk_path_fuzz_never_fails_the_batch():
     # some mutated bundles still decode (appended bytes, a lower page
     # count, another scale) and reach detection next to the good pages
     assert 0 < len(errors) < n_mutated
+
+
+def _bundle_row(data, turn_idx=0):
+    return {"conv_id": "conv-hdr", "turn_idx": turn_idx, "role": "tool", "text": "[attachment]",
+            "tool": tool_envelope("page_bundle", data), "ts": TS}
+
+
+def test_scale_zero_bundle_is_an_error_row():
+    """A bundle whose header declares scale 0 is refused before any page
+    inflates, with a message naming the scale; the same page at scales 2
+    and 3 still decodes and reads."""
+    rows = []
+    for turn_idx, scale in enumerate((0, 2, 3)):
+        page, _ = render_page(["SCALE", "ROW"], scale=scale or DEFAULT_SCALE)
+        rows.append(_bundle_row(encode_page_bundle([page], scale), turn_idx))
+    with pytest.raises(ValueError, match="scale 0"):
+        payloads.decode_page_bundle(encode_page_bundle([render_page(["X"])[0]], 0))
+    out = _extract_batch(pd.DataFrame(rows, columns=COLUMNS))
+    assert out["payload_kind"].tolist() == ["error", "ocr", "ocr"]
+    assert out["error"].iloc[0] == "ValueError: bundle declares scale 0; a page's scale is at least 1"
+    assert out["extracted_text"].iloc[1:].tolist() == ["SCALE ROW"] * 2
+
+
+def test_cut_off_headers_are_named():
+    """A bundle cut inside its own 8-byte header, or inside page i's,
+    raises ValueError naming that header (not ``struct.error``); a cut in
+    page 1's header is reported after page 0 inflates."""
+    two_pages = encode_page_bundle([render_page(["CUT", "HERE"])[0]] * 2, DEFAULT_SCALE)
+    page1 = 8 + 8 + struct.unpack(">HHI", two_pages[8:16])[2]
+    cases = [(two_pages[:n], f"bundle header cut off after {n} of 8 bytes") for n in range(4, 8)]
+    cases += [(two_pages[: 8 + k], f"page 0 header cut off after {k} of 8 bytes") for k in range(8)]
+    cases += [(two_pages[: page1 + k], f"page 1 header cut off after {k} of 8 bytes") for k in range(8)]
+    for data, message in cases:
+        with pytest.raises(ValueError, match=message):
+            payloads.decode_page_bundle(data)
+    out = _extract_batch(pd.DataFrame([_bundle_row(d, i) for i, (d, _) in enumerate(cases)], columns=COLUMNS))
+    assert (out["payload_kind"] == "error").all()
+    assert out["error"].tolist() == [f"ValueError: {message}" for _, message in cases]
